@@ -8,14 +8,10 @@ import graft.expr.{BmpDecode, ByteStats, FoldAccents, Int8DotProduct, MinHashSig
 
 /** SQL-surface registration for graft's native expressions
   * (SURVEY.md §7.3 — `SparkSessionExtensions` is the sanctioned extension
-  * point). Activate with:
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  * }}}
-  *
-  * after which `SELECT minhash_sig(shingles, 8)`, `simhash64(tokens)` and
+  * point). [[graft.GraftSession.builder]] installs it; a session built
+  * elsewhere activates it with the conf
+  * `spark.sql.extensions=graft.GraftExtensions`. After that
+  * `SELECT minhash_sig(shingles, 8)`, `simhash64(tokens)` and
   * `quantized_dot(a, b)` parse as native catalyst expressions (codegen'd —
   * no UDF fence). The Column API in [[graft.exprapi]] needs no registration.
   */

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session façade for the graft engine.
+/** Session façade for the graft engine: the one place that builds a
+  * session or temporarily changes its configuration.
   *
   * The reference ran spark-shell 2.4 with hand-tuned cluster shapes
   * (`mergers_acquisitions_code/acq_etl_code.scala:1` — 64 executors ×16 GB;
@@ -33,19 +34,28 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
 
-  def build(): SparkSession = {
-    val spark = builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
-  /** Apply graft defaults to an externally-created session (e.g. the
-    * driver-owned sessions in Verify/Bench). Runtime-settable confs only. */
+  /** Apply graft defaults to a session built outside graft (e.g. one the
+    * caller of `SparkEntry.entry` owns). Runtime-settable confs only. */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark
+  }
+
+  /** Run `body` with session conf `key` set to `value`, then restore the
+    * previous value — or unset the key if it had none. A registered conf
+    * always reads as its default, so it is restored to that explicitly.
+    * Not safe for concurrent callers on one session: interleaved
+    * save/restore pairs can leave another caller's value behind. */
+  def withConf[T](s: SparkSession, key: String, value: String)(body: => T): T = {
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => s.conf.set(key, v)
+      case None => s.conf.unset(key)
+    }
   }
 }

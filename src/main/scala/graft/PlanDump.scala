@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Round-14 measurement tool (optimization guide §1.1/§7.2): dump
@@ -14,8 +13,9 @@ import java.nio.file.{Files, Paths}
   * The dump captures the PRE-EXECUTION plan (explain of the lazily built
   * frame). Artifact-persisting queries stage their fit half eagerly when
   * the query function runs; the explain then shows the serve-half plan
-  * over the staged artifacts — exactly the plan the bench times after
-  * run 1, and the one whose shape carries the 100 TB claim.
+  * over the staged artifacts — exactly the plan a timed perfbench pass
+  * runs after the warm pass, and the one whose shape carries the 100 TB
+  * claim.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -24,13 +24,8 @@ object PlanDump {
     val suffix = if (args.length > 2) args(2) else "before"
     sys.props("graft.preds.tag") = "plandump"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(s"local[$cpus]", "plandump", cpus.toInt)
       .getOrCreate()
-    GraftSession.tune(spark)
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
     val only = sys.env.get("SPARK_GRAFT_ONLY")

@@ -104,10 +104,7 @@ object Tables {
         // the duration of plan construction and restore the previous value —
         // a permanent set would silently change how every OTHER nano-parquet
         // in the session is read (VERDICT r1 "What's wrong" #2).
-        val key = "spark.sql.legacy.parquet.nanosAsLong"
-        val prev = spark.conf.getOption(key)
-        spark.conf.set(key, "true")
-        try {
+        graft.GraftSession.withConf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true") {
           val raw = spark.read.parquet(s"$sfDir/$name.parquet")
           val tsNorm = raw.schema("ts").dataType match {
             case LongType => // nanos fixture, scanned as raw int64 nanos
@@ -123,11 +120,6 @@ object Tables {
                 s"events.ts scanned as unsupported type $other")
           }
           raw.withColumn("ts", tsNorm)
-        } finally {
-          prev match {
-            case Some(v) => spark.conf.set(key, v)
-            case None => spark.conf.unset(key)
-          }
         }
       } else spark.read.parquet(s"$sfDir/$name.parquet")
     schemas.get(name).foreach { expected =>

@@ -99,13 +99,9 @@ object Graph {
     * fixture scale the rounds stop paying a core-count-wide exchange for
     * KB frames, at 100 TB the edge frame's thousands of partitions carry
     * through unchanged — derived from input, never a constant. */
-  private[graft] def withLoopWidth[T](anchor: DataFrame)(body: => T): T = {
-    val s = anchor.sparkSession
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      math.max(anchor.rdd.getNumPartitions, 1).toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  private[graft] def withLoopWidth[T](anchor: DataFrame)(body: => T): T =
+    graft.GraftSession.withConf(anchor.sparkSession, "spark.sql.shuffle.partitions",
+      math.max(anchor.rdd.getNumPartitions, 1).toString)(body)
 
   def pageRankInt(
       edges: DataFrame, // (src: long, dst: long)

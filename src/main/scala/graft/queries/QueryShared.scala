@@ -99,11 +99,8 @@ private[graft] object QueryShared {
     * overhead dominates, so a narrow pin is a multiple-x win (q102:
     * 10.2 s → 4.9 s at 8 vs 32). A production tail sizes this to state
     * volume, not core count. */
-  def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T =
+    GraftSession.withConf(s, "spark.sql.shuffle.partitions", n.toString)(body)
 
   /** BUCKET-ALIGNED change/delete staging for the partition-pruned
     * maintenance drains (r14 optimization, guide §6 — route work by the

@@ -75,8 +75,8 @@ object TpchQueries {
     * let five queries (and their oracles, which read the SAME files via
     * `read_parquet`) silently run over a partsupp keyed to the OLD
     * fixtures, green forever because both engines share the stale bits.
-    * Every fresh process re-derives; within one Verify/Bench run the five
-    * sharers stage once.
+    * Every fresh process re-derives; within one Verify or perfbench run
+    * the five sharers stage once.
     * Supplier keys are mapped through a dense rank (never assume key
     * contiguity in a fixture); the rank window runs on the supplier DIM
     * (10k rows/SF1 — single-partition sort is fine at any target scale).

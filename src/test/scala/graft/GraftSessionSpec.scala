@@ -1,0 +1,44 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+class GraftSessionSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+
+  test("withConf unsets a key that was unset before") {
+    val key = "graft.test.withConf.unset"
+    assert(spark.conf.getOption(key).isEmpty)
+    val inside = GraftSession.withConf(spark, key, "on") {
+      spark.conf.get(key)
+    }
+    assert(inside === "on")
+    assert(spark.conf.getOption(key).isEmpty,
+      "a key unset before withConf must be unset after it")
+  }
+
+  test("withConf restores the previous value of a set key") {
+    val key = "graft.test.withConf.set"
+    spark.conf.set(key, "before")
+    try {
+      val inside = GraftSession.withConf(spark, key, "during") {
+        spark.conf.get(key)
+      }
+      assert(inside === "during")
+      assert(spark.conf.get(key) === "before")
+    } finally spark.conf.unset(key)
+  }
+
+  test("withConf restores the previous value when the body throws") {
+    val key = "graft.test.withConf.throws"
+    spark.conf.set(key, "before")
+    try {
+      val e = intercept[IllegalStateException] {
+        GraftSession.withConf(spark, key, "during") {
+          throw new IllegalStateException("boom")
+        }
+      }
+      assert(e.getMessage === "boom")
+      assert(spark.conf.get(key) === "before")
+    } finally spark.conf.unset(key)
+  }
+}

@@ -240,17 +240,11 @@ class GraphSpec extends AnyFunSuite {
     // fixed-round recurrence is partition-invariant integer algebra
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (2L, 1L)).toDF("src", "dst")
     val a = Graph.pageRankInt(edges, iters = 3).as[(Long, Long)].collect().toMap
-    val b = withSessionWidth17(spark) {
+    // a deliberately different session width, so the invariance
+    // assertion exercises a real contrast
+    val b = GraftSession.withConf(spark, "spark.sql.shuffle.partitions", "17") {
       Graph.pageRankInt(edges, iters = 3).as[(Long, Long)].collect().toMap
     }
     assert(a === b, "scores must be identical under any session width")
-  }
-
-  // run `body` with a deliberately different session shuffle width, so the
-  // invariance assertion above exercises a real contrast
-  private def withSessionWidth17[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "17")
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 }

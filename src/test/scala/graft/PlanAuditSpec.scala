@@ -9,7 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * (drops a broadcast, widens a scan, introduces a nested-loop join) fails
   * CI instead of surfacing as a 100× regression on a real cluster. */
 class PlanAuditSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+  // a def, not a lazy val: `builtQueries` initializes under this suite's
+  // monitor while its pool threads read `spark`, so a suite-level lazy
+  // val here deadlocks when the fingerprint test runs first
+  def spark = TestSpark.spark
 
   private def executed(df: DataFrame): String = {
     df.write.format("noop").mode("overwrite").save() // finalize AQE
@@ -217,6 +220,7 @@ class PlanAuditSpec extends AnyFunSuite {
   private lazy val builtQueries: Seq[(String, DataFrame)] = {
     val names = SparkEntry.queries.keys.toSeq.sorted.filterNot(fitExcluded)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       import scala.jdk.CollectionConverters._
       val tasks: Seq[java.util.concurrent.Callable[(String, DataFrame)]] =
@@ -234,7 +238,12 @@ class PlanAuditSpec extends AnyFunSuite {
           }
         }
       pool.invokeAll(tasks.asJava).asScala.toSeq.map(_.get())
-    } finally pool.shutdown()
+    } finally {
+      pool.shutdown()
+      // concurrent withShufflePartitions save/restore pairs can race;
+      // re-pin the suite default so later plan-sensitive tests are immune
+      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 
   test("no query plan contains a cartesian or unbounded nested-loop join (FULL map)") {
