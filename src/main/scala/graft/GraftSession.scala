@@ -45,12 +45,12 @@ object GraftSession {
   }
 
   /** Run `body` with session conf `key` set to `value`, then restore the
-    * previous value — or unset the key if it had none. A registered conf
-    * always reads as its default, so it is restored to that explicitly.
-    * Not safe for concurrent callers on one session: interleaved
+    * previous value — or unset the key if the session had not set it, so
+    * a registered conf reads its default again and `conf.getAll` is as it
+    * was. Not safe for concurrent callers on one session: interleaved
     * save/restore pairs can leave another caller's value behind. */
   def withConf[T](s: SparkSession, key: String, value: String)(body: => T): T = {
-    val prev = s.conf.getOption(key)
+    val prev = s.conf.getAll.get(key)
     s.conf.set(key, value)
     try body
     finally prev match {

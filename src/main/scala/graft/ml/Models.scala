@@ -193,6 +193,36 @@ object Models {
       .fit(train)
       .setThreshold(0.68)
 
+  /** M7 + M9 + M11 as one fit/score pass, the shape q23, q27 and q415
+    * share: class-weight `feats`, materialize the weighted frame once with
+    * its lineage cut (`localCheckpoint`), fit [[fitWeightedLR]] on it and
+    * score from it. Returns the model and the flat predictions: `keepCols`,
+    * then `prediction` and `prob` = P(class=1).
+    *
+    * Why the lineage cut: every L-BFGS iteration is its own Spark job, and
+    * each job's task binary carries the lineage of the frame it reads. Over
+    * the un-materialized frame that is the whole tfidf + class-weight plan
+    * (112 KB serialized on the sf0.01 documents, against 22 KB cut),
+    * shipped again with each of the fit's ~55 jobs. The cut frame holds the
+    * same rows in the same partitions and order, so the coefficients are
+    * bit-identical (ModelsSpec pins this).
+    *
+    * The trade: `localCheckpoint` keeps the blocks on the executors only,
+    * so losing one mid-fit fails the fit instead of recomputing it. Staging
+    * through parquet ([[graft.queries.QueryShared.stageFrame]]) survives
+    * that, but measured about 0.45 s slower per fit on the sf0.01
+    * documents; no caller needs it yet. The blocks are not freed when this
+    * returns: Spark's ContextCleaner drops them once the frame is garbage
+    * collected. */
+  def fitAndScoreWeightedLR(feats: DataFrame, labelCol: String,
+      keepCols: Seq[String]): (LogisticRegressionModel, DataFrame) = {
+    val weighted = withClassWeights(feats, labelCol).localCheckpoint(true)
+    val model = fitWeightedLR(weighted, labelCol)
+    val preds = positiveProbability(model.transform(weighted))
+      .select((keepCols :+ "prediction" :+ "prob").map(col): _*)
+    (model, preds)
+  }
+
   /** M10: AUC (`BinaryClassificationEvaluator`, `lr.scala:46-48`). The
     * confusion matrix half lives in [[graft.ops.Relational.confusionMatrix]]
     * — one pass, vs the reference's four filtered counts (`lr.scala:51-54`). */

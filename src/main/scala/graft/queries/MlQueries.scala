@@ -140,19 +140,11 @@ object MlQueries {
     "q23_lr_confusion" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
         .withColumn("label", when(col("lang") === "en", 1.0).otherwise(0.0))
-      // cache the featurized frame: it feeds the weight stats, the LR fit
-      // iterations AND the scoring pass — uncached, the tfidf pipeline
-      // transform re-runs per consumer
       val feats = ml.Models.fitTfidf(docs, minDF = 2.0, vocabSize = 1000)
         .transform(docs)
         .select(col("doc_id"), col("label"), col("tfidf"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val weighted = ml.Models.withClassWeights(feats, "label")
-      val model = ml.Models.fitWeightedLR(weighted, "label")
-      val preds = model.transform(weighted).select(
-        col("doc_id"), col("label"), col("prediction"),
-        element_at(org.apache.spark.ml.functions.vector_to_array(
-          col("probability")), 2).as("prob"))
+      val (_, preds) =
+        ml.Models.fitAndScoreWeightedLR(feats, "label", Seq("doc_id", "label"))
       sources.Sources.writeParquet(preds, predsPath("q23_preds"))
       serveQ23(s)
     }),
@@ -173,13 +165,8 @@ object MlQueries {
         .withColumn("label", when(col("lang") === "en", 1.0).otherwise(0.0))
       val feats = ml.Models.hashedTfidf(docs)
         .select(col("doc_id"), col("label"), col("tfidf"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val weighted = ml.Models.withClassWeights(feats, "label")
-      val model = ml.Models.fitWeightedLR(weighted, "label")
-      val preds = model.transform(weighted).select(
-        col("doc_id"), col("label"), col("prediction"),
-        element_at(org.apache.spark.ml.functions.vector_to_array(
-          col("probability")), 2).as("prob"))
+      val (_, preds) =
+        ml.Models.fitAndScoreWeightedLR(feats, "label", Seq("doc_id", "label"))
       sources.Sources.writeParquet(preds, predsPath("q415_preds"))
       serveQ415(s)
     }),
@@ -196,19 +183,11 @@ object MlQueries {
         .withColumn("label", when(col("lang") === "en", 1.0).otherwise(0.0))
         // numeric pseudo-SIC from the source tag, predictions.scala:18 shape
         .withColumn("sic", regexp_extract(col("source"), "(\\d+)", 1).cast("int") * 7 + 3)
-      // persisted: the featurized frame feeds the weight stats, the LR fit,
-      // the scoring transform AND both sides of the pairing — recomputing
-      // the tfidf chain per consumer benched ~2× the whole query
       val feats = ml.Models.fitTfidf(docs, minDF = 2.0, vocabSize = 1000)
         .transform(docs)
         .select(col("doc_id"), col("label"), col("sic"), col("tfidf"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val weighted = ml.Models.withClassWeights(feats, "label")
-      val model = ml.Models.fitWeightedLR(weighted, "label")
-      val preds = model.transform(weighted).select(
-        col("doc_id"), col("sic"), col("prediction"),
-        element_at(org.apache.spark.ml.functions.vector_to_array(
-          col("probability")), 2).as("prob"))
+      val (_, preds) =
+        ml.Models.fitAndScoreWeightedLR(feats, "label", Seq("doc_id", "sic"))
       sources.Sources.writeParquet(preds, predsPath("q27_preds"))
       serveQ27(s)
     }),

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -60,5 +61,81 @@ class FixtureSchemaSpec extends AnyFunSuite {
     val diff = micros.join(back, "event_id")
       .filter(col("us") =!= col("us_back")).count()
     assert(diff == 0, s"$diff rows drifted through the nanos branch")
+  }
+
+  private def pairs(t: StructType): Seq[(String, DataType)] =
+    t.fields.map(f => (f.name, f.dataType)).toSeq
+
+  /** Spark jobs `body` submits from this thread, read from a listener.
+    * Events reach a listener in post order, so once the marker job's
+    * start has arrived, every job `body` submitted has been counted. */
+  private def jobsSubmitted(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val marker = s"marker-${java.util.UUID.randomUUID}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => n.incrementAndGet(); ()
+          case Some(`marker`) => markerSeen.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobs counted by FixtureSchemaSpec")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "listener flush marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the marker job")
+      n.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a second load of a table submits no Spark job") {
+    // a fresh session has an empty schema cache, so the first load infers
+    val s = spark.newSession()
+    Tables.schemas.keys.toSeq.sorted.foreach { name =>
+      val first = jobsSubmitted(Tables.load(s, TestSpark.sf, name))
+      assert(first >= 1, s"$name: first load should infer its schema")
+      val second = jobsSubmitted(Tables.load(s, TestSpark.sf, name))
+      assert(second == 0, s"$name: second load submitted $second jobs")
+    }
+  }
+
+  test("a file rewritten at the same path with a changed type fails as drift") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("drift_tables").toString
+    val region = Tables.region(spark, TestSpark.sf)
+    region.write.parquet(s"$dir/region.parquet")
+    assert(Tables.region(spark, dir).count() == region.count())
+    region.withColumn("r_regionkey", col("r_regionkey").cast(LongType))
+      .write.mode("overwrite").parquet(s"$dir/region.parquet")
+    val e = intercept[IllegalArgumentException](Tables.region(spark, dir))
+    assert(e.getMessage.contains("schema drift for region"), e.getMessage)
+  }
+
+  test("four threads loading every table on one session get the declared " +
+      "schemas and leave the session conf unchanged") {
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    val names = Tables.schemas.keys.toSeq.sorted
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val loads = (0 until 4).map { i =>
+        // each thread walks the tables from a different start
+        val order = names.drop(i * 2) ++ names.take(i * 2)
+        pool.submit(() => order.map(n => n -> Tables.load(s, TestSpark.sf, n).schema))
+      }
+      loads.flatMap(_.get(5, java.util.concurrent.TimeUnit.MINUTES)).foreach {
+        case (name, schema) =>
+          assert(pairs(schema) == pairs(Tables.schemas(name)),
+            s"$name loaded as ${pairs(schema)}")
+      }
+    } finally pool.shutdown()
+    assert(s.conf.getAll == before)
   }
 }

@@ -6,14 +6,17 @@ class GraftSessionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("withConf unsets a key that was unset before") {
-    val key = "graft.test.withConf.unset"
-    assert(spark.conf.getOption(key).isEmpty)
-    val inside = GraftSession.withConf(spark, key, "on") {
-      spark.conf.get(key)
-    }
-    assert(inside === "on")
-    assert(spark.conf.getOption(key).isEmpty,
-      "a key unset before withConf must be unset after it")
+    // an unregistered key, and a registered one that reads as its default
+    Seq("graft.test.withConf.unset", "spark.sql.legacy.parquet.nanosAsLong")
+      .foreach { key =>
+        assert(!spark.conf.getAll.contains(key))
+        val inside = GraftSession.withConf(spark, key, "true") {
+          spark.conf.get(key)
+        }
+        assert(inside === "true")
+        assert(!spark.conf.getAll.contains(key),
+          s"$key, unset before withConf, must be unset after it")
+      }
   }
 
   test("withConf restores the previous value of a set key") {

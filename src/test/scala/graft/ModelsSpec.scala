@@ -64,6 +64,50 @@ class ModelsSpec extends AnyFunSuite {
     assert(probs.forall(p => p >= 0.0 && p <= 1.0))
   }
 
+  test("fitAndScoreWeightedLR: coefficients bit-identical to fitWeightedLR " +
+      "on the un-materialized weighted frame") {
+    val docs = Tables.documents(spark, TestSpark.sf)
+      .withColumn("label", when($"lang" === "en", 1.0).otherwise(0.0))
+    // q27's tfidf settings
+    val feats = Models.fitTfidf(docs, minDF = 2.0, vocabSize = 1000)
+      .transform(docs).select($"doc_id", $"label", $"tfidf")
+    val ref = Models.fitWeightedLR(Models.withClassWeights(feats, "label"), "label")
+    def bits(m: org.apache.spark.ml.classification.LogisticRegressionModel) =
+      (m.coefficients.toArray.map(java.lang.Double.doubleToRawLongBits).toSeq,
+        java.lang.Double.doubleToRawLongBits(m.intercept))
+    assert(ref.summary.totalIterations === 51) // on the sf0.001 fixture
+    val keep = Seq("doc_id", "label")
+    val (model, preds) = Models.fitAndScoreWeightedLR(feats, "label", keep)
+    assert(bits(model) == bits(ref), "coefficients moved")
+    assert(model.summary.totalIterations === ref.summary.totalIterations)
+    assert(preds.columns.toSeq === keep :+ "prediction" :+ "prob")
+    assert(preds.count() === docs.count())
+  }
+
+  test("q23, q27 and q415 leave no cached frame, no conf change and, once " +
+      "collected, no persisted RDD behind") {
+    val sc = spark.sparkContext
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // the cache manager is shared by every suite in this JVM: start empty
+    spark.catalog.clearCache()
+    val before = spark.conf.getAll
+    val rddsBefore = sc.getPersistentRDDs.keySet
+    Seq("q23_lr_confusion", "q27_pair_scoring", "q415_hashed_lr_confusion")
+      .foreach(q => SparkEntry.queries(q)(spark, TestSpark.sf).collect())
+    assert(cache.isEmpty, "a query left a frame in the cache manager")
+    assert(spark.conf.getAll == before)
+    // the fit's localCheckpoint blocks go when the frame is garbage
+    // collected (ContextCleaner), not when the query returns
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    def left = sc.getPersistentRDDs.keySet -- rddsBefore
+    while (left.nonEmpty && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(200)
+    }
+    assert(left.isEmpty, s"persisted RDDs ${left.toSeq.sorted} outlived their queries")
+  }
+
   test("hashedTfidf (vocabulary-free hashing trick): no vocab collect, and the " +
       "hashed-features LR holds an AUC floor vs the q23 vocabulary model") {
     val docs = Tables.documents(spark, TestSpark.sf)
