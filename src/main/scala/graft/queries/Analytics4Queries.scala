@@ -216,14 +216,9 @@ object Analytics4Queries {
         .select(col("user_id"), col("event_type"))
       val root = predsPath(s"q388_root_${System.nanoTime()}")
       sources.Sources.writeParquet(ev.repartition(6), s"$root/events")
-      // narrow shuffle pin: the keyed-state operator keeps one state
-      // store PER shuffle partition per micro-batch — at a 5-arm key
-      // domain, 32 stores × batches is pure overhead (the drain rule)
-      QueryShared.withShufflePartitions(s, 8) {
-        streaming.Streams.srmKeyedStream(s, s"$root/events", ev.schema,
-          s"$root/partials", s"$root/ckpt",
-          groupCol = "event_type", userCol = "user_id")
-      }
+      streaming.Streams.srmKeyedStream(s, s"$root/events", ev.schema,
+        s"$root/partials", s"$root/ckpt",
+        groupCol = "event_type", userCol = "user_id")
     }),
 
 

@@ -381,7 +381,8 @@ object MlQueries {
       // alternation whose cost at this volume is task-launch overhead ×
       // partitions, not compute — the same economics as the streaming
       // drains' state stores. A production fit sizes blocks to data.
-      val model = QueryShared.withShufflePartitions(s, 8) {
+      val model = GraftSession.withConf(
+          s, "spark.sql.shuffle.partitions", "8") {
         new org.apache.spark.ml.recommendation.ALS()
           .setRank(8).setMaxIter(3).setSeed(42L).setRegParam(0.1)
           .setNumUserBlocks(8).setNumItemBlocks(8)
@@ -472,6 +473,9 @@ object MlQueries {
           .as("ord"))
         .select(expr("transform(ord, x -> array(x.event_type))")
           .as("sequence"))
+        // PrefixSpan scans its input more than once: materialized, the
+        // two groupBy shuffles run once
+        .localCheckpoint(true)
       val patterns = new org.apache.spark.ml.fpm.PrefixSpan()
         .setMinSupport(0.1).setMaxPatternLength(3)
         .setSequenceCol("sequence")

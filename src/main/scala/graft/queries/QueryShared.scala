@@ -91,17 +91,6 @@ private[graft] object QueryShared {
     upd2.unionByName(upd1).unionByName(ins)
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions` pinned to `n`,
-    * restoring the previous value after. Streaming drains bind the
-    * stateful-shuffle width at plan time (fresh checkpoint each run), and
-    * their per-micro-batch cost scales with state-store instances =
-    * partitions × stateful operators — at drain volumes the open/commit
-    * overhead dominates, so a narrow pin is a multiple-x win (q102:
-    * 10.2 s → 4.9 s at 8 vs 32). A production tail sizes this to state
-    * volume, not core count. */
-  def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T =
-    GraftSession.withConf(s, "spark.sql.shuffle.partitions", n.toString)(body)
-
   /** BUCKET-ALIGNED change/delete staging for the partition-pruned
     * maintenance drains (r14 optimization, guide §6 — route work by the
     * TABLE's bucket function so each micro-batch touches a bounded slice

@@ -48,6 +48,22 @@ object StreamingQueries {
       col("purchase_ts").cast("timestamp_ntz").as("purchase_ts"),
       col("purchase_value"))
 
+  /** The events fixture staged as 4 parquet files under a fresh per-run
+    * root, and a factory for 2-files-per-trigger streams over them — the
+    * memory-sink drains' shared source. Event time is cast to TIMESTAMP
+    * (streaming needs it; under the engine's pinned UTC session the cast
+    * is lossless, and readouts cast back to NTZ for oracle parity). The
+    * root is per run, so concurrent runs never overwrite each other's
+    * source files; it also takes the drain's one-shot checkpoint. */
+  private def stagedEvents(
+      s: SparkSession, dir: String, q: String): (String, () => DataFrame) = {
+    val ev = Tables.events(s, dir).withColumn("ts", col("ts").cast("timestamp"))
+    val root = predsPath(s"${q}_root_${System.nanoTime()}")
+    sources.Sources.writeParquet(ev.repartition(4), s"$root/events")
+    (root, () => s.readStream.schema(ev.schema)
+      .option("maxFilesPerTrigger", "2").parquet(s"$root/events"))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // §2.8 streaming, EXECUTED AS A STREAM: the events fixture staged to a
@@ -66,15 +82,7 @@ object StreamingQueries {
     // a green row means an actual stream execution matched the batch
     // relational semantics bit-for-bit.
     "q93_sessionize_stream" -> ((s, dir) => {
-      // streaming event time must be TIMESTAMP (not NTZ) — under the
-      // engine's pinned UTC session the cast is lossless, and the session
-      // bounds are cast back to NTZ below for oracle/type parity with q22
-      val batchEv = Tables.events(s, dir)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      val stage = predsPath("q93_events")
-      sources.Sources.writeParquet(batchEv.repartition(4), stage)
-      val stream = s.readStream.schema(batchEv.schema)
-        .option("maxFilesPerTrigger", "2").parquet(stage)
+      val (root, events) = stagedEvents(s, dir, "q93")
       // staged files are NOT in event-time order, so a live-sized
       // watermark delay would LATE-DROP most of batches 2..n (the
       // watermark races to max(ts)-delay after batch 1). For a bounded
@@ -82,17 +90,9 @@ object StreamingQueries {
       // which complete mode disables anyway — so span the whole fixture:
       // no late drops, and the drained result equals the batch frame. A
       // live tail keeps the default 2h delay and time-ordered arrival.
-      val q = streaming.Streams.sessionize(stream, watermarkDelay = "3650 days")
-        .writeStream
-        .format("memory").queryName("q93_sessions").outputMode("complete")
-        // fresh checkpoint per run: a reused one would see the staged
-        // files as already-committed and drain zero batches
-        .option("checkpointLocation",
-          predsPath(s"q93_ckpt_${System.nanoTime()}"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      require(q.awaitTermination(300000), "AvailableNow stream must drain")
-      serveQ93(s.table("q93_sessions"))
+      serveQ93(streaming.Streams.drain("q93_sessions",
+        streaming.Streams.sessionize(events(), watermarkDelay = "3650 days"),
+        "complete", s"$root/ckpt", None))
     }),
 
 
@@ -104,22 +104,10 @@ object StreamingQueries {
     // watermark rationale as q93 (unordered backfill files must not
     // late-drop); oracle = q21's independent date_trunc formulation.
     "q98_tumbling_stream" -> ((s, dir) => {
-      val batchEv = Tables.events(s, dir)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      val stage = predsPath("q98_events")
-      sources.Sources.writeParquet(batchEv.repartition(4), stage)
-      val stream = s.readStream.schema(batchEv.schema)
-        .option("maxFilesPerTrigger", "2").parquet(stage)
-      val q = streaming.Streams
-        .tumblingAgg(stream, watermarkDelay = "3650 days")
-        .writeStream
-        .format("memory").queryName("q98_windows").outputMode("complete")
-        .option("checkpointLocation",
-          predsPath(s"q98_ckpt_${System.nanoTime()}"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      require(q.awaitTermination(300000), "AvailableNow stream must drain")
-      serveQ98(s.table("q98_windows"))
+      val (root, events) = stagedEvents(s, dir, "q98")
+      serveQ98(streaming.Streams.drain("q98_windows",
+        streaming.Streams.tumblingAgg(events(), watermarkDelay = "3650 days"),
+        "complete", s"$root/ckpt", None))
     }),
 
 
@@ -145,14 +133,9 @@ object StreamingQueries {
         .withColumn("ts", col("ts").cast("timestamp"))
       val root = predsPath(s"q99_root_${System.nanoTime()}")
       streaming.Streams.stageTimeOrdered(batchEv, "ts", s"$root/events", 8)
-      // narrow shuffle pin: state stores per partition per micro-batch
-      // dominate drain cost (the q388 rule) — 8 single-file batches ×
-      // partitions, at a ≤150-key domain, wants the narrowest pin
-      val out = QueryShared.withShufflePartitions(s, 4) {
-        streaming.Streams.runningUserTotalsEvicting(s, s"$root/events",
-          batchEv.schema, s"$root/partials", s"$root/ckpt",
-          watermarkDelay = "1 hour", idleGapMs = 12L * 3600 * 1000)
-      }
+      val out = streaming.Streams.runningUserTotalsEvicting(s,
+        s"$root/events", batchEv.schema, s"$root/partials", s"$root/ckpt",
+        watermarkDelay = "1 hour", idleGapMs = 12L * 3600 * 1000)
       val nEvicted = s.read.parquet(s"$root/partials")
         .filter(col("is_final")).count()
       require(nEvicted > 0,
@@ -168,25 +151,11 @@ object StreamingQueries {
     // last window SHAPE that only had a batch-equivalence spec; oracle =
     // an independent two-candidate-starts unnest per event.
     "q105_sliding_stream" -> ((s, dir) => {
-      val batchEv = Tables.events(s, dir)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      val stage = predsPath("q105_events")
-      sources.Sources.writeParquet(batchEv.repartition(4), stage)
-      val stream = s.readStream.schema(batchEv.schema)
-        .option("maxFilesPerTrigger", "2").parquet(stage)
-      val q = withShufflePartitions(s, 8) {
-        streaming.Streams
-          .slidingAgg(stream, width = "1 hour", slide = "30 minutes",
-            watermarkDelay = "3650 days")
-          .writeStream
-          .format("memory").queryName("q105_sliding").outputMode("complete")
-          .option("checkpointLocation",
-            predsPath(s"q105_ckpt_${System.nanoTime()}"))
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      require(q.awaitTermination(300000), "AvailableNow stream must drain")
-      s.table("q105_sliding").select(
+      val (root, events) = stagedEvents(s, dir, "q105")
+      streaming.Streams.drain("q105_sliding",
+        streaming.Streams.slidingAgg(events(), width = "1 hour",
+          slide = "30 minutes", watermarkDelay = "3650 days"),
+        "complete", s"$root/ckpt", Some(8)).select(
         col("window_start").cast("timestamp_ntz").as("window_start"),
         col("event_type"), col("n"))
     }),
@@ -201,27 +170,14 @@ object StreamingQueries {
     // hash-checkable at all. Oracle = the distinct key set; a hash match
     // proves cross-batch dedup state lost and duplicated nothing.
     "q106_dedup_stream" -> ((s, dir) => {
-      val batchEv = Tables.events(s, dir)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      val stage = predsPath("q106_events")
-      sources.Sources.writeParquet(batchEv.repartition(4), stage)
-      val stream = s.readStream.schema(batchEv.schema)
-        .option("maxFilesPerTrigger", "2").parquet(stage)
-      val q = withShufflePartitions(s, 8) {
+      val (root, events) = stagedEvents(s, dir, "q106")
+      streaming.Streams.drain("q106_keys",
         streaming.Streams
-          .dedupWithinWatermark(stream,
+          .dedupWithinWatermark(events(),
             keyCols = Seq("user_id", "event_type"),
             watermarkDelay = "3650 days")
-          .select(col("user_id"), col("event_type"))
-          .writeStream
-          .format("memory").queryName("q106_keys").outputMode("append")
-          .option("checkpointLocation",
-            predsPath(s"q106_ckpt_${System.nanoTime()}"))
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      require(q.awaitTermination(300000), "AvailableNow stream must drain")
-      s.table("q106_keys")
+          .select(col("user_id"), col("event_type")),
+        "append", s"$root/ckpt", Some(8))
     }),
 
 
@@ -234,26 +190,15 @@ object StreamingQueries {
     // Streams operator except the order-dependent near-dup marker now has
     // a CORRECTNESS row that executed as a stream.
     "q107_enrich_stream" -> ((s, dir) => {
-      val batchEv = Tables.events(s, dir)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      val stage = predsPath("q107_events")
-      sources.Sources.writeParquet(batchEv.repartition(4), stage)
+      val (root, events) = stagedEvents(s, dir, "q107")
       val dim = Tables.customer(s, dir)
         .select(col("c_custkey").as("user_id"),
           col("c_mktsegment"), col("c_nationkey"))
-      val stream = s.readStream.schema(batchEv.schema)
-        .option("maxFilesPerTrigger", "2").parquet(stage)
-      val q = streaming.Streams.enrichWithDim(stream, dim, "user_id")
-        .select(col("event_id"), col("user_id"),
-          col("event_type"), col("c_mktsegment"), col("c_nationkey"))
-        .writeStream
-        .format("memory").queryName("q107_enriched").outputMode("append")
-        .option("checkpointLocation",
-          predsPath(s"q107_ckpt_${System.nanoTime()}"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      require(q.awaitTermination(300000), "AvailableNow stream must drain")
-      s.table("q107_enriched")
+      streaming.Streams.drain("q107_enriched",
+        streaming.Streams.enrichWithDim(events(), dim, "user_id")
+          .select(col("event_id"), col("user_id"),
+            col("event_type"), col("c_mktsegment"), col("c_nationkey")),
+        "append", s"$root/ckpt", None)
     }),
 
 
@@ -269,29 +214,16 @@ object StreamingQueries {
     // the driver-checked streaming family: windows (q98), sessions
     // (q93), keyed state (q99), joins (here).
     "q102_join_stream" -> ((s, dir) => {
-      val batchEv = Tables.events(s, dir)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      val stage = predsPath("q102_events")
-      sources.Sources.writeParquet(batchEv.repartition(4), stage)
-      def src = s.readStream.schema(batchEv.schema)
-        .option("maxFilesPerTrigger", "2").parquet(stage)
+      val (root, events) = stagedEvents(s, dir, "q102")
       val joined = streaming.Streams.clickPurchaseJoin(
-        src.filter(col("event_type") === "click"),
-        src.filter(col("event_type") === "purchase"),
+        events().filter(col("event_type") === "click"),
+        events().filter(col("event_type") === "purchase"),
         horizon = "1 hour", watermarkDelay = "3650 days")
       // stream-stream join keeps four keyed state stores per shuffle
-      // partition per micro-batch — pin the stateful shuffle narrow for
-      // the drain (see QueryShared.withShufflePartitions)
-      val q = withShufflePartitions(s, 8) {
-        joined.writeStream
-          .format("memory").queryName("q102_pairs").outputMode("append")
-          .option("checkpointLocation",
-            predsPath(s"q102_ckpt_${System.nanoTime()}"))
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      require(q.awaitTermination(300000), "AvailableNow stream must drain")
-      serveQ102(s.table("q102_pairs"))
+      // partition per micro-batch — a narrow drain width (see
+      // Streams.drain)
+      serveQ102(streaming.Streams.drain("q102_pairs", joined, "append",
+        s"$root/ckpt", Some(8)))
     }),
 
 
@@ -411,25 +343,11 @@ object StreamingQueries {
     // Update-mode drain; final fold = per-user min(times)/max(stage)
     // (each is monotone across updates), entrants only.
     "q147_funnel_stream" -> ((s, dir) => {
-      val batchEv = Tables.events(s, dir)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      val stage = predsPath("q147_events")
-      sources.Sources.writeParquet(batchEv.repartition(4), stage)
-      val stream = s.readStream.schema(batchEv.schema)
-        .option("maxFilesPerTrigger", "2").parquet(stage)
-      val q = QueryShared.withShufflePartitions(s, 8) {
+      val (root, events) = stagedEvents(s, dir, "q147")
+      streaming.Streams.drain("q147_updates",
         streaming.Streams
-          .streamingFunnel(stream, Seq("view", "click", "purchase"))
-          .toDF()
-          .writeStream
-          .format("memory").queryName("q147_updates").outputMode("update")
-          .option("checkpointLocation",
-            predsPath(s"q147_ckpt_${System.nanoTime()}"))
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      require(q.awaitTermination(300000), "AvailableNow stream must drain")
-      s.table("q147_updates")
+          .streamingFunnel(events(), Seq("view", "click", "purchase")).toDF(),
+        "update", s"$root/ckpt", Some(8))
         .groupBy(col("user_id"))
         .agg(
           min(element_at(col("times"), 1)).as("m1"),
@@ -483,24 +401,10 @@ object StreamingQueries {
     // row_number trick has no streaming form, the struct-argmin does;
     // drained under AvailableNow, must hash-match the batch windows
     "q183_ohlc_stream" -> ((s, dir) => {
-      val batchEv = Tables.events(s, dir)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      val stage = predsPath("q183_events")
-      sources.Sources.writeParquet(batchEv.repartition(4), stage)
-      val stream = s.readStream.schema(batchEv.schema)
-        .option("maxFilesPerTrigger", "2").parquet(stage)
-      val q = QueryShared.withShufflePartitions(s, 8) {
-        streaming.Streams
-          .ohlcStream(stream, watermarkDelay = "3650 days")
-          .writeStream
-          .format("memory").queryName("q183_bars").outputMode("complete")
-          .option("checkpointLocation",
-            predsPath(s"q183_ckpt_${System.nanoTime()}"))
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      require(q.awaitTermination(300000), "AvailableNow stream must drain")
-      s.table("q183_bars").select(
+      val (root, events) = stagedEvents(s, dir, "q183")
+      streaming.Streams.drain("q183_bars",
+        streaming.Streams.ohlcStream(events(), watermarkDelay = "3650 days"),
+        "complete", s"$root/ckpt", Some(8)).select(
         col("window_start").cast("timestamp_ntz").as("hour"),
         col("user_id"), col("open"), col("close"), col("high"),
         col("low"), col("n"), col("sum_v"))
@@ -713,10 +617,8 @@ object StreamingQueries {
         .select(col("doc_id"), col("source"), col("text"))
       val root = predsPath(s"q419_root_${System.nanoTime()}")
       sources.Sources.writeParquet(docs.repartition(6), s"$root/docs")
-      QueryShared.withShufflePartitions(s, 8) {
-        streaming.Streams.survivorStream(s, s"$root/docs", docs.schema,
-          s"$root/partials", s"$root/ckpt")
-      }
+      streaming.Streams.survivorStream(s, s"$root/docs", docs.schema,
+        s"$root/partials", s"$root/ckpt")
     }),
 
 
@@ -752,10 +654,8 @@ object StreamingQueries {
         .parquet(predsPath("q427_cent"))
       val root = predsPath(s"q427_root_${System.nanoTime()}")
       sources.Sources.writeParquet(emb.repartition(4), s"$root/vecs")
-      QueryShared.withShufflePartitions(s, 8) {
-        streaming.Streams.centroidAssignStream(s, s"$root/vecs", emb.schema,
-          predsPath("q427_cent"), s"$root/partials", s"$root/ckpt")
-      }
+      streaming.Streams.centroidAssignStream(s, s"$root/vecs", emb.schema,
+        predsPath("q427_cent"), s"$root/partials", s"$root/ckpt")
     }),
 
 
@@ -767,10 +667,8 @@ object StreamingQueries {
       val ev = Tables.events(s, dir).select(col("ts"), col("user_id"))
       val root = predsPath(s"q463_root_${System.nanoTime()}")
       sources.Sources.writeParquet(ev.repartition(4), s"$root/events")
-      QueryShared.withShufflePartitions(s, 8) {
-        streaming.Streams.pocockStream(s, s"$root/events", ev.schema,
-          s"$root/partials", s"$root/ckpt")
-      }
+      streaming.Streams.pocockStream(s, s"$root/events", ev.schema,
+        s"$root/partials", s"$root/ckpt")
     }),
 
 
@@ -785,10 +683,8 @@ object StreamingQueries {
         .select(col("doc_id"), col("source"), col("lang"), col("text"))
       val root = predsPath(s"q458_root_${System.nanoTime()}")
       sources.Sources.writeParquet(docs.repartition(4), s"$root/docs")
-      QueryShared.withShufflePartitions(s, 8) {
-        streaming.Streams.datasetCardStream(s, s"$root/docs", docs.schema,
-          s"$root/partials", s"$root/ckpt")
-      }
+      streaming.Streams.datasetCardStream(s, s"$root/docs", docs.schema,
+        s"$root/partials", s"$root/ckpt")
     }),
 
 
@@ -801,10 +697,8 @@ object StreamingQueries {
       val ev = Tables.events(s, dir).select(col("ts"), col("value"))
       val root = predsPath(s"q454_root_${System.nanoTime()}")
       sources.Sources.writeParquet(ev.repartition(4), s"$root/events")
-      QueryShared.withShufflePartitions(s, 8) {
-        streaming.Streams.pageHinkleyStream(s, s"$root/events", ev.schema,
-          s"$root/partials", s"$root/ckpt")
-      }
+      streaming.Streams.pageHinkleyStream(s, s"$root/events", ev.schema,
+        s"$root/partials", s"$root/ckpt")
     }),
 
 
@@ -820,10 +714,8 @@ object StreamingQueries {
         .select(col("user_id"), col("event_type"))
       val root = predsPath(s"q436_root_${System.nanoTime()}")
       sources.Sources.writeParquet(ev.repartition(4), s"$root/events")
-      QueryShared.withShufflePartitions(s, 8) {
-        streaming.Streams.bhFdrStream(s, s"$root/events", ev.schema,
-          s"$root/partials", s"$root/ckpt")
-      }
+      streaming.Streams.bhFdrStream(s, s"$root/events", ev.schema,
+        s"$root/partials", s"$root/ckpt")
     }),
 
 
@@ -849,11 +741,9 @@ object StreamingQueries {
         col("meta"))
       val root = predsPath(s"q481_root_${System.nanoTime()}")
       sources.Sources.writeParquet(newAssets.repartition(4), s"$root/new")
-      val marks = QueryShared.withShufflePartitions(s, 8) {
-        streaming.Streams.audioIngestStream(s, s"$root/new",
-          newAssets.schema, ip, s"$root/newsigs", s"$root/partials",
-          s"$root/ckpt", kbBuckets = QueryShared.IndexKbBuckets)
-      }
+      val marks = streaming.Streams.audioIngestStream(s, s"$root/new",
+        newAssets.schema, ip, s"$root/newsigs", s"$root/partials",
+        s"$root/ckpt", kbBuckets = QueryShared.IndexKbBuckets)
       s.read.parquet(s"$root/newsigs").select(col("asset_id"), col("sig"))
         .coalesce(1).write.mode("overwrite")
         .parquet(predsPath("q481_new_sigs"))
@@ -884,11 +774,9 @@ object StreamingQueries {
         col("meta"))
       val root = predsPath(s"q477_root_${System.nanoTime()}")
       sources.Sources.writeParquet(newAssets.repartition(4), s"$root/new")
-      val marks = QueryShared.withShufflePartitions(s, 8) {
-        streaming.Streams.imageIngestStream(s, s"$root/new",
-          newAssets.schema, ip, s"$root/newsigs", s"$root/partials",
-          s"$root/ckpt", kbBuckets = QueryShared.IndexKbBuckets)
-      }
+      val marks = streaming.Streams.imageIngestStream(s, s"$root/new",
+        newAssets.schema, ip, s"$root/newsigs", s"$root/partials",
+        s"$root/ckpt", kbBuckets = QueryShared.IndexKbBuckets)
       s.read.parquet(s"$root/newsigs").select(col("asset_id"), col("sig"))
         .coalesce(1).write.mode("overwrite")
         .parquet(predsPath("q477_new_sigs"))
@@ -921,11 +809,9 @@ object StreamingQueries {
         col("meta"))
       val root = predsPath(s"q471_root_${System.nanoTime()}")
       sources.Sources.writeParquet(copies.repartition(4), s"$root/new")
-      val marks = QueryShared.withShufflePartitions(s, 8) {
-        streaming.Streams.videoIngestStream(s, s"$root/new",
-          copies.schema, predsPath("q471_index_sigs"),
-          s"$root/newsigs", s"$root/partials", s"$root/ckpt")
-      }
+      val marks = streaming.Streams.videoIngestStream(s, s"$root/new",
+        copies.schema, predsPath("q471_index_sigs"),
+        s"$root/newsigs", s"$root/partials", s"$root/ckpt")
       s.read.parquet(s"$root/newsigs").select(col("asset_id"), col("sig"))
         .coalesce(1).write.mode("overwrite")
         .parquet(predsPath("q471_new_sigs"))
@@ -968,11 +854,9 @@ object StreamingQueries {
       // hash-match proves it.
       QueryShared.stageBucketAligned(dels, Seq("o_orderkey"),
         nBuckets = 16, nGroups = 4, filesPerGroup = 1, s"$root/deletes")
-      val cert = QueryShared.withShufflePartitions(s, 8) {
-        streaming.Streams.erasureStream(s, s"$root/deletes", dels.schema,
-          s"$root/table", Seq("o_orderkey"), cols, nBuckets = 16,
-          s"$root/before", s"$root/partials", s"$root/ckpt")
-      }
+      val cert = streaming.Streams.erasureStream(s, s"$root/deletes",
+        dels.schema, s"$root/table", Seq("o_orderkey"), cols, nBuckets = 16,
+        s"$root/before", s"$root/partials", s"$root/ckpt")
       s.read.parquet(s"$root/table").select(cols.map(col): _*)
         .coalesce(1).write.mode("overwrite")
         .parquet(predsPath("q467_after"))
@@ -1018,11 +902,9 @@ object StreamingQueries {
       val newDocs = docs.filter(col("doc_id") % 4 === 0)
         .select(col("doc_id"), col("text"))
       sources.Sources.writeParquet(newDocs.repartition(4), s"$root/newdocs")
-      QueryShared.withShufflePartitions(s, 8) {
-        streaming.Streams.streamingSubstringMarks(s, s"$root/newdocs",
-          newDocs.schema, s"$root/postings", s"$root/oldtoks",
-          s"$root/partials", s"$root/ckpt")
-      }
+      streaming.Streams.streamingSubstringMarks(s, s"$root/newdocs",
+        newDocs.schema, s"$root/postings", s"$root/oldtoks",
+        s"$root/partials", s"$root/ckpt")
     }),
   )
 

@@ -1,10 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQueryProgress, Trigger}
 
+import graft.GraftSession
 import graft.ops.Relational
 
 /** Output row of [[Streams.runningUserTotals]] — cumulative per-user state. */
@@ -55,6 +57,95 @@ case class VariantCounts(variant: String, n0: Long, n1: Long)
   * property is the 100-TB design answer for streams.
   */
 object Streams {
+
+  // one lock for every drain's start: a width pin's save/set/start/restore
+  // never interleaves with another drain's
+  private val startLock = new Object
+  private val runSeq = new java.util.concurrent.atomic.AtomicLong
+
+  /** Drain `rows` under `Trigger.AvailableNow` into the sink that `sink`
+    * configures, and return the query's `recentProgress` (per-batch
+    * durations, input rows, state-store rows and memory). The one place
+    * in graft that starts a stream and waits on it.
+    *
+    *   - Checkpoint: `checkpoint` is the caller's directory and is never
+    *     deleted — a later drain resumes from it and processes only the
+    *     files that arrived since. With `oneShot`, `checkpoint` is a
+    *     prefix: the drain mints a fresh `<checkpoint>_<run>` directory
+    *     (a reused one would see the source files as committed and drain
+    *     zero batches) and deletes it once the drain succeeds, so
+    *     repeated runs leave no orphans. A failed run keeps it for
+    *     post-mortem, as a long-lived streaming job would.
+    *   - Width: `width` pins `spark.sql.shuffle.partitions` around
+    *     `start()` only. The stream clones its session's conf at start,
+    *     so the stateful shuffle width binds there, and everything after
+    *     the drain runs at the caller's width. A drain's per-micro-batch
+    *     cost scales with state-store instances = partitions × stateful
+    *     operators; at drain volumes their open/commit overhead
+    *     dominates, so a narrow pin is a multiple-x win (q102: 10.2 s →
+    *     4.9 s at 8 vs 32). A production tail sizes this to state
+    *     volume, not core count.
+    *   - Bound: waits at most 300 s and stops the query in `finally`, so
+    *     a timeout, failure or interrupt leaves no stream running.
+    *   - Session: the stream runs on `rows`' own session, so a listener
+    *     registered there sees its progress. */
+  def drain(
+      what: String,
+      rows: DataFrame,
+      checkpoint: String,
+      width: Option[Int] = None,
+      oneShot: Boolean = false)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row])
+      : Array[StreamingQueryProgress] = {
+    val spark = rows.sparkSession
+    val dir = if (!oneShot) checkpoint
+      else s"${checkpoint}_${System.nanoTime()}_${runSeq.incrementAndGet()}"
+    val writer = sink(rows.writeStream)
+      .option("checkpointLocation", dir)
+      .trigger(Trigger.AvailableNow())
+    val q = startLock.synchronized {
+      width.fold(writer.start())(w => GraftSession.withConf(
+        spark, "spark.sql.shuffle.partitions", w.toString)(writer.start()))
+    }
+    try require(q.awaitTermination(300000),
+      s"AvailableNow $what stream did not drain within 300 s")
+    finally if (q.isActive) q.stop()
+    if (oneShot) {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+    q.recentProgress
+  }
+
+  /** One-shot [[drain]] into a memory sink, returning the drained rows.
+    * The sink table is named `<what>_<run>`, so concurrent runs of one
+    * query on one session never share it, and its temp view is dropped
+    * before return: the frame already plans as a `LocalTableScan` over
+    * the sink's rows, which outlive the view. */
+  def drain(
+      what: String,
+      rows: DataFrame,
+      outputMode: String,
+      checkpointPrefix: String,
+      width: Option[Int]): DataFrame = {
+    val name = s"${what}_${runSeq.incrementAndGet()}"
+    val spark = rows.sparkSession
+    try {
+      drain(what, rows, checkpointPrefix, width, oneShot = true)(
+        _.format("memory").queryName(name).outputMode(outputMode))
+      spark.table(name)
+    } finally spark.catalog.dropTempView(name)
+  }
+
+  /** The parquet files under `dir` as a stream of `maxFilesPerTrigger`
+    * files per micro-batch — every file-sourced drain's input. */
+  private def parquetStream(
+      spark: org.apache.spark.sql.SparkSession,
+      dir: String,
+      schema: org.apache.spark.sql.types.StructType,
+      maxFilesPerTrigger: Int): DataFrame =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString).parquet(dir)
 
   /** Tumbling-window aggregation over an event-time column: count + exact
     * sum per (window, key). Batch form = q21's date_trunc bucketing;
@@ -215,9 +306,8 @@ object Streams {
     // cast BEFORE the watermark and project the column through untouched:
     // re-casting after withWatermark mints a new attribute and silently
     // drops the watermark tag the event-time timeout requires
-    val stream = spark.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(eventsDir)
+    val stream =
+      parquetStream(spark, eventsDir, eventsSchema, maxFilesPerTrigger)
       .withColumn(tsCol, col(tsCol).cast("timestamp"))
       .withWatermark(tsCol, watermarkDelay)
     val folded = stream
@@ -255,17 +345,14 @@ object Streams {
             Iterator(UserTotalPartial(user, n, tot, is_final = false))
           }
       }
-    val q = folded.toDF().writeStream
+    // the narrowest width: state stores = partitions × single-file
+    // batches, over a key domain of ~150 users
+    drain("evicting", folded.toDF(), checkpointDir, Some(4))(_
       .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.coalesce(1)
           .write.mode("overwrite").parquet(s"$partialsDir/batch_id=$batchId")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(300000),
-      "AvailableNow evicting drain must finish")
+      })
     val partialsSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("user_id",
         org.apache.spark.sql.types.LongType),
@@ -644,39 +731,19 @@ object Streams {
       orderCol: String,
       tieCol: String,
       maxFilesPerTrigger: Int = 2): DataFrame = {
-    val stream = spark.readStream.schema(changesSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(changesDir)
+    val stream =
+      parquetStream(spark, changesDir, changesSchema, maxFilesPerTrigger)
     @volatile var current = baseSnapshotDir
-    val ckpt = s"$snapshotRoot/ckpt_${System.nanoTime()}"
-    val q = stream.writeStream
+    drain("CDC", stream, s"$snapshotRoot/ckpt", oneShot = true)(_
       .outputMode(OutputMode.Update())
-      .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val table = spark.read.parquet(current)
         val next = s"$snapshotRoot/v${batchId + 1}"
         Relational.upsertVersioned(table, batch, keys, orderCol, tieCol)
           .write.mode("overwrite").parquet(next)
         current = next
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(300000), "AvailableNow CDC stream must drain")
-    dropCheckpoint(spark, ckpt)
+      })
     spark.read.parquet(current)
-  }
-
-  /** Checkpoint hygiene for the nano-stamped AvailableNow maintenance
-    * drains (round-12 VERDICT wrong #2): each run minted a fresh
-    * `*_ckpt_<nanos>` directory that nothing ever reused (the stamp
-    * guarantees a cold start) so repeated maintenance cycles accumulated
-    * orphan checkpoints beside the table. Deleted AFTER the drain
-    * succeeds — a failed run keeps its checkpoint for post-mortem and
-    * resume, exactly like a long-lived streaming job would. */
-  private def dropCheckpoint(
-      spark: org.apache.spark.sql.SparkSession, ckpt: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(ckpt)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
   /** Partition-pruned streaming CDC apply — the 100 TB form of
@@ -716,13 +783,10 @@ object Streams {
       tieCol: String,
       nBuckets: Int = 64,
       maxFilesPerTrigger: Int = 2): DataFrame = {
-    val stream = spark.readStream.schema(changesSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(changesDir)
-    val ckpt = s"${tableDir}_ckpt_${System.nanoTime()}"
-    val q = stream.writeStream
+    val stream =
+      parquetStream(spark, changesDir, changesSchema, maxFilesPerTrigger)
+    drain("partitioned CDC", stream, s"${tableDir}_ckpt", oneShot = true)(_
       .outputMode(OutputMode.Update())
-      .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val b = batch.withColumn("kb",
           graft.sources.Sources.keyBucket(keys, nBuckets))
@@ -737,12 +801,7 @@ object Streams {
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("kb").parquet(tableDir)
         }
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(300000),
-      "AvailableNow partitioned CDC stream must drain")
-    dropCheckpoint(spark, ckpt)
+      })
     spark.read.parquet(tableDir)
   }
 
@@ -790,12 +849,10 @@ object Streams {
       partialsDir: String,
       checkpointDir: String,
       maxFilesPerTrigger: Int = 1): DataFrame = {
-    val stream = spark.readStream.schema(deletesSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(deletesDir)
-    val q = stream.writeStream
+    val stream =
+      parquetStream(spark, deletesDir, deletesSchema, maxFilesPerTrigger)
+    drain("erasure", stream, checkpointDir, Some(8))(_
       .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // one materialization + one touched-bucket collect per batch,
         // shared by the digest scan AND the delete (r14, guide §1.2 —
@@ -836,11 +893,7 @@ object Streams {
         graft.sources.Sources.deleteKeysBucketedPrepared(
           spark, tableDir, keys, del, touched)
         ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(300000),
-      "AvailableNow erasure stream must drain")
+      })
     erasureReadout(spark, tableDir, keys, digestCols, beforePath,
       partialsDir, deletesDir, deletesSchema)
   }
@@ -871,12 +924,10 @@ object Streams {
       hamMax: Int = 7,
       bands: Int = 8,
       maxFilesPerTrigger: Int = 1): DataFrame = {
-    val stream = spark.readStream.schema(assetsSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(newAssetsDir)
-    val q = stream.writeStream
+    val stream =
+      parquetStream(spark, newAssetsDir, assetsSchema, maxFilesPerTrigger)
+    drain("video-ingest", stream, checkpointDir, Some(8))(_
       .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val sigs = graft.multimodal.Multimodal.videoSignatures(batch)
           .localCheckpoint(true)
@@ -889,11 +940,7 @@ object Streams {
             "sig", hamMax, bands)
           .coalesce(1).write.mode("overwrite")
           .parquet(s"$partialsDir/batch_id=$batchId")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(300000),
-      "AvailableNow video-ingest stream must drain")
+      })
     val partialsSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("new_id",
         org.apache.spark.sql.types.LongType),
@@ -979,12 +1026,10 @@ object Streams {
       kbBuckets: Int,
       maxFilesPerTrigger: Int)(
       sigOf: DataFrame => DataFrame): DataFrame = {
-    val stream = spark.readStream.schema(assetsSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(newAssetsDir)
-    val q = stream.writeStream
+    val stream =
+      parquetStream(spark, newAssetsDir, assetsSchema, maxFilesPerTrigger)
+    drain(what, stream, checkpointDir, Some(8))(_
       .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val sigs = sigOf(batch).localCheckpoint(true)
         sigs.coalesce(1).write.mode("overwrite")
@@ -995,11 +1040,7 @@ object Streams {
           .withColumnRenamed("id", "old_id")
           .coalesce(1).write.mode("overwrite")
           .parquet(s"$partialsDir/batch_id=$batchId")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(300000),
-      s"AvailableNow $what stream must drain")
+      })
     val partialsSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("new_id",
         org.apache.spark.sql.types.LongType),
@@ -1094,21 +1135,15 @@ object Streams {
       nprobe: Int = 4,
       rerankFactor: Int = 4,
       maxFilesPerTrigger: Int = 1): DataFrame = {
-    val stream = spark.readStream.schema(queriesSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(queriesDir)
-    val q = stream.writeStream
+    val stream =
+      parquetStream(spark, queriesDir, queriesSchema, maxFilesPerTrigger)
+    drain("ANN serve", stream, checkpointDir)(_
       .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.llm.Similarity
           .ivfPqShortlist(index, batch, k, nprobe, rerankFactor)
           .write.mode("append").parquet(shortlistDir)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(300000),
-      "AvailableNow ANN serve stream must drain")
+      })
     graft.llm.Similarity.exactRerankFromUnits(
       spark.read.parquet(unitsDir),
       spark.read.parquet(shortlistDir), k)
@@ -1132,20 +1167,14 @@ object Streams {
       checkpointDir: String,
       nprobe: Int = 4,
       maxFilesPerTrigger: Int = 1): Unit = {
-    val stream = spark.readStream.schema(queriesSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(queriesDir)
-    val q = stream.writeStream
+    val stream =
+      parquetStream(spark, queriesDir, queriesSchema, maxFilesPerTrigger)
+    drain("hybrid candidate", stream, checkpointDir)(_
       .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.llm.Similarity.ivfCandidatePairs(index, batch, nprobe)
           .write.mode("append").parquet(candsDir)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(300000),
-      "AvailableNow hybrid candidate stream must drain")
+      })
   }
 
   /** Incremental aggregate table — a materialized per-key (count, sum)
@@ -1180,12 +1209,10 @@ object Streams {
       valueCol: String,
       nBuckets: Int = 64,
       maxFilesPerTrigger: Int = 2): DataFrame = {
-    val stream = spark.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(eventsDir)
-    val q = stream.writeStream
+    val stream =
+      parquetStream(spark, eventsDir, eventsSchema, maxFilesPerTrigger)
+    drain("aggregate-table", stream, checkpointDir)(_
       .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val part = batch.groupBy(col(keyCol))
           .agg(count(lit(1)).as("n_events"),
@@ -1216,11 +1243,7 @@ object Streams {
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("kb").parquet(tableDir)
         }
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(300000),
-      "AvailableNow aggregate-table stream must drain")
+      })
     spark.read.parquet(tableDir)
       .select(col(keyCol), col("n_events"),
         col("sum_dec").cast("double").as("sum_value"))
@@ -1243,22 +1266,16 @@ object Streams {
       keyCol: String,
       valueCol: String,
       maxFilesPerTrigger: Int = 2): DataFrame = {
-    val stream = spark.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(eventsDir)
-    val q = stream.writeStream
+    val stream =
+      parquetStream(spark, eventsDir, eventsSchema, maxFilesPerTrigger)
+    drain("distinct-sketch", stream, checkpointDir)(_
       .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.groupBy(col(keyCol))
           .agg(expr(s"hll_sketch_agg($valueCol, 12)").as("sk"))
           .coalesce(1)
           .write.mode("append").parquet(partialsDir)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(300000),
-      "AvailableNow distinct-sketch stream must drain")
+      })
     spark.read.parquet(partialsDir)
       .groupBy(col(keyCol))
       .agg(expr("hll_sketch_estimate(hll_union_agg(sk))")
@@ -1288,23 +1305,17 @@ object Streams {
     require(percentilesPpm.nonEmpty &&
       percentilesPpm.forall(p => p > 0 && p <= 1000000L),
       "percentilesPpm must be in (0, 1e6]")
-    val stream = spark.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(eventsDir)
-    val q = stream.writeStream
+    val stream =
+      parquetStream(spark, eventsDir, eventsSchema, maxFilesPerTrigger)
+    drain("histogram", stream, checkpointDir)(_
       .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.groupBy(col(keyCol),
             floor(col(valueCol) / lit(bucketWidth)).cast("long").as("bucket"))
           .agg(count(lit(1)).as("n"))
           .coalesce(1)
           .write.mode("append").parquet(partialsDir)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(300000),
-      "AvailableNow histogram stream must drain")
+      })
     val hist = spark.read.parquet(partialsDir)
       .groupBy(col(keyCol), col("bucket"))
       .agg(sum(col("n")).as("n"))
@@ -1344,22 +1355,16 @@ object Streams {
       checkpointDir: String,
       rules: Seq[(String, org.apache.spark.sql.Column)],
       maxFilesPerTrigger: Int = 2): DataFrame = {
-    val stream = spark.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(eventsDir)
-    val q = stream.writeStream
+    val stream =
+      parquetStream(spark, eventsDir, eventsSchema, maxFilesPerTrigger)
+    drain("DQ", stream, checkpointDir)(_
       .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.ops.Profile.expectations(batch, rules)
           .select(col("rule"), col("n_rows"), col("n_violations"))
           .coalesce(1)
           .write.mode("append").parquet(partialsDir)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(300000),
-      "AvailableNow DQ stream must drain")
+      })
     readPartials(spark, partialsDir,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("rule",
@@ -1401,12 +1406,10 @@ object Streams {
       userCol: String,
       threshold: Double = 3.841,
       maxFilesPerTrigger: Int = 2): DataFrame = {
-    val stream = spark.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(eventsDir)
-    val q = stream.writeStream
+    val stream =
+      parquetStream(spark, eventsDir, eventsSchema, maxFilesPerTrigger)
+    drain("SRM", stream, checkpointDir)(_
       .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // keyed-by-batchId overwrite, NOT a flat append: a batch
         // replayed after a failure between write and checkpoint commit
@@ -1417,11 +1420,7 @@ object Streams {
             sum(when(col(userCol) % 2 === 1, 1L).otherwise(0L)).as("n1"))
           .coalesce(1)
           .write.mode("overwrite").parquet(s"$partialsDir/batch_id=$batchId")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(300000),
-      "AvailableNow SRM stream must drain")
+      })
     // zero micro-batches (empty source) never create partialsDir — the
     // gate then reports an empty frame, not a path-not-found crash
     val partialsSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -1467,9 +1466,8 @@ object Streams {
       threshold: Double = 3.841,
       maxFilesPerTrigger: Int = 2): DataFrame = {
     import spark.implicits._
-    val stream = spark.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(eventsDir)
+    val stream =
+      parquetStream(spark, eventsDir, eventsSchema, maxFilesPerTrigger)
     val folded = stream
       .select(col(groupCol).cast("string"),
         pmod(col(userCol).cast("long"), lit(2L)))
@@ -1489,17 +1487,14 @@ object Streams {
           state.update(updated)
           Iterator(updated)
       }
-    val q = folded.toDF().writeStream
+    // one state store per shuffle partition per batch, over a handful
+    // of arms: a narrow width
+    drain("keyed SRM", folded.toDF(), checkpointDir, Some(8))(_
       .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.coalesce(1)
           .write.mode("overwrite").parquet(s"$partialsDir/batch_id=$batchId")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(300000),
-      "AvailableNow keyed SRM stream must drain")
+      })
     val partialsSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("variant",
         org.apache.spark.sql.types.StringType),
@@ -1542,12 +1537,10 @@ object Streams {
     def h(c: org.apache.spark.sql.Column) =
       conv(substring(md5(c.cast("string")), 1, 15), 16, 10)
         .cast("long").as("h")
-    val stream = spark.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(eventsDir)
-    val q = stream.writeStream
+    val stream =
+      parquetStream(spark, eventsDir, eventsSchema, maxFilesPerTrigger)
+    drain("KMV", stream, checkpointDir)(_
       .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.select(col(groupCol), h(col(keyCol)))
           .distinct()
@@ -1557,11 +1550,7 @@ object Streams {
           .select(col(groupCol), col("h"))
           .coalesce(1)
           .write.mode("overwrite").parquet(s"$partialsDir/batch_id=$batchId")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(300000),
-      "AvailableNow KMV stream must drain")
+      })
     val partialsSchema = org.apache.spark.sql.types.StructType(Seq(
       eventsSchema(groupCol),
       org.apache.spark.sql.types.StructField("h",
@@ -1614,22 +1603,17 @@ object Streams {
       partialsDir: String,
       checkpointDir: String,
       maxFilesPerTrigger: Int,
-      what: String)(partialsOf: DataFrame => DataFrame): Unit = {
-    val stream = spark.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(eventsDir)
-    val q = stream.writeStream
+      what: String,
+      width: Option[Int] = None)(partialsOf: DataFrame => DataFrame): Unit = {
+    val stream =
+      parquetStream(spark, eventsDir, eventsSchema, maxFilesPerTrigger)
+    drain(what, stream, checkpointDir, width)(_
       .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         partialsOf(batch)
           .coalesce(1)
           .write.mode("overwrite").parquet(s"$partialsDir/batch_id=$batchId")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(300000),
-      s"AvailableNow $what stream must drain")
+      })
   }
 
   /** Ingestion-time cross-corpus EXACT-substring marks — the streaming
@@ -1659,7 +1643,7 @@ object Streams {
       minLen: Int = 16,
       maxFilesPerTrigger: Int = 1): DataFrame = {
     drainPartials(spark, newDocsDir, docsSchema, partialsDir, checkpointDir,
-        maxFilesPerTrigger, "substring-marks") { batch =>
+        maxFilesPerTrigger, "substring-marks", Some(8)) { batch =>
       graft.llm.Dedup.crossCorpusSubstrings(batch, "doc_id", "text",
         spark.read.parquet(postingsPath), spark.read.parquet(oldToksPath),
         k, anchorMod, window, minLen)
@@ -1707,7 +1691,7 @@ object Streams {
       checkpointDir: String,
       maxFilesPerTrigger: Int = 1): DataFrame = {
     drainPartials(spark, vecsDir, vecsSchema, partialsDir, checkpointDir,
-        maxFilesPerTrigger, "centroid-assign") { batch =>
+        maxFilesPerTrigger, "centroid-assign", Some(8)) { batch =>
       val x = batch
         .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
         .select(col("vec_id"), col("dim").cast("long").as("dim"),
@@ -1762,7 +1746,7 @@ object Streams {
       checkpointDir: String,
       maxFilesPerTrigger: Int = 1): DataFrame = {
     drainPartials(spark, eventsDir, eventsSchema, partialsDir, checkpointDir,
-        maxFilesPerTrigger, "bh-fdr") { batch =>
+        maxFilesPerTrigger, "bh-fdr", Some(8)) { batch =>
       batch.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum((col("user_id") % 2 === 1).cast("long")).as("n_odd"))
@@ -1794,7 +1778,7 @@ object Streams {
       checkpointDir: String,
       maxFilesPerTrigger: Int = 1): DataFrame = {
     drainPartials(spark, eventsDir, eventsSchema, partialsDir, checkpointDir,
-        maxFilesPerTrigger, "page-hinkley") { batch =>
+        maxFilesPerTrigger, "page-hinkley", Some(8)) { batch =>
       batch.groupBy(expr(
           "cast(unix_micros(cast(ts as timestamp)) div 86400000000" +
             " as bigint)").as("d"))
@@ -1851,7 +1835,7 @@ object Streams {
       checkpointDir: String,
       maxFilesPerTrigger: Int = 1): DataFrame = {
     drainPartials(spark, docsDir, docsSchema, partialsDir, checkpointDir,
-        maxFilesPerTrigger, "dataset-card") { batch =>
+        maxFilesPerTrigger, "dataset-card", Some(8)) { batch =>
       batch
         .select(col("source"), col("lang"),
           graft.text.TextOps.tokens(col("text")).as("ts"))
@@ -1920,7 +1904,7 @@ object Streams {
       checkpointDir: String,
       maxFilesPerTrigger: Int = 1): DataFrame = {
     drainPartials(spark, eventsDir, eventsSchema, partialsDir, checkpointDir,
-        maxFilesPerTrigger, "pocock") { batch =>
+        maxFilesPerTrigger, "pocock", Some(8)) { batch =>
       batch.groupBy(expr(
           "cast(unix_micros(cast(ts as timestamp)) div 86400000000" +
             " as bigint)").as("d"))
@@ -2014,7 +1998,7 @@ object Streams {
       checkpointDir: String,
       maxFilesPerTrigger: Int = 2): DataFrame = {
     drainPartials(spark, docsDir, docsSchema, partialsDir, checkpointDir,
-        maxFilesPerTrigger, "survivor") { batch =>
+        maxFilesPerTrigger, "survivor", Some(8)) { batch =>
       val w = Window.partitionBy(col("fp")).orderBy(
         col("src_tier").asc, col("quality_ppm").desc,
         col("n_tok").desc, col("doc_id").asc)
@@ -2098,12 +2082,9 @@ object Streams {
       textCol: String,
       k: Int,
       maxFilesPerTrigger: Int = 2): DataFrame = {
-    val stream = spark.readStream.schema(docsSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(docsDir)
-    val q = stream.writeStream
+    val stream = parquetStream(spark, docsDir, docsSchema, maxFilesPerTrigger)
+    drain("heavy-hitters", stream, checkpointDir)(_
       .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch
           .select(explode(graft.text.TextOps.tokens(col(textCol)))
@@ -2113,11 +2094,7 @@ object Streams {
           .select(col("c.item").as("token"))
           .coalesce(1)
           .write.mode("append").parquet(partialsDir)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(300000),
-      "AvailableNow heavy-hitters stream must drain")
+      })
     val cands = readPartials(spark, partialsDir,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("token",
@@ -2168,12 +2145,10 @@ object Streams {
         .groupBy(col("user_id"), col("island"))
         .agg(min(col("st")).as("i_st"), max(col("en")).as("i_en"))
     }
-    val stream = spark.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(eventsDir)
-    val q = stream.writeStream
+    val stream =
+      parquetStream(spark, eventsDir, eventsSchema, maxFilesPerTrigger)
+    drain("covered-time", stream, checkpointDir)(_
       .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         islands(
           batch.select(col("user_id"), col("event_id"),
@@ -2183,11 +2158,7 @@ object Streams {
           .select(col("user_id"), col("i_st"), col("i_en"))
           .coalesce(1)
           .write.mode("overwrite").parquet(s"$partialsDir/batch_id=$batchId")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(300000),
-      "AvailableNow covered-time stream must drain")
+      })
     val partialsSchema = org.apache.spark.sql.types.StructType(Seq(
       eventsSchema("user_id"),
       org.apache.spark.sql.types.StructField("i_st",
@@ -2230,22 +2201,16 @@ object Streams {
       marksDir: String,
       checkpointDir: String,
       maxFilesPerTrigger: Int = 2): DataFrame = {
-    val stream = spark.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(eventsDir)
-    val q = stream.writeStream
+    val stream =
+      parquetStream(spark, eventsDir, eventsSchema, maxFilesPerTrigger)
+    drain("retention", stream, checkpointDir)(_
       .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.select(col("user_id"), to_date(col("ts")).as("day"))
           .distinct()
           .coalesce(1)
           .write.mode("overwrite").parquet(s"$marksDir/batch_id=$batchId")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(300000),
-      "AvailableNow retention stream must drain")
+      })
     val marksSchema = org.apache.spark.sql.types.StructType(Seq(
       eventsSchema("user_id"),
       org.apache.spark.sql.types.StructField("day",

@@ -56,7 +56,7 @@ class RelationalSpec extends AnyFunSuite {
       pool.invokeAll(tasks.asJava).asScala.foreach(_.get())
     } finally {
       pool.shutdown()
-      // concurrent withShufflePartitions save/restore pairs can race;
+      // concurrent shuffle-width pins (q186, the graph loops) can race;
       // re-pin the suite default so later plan-sensitive tests are immune
       spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     }

@@ -1305,4 +1305,168 @@ class StreamsSpec extends AnyFunSuite {
     assert(keyed === batch, "keyed-state gate must equal the batch fold")
     assert(partials === batch, "partials gate must equal the batch fold")
   }
+
+  /** A 4-file parquet source of (id, k) rows, streamed one file per
+    * trigger — four micro-batches per drain. */
+  private def drainSource(name: String): org.apache.spark.sql.DataFrame = {
+    val dir = ckpt(s"${name}_src")
+    val df = (1 to 40).map(i => (i.toLong, i % 5)).toDF("id", "k")
+    df.repartition(4).write.parquet(dir)
+    spark.readStream.schema(df.schema)
+      .option("maxFilesPerTrigger", "1").parquet(dir)
+  }
+
+  private val consume: (org.apache.spark.sql.DataFrame, Long) => Unit =
+    (b, _) => b.write.format("noop").mode("overwrite").save()
+
+  private def onThread[T](body: => T): java.util.concurrent.FutureTask[T] = {
+    val task = new java.util.concurrent.FutureTask[T](() => body)
+    new Thread(task).start()
+    task
+  }
+
+  test("drain: concurrent drains each bind their own state width and " +
+      "leave the session conf as they found it") {
+    val conf = spark.conf.getAll
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    val runs = Seq(4, 8).map { w =>
+      val counts = drainSource(s"width$w").groupBy($"k").count()
+      w -> onThread {
+        barrier.await()
+        Streams.drain(s"width-$w", counts, ckpt(s"width$w"), Some(w))(
+          _.outputMode("update").foreachBatch(consume))
+      }
+    }
+    runs.foreach { case (w, run) =>
+      val progress = run.get(300, java.util.concurrent.TimeUnit.SECONDS)
+      assert(progress.nonEmpty)
+      assert(progress.flatMap(_.stateOperators)
+        .map(_.numShufflePartitions).toSet === Set(w.toLong))
+    }
+    assert(spark.conf.getAll === conf)
+    assert(spark.streams.active.isEmpty)
+  }
+
+  test("drain: an interrupted drain stops its stream, surfaces the " +
+      "interruption and keeps its checkpoint") {
+    val root = ckpt("interrupted")
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val never = new java.util.concurrent.CountDownLatch(1)
+    val seen = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val t = new Thread(() =>
+      try Streams.drain("interrupted", drainSource("interrupted"),
+          s"$root/ckpt", oneShot = true)(_.foreachBatch {
+          (_: org.apache.spark.sql.DataFrame, _: Long) =>
+            entered.countDown(); never.await() })
+      catch { case e: Throwable => seen.set(e) })
+    t.start()
+    assert(entered.await(120, java.util.concurrent.TimeUnit.SECONDS))
+    t.interrupt()
+    t.join(120000)
+    assert(!t.isAlive)
+    assert(seen.get.isInstanceOf[InterruptedException], s"got ${seen.get}")
+    assert(spark.streams.active.isEmpty)
+    assert(new java.io.File(root).listFiles().exists(_.getName.startsWith("ckpt_")),
+      "an unfinished one-shot drain keeps its checkpoint")
+  }
+
+  test("drain: a failing foreachBatch surfaces its error and keeps the checkpoint") {
+    val root = ckpt("failing")
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      Streams.drain("failing", drainSource("failing"), s"$root/ckpt",
+          oneShot = true)(_.foreachBatch {
+        (_: org.apache.spark.sql.DataFrame, _: Long) =>
+          throw new IllegalStateException("batch sink failed")
+      })
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("batch sink failed")))
+    assert(spark.streams.active.isEmpty)
+    assert(new java.io.File(root).listFiles().exists(_.getName.startsWith("ckpt_")))
+  }
+
+  test("drain: a listener on the caller's session sees every batch the " +
+      "returned progress reports") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    val batches = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, Int]
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit =
+        batches.merge(e.progress.runId, 1, (a: Int, b: Int) => a + b)
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = ended.add(e.runId)
+    }
+    spark.streams.addListener(listener)
+    try {
+      val progress = Streams.drain("listened", drainSource("listened"),
+        ckpt("listened"))(_.foreachBatch(consume))
+      assert(progress.length >= 2, "the source must drain in several batches")
+      val runId = progress.head.runId
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!ended.contains(runId) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(ended.contains(runId))
+      assert(batches.get(runId) === progress.length)
+    } finally spark.streams.removeListener(listener)
+  }
+
+  test("q105 and q106 run concurrently on one session: every run equals " +
+      "a serial run and the session is left as it was found") {
+    val names = Seq("q105_sliding_stream", "q106_dedup_stream")
+    def rows(name: String): Seq[String] =
+      SparkEntry.queries(name)(spark, TestSpark.sf)
+        .collect().map(_.toString).toSeq.sorted
+    val serial = names.map(n => n -> rows(n)).toMap
+    val predsRoot = new java.io.File(
+      graft.queries.QueryShared.predsPath("x")).getParentFile
+    def oneShotCkpts(): Set[String] = Option(predsRoot.listFiles()).toSeq
+      .flatten.flatMap(d => d +: Option(d.listFiles()).toSeq.flatten)
+      .filter(f => f.isDirectory && f.getName.contains("ckpt_"))
+      .map(_.getPath).toSet
+    val conf = spark.conf.getAll
+    val views = spark.catalog.listTables().collect().map(_.name).toSet
+    val ckpts = oneShotCkpts()
+    val runs = (names ++ names).map(n => n -> onThread(rows(n)))
+    runs.foreach { case (n, run) =>
+      assert(run.get(600, java.util.concurrent.TimeUnit.SECONDS) === serial(n),
+        s"concurrent $n differs from its serial run")
+    }
+    assert(spark.conf.getAll === conf)
+    assert(spark.catalog.listTables().collect().map(_.name).toSet === views)
+    assert(spark.streams.active.isEmpty)
+    assert(oneShotCkpts() === ckpts, "one-shot checkpoints left behind")
+  }
+
+  test("Streams.drain is the only place in src/main that starts a stream " +
+      "and waits on it") {
+    val tokens = Seq("awaitTermination(", "Trigger.AvailableNow()", "queryName(")
+    def sources(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.flatMap(f =>
+        if (f.isDirectory) sources(f)
+        else Seq(f).filter(_.getName.endsWith(".scala")))
+    def lines(f: java.io.File): IndexedSeq[String] = {
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().toIndexedSeq finally src.close()
+    }
+    val streams = new java.io.File("src/main/scala/graft/streaming/Streams.scala")
+    val streamsLines = lines(streams)
+    // each `def drain` runs from its def line to its closing brace
+    val drainBodies = streamsLines.indices
+      .filter(streamsLines(_).startsWith("  def drain("))
+      .map(i => i to streamsLines.indexWhere(_ == "  }", i))
+    assert(drainBodies.nonEmpty)
+    val hits = for {
+      f <- sources(new java.io.File("src/main/scala"))
+      (line, i) <- lines(f).zipWithIndex
+      t <- tokens if line.contains(t)
+    } yield (f.getCanonicalPath, i, t)
+    val inDrain = hits.filter { case (f, i, _) =>
+      f == streams.getCanonicalPath && drainBodies.exists(_.contains(i)) }
+    assert(tokens.forall(t => inDrain.exists(_._3 == t)),
+      "the guard must see every token inside Streams.drain")
+    val stray = hits.diff(inDrain)
+    assert(stray.isEmpty, "stream start/await outside Streams.drain: " +
+      stray.map { case (f, i, t) => s"$f:${i + 1} $t" }.mkString(", "))
+  }
 }
