@@ -664,36 +664,26 @@ object Dedup {
     * (deterministic survivor rule: keep `doc_id == cluster_id`, drop the
     * rest).
     *
-    * Iterative min-label propagation: each round, every vertex takes the
-    * min of its own label and its neighbors' labels (one equi-join + one
-    * map-side-partial min agg per round). Labels only ever decrease under
-    * the id ordering, so "no row changed this round" is an exact fixpoint
-    * witness — checked with a limit-1 join between the two tiny cached
-    * label frames, never by collecting labels, and valid for ANY orderable
-    * id type (numeric, string, ...). Rounds ≈ component diameter; near-dup
-    * clusters are shallow (pairs share LSH buckets), so this converges in
-    * a handful of rounds; for deep graphs use [[dupClustersAlternating]]
-    * (Kiveris et al.), which contracts in O(log) rounds behind the same
-    * signature. A deliberate driver-side fixpoint loop, like every
-    * iterative fit in the engine (KMeans, LR); each round is checkpoint-
-    * materialized so plans stay constant-size (see the loop comment).
-    * Throws if `maxIters` rounds do not reach the fixpoint — a silent
-    * partial clustering would split components and yield multiple
-    * "survivors" per duplicate group. */
+    * Iterative min-label propagation through [[graft.ops.Fixpoint]]:
+    * each round, every vertex takes the min of its own label and its
+    * neighbors' labels (one equi-join + one map-side-partial min agg per
+    * round). Labels only ever decrease under the id ordering, so "no
+    * label dropped this round" is an exact fixpoint witness — the same
+    * min aggregate keeps each vertex's previous label, so the witness is
+    * a count over the round itself, never a collect, and valid for ANY
+    * orderable id type (numeric, string, ...). Rounds ≈ component
+    * diameter; near-dup clusters are shallow (pairs share LSH buckets),
+    * so this converges in a handful of rounds; for deep graphs use
+    * [[dupClustersAlternating]] (Kiveris et al.), which contracts in
+    * O(log) rounds behind the same signature. Throws if `maxIters`
+    * rounds do not reach the fixpoint — a silent partial clustering
+    * would split components and yield multiple "survivors" per
+    * duplicate group. */
   def dupClusters(
       pairs: DataFrame,
       aCol: String = "a_doc",
       bCol: String = "b_doc",
       maxIters: Int = 20): DataFrame = {
-    // localCheckpoint, not persist: a persisted round still NESTS the whole
-    // prior chain in its logical plan, and because each round references
-    // the previous labels twice (join + union), both analysis and the
-    // per-action plan-string rendering grow ~2^rounds — a deep chain
-    // (diameter ≫ the usual near-dup 3–4) stalls the DRIVER on plan
-    // strings long before any executor is busy (measured: a 10-node path
-    // never finished). Checkpointing truncates each round to a LogicalRDD:
-    // constant-size plans at any round count. Checkpoint blocks are freed
-    // by the ContextCleaner once a round's frame is unreachable.
     val edges = pairs
       .select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
@@ -701,35 +691,21 @@ object Dedup {
     // seed with min(self, neighbors) — the first propagation round folded
     // into initialization at the cost of zero extra jobs (the groupBy also
     // serves as the vertex-distinct)
-    var labels = edges.groupBy(col("src"))
+    val init = edges.groupBy(col("src"))
       .agg(least(col("src"), min(col("dst"))).as("cluster_id"))
       .select(col("src").as("doc_id"), col("cluster_id"))
       .localCheckpoint(true)
-    var iters = 0
-    var converged = false
-    while (!converged && iters < maxIters) {
+    graft.ops.Fixpoint.frames("Dedup.dupClusters", maxIters,
+        Some(sum(when(col("cluster_id") < col("prev"), 1L))),
+        throwAtCap = true)(init) { (labels, _) =>
       val msgs = edges.join(labels, edges("src") === labels("doc_id"))
-        .select(col("dst").as("doc_id"), col("cluster_id"))
-      val next = labels.union(msgs)
-        .groupBy(col("doc_id")).agg(min(col("cluster_id")).as("cluster_id"))
-        .localCheckpoint(true)
-      val changed = next
-        .join(labels.withColumnRenamed("cluster_id", "prev"), "doc_id")
-        .filter(col("cluster_id") =!= col("prev"))
-        .limit(1).count()
-      labels = next
-      converged = changed == 0
-      iters += 1
-    }
-    if (!converged) {
-      throw new IllegalStateException(
-        s"dupClusters did not reach the label fixpoint in $maxIters rounds — " +
-          "a component's diameter exceeds maxIters; raise maxIters (rounds " +
-          "needed ~ longest near-dup chain)")
-    }
-    // the final (doc_id, cluster_id) frame is checkpoint-materialized;
-    // its blocks live until the frame becomes unreachable.
-    labels
+        .select(col("dst").as("doc_id"), col("cluster_id"), lit(false).as("own"))
+      labels.select(col("doc_id"), col("cluster_id"), lit(true).as("own"))
+        .unionByName(msgs)
+        .groupBy(col("doc_id"))
+        .agg(min(col("cluster_id")).as("cluster_id"),
+          min(when(col("own"), col("cluster_id"))).as("prev"))
+    }.state.select(col("doc_id"), col("cluster_id"))
   }
 
   /** Connected components via the ALTERNATING star algorithm (Kiveris,
@@ -749,11 +725,15 @@ object Dedup {
     * Both steps are one groupBy-min + one equi-join each — the same
     * shuffle primitives as a label round, but edge count never grows
     * (star steps only rewire), so the per-round cost is bounded by the
-    * input edge count. Fixpoint = the edge set stops changing (anti-join
-    * witness, never a collect); the final state is stars centered at
-    * component minima. Output and contract identical to [[dupClusters]]:
-    * (doc_id, cluster_id = component minimum), any orderable id type,
-    * throws rather than returning a silent partial clustering. */
+    * input edge count. Fixpoint = the edge set stops changing: the
+    * small-star's closing distinct also takes in the previous edge set,
+    * tagged, so the edges in only one of the two sets are counted by the
+    * round itself (a count comparison alone is NOT a witness — star steps
+    * can rewire without changing cardinality). The final state is stars
+    * centered at component minima. Output and contract identical to
+    * [[dupClusters]]: (doc_id, cluster_id = component minimum), any
+    * orderable id type, throws rather than returning a silent partial
+    * clustering. */
   def dupClustersAlternating(
       pairs: DataFrame,
       aCol: String = "a_doc",
@@ -770,6 +750,8 @@ object Dedup {
         .select(col("dst").as("src"), col("m").as("dst"))
         .distinct()
     }
+    // the small-star's edges before their distinct (which the round
+    // shares with the witness)
     def smallStar(e: DataFrame): DataFrame = {
       val dir = e.select(
         greatest(col("src"), col("dst")).as("u"),
@@ -779,62 +761,40 @@ object Dedup {
         .select(col("v").as("src"), col("m").as("dst"))
         .union(mins.select(col("u").as("src"), col("m").as("dst")))
         .filter(col("src") =!= col("dst"))
-        .distinct()
     }
 
-    // Each star step references its input ~4× (symmetrize + min-join), so
-    // a round's UNTRUNCATED logical plan nests the previous round's ~12
-    // times over — analysis cost alone grows exponentially and stalls the
-    // driver by round 4 (measured). localCheckpoint materializes the round
-    // AND truncates the plan to a LogicalRDD, making every round's plan
-    // constant-size. (On a fault-tolerant cluster run, swap in reliable
-    // `checkpoint()` with a checkpoint dir — localCheckpoint trades
-    // executor-loss recovery for speed; the fixpoint loop itself is
-    // restartable from `pairs` either way.)
-    var edges = pairs
+    val init = pairs
       .select(col(aCol).as("src"), col(bCol).as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
+      .withColumn("is_next", lit(1))
       .localCheckpoint(true)
     val vertices = pairs
       .select(explode(array(col(aCol), col(bCol))).as("doc_id"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-
-    var iters = 0
-    var converged = false
-    while (!converged && iters < maxIters) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(true)
-      // fixpoint witness: identical edge sets (both one-way anti-joins;
-      // star steps can rewire without changing cardinality, so a count
-      // comparison alone is NOT a witness). `next` derives from `edges`,
-      // so one side is renamed to keep the self-join unambiguous.
-      val prev = edges.select(col("src").as("p_src"), col("dst").as("p_dst"))
-      val fwd = col("src") === col("p_src") && col("dst") === col("p_dst")
-      val changed =
-        next.join(prev, fwd, "left_anti").limit(1).count() +
-          prev.join(next, fwd, "left_anti").limit(1).count()
-      edges.unpersist()
-      edges = next
-      converged = changed == 0
-      iters += 1
-    }
-    if (!converged) {
-      edges.unpersist(); vertices.unpersist()
-      throw new IllegalStateException(
-        s"dupClustersAlternating did not converge in $maxIters rounds")
-    }
-    // fixpoint edges are stars (v, root); isolated-after-dedup roots and
-    // any vertex the stars already folded away both come back through the
-    // vertex set with label = own id
-    val labels = edges.select(col("src").as("doc_id"), col("dst").as("cluster_id"))
-      .union(vertices.select(col("doc_id"), col("doc_id").as("cluster_id")))
-      .groupBy(col("doc_id")).agg(min(col("cluster_id")).as("cluster_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    labels.count() // materialize before releasing the lineage caches
-    edges.unpersist()
-    vertices.unpersist()
-    labels
+    try {
+      val stars = graft.ops.Fixpoint.frames("Dedup.dupClustersAlternating",
+          maxIters, Some(sum(when(col("is_next") =!= col("is_prev"), 1L))),
+          throwAtCap = true)(init) { (edges, _) =>
+        val prev = edges.filter(col("is_next") === 1)
+        smallStar(largeStar(prev.select(col("src"), col("dst"))))
+          .select(col("src"), col("dst"), lit(1).as("is_next"), lit(0).as("is_prev"))
+          .unionByName(prev.select(col("src"), col("dst"),
+            lit(0).as("is_next"), lit(1).as("is_prev")))
+          .groupBy(col("src"), col("dst"))
+          .agg(max(col("is_next")).as("is_next"), max(col("is_prev")).as("is_prev"))
+      }.state.filter(col("is_next") === 1)
+      // fixpoint edges are stars (v, root); isolated-after-dedup roots and
+      // any vertex the stars already folded away both come back through the
+      // vertex set with label = own id
+      val labels = stars.select(col("src").as("doc_id"), col("dst").as("cluster_id"))
+        .union(vertices.select(col("doc_id"), col("doc_id").as("cluster_id")))
+        .groupBy(col("doc_id")).agg(min(col("cluster_id")).as("cluster_id"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      labels.count() // materialize before releasing the lineage cache
+      labels
+    } finally vertices.unpersist()
   }
 
   /** Benchmark decontamination: flag corpus documents that share any EXACT

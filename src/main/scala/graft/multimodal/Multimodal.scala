@@ -55,55 +55,51 @@ object Multimodal {
     * by [[graft.expr.BmpDecode]], PCM16 RIFF/WAVE decoded by
     * [[graft.expr.WavDecode]], and mono YUV4MPEG2 streams decoded by
     * [[graft.expr.Y4mDecode]] — constant format framing + md5-derived
-    * payload bytes: reproducible, incompressible-ish, size-controllable. */
+    * payload bytes: reproducible, incompressible-ish, size-controllable.
+    * Asset `id` is an image, audio clip or video for `id mod 3` = 0, 1, 2. */
   def syntheticAssets(spark: SparkSession, n: Int, payloadBlocks: Int = 8): DataFrame = {
-    val pixelBytes = SyntheticImageW * SyntheticImageH * 3
-    val pixelHexBlocks = (pixelBytes * 2 + 31) / 32
-    val header = graft.expr.BmpDecode
-      .encode(SyntheticImageW, SyntheticImageH, new Array[Byte](pixelBytes))
-      .take(54)
-    val bmp = concat(
-      lit(header),
-      to_binary(substring(concat_ws("",
-        (0 until pixelHexBlocks).map(b => md5(concat(col("id"), lit(s"_$b")))): _*),
-        1, pixelBytes * 2), lit("hex")))
-    // md5 blocks are 16 bytes = 8 whole mono PCM16 frames, so the id-seeded
-    // block generator doubles as the WAV sample section
-    val blob = to_binary(concat_ws("",
-      (0 until payloadBlocks).map(b => md5(concat(col("id"), lit(s"_$b")))): _*),
-      lit("hex"))
-    val wavHeader = graft.expr.WavDecode
-      .encode(1, SyntheticSampleRate, new Array[Byte](payloadBlocks * 16))
-      .take(44)
-    val wav = concat(lit(wavHeader), blob)
-    // Y4M: text header, then FRAME\n + luma plane per frame
-    val lumaBytes = SyntheticImageW * SyntheticImageH
-    val lumaHexBlocks = (lumaBytes * 2 + 31) / 32
-    val y4mRef = graft.expr.Y4mDecode.encode(
-      SyntheticImageW, SyntheticImageH, 1, new Array[Byte](lumaBytes))
-    val y4mHeader = y4mRef.take(y4mRef.length - lumaBytes - 6)
-    val y4m = concat(
-      lit(y4mHeader) +:
-        (0 until SyntheticVideoFrames).flatMap(f => Seq(
-          lit("FRAME\n".getBytes("US-ASCII")),
-          to_binary(substring(concat_ws("",
-            (0 until lumaHexBlocks).map(b =>
-              md5(concat(col("id"), lit(s"_f${f}_$b")))): _*),
-            1, lumaBytes * 2), lit("hex")))): _*)
     val modality = element_at(array(lit("image"), lit("audio"), lit("video")),
       (pmod(col("id"), lit(3)) + 1).cast("int"))
+    val content = udf((id: Long) => syntheticPayload(id, payloadBlocks)).asNonNullable()
     spark.range(n.toLong).select(
       col("id").as("asset_id"),
       modality.as("modality"),
-      when(modality === "image", bmp)
-        .when(modality === "audio", wav)
-        .otherwise(y4m).as("content"),
+      content(col("id")).as("content"),
       struct(
         lit("synthetic").as("source"),
         when(modality === "image", lit(SyntheticImageW)).otherwise(lit(64))
           .as("declared_w"),
         when(modality === "image", lit(SyntheticImageH)).otherwise(lit(64))
           .as("declared_h")).as("meta"))
+  }
+
+  /** The file bytes of synthetic asset `id`: the format's constant header,
+    * then payload bytes that are the md5 digests of `"<id>_<tag>"` for
+    * tags 0, 1, … (video frame f: `f<f>_0`, `f<f>_1`, …), concatenated and
+    * cut to the payload length. Computed per row in one Scala function:
+    * the same bytes written as a SQL expression (hundreds of
+    * `md5(concat(id, …))` columns under a CASE) outgrew the 64 KB
+    * whole-stage codegen limit in every plan that consumed them.
+    * md5 blocks are 16 bytes = 8 whole mono PCM16 frames, so the block
+    * generator doubles as the WAV sample section. */
+  private def syntheticPayload(id: Long, payloadBlocks: Int): Array[Byte] = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def blocks(tags: Iterator[String], len: Int): Array[Byte] =
+      tags.flatMap(t => md.digest(s"${id}_$t".getBytes("UTF-8"))).take(len).toArray
+    val (w, h) = (SyntheticImageW, SyntheticImageH)
+    Math.floorMod(id, 3L) match {
+      case 0 =>
+        // raw md5 bytes behind the header, not a re-ordered BGR raster
+        val pixels = blocks(Iterator.from(0).map(_.toString), w * h * 3)
+        graft.expr.BmpDecode.encode(w, h, new Array[Byte](pixels.length)).take(54) ++ pixels
+      case 1 =>
+        graft.expr.WavDecode.encode(1, SyntheticSampleRate,
+          blocks(Iterator.from(0).map(_.toString), payloadBlocks * 16))
+      case _ =>
+        graft.expr.Y4mDecode.encode(w, h, SyntheticVideoFrames,
+          (0 until SyntheticVideoFrames).toArray.flatMap(f =>
+            blocks(Iterator.from(0).map(b => s"f${f}_$b"), w * h)))
+    }
   }
 
   /** Deterministic synthetic COMPRESSED image assets: md5-seeded RGB

@@ -61,7 +61,20 @@ object Graph {
       .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
   }
 
-  /** Exact-integer PageRank over a directed edge list.
+  /** Pin the per-round shuffle width to the materialized edge frame's
+    * own (post-AQE, size-coalesced) partition count for the duration of
+    * an iterative loop. The session default is sized
+    * for whole-table scans; an iterative kernel re-shuffles node/edge-
+    * sized frames every round, so the right width tracks the DATA: at
+    * fixture scale the rounds stop paying a core-count-wide exchange for
+    * KB frames, at 100 TB the edge frame's thousands of partitions carry
+    * through unchanged — derived from input, never a constant. */
+  private[graft] def withLoopWidth[T](anchor: DataFrame)(body: => T): T =
+    graft.GraftSession.withConf(anchor.sparkSession, "spark.sql.shuffle.partitions",
+      math.max(anchor.rdd.getNumPartitions, 1).toString)(body)
+
+  /** Exact-integer PageRank over a directed edge list, `iters` fixed
+    * rounds.
     *
     * Scores live in integer units of `scaleUnit⁻¹` (default 10⁻¹²):
     * initialization is `scaleUnit DIV N`, each round sends
@@ -86,178 +99,13 @@ object Graph {
     * Scale: each round is one (edges ⋈ scores) shuffle on the vertex key +
     * one map-side-partial sum. The out-degree is joined onto the edge list
     * ONCE before the loop (one long per edge, checkpointed) — iteration-
-    * invariant work never repeats inside a round.
-    * Rounds are `localCheckpoint`-truncated: the round-N plan references
-    * scores twice (degree scatter + gather join), so an uncheckpointed loop
-    * would grow its logical plan ~2^rounds (see dupClusters' loop comment).
-    */
-  /** Pin the per-round shuffle width to the materialized edge frame's
-    * own (post-AQE, size-coalesced) partition count for the duration of
-    * an iterative loop (r15, guide §2.2). The session default is sized
-    * for whole-table scans; an iterative kernel re-shuffles node/edge-
-    * sized frames every round, so the right width tracks the DATA: at
-    * fixture scale the rounds stop paying a core-count-wide exchange for
-    * KB frames, at 100 TB the edge frame's thousands of partitions carry
-    * through unchanged — derived from input, never a constant. */
-  private[graft] def withLoopWidth[T](anchor: DataFrame)(body: => T): T =
-    graft.GraftSession.withConf(anchor.sparkSession, "spark.sql.shuffle.partitions",
-      math.max(anchor.rdd.getNumPartitions, 1).toString)(body)
-
+    * invariant work never repeats inside a round. */
   def pageRankInt(
       edges: DataFrame, // (src: long, dst: long)
       iters: Int = 5,
       dampingPct: Int = 85,
-      scaleUnit: Long = 1000000000000L): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
-    require(dampingPct >= 0 && dampingPct <= 100,
-      s"dampingPct must be in [0,100], got $dampingPct")
-    require(scaleUnit >= 1000000L, s"scaleUnit too coarse: $scaleUnit")
-
-    val e = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .localCheckpoint(true)
-    withLoopWidth(e) {
-    // the out-degree is iteration-INVARIANT: join it onto the edge list
-    // once, outside the loop, so each round pays one join (scores), not
-    // two — at scale this halves the per-round probe work on the
-    // edge-sized frame
-    val eDeg = e
-      .join(e.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src")
-      .localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint(true)
-
-    // N enters as a broadcast scalar-agg cross join — a pure plan, no
-    // eager count() on the driver (the withClassWeights discipline)
-    val nFrame = nodes.agg(count(lit(1)).as("n"))
-    var scores = nodes
-      .crossJoin(broadcast(nFrame))
-      .select(
-        col("node"),
-        expr(s"$scaleUnit DIV n").as("score"),
-        expr(s"(${100 - dampingPct} * ($scaleUnit DIV n)) DIV 100").as("base"))
-      .localCheckpoint(true)
-
-    for (_ <- 1 to iters) {
-      val msgs = eDeg
-        .join(scores.select(col("node"), col("score")), eDeg("src") === col("node"))
-        .select(col("dst"), expr("score DIV deg").as("msg"))
-        .groupBy(col("dst")).agg(sum(col("msg")).as("inbound"))
-      // EAGER checkpoint per round: truncates the logical plan (the round
-      // references scores twice, so analysis would otherwise grow
-      // ~2^rounds) and materializes the round once. Measured against the
-      // lazy form (plan truncation without the blocking job): lazy loses
-      // ~2× here — the un-materialized round gets recomputed through the
-      // double self-reference, costing more than the 5 small checkpoint
-      // jobs save.
-      scores = scores
-        .select(col("node"), col("base"))
-        .join(msgs, scores("node") === msgs("dst"), "left_outer")
-        .select(
-          col("node"),
-          (col("base") +
-            expr(s"($dampingPct * coalesce(inbound, 0L)) DIV 100")).as("score"),
-          col("base"))
-        .localCheckpoint(true)
-    }
-    scores.select(col("node"), col("score"))
-    }
-  }
-
-  /** Multi-source BFS hop distances: every node reachable from `seeds`
-    * within `maxHops`, labeled with its shortest hop count. Classic
-    * frontier expansion — each round joins ONLY the new frontier against
-    * the edge list, anti-joins away already-visited nodes (so a node's
-    * recorded hop is its first visit = BFS distance), and stops early on
-    * an empty frontier. Rounds are `localCheckpoint`-truncated like
-    * [[pageRankInt]]'s (the round references the visited set twice).
-    * Scale: per-round work is |frontier ⋈ edges|, the frontier never
-    * revisits nodes, and total rows are bounded by |reachable| — never
-    * walk-enumeration (the naive recursive-CTE UNION ALL blowup).
-    * Directed; pass both orientations for an undirected graph. */
-  def bfsHops(
-      edges: DataFrame, // (src: long, dst: long)
-      seeds: DataFrame, // (node: long)
-      maxHops: Int): DataFrame = {
-    require(maxHops >= 1 && maxHops <= 50, s"maxHops must be in [1,50], got $maxHops")
-    val e = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .localCheckpoint(true)
-    withLoopWidth(e) {
-    var dist = seeds
-      .select(col("node").cast("long").as("node")).distinct()
-      .select(col("node"), lit(0).as("hop"))
-      .localCheckpoint(true)
-    var frontier = dist.select(col("node"))
-    var h = 1
-    var done = false
-    while (h <= maxHops && !done) {
-      val next = e.join(frontier, e("src") === frontier("node"))
-        .select(col("dst").as("node")).distinct()
-        .join(dist.select(col("node").as("__v")),
-          col("node") === col("__v"), "left_anti")
-        .select(col("node"), lit(h).as("hop"))
-        .localCheckpoint(true)
-      if (next.isEmpty) done = true
-      else {
-        dist = dist.unionByName(next).localCheckpoint(true)
-        frontier = next.select(col("node"))
-      }
-      h += 1
-    }
-    dist
-    }
-  }
-
-  /** Synchronous min-label propagation, `rounds` fixed iterations:
-    * every node starts as its own label and each round takes the min of
-    * its label and its neighbors' labels — after k rounds equal labels
-    * certify connectivity within distance k (run to fixpoint it is
-    * connected components; the FIXED round count keeps the operator
-    * oracle-replayable round-for-round). Edges must be symmetric
-    * (caller unions both directions).
-    *
-    * Scale shape per round: one shuffle join edges⋈labels on the dst
-    * node + one min-aggregate by src — data-proportional, and
-    * localCheckpoint pins each round's frame so the plan stays constant
-    * size instead of doubling per iteration (the pageRankInt rule). */
-  def minLabelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    // materialize the edge list once: it feeds every round's join, and
-    // left as a plan each round would re-run its whole upstream
-    // (joins/distinct/union) — the pageRankInt rule
-    val e = edges.localCheckpoint(true)
-    withLoopWidth(e) {
-    var labels = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val nbr = e.join(labels, col("dst") === col("node"))
-        .groupBy(col("src")).agg(min(col("label")).as("nl"))
-      labels = labels
-        .join(nbr, col("node") === col("src"), "left_outer")
-        .select(col("node"),
-          least(col("label"), coalesce(col("nl"), col("label"))).as("label"))
-        .localCheckpoint(true)
-    }
-    labels
-    }
-  }
-
-  /** Degree histogram of a symmetric edge list: per-node degree (one
-    * grouped count over edges), then the distribution (degree →
-    * node count) — the graph-shape profile read before any iterative
-    * algorithm (a heavy tail says "salt or cap the hubs"). Two map-side
-    * partial aggregates; output is at most max-degree rows. */
-  def degreeHistogram(edges: DataFrame): DataFrame =
-    edges.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("degree"))
-      .groupBy(col("degree"))
-      .agg(count(lit(1)).as("n_nodes"))
+      scaleUnit: Long = 1000000000000L): DataFrame =
+    pageRank(edges, None, iters, None, dampingPct, scaleUnit)._1
 
   /** Personalized PageRank (fixed-round, exact-integer — the
     * [[pageRankInt]] discipline with a SEED-restricted teleport): the
@@ -266,71 +114,20 @@ object Graph {
     * (similar-entity search, trust propagation). Seeds outside the
     * graph are dropped (semi join); seed count enters as a broadcast
     * scalar-agg, never an eager driver count. Integer `DIV` throughout
-    * — both engines walk bit-identical rounds; per-round eager
-    * localCheckpoint truncates the self-referencing plan exactly as in
-    * [[pageRankInt]] (measured there: lazy loses ~2×). */
+    * — both engines walk bit-identical rounds. */
   def personalizedPageRankInt(
       edges: DataFrame, // (src: long, dst: long)
       seeds: DataFrame, // (node: long)
       iters: Int = 5,
       dampingPct: Int = 85,
-      scaleUnit: Long = 1000000000000L): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
-    require(dampingPct >= 0 && dampingPct <= 100,
-      s"dampingPct must be in [0,100], got $dampingPct")
-    val e = edges
-      .select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .localCheckpoint(true)
-    withLoopWidth(e) {
-    val eDeg = e
-      .join(e.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src")
-      .localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint(true)
-    val s = seeds.select(col("node").cast("long").as("node")).distinct()
-      .join(nodes, Seq("node"), "left_semi")
-      .localCheckpoint(true)
-    val nsFrame = s.agg(count(lit(1)).as("ns"))
-    var scores = nodes
-      .join(s.withColumn("is_seed", lit(1)), Seq("node"), "left_outer")
-      .crossJoin(broadcast(nsFrame))
-      .select(col("node"),
-        when(col("is_seed").isNotNull, expr(s"$scaleUnit DIV ns"))
-          .otherwise(0L).as("score"),
-        when(col("is_seed").isNotNull,
-          expr(s"(${100 - dampingPct} * ($scaleUnit DIV ns)) DIV 100"))
-          .otherwise(0L).as("base"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      val msgs = eDeg
-        .join(scores.select(col("node"), col("score")),
-          eDeg("src") === col("node"))
-        .select(col("dst"), expr("score DIV deg").as("msg"))
-        .groupBy(col("dst")).agg(sum(col("msg")).as("inbound"))
-      scores = scores
-        .select(col("node"), col("base"))
-        .join(msgs, scores("node") === msgs("dst"), "left_outer")
-        .select(col("node"),
-          (col("base") +
-            expr(s"($dampingPct * coalesce(inbound, 0L)) DIV 100"))
-            .as("score"),
-          col("base"))
-        .localCheckpoint(true)
-    }
-    scores.select(col("node"), col("score"))
-    }
-  }
+      scaleUnit: Long = 1000000000000L): DataFrame =
+    pageRank(edges, Some(seeds), iters, None, dampingPct, scaleUnit)._1
 
   /** Epsilon-stop PageRank — [[pageRankInt]]'s CONVERGENCE-WITNESSED
-    * twin (round-9 "convergence-tested variant"): iterates the IDENTICAL
-    * exact-integer recurrence, measuring after each round the exact L1
-    * residual Σ|sᵣ − sᵣ₋₁| in scale units (one node-key join + one
-    * scalar aggregate per round — a bounded driver action, the
-    * greedy-cover witness rule; total |Δ| is ≤ 2·scaleUnit by mass
-    * conservation, so the sum is a plain BIGINT), and stopping at the
+    * twin: iterates the IDENTICAL
+    * exact-integer recurrence, measuring in each round the exact L1
+    * residual Σ|sᵣ − sᵣ₋₁| in scale units (total |Δ| is ≤ 2·scaleUnit by
+    * mass conservation, so the sum is a plain BIGINT), and stopping at the
     * FIRST round whose residual ≤ `epsilonUnits`, or at `maxIters`.
     *
     * Returns (scores, stopRound, residuals-by-round). The realized stop
@@ -349,16 +146,36 @@ object Graph {
       epsilonUnits: Long = 100000000000L,
       dampingPct: Int = 85,
       scaleUnit: Long = 1000000000000L): (DataFrame, Int, Seq[Long]) = {
-    require(maxIters >= 1 && maxIters <= 50,
-      s"maxIters must be in [1,50], got $maxIters")
     require(epsilonUnits >= 0, s"epsilonUnits must be >= 0")
+    pageRank(edges, None, maxIters, Some(epsilonUnits), dampingPct, scaleUnit)
+  }
+
+  /** The one PageRank kernel behind the three forms above: teleport into
+    * `seeds` (all nodes when absent — then `DIV ns` is `DIV N` and every
+    * node is a seed, so the uniform form falls out exactly), `maxIters`
+    * rounds, stopping early at the first round whose L1 residual is ≤
+    * `epsilonUnits` when one is given. Each round frame carries the
+    * previous score next to the new one, so the residual is a scalar
+    * aggregate over the round itself. */
+  private def pageRank(
+      edges: DataFrame,
+      seeds: Option[DataFrame],
+      maxIters: Int,
+      epsilonUnits: Option[Long],
+      dampingPct: Int,
+      scaleUnit: Long): (DataFrame, Int, Seq[Long]) = {
+    require(maxIters >= 1 && maxIters <= 50, s"iters must be in [1,50], got $maxIters")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0,100], got $dampingPct")
+    require(scaleUnit >= 1000000L, s"scaleUnit too coarse: $scaleUnit")
     val e = edges
-      .select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
+      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .localCheckpoint(true)
     withLoopWidth(e) {
+    // the out-degree is iteration-INVARIANT: join it onto the edge list
+    // once, outside the loop, so each round pays one join (scores), not
+    // two — at scale this halves the per-round probe work on the
+    // edge-sized frame
     val eDeg = e
       .join(e.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src")
       .localCheckpoint(true)
@@ -366,63 +183,142 @@ object Graph {
       .union(e.select(col("dst").as("node")))
       .distinct()
       .localCheckpoint(true)
-    val nFrame = nodes.agg(count(lit(1)).as("n"))
-    var scores = nodes
-      .crossJoin(broadcast(nFrame))
+    val teleport = seeds.fold(nodes)(
+      _.select(col("node").cast("long").as("node")).distinct()
+        .join(nodes, Seq("node"), "left_semi")
+        .localCheckpoint(true))
+    val seeded = teleport.select(col("node"), lit(true).as("is_seed"))
+    // the seed count enters as a broadcast scalar-agg cross join — a pure
+    // plan, no eager count() on the driver (the withClassWeights discipline)
+    val nsFrame = teleport.agg(count(lit(1)).as("ns"))
+    val init = (if (seeds.isEmpty) seeded else nodes.join(seeded, Seq("node"), "left_outer"))
+      .crossJoin(broadcast(nsFrame))
       .select(col("node"),
-        expr(s"$scaleUnit DIV n").as("score"),
-        expr(s"(${100 - dampingPct} * ($scaleUnit DIV n)) DIV 100").as("base"))
+        when(col("is_seed"), expr(s"$scaleUnit DIV ns")).otherwise(0L).as("score"),
+        when(col("is_seed"),
+          expr(s"(${100 - dampingPct} * ($scaleUnit DIV ns)) DIV 100"))
+          .otherwise(0L).as("base"))
       .localCheckpoint(true)
-    val residuals = scala.collection.mutable.ArrayBuffer[Long]()
-    var round = 0
-    var converged = false
-    while (round < maxIters && !converged) {
-      round += 1
+    val run = Fixpoint.frames("Graph.pageRank", maxIters,
+        epsilonUnits.map(_ => sum(abs(col("score") - col("prev_score")))),
+        epsilonUnits.getOrElse(0L))(init) { (scores, _) =>
       val msgs = eDeg
-        .join(scores.select(col("node"), col("score")),
-          eDeg("src") === col("node"))
+        .join(scores.select(col("node"), col("score")), eDeg("src") === col("node"))
         .select(col("dst"), expr("score DIV deg").as("msg"))
         .groupBy(col("dst")).agg(sum(col("msg")).as("inbound"))
-      val next = scores
+      scores
         .select(col("node"), col("base"), col("score").as("prev_score"))
         .join(msgs, scores("node") === msgs("dst"), "left_outer")
         .select(col("node"),
           (col("base") +
-            expr(s"($dampingPct * coalesce(inbound, 0L)) DIV 100"))
-            .as("score"),
+            expr(s"($dampingPct * coalesce(inbound, 0L)) DIV 100")).as("score"),
           col("base"), col("prev_score"))
-        .localCheckpoint(true)
-      // bounded scalar witness: the exact L1 residual of this round
-      val resid = next
-        .agg(sum(abs(col("score") - col("prev_score"))).as("r"))
-        .head().getLong(0)
-      residuals += resid
-      converged = resid <= epsilonUnits
-      scores = next.select(col("node"), col("score"), col("base"))
     }
-    (scores.select(col("node"), col("score")), round, residuals.toSeq)
+    (run.state.select(col("node"), col("score")), run.rounds, run.witnesses)
     }
   }
 
+  /** Multi-source BFS hop distances: every node reachable from `seeds`
+    * within `maxHops`, labeled with its shortest hop count. Classic
+    * frontier expansion — each round joins ONLY the last round's new
+    * nodes (the frontier) against the edge list, anti-joins away
+    * already-visited nodes (so a node's recorded hop is its first visit
+    * = BFS distance), and stops early when a round finds no new node
+    * (the witness: the new frontier's size). Scale: per-round work is
+    * |frontier ⋈ edges|, the frontier never revisits nodes, and total
+    * rows are bounded by |reachable| — never walk-enumeration (the
+    * naive recursive-CTE UNION ALL blowup). Directed; pass both
+    * orientations for an undirected graph. */
+  def bfsHops(
+      edges: DataFrame, // (src: long, dst: long)
+      seeds: DataFrame, // (node: long)
+      maxHops: Int): DataFrame = {
+    require(maxHops >= 1 && maxHops <= 50, s"maxHops must be in [1,50], got $maxHops")
+    val e = edges
+      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+      .localCheckpoint(true)
+    withLoopWidth(e) {
+    val init = seeds
+      .select(col("node").cast("long").as("node")).distinct()
+      .select(col("node"), lit(0).as("hop"), lit(true).as("fresh"))
+      .localCheckpoint(true)
+    val run = Fixpoint.frames("Graph.bfsHops", maxHops,
+        Some(sum(col("fresh").cast("long"))))(init) { (dist, h) =>
+      val frontier = dist.filter(col("fresh")).select(col("node"))
+      val next = e.join(frontier, e("src") === frontier("node"))
+        .select(col("dst").as("node")).distinct()
+        .join(dist.select(col("node").as("__v")),
+          col("node") === col("__v"), "left_anti")
+      dist.select(col("node"), col("hop"), lit(false).as("fresh"))
+        .unionByName(next.select(col("node"), lit(h).as("hop"), lit(true).as("fresh")))
+    }
+    run.state.select(col("node"), col("hop"))
+    }
+  }
+
+  /** Synchronous min-label propagation, `rounds` fixed iterations:
+    * every node starts as its own label and each round takes the min of
+    * its label and its neighbors' labels — after k rounds equal labels
+    * certify connectivity within distance k (run to fixpoint it is
+    * connected components; the FIXED round count keeps the operator
+    * oracle-replayable round-for-round). Edges must be symmetric
+    * (caller unions both directions).
+    *
+    * Scale shape per round: one shuffle join edges⋈labels on the dst
+    * node + one min-aggregate by src — data-proportional. */
+  def minLabelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
+    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
+    // materialize the edge list once: it feeds every round's join, and
+    // left as a plan each round would re-run its whole upstream
+    // (joins/distinct/union)
+    val e = edges.localCheckpoint(true)
+    withLoopWidth(e) {
+    val init = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node")))
+      .distinct()
+      .withColumn("label", col("node"))
+      .localCheckpoint(true)
+    Fixpoint.frames("Graph.minLabelPropagation", rounds)(init) { (labels, _) =>
+      val nbr = e.join(labels, col("dst") === col("node"))
+        .groupBy(col("src")).agg(min(col("label")).as("nl"))
+      labels
+        .join(nbr, col("node") === col("src"), "left_outer")
+        .select(col("node"),
+          least(col("label"), coalesce(col("nl"), col("label"))).as("label"))
+    }.state
+    }
+  }
+
+  /** Degree histogram of a symmetric edge list: per-node degree (one
+    * grouped count over edges), then the distribution (degree →
+    * node count) — the graph-shape profile read before any iterative
+    * algorithm (a heavy tail says "salt or cap the hubs"). Two map-side
+    * partial aggregates; output is at most max-degree rows. */
+  def degreeHistogram(edges: DataFrame): DataFrame =
+    edges.groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("degree"))
+      .groupBy(col("degree"))
+      .agg(count(lit(1)).as("n_nodes"))
+
   /** No-change-stop Bellman–Ford — the weighted-shortest-path analog of
-    * [[pageRankIntConverged]] (round-10 VERDICT "What's missing" #3: the
-    * last fixed-round iterative kernel gains its convergence twin).
-    * Iterates the IDENTICAL union+min relaxation as the fixed-round form
-    * (q330), measuring after each round the exact count of IMPROVED
-    * entries — nodes newly reached or whose distance strictly dropped
-    * (one key join + one scalar count per round, the bounded-witness
-    * rule) — and stopping at the first round that improves NOTHING, or
-    * at `maxIters`. Distances are non-increasing integers bounded below
-    * and |V|−1 relaxation rounds always suffice with non-negative
-    * weights, so the stop is reached, and every pre-stop round improved
-    * ≥1 entry BY CONSTRUCTION (a zero-improvement round exits the loop).
+    * [[pageRankIntConverged]]: union+min relaxation rounds, counting in
+    * each round the exact number of IMPROVED entries — nodes newly
+    * reached or whose distance strictly dropped — and stopping at the
+    * first round that improves NOTHING, or at `maxIters` (q330 passes its
+    * fixed round count as the cap: the rounds after a no-change round
+    * would repeat the same distances). Distances are non-increasing
+    * integers bounded below and |V|−1 relaxation rounds always suffice
+    * with non-negative weights, so the stop is reached, and every
+    * pre-stop round improved ≥1 entry BY CONSTRUCTION (a
+    * zero-improvement round exits the loop). The round's min-aggregate
+    * also keeps each node's previous distance (`p`, null for a newly
+    * reached node), so the improved count rides the round itself.
     *
     * Returns (dist, stopRound, improvedByRound). Fixed-round equality —
     * running the fixed-round recurrence `stopRound` (or more) rounds
     * yields bit-identical distances — is the GraphSpec law that lets the
     * dynamically-unrolled oracle (the q386 mechanism) state the naive
-    * unrolled form. Per-round localCheckpoint keeps plans constant-size
-    * across rounds. */
+    * unrolled form. */
   def bellmanFordConverged(
       edges: DataFrame, // (src, dst, w) — non-negative integer weights
       seeds: DataFrame, // (node)
@@ -434,30 +330,70 @@ object Graph {
         col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
       .localCheckpoint(true)
     withLoopWidth(e) {
-    var dist = seeds
+    val init = seeds
       .select(col("node").cast("long").as("node")).distinct()
       .select(col("node"), lit(0L).as("d"))
       .localCheckpoint(true)
-    val improvedByRound = scala.collection.mutable.ArrayBuffer[Long]()
-    var round = 0
-    var converged = false
-    while (round < maxIters && !converged) {
-      round += 1
-      val relaxed = e.join(dist, e("src") === dist("node"))
-        .select(col("dst").as("node"), (col("d") + col("w")).as("d"))
-      val next = dist.unionByName(relaxed)
-        .groupBy(col("node")).agg(min(col("d")).as("d"))
-        .localCheckpoint(true)
-      // bounded scalar witness: first-reached or strictly-shortened nodes
-      val improved = next.as("n")
-        .join(dist.as("p"), col("n.node") === col("p.node"), "left_outer")
-        .filter(col("p.node").isNull || col("n.d") < col("p.d"))
-        .count()
-      improvedByRound += improved
-      converged = improved == 0L
-      dist = next
+    val run = Fixpoint.frames("Graph.bellmanFord", maxIters,
+        Some(sum(when(col("p").isNull || col("d") < col("p"), 1L))))(init) {
+      (dist, _) =>
+        val relaxed = e.join(dist, e("src") === dist("node"))
+          .select(col("dst").as("node"), (col("d") + col("w")).as("d"),
+            lit(null).cast("long").as("p"))
+        dist.select(col("node"), col("d"), col("d").as("p"))
+          .unionByName(relaxed)
+          .groupBy(col("node")).agg(min(col("d")).as("d"), min(col("p")).as("p"))
     }
-    (dist, round, improvedByRound.toSeq)
+    (run.state.select(col("node"), col("d")), run.rounds, run.witnesses)
+    }
+  }
+
+  /** HITS hubs & authorities on a directed edge list, in integer ppm:
+    * each round sets a(v) = Σ_{u→v} h(u) and then h(u) = Σ_{u→v} a(v),
+    * each half-step max-normalized to the 10⁶ grid (score·10⁶ div max —
+    * exact and order-free; the max is a broadcast scalar-agg, never a
+    * driver collect). Hubs start at 10⁶. Runs `maxIters` rounds, or with
+    * `epsilonPerHub` stops at the first round whose exact hub L1
+    * residual Σ|hᵣ − hᵣ₋₁| is ≤ `epsilonPerHub` × #hubs — a relative
+    * epsilon that, unlike an absolute one, a 10× larger hub set still
+    * reaches. The hub set (the edge sources) is round-invariant, so the
+    * previous hub score rides the hub aggregate of the round and the
+    * residual is a scalar over the round itself.
+    *
+    * Returns (hubs (node, h), authorities (node, a), rounds,
+    * residuals-by-round — empty without `epsilonPerHub`). */
+  def hits(
+      edges: DataFrame, // (src: long, dst: long), distinct
+      maxIters: Int,
+      epsilonPerHub: Option[Long] = None): (DataFrame, DataFrame, Int, Seq[Long]) = {
+    val e = edges.localCheckpoint(true)
+    withLoopWidth(e) {
+    val hub0 = e.select(col("src").as("node")).distinct()
+      .withColumn("h", lit(1000000L))
+      .localCheckpoint(true)
+    val eps = epsilonPerHub.map(_ * hub0.count())
+    val run = Fixpoint[(DataFrame, DataFrame)]("Graph.hits", maxIters,
+        eps.map(_ => sum(abs(col("h") - col("hp")))), eps.getOrElse(0L))(
+        (hub0, null)) { case ((hub, _), _) =>
+      val a0 = e.join(hub.select(col("node"), col("h")), e("src") === col("node"))
+        .groupBy(col("dst")).agg(sum(col("h")).as("a0"))
+      val auth = a0
+        .crossJoin(broadcast(a0.agg(max(col("a0")).as("mxa"))))
+        .select(col("dst").as("node"), expr("a0 * 1000000 div mxa").as("a"))
+        .localCheckpoint(true)
+      val h0 = e.join(auth, e("dst") === auth("node"))
+        .select(col("src"), col("a"), lit(null).cast("long").as("hp"))
+        .unionByName(hub.select(col("node").as("src"),
+          lit(null).cast("long").as("a"), col("h").as("hp")))
+        .groupBy(col("src")).agg(sum(col("a")).as("h0"), max(col("hp")).as("hp"))
+      val nextHub = h0
+        .crossJoin(broadcast(h0.agg(max(col("h0")).as("mxh"))))
+        .select(col("src").as("node"), expr("h0 * 1000000 div mxh").as("h"),
+          col("hp"))
+      (nextHub, m => (m, auth))
+    }
+    val (hub, auth) = run.state
+    (hub.select(col("node"), col("h")), auth, run.rounds, run.witnesses)
     }
   }
 }

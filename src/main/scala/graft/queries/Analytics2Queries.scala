@@ -708,10 +708,9 @@ object Analytics2Queries {
     // graph (k=2 over edges with ≥2 linking orders; 8 rounds — fixture
     // fixpoint is ≤4 at every SF, and the FIXED round count is the
     // declared cross-engine semantics, the pageRankInt rule): each
-    // round recomputes degrees and keeps ≥k nodes via two semi joins;
-    // per-round localCheckpoint truncates the growing plan (the
-    // dupClusters iterative-loop rule). Output: surviving node
-    // (cust·2 / supp·2+1 encoding) and its final core degree.
+    // round recomputes degrees and keeps ≥k nodes via two semi joins.
+    // Output: surviving node (cust·2 / supp·2+1 encoding) and its final
+    // core degree.
     "q321_kcore" -> ((s, dir) => {
       val base = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey"))
@@ -722,19 +721,17 @@ object Analytics2Queries {
           (col("l_suppkey") * 2 + 1).as("b"))
         .agg(countDistinct(col("o_orderkey")).as("w"))
         .filter(col("w") >= 2).select(col("a"), col("b"))
-      var e = base.localCheckpoint()
-      // per-round shuffle width tracks the edge frame, not the core
-      // count (r15, guide §2.2 — the pageRankInt loop-width rule)
-      ops.Graph.withLoopWidth(e) {
-      for (_ <- 1 to 8) {
+        .localCheckpoint()
+      // per-round shuffle width tracks the edge frame, not the core count
+      ops.Graph.withLoopWidth(base) {
+      val e = ops.Fixpoint.frames("q321_kcore", 8)(base) { (e, _) =>
         val deg = e.select(col("a").as("n"))
           .unionByName(e.select(col("b").as("n")))
           .groupBy(col("n")).agg(count(lit(1)).as("d"))
           .filter(col("d") >= 2)
-        e = e.join(deg.select(col("n").as("a")), Seq("a"), "left_semi")
+        e.join(deg.select(col("n").as("a")), Seq("a"), "left_semi")
           .join(deg.select(col("n").as("b")), Seq("b"), "left_semi")
-          .localCheckpoint()
-      }
+      }.state
       e.select(col("a").as("n")).unionByName(e.select(col("b").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("degree"))
       }

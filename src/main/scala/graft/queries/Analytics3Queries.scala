@@ -316,9 +316,11 @@ object Analytics3Queries {
     // Bellman–Ford weighted shortest path from a seed set (every 100th
     // customer) over the customer↔supplier trade graph, edge weight
     // 1e6 div (#linking orders) — stronger trade = shorter edge. SIX
-    // fixed relaxation rounds (the q69/q321 fixed-round semantics);
-    // each round is union + min — an order-free integer reduction that
-    // any partitioning reproduces — with per-round localCheckpoint.
+    // fixed relaxation rounds (the q69/q321 fixed-round semantics) of
+    // ops.Graph.bellmanFordConverged: each round is union + min — an
+    // order-free integer reduction that any partitioning reproduces —
+    // and a round that improves nothing ends the loop early with the
+    // distances the remaining rounds would repeat.
     // Distinct from q156's BFS (unweighted hop counts): this relaxes
     // WEIGHTED distances, and a later round may SHORTEN an
     // already-reached node. Output: reached node → exact distance.
@@ -335,31 +337,21 @@ object Analytics3Queries {
       val edges = base.select(col("a").as("src"), col("b").as("dst"), col("w"))
         .unionByName(
           base.select(col("b").as("src"), col("a").as("dst"), col("w")))
-        .localCheckpoint()
-      var dist = Tables.customer(s, dir)
+      val seeds = Tables.customer(s, dir)
         .filter(col("c_custkey") % 100 === 0)
-        .select((col("c_custkey") * 2).as("node"), lit(0L).as("d"))
-        .localCheckpoint()
-      for (_ <- 1 to 6) {
-        val relaxed = edges
-          .join(dist, edges("src") === dist("node"))
-          .select(col("dst").as("node"), (col("d") + col("w")).as("d"))
-        dist = dist.unionByName(relaxed)
-          .groupBy(col("node")).agg(min(col("d")).as("d"))
-          .localCheckpoint()
-      }
-      dist
+        .select((col("c_custkey") * 2).as("node"))
+      ops.Graph.bellmanFordConverged(edges, seeds, maxIters = 6)._1
     }),
 
 
     // HITS hubs & authorities on the directed customer→supplier trade
-    // graph: five fixed rounds of a(v)=Σ_{u→v}h(u), h(u)=Σ_{u→v}a(v),
-    // each half-step max-normalized to the 1e6 integer grid (score·1e6
-    // div max — exact, order-free; the max is a broadcast scalar-agg,
-    // never a driver collect). Integer products stay ≤ |nodes|·1e12 —
-    // comfortably in BIGINT; the 100 TB path lifts the sums to decimal.
-    // Distinct from q69's PageRank: no damping/teleport, bipartite
-    // mutual reinforcement, max (not mass) normalization.
+    // graph: five fixed rounds of ops.Graph.hits — a(v)=Σ_{u→v}h(u),
+    // h(u)=Σ_{u→v}a(v), each half-step max-normalized to the 1e6
+    // integer grid (score·1e6 div max — exact, order-free). Integer
+    // products stay ≤ |nodes|·1e12 — comfortably in BIGINT; the 100 TB
+    // path lifts the sums to decimal. Distinct from q69's PageRank: no
+    // damping/teleport, bipartite mutual reinforcement, max (not mass)
+    // normalization.
     "q331_hits" -> ((s, dir) => {
       val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
       val li = Tables.lineitem(s, dir)
@@ -368,34 +360,10 @@ object Analytics3Queries {
         .select((col("o_custkey") * 2).as("src"),
           (col("l_suppkey") * 2 + 1).as("dst"))
         .distinct()
-        .localCheckpoint()
-      // per-round shuffle width tracks the edge frame, not the core
-      // count (r15, guide §2.2 — the pageRankInt loop-width rule)
-      ops.Graph.withLoopWidth(e) {
-      var hub = e.select(col("src").as("node")).distinct()
-        .withColumn("h", lit(1000000L))
-        .localCheckpoint()
-      var auth: DataFrame = null
-      for (_ <- 1 to 5) {
-        val a0 = e.join(hub, e("src") === hub("node"))
-          .groupBy(col("dst")).agg(sum(col("h")).as("a0"))
-        auth = a0
-          .crossJoin(broadcast(a0.agg(max(col("a0")).as("mxa"))))
-          .select(col("dst").as("node"),
-            expr("a0 * 1000000 div mxa").as("a"))
-          .localCheckpoint()
-        val h0 = e.join(auth, e("dst") === auth("node"))
-          .groupBy(col("src")).agg(sum(col("a")).as("h0"))
-        hub = h0
-          .crossJoin(broadcast(h0.agg(max(col("h0")).as("mxh"))))
-          .select(col("src").as("node"),
-            expr("h0 * 1000000 div mxh").as("h"))
-          .localCheckpoint()
-      }
+      val (hub, auth, _, _) = ops.Graph.hits(e, maxIters = 5)
       hub.select(col("node"), lit("hub").as("kind"), col("h").as("score"))
         .unionByName(auth.select(col("node"), lit("auth").as("kind"),
           col("a").as("score")))
-      }
     }),
 
 

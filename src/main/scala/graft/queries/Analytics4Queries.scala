@@ -134,14 +134,15 @@ object Analytics4Queries {
     }),
 
 
-    // Convergence-WITNESSED HITS — q331's recurrence (integer ppm
-    // hub/authority scores, max-normalized per half-round) with the
-    // q386 epsilon-stop discipline: iterate until the hub scores' exact
-    // L1 residual Σ|hᵣ − hᵣ₋₁| (ppm units over the hub node set) drops
-    // to <= epsilon, or 15 rounds. Stop round + final residual ride
-    // every row; the oracle is generated post-run and unrolls exactly
-    // that many rounds, recomputing the residual from its last two hub
-    // frames — the second member of the convergence-witnessed pair.
+    // Convergence-WITNESSED HITS — q331's ops.Graph.hits recurrence
+    // (integer ppm hub/authority scores, max-normalized per half-round)
+    // with the q386 epsilon-stop discipline: iterate until the hub
+    // scores' exact L1 residual Σ|hᵣ − hᵣ₋₁| (ppm units over the hub
+    // node set) drops to <= epsilon, or 15 rounds. Stop round + final
+    // residual ride every row; the oracle is generated post-run and
+    // unrolls exactly that many rounds, recomputing the residual from
+    // its last two hub frames — the second member of the
+    // convergence-witnessed pair.
     "q390_hits_converged" -> ((s, dir) => {
       val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
       val li = Tables.lineitem(s, dir)
@@ -150,56 +151,17 @@ object Analytics4Queries {
         .select((col("o_custkey") * 2).as("src"),
           (col("l_suppkey") * 2 + 1).as("dst"))
         .distinct()
-        .localCheckpoint()
-      // per-round shuffle width tracks the edge frame, not the core
-      // count (r15, guide §2.2 — the pageRankInt loop-width rule)
-      ops.Graph.withLoopWidth(e) {
-      val maxIters = 15
-      var hub = e.select(col("src").as("node")).distinct()
-        .withColumn("h", lit(1000000L))
-        .localCheckpoint()
       // RELATIVE epsilon: stop when the average hub moves < 200 ppm
       // (0.02% of the 1e6 normalization) — scale-invariant, unlike an
-      // absolute residual which a 10× hub count would never reach; the
-      // hub count is one bounded scalar action (the loop does one per
-      // round anyway)
-      val eps = 200L * hub.count()
-      var auth: DataFrame = null
-      var round = 0
-      var finalResid = 0L
-      var converged = false
-      while (round < maxIters && !converged) {
-        round += 1
-        val a0 = e.join(hub.select(col("node"), col("h")),
-            e("src") === col("node"))
-          .groupBy(col("dst")).agg(sum(col("h")).as("a0"))
-        auth = a0
-          .crossJoin(broadcast(a0.agg(max(col("a0")).as("mxa"))))
-          .select(col("dst").as("node"), expr("a0 * 1000000 div mxa").as("a"))
-          .localCheckpoint()
-        val h0 = e.join(auth, e("dst") === auth("node"))
-          .groupBy(col("src")).agg(sum(col("a")).as("h0"))
-        val nextHub = h0
-          .crossJoin(broadcast(h0.agg(max(col("h0")).as("mxh"))))
-          .select(col("src").as("node"), expr("h0 * 1000000 div mxh").as("h"))
-          .localCheckpoint()
-        // bounded scalar witness: exact hub L1 residual this round (the
-        // hub node set — sources — is round-invariant, so the join is
-        // total)
-        finalResid = nextHub
-          .join(hub.select(col("node"), col("h").as("hp")), "node")
-          .agg(sum(abs(col("h") - col("hp"))).as("r"))
-          .head().getLong(0)
-        converged = finalResid <= eps
-        hub = nextHub
-      }
+      // absolute residual which a 10× hub count would never reach
+      val (hub, auth, round, residuals) =
+        ops.Graph.hits(e, maxIters = 15, epsilonPerHub = Some(200L))
       hitsStopRound.set(round)
       hub.select(col("node"), lit("hub").as("kind"), col("h").as("score"))
         .unionByName(auth.select(col("node"), lit("auth").as("kind"),
           col("a").as("score")))
         .withColumn("stop_round", lit(round.toLong))
-        .withColumn("final_residual", lit(finalResid))
-      }
+        .withColumn("final_residual", lit(residuals.last))
     }),
 
 

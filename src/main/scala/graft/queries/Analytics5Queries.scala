@@ -64,30 +64,25 @@ object Analytics5Queries {
       val types = ev.select(col("event_type").as("t")).distinct()
         .localCheckpoint(true)
       val k = types.count()
-      var pi = types.select(col("t"), lit(1000000L / k).as("pi_q"))
+      val init = types.select(col("t"), lit(1000000L / k).as("pi_q"))
         .localCheckpoint(true)
-      var round = 0
-      var lastResid = -1L
-      var converged = false
-      while (round < 30 && !converged) {
-        round += 1
-        val sums = pi.join(p, pi("t") === p("i"))
-          .groupBy(col("j"))
-          .agg(sum(col("pi_q") * col("p_ppm")).as("s"))
-        val next = types
-          .join(sums, types("t") === sums("j"), "left_outer")
-          .select(col("t"),
-            coalesce(expr("s div 1000000"), lit(0L)).as("pi_q"))
-          .localCheckpoint(true)
-        lastResid = next.as("n").join(pi.as("o"), col("n.t") === col("o.t"))
-          .agg(sum(abs(col("n.pi_q") - col("o.pi_q"))).as("r"))
-          .head().getLong(0)
-        converged = lastResid <= 100L
-        pi = next
+      val run = ops.Fixpoint.frames("q409_markov_stationary", 30,
+          Some(sum(abs(col("pi_q") - col("prev")))), stopAt = 100L)(init) {
+        (pi, _) =>
+          val sums = pi.join(p, pi("t") === p("i"))
+            .groupBy(col("j"))
+            .agg(sum(col("pi_q") * col("p_ppm")).as("s"))
+          // pi spans every type, so it doubles as the node set and
+          // carries the previous iterate for the residual
+          pi.select(col("t"), col("pi_q").as("prev"))
+            .join(sums, col("t") === sums("j"), "left_outer")
+            .select(col("t"),
+              coalesce(expr("s div 1000000"), lit(0L)).as("pi_q"), col("prev"))
       }
-      mkStopRound.set(round)
-      pi.withColumn("stop_round", lit(round.toLong))
-        .withColumn("final_residual", lit(lastResid))
+      mkStopRound.set(run.rounds)
+      run.state.select(col("t"), col("pi_q"))
+        .withColumn("stop_round", lit(run.rounds.toLong))
+        .withColumn("final_residual", lit(run.witnesses.last))
     }),
 
     // Token-budget WATERFILLING across sources — the constrained-mixture
@@ -1490,33 +1485,29 @@ object Analytics5Queries {
           "(cc + 2305843009213693952L) div 16777216 - 137438953472L")
           .as("cm"))
         .localCheckpoint(true)
-      var v = mu.select(col("dim"),
+      val init = mu.select(col("dim"),
           expr("500000 + dim * 7919 % 1000000").as("vq"))
         .localCheckpoint(true)
-      var round = 0
-      var resid = -1L
-      var converged = false
-      while (round < 12 && !converged) {
-        round += 1
-        val w = cov.join(broadcast(v.select(col("dim").as("j"), col("vq"))),
-            Seq("j"))
-          .groupBy(col("i").as("dim"))
-          .agg(sum(col("cm") * col("vq")).as("w"))
-          .localCheckpoint(true)
-        val k = math.max(
-          w.agg(max(abs(col("w")))).head().getLong(0) / 1000000L, 1L)
-        val vn = w.select(col("dim"), expr(
-            s"case when w >= 0 then w div ${k}L" +
-              s" else -((-w) div ${k}L) end").as("vq"))
-          .localCheckpoint(true)
-        resid = vn.join(v.select(col("dim"), col("vq").as("pv")), "dim")
-          .agg(sum(abs(col("vq") - col("pv"))).as("r")).head().getLong(0)
-        converged = resid <= 1000L
-        v = vn
+      val run = ops.Fixpoint.frames("q452_pca_power_converged", 12,
+          Some(sum(abs(col("vq") - col("pv")))), stopAt = 1000L)(init) {
+        (v, _) =>
+          val w = cov.join(broadcast(v.select(col("dim").as("j"), col("vq"))),
+              Seq("j"))
+            .groupBy(col("i").as("dim"))
+            .agg(sum(col("cm") * col("vq")).as("w"))
+            .localCheckpoint(true)
+          // the normalization is part of the iterate, not a witness
+          val k = math.max(
+            w.agg(max(abs(col("w")))).head().getLong(0) / 1000000L, 1L)
+          w.join(v.select(col("dim"), col("vq").as("pv")), Seq("dim"), "left_outer")
+            .select(col("dim"), expr(
+              s"case when w >= 0 then w div ${k}L" +
+                s" else -((-w) div ${k}L) end").as("vq"), col("pv"))
       }
-      pcaStopRound.set(round)
-      v.withColumn("stop_round", lit(round.toLong))
-        .withColumn("final_residual", lit(resid))
+      pcaStopRound.set(run.rounds)
+      run.state.select(col("dim"), col("vq"))
+        .withColumn("stop_round", lit(run.rounds.toLong))
+        .withColumn("final_residual", lit(run.witnesses.last))
     }),
 
     // Page–Hinkley mean-shift detector — the SEQUENTIAL drift member

@@ -515,7 +515,7 @@ object SimilarityQueries {
       }
       streaming.Streams.ivfCandidateStream(s, predsPath("q501_queries"),
         qs.schema, idx, candsDir,
-        predsPath(s"q501_ckpt_${System.nanoTime()}"), nprobe = 4)
+        predsPath("q501_ckpt"), nprobe = 4)
       rrfServe(s, dir, "q501_units", "q501_cands")
     }),
 

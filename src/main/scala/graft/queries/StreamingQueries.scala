@@ -276,10 +276,11 @@ object StreamingQueries {
       val qdf = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
       sources.Sources.writeParquet(qdf.repartition(4), predsPath("q127_queries"))
-      // the drain APPENDS per-batch shortlists: clear the dir (and use a
-      // fresh checkpoint) so a re-run of the same query starts empty
-      // instead of accumulating duplicates — the oracle then reads exactly
-      // one drain's worth of streamed shortlist files
+      // the drain APPENDS per-batch shortlists: clear the dir so a re-run
+      // of the same query starts empty instead of accumulating duplicates
+      // — the oracle then reads exactly one drain's worth of streamed
+      // shortlist files (the one-shot drain mints and drops its own
+      // checkpoint)
       val slDir = predsPath("q127_shortlist")
       val slFile = new java.io.File(slDir)
       if (slFile.exists()) {
@@ -288,7 +289,7 @@ object StreamingQueries {
       }
       streaming.Streams.annServeStream(s, predsPath("q127_queries"),
         qdf.schema, loaded, predsPath("q127_units"), slDir,
-        predsPath(s"q127_ckpt_${System.nanoTime()}"), k = 5)
+        predsPath("q127_ckpt"), k = 5)
     }),
 
     // the full table-maintenance loop composed: streaming CDC apply

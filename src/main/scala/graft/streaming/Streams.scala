@@ -1122,7 +1122,8 @@ object Streams {
     * At 100 TB the index entries frame is the big side and stays
     * partitioned by cell; the per-batch probe set joins into it exactly
     * like q94's dynamic partition pruning — micro-batching adds no new
-    * shuffle of the corpus. */
+    * shuffle of the corpus. The drain is one-shot: `checkpointPrefix`
+    * names its checkpoint, which is deleted once the drain succeeds. */
   def annServeStream(
       spark: org.apache.spark.sql.SparkSession,
       queriesDir: String,
@@ -1130,14 +1131,14 @@ object Streams {
       index: graft.llm.Similarity.IvfPqIndex,
       unitsDir: String,
       shortlistDir: String,
-      checkpointDir: String,
+      checkpointPrefix: String,
       k: Int,
       nprobe: Int = 4,
       rerankFactor: Int = 4,
       maxFilesPerTrigger: Int = 1): DataFrame = {
     val stream =
       parquetStream(spark, queriesDir, queriesSchema, maxFilesPerTrigger)
-    drain("ANN serve", stream, checkpointDir)(_
+    drain("ANN serve", stream, checkpointPrefix, oneShot = true)(_
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.llm.Similarity
@@ -1157,19 +1158,20 @@ object Streams {
     * rows are independent (each query's probe depends only on the
     * frozen centroids), so the drained candidate set equals the
     * one-shot [[graft.llm.Similarity.ivfCandidatePairs]] set exactly —
-    * the law SimilaritySpec asserts. */
+    * the law SimilaritySpec asserts. One-shot drain, as in
+    * [[annServeStream]]. */
   def ivfCandidateStream(
       spark: org.apache.spark.sql.SparkSession,
       queriesDir: String,
       queriesSchema: org.apache.spark.sql.types.StructType,
       index: graft.llm.Similarity.IvfIndex,
       candsDir: String,
-      checkpointDir: String,
+      checkpointPrefix: String,
       nprobe: Int = 4,
       maxFilesPerTrigger: Int = 1): Unit = {
     val stream =
       parquetStream(spark, queriesDir, queriesSchema, maxFilesPerTrigger)
-    drain("hybrid candidate", stream, checkpointDir)(_
+    drain("hybrid candidate", stream, checkpointPrefix, oneShot = true)(_
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.llm.Similarity.ivfCandidatePairs(index, batch, nprobe)

@@ -25,6 +25,47 @@ class MultimodalSpec extends AnyFunSuite {
     assert(mods === Set("image", "audio", "video"))
   }
 
+  /** The SQL-expression form `syntheticAssets` had before it built its
+    * payloads in one Scala function: the reference its bytes must equal. */
+  private def expressionAssets(n: Int, payloadBlocks: Int) = {
+    import Multimodal._
+    def hexBlocks(tags: Seq[String]) = concat_ws("", tags.map(t => md5(concat($"id", lit(s"_$t")))): _*)
+    val pixelBytes = SyntheticImageW * SyntheticImageH * 3
+    val bmp = concat(
+      lit(graft.expr.BmpDecode.encode(SyntheticImageW, SyntheticImageH,
+        new Array[Byte](pixelBytes)).take(54)),
+      to_binary(substring(hexBlocks((0 until (pixelBytes * 2 + 31) / 32).map(_.toString)),
+        1, pixelBytes * 2), lit("hex")))
+    val wav = concat(
+      lit(graft.expr.WavDecode.encode(1, SyntheticSampleRate,
+        new Array[Byte](payloadBlocks * 16)).take(44)),
+      to_binary(hexBlocks((0 until payloadBlocks).map(_.toString)), lit("hex")))
+    val lumaBytes = SyntheticImageW * SyntheticImageH
+    val y4mRef = graft.expr.Y4mDecode.encode(
+      SyntheticImageW, SyntheticImageH, 1, new Array[Byte](lumaBytes))
+    val y4m = concat(
+      lit(y4mRef.take(y4mRef.length - lumaBytes - 6)) +:
+        (0 until SyntheticVideoFrames).flatMap(f => Seq(
+          lit("FRAME\n".getBytes("US-ASCII")),
+          to_binary(substring(
+            hexBlocks((0 until (lumaBytes * 2 + 31) / 32).map(b => s"f${f}_$b")),
+            1, lumaBytes * 2), lit("hex")))): _*)
+    spark.range(n.toLong).select($"id".as("asset_id"),
+      when(pmod($"id", lit(3)) === 0, bmp).when(pmod($"id", lit(3)) === 1, wav)
+        .otherwise(y4m).as("content"))
+  }
+
+  test("syntheticAssets: payload bytes equal the SQL-expression form's") {
+    for (blocks <- Seq(8, 64)) {
+      val got = Multimodal.syntheticAssets(spark, 120, payloadBlocks = blocks)
+        .select($"asset_id", $"content").as[(Long, Array[Byte])].collect()
+        .map { case (id, c) => id -> c.toSeq }.toMap
+      val want = expressionAssets(120, blocks).as[(Long, Array[Byte])].collect()
+        .map { case (id, c) => id -> c.toSeq }.toMap
+      assert(got.size === 120 && got === want, s"payloadBlocks = $blocks")
+    }
+  }
+
   test("bmp_decode: golden bytes — bottom-up row flip, padding, BGR→RGB, invalid→NULL") {
     // 2x2 top-down RGB: (255,0,0) (0,255,0) / (0,0,255) (10,20,30)
     val rgb = Array[Byte](

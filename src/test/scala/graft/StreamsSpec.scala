@@ -1438,6 +1438,19 @@ class StreamsSpec extends AnyFunSuite {
     assert(oneShotCkpts() === ckpts, "one-shot checkpoints left behind")
   }
 
+  test("q127 and q501 drain one-shot: two runs of each leave no checkpoint " +
+      "directory behind") {
+    val predsRoot = new java.io.File(
+      graft.queries.QueryShared.predsPath("x")).getParentFile
+    def ckpts(): Set[String] = Option(predsRoot.listFiles()).toSeq.flatten
+      .map(_.getName)
+      .filter(n => n.startsWith("q127_ckpt") || n.startsWith("q501_ckpt")).toSet
+    val before = ckpts()
+    for (q <- Seq("q127_ann_stream", "q501_hybrid_stream"); _ <- 1 to 2)
+      assert(SparkEntry.queries(q)(spark, TestSpark.sf).collect().nonEmpty, q)
+    assert(ckpts() === before, "a run left its checkpoint directory")
+  }
+
   test("Streams.drain is the only place in src/main that starts a stream " +
       "and waits on it") {
     val tokens = Seq("awaitTermination(", "Trigger.AvailableNow()", "queryName(")
