@@ -12,7 +12,9 @@ import org.apache.spark.sql.SparkSession
   *     reference's theta self-join `predictions.scala:37` needs at scale),
   *   - UTC session time zone (oracle parity for date/timestamp arithmetic),
   *   - shuffle partitions sized for the local harness (32 cores), NOT the
-  *     200 default. On a real cluster this is `cores × executors × 2-3`.
+  *     200 default. On a real cluster this is `cores × executors × 2-3`,
+  *   - a `file:` file system that runs no `chmod` or `readlink` process
+  *     (`graft.sources.NioLocalFileSystem` and its FileContext twin).
   */
 object GraftSession {
 
@@ -33,6 +35,8 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[sources.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[sources.NioLocalFs].getName)
 
   /** Apply graft defaults to a session built outside graft (e.g. one the
     * caller of `SparkEntry.entry` owns). Runtime-settable confs only. */

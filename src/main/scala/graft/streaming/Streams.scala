@@ -82,9 +82,11 @@ object Streams {
     *     the drain runs at the caller's width. A drain's per-micro-batch
     *     cost scales with state-store instances = partitions × stateful
     *     operators; at drain volumes their open/commit overhead
-    *     dominates, so a narrow pin is a multiple-x win (q102: 10.2 s →
-    *     4.9 s at 8 vs 32). A production tail sizes this to state
-    *     volume, not core count.
+    *     dominates, so a narrow pin still wins (q102 at sf0.01 on 4
+    *     vCPUs, median of 6 drains: 0.84 s at 8 vs 1.37 s at 32; 1.82 s
+    *     vs 4.63 s on Hadoop's stock local file system, which forks a
+    *     process per state-store file create and rename). A production
+    *     tail sizes this to state volume, not core count.
     *   - Bound: waits at most 300 s and stops the query in `finally`, so
     *     a timeout, failure or interrupt leaves no stream running.
     *   - Session: the stream runs on `rows`' own session, so a listener
