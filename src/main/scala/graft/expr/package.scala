@@ -16,6 +16,13 @@ package object exprapi {
     ColumnBridge.column(
       expr.MinHashSignature(ColumnBridge.expression(shingles), numHashes))
 
+  /** `array<string>` shingles → `array<long>` engine-portable MinHash
+    * signature (k minima of 60-bit md5 slices). See
+    * [[graft.expr.PortableMinHash]]. */
+  def portableMinHash(shingles: Column, numHashes: Int): Column =
+    ColumnBridge.column(
+      expr.PortableMinHash(ColumnBridge.expression(shingles), numHashes))
+
   /** `array<string>` tokens → 64-bit SimHash sketch. */
   def simhash64(tokens: Column): Column =
     ColumnBridge.column(expr.SimHash64(ColumnBridge.expression(tokens)))

@@ -31,33 +31,32 @@ object Dedup {
   def shingles(text: Column, w: Int = 3): Column =
     graft.exprapi.wordShingles(TextOps.tokens(text), w)
 
-  /** Engine-portable per-shingle hash for hash family j: a 15-hex-digit
-    * (60-bit) slice of `md5(⌈j/2⌉ ‖ ':' ‖ s)` — odd j takes hex digits
-    * 1–15, even j takes 16–30, so each digest feeds TWO hash families and
-    * only ⌈k/2⌉ md5 evaluations run per shingle (subexpression elimination
-    * dedups the shared digest inside codegen). Identical in DuckDB as
-    * `CAST('0x' || substr(md5(...), off, 15) AS BIGINT)` — md5 hex matches
-    * across engines and 60 bits fit a signed long exactly. Numeric minima
-    * keep the signature aggregation in a primitive buffer (HashAggregate;
-    * a string min forces SortAggregate — plan-audited). */
-  def portableHash(shingle: Column, j: Int): Column = {
-    val digest = md5(concat(lit(s"${(j + 1) / 2}:"), shingle))
-    conv(substring(digest, if (j % 2 == 1) 1 else 16, 15), 16, 10).cast("long")
-  }
-
-  /** MinHash signature as k independent minima of [[portableHash]] —
-    * `array<long>`, reproducible in any engine with md5. For the
-    * throughput path see [[graft.expr.MinHashSignature]] (one xxhash64
-    * pass per shingle instead of ⌈k/2⌉ md5 digests). */
+  /** MinHash signature as k independent minima of 60-bit md5 slices —
+    * `array<long>`, reproducible in any engine with md5 (the native
+    * [[graft.expr.PortableMinHash]] kernel; see it for the hash family and
+    * its DuckDB form). For the throughput path see
+    * [[graft.expr.MinHashSignature]] (one xxhash64 pass per shingle instead
+    * of ⌈k/2⌉ md5 digests). */
   def minhashSignatureMd5(shingleCol: Column, k: Int): Column =
-    array((1 to k).map(j =>
-      array_min(transform(shingleCol, s => portableHash(s, j)))): _*)
+    graft.exprapi.portableMinHash(shingleCol, k)
 
   /** LSH banding: split the k-row signature into `bands` bands of r rows,
     * hash each band to one bucket id. Emits (id, band_id, bucket) — b rows
-    * per doc. Docs with fewer than `w` tokens have no shingles and are
-    * excluded (they cannot near-dup by this measure; exact dedup covers
-    * them). */
+    * per doc; `idCol` is a key (one signature per input row). Docs with
+    * fewer than `w` tokens have no shingles and are excluded (they cannot
+    * near-dup by this measure; exact dedup covers them).
+    *
+    * A projection: the signature is one [[minhashSignatureMd5]] call per
+    * doc, and the bands come from one explode over it, so no exchange
+    * runs before [[candidatePairs]]'s bucket aggregate. The earlier shape
+    * exploded the shingles, hashed each in k md5 columns and took a
+    * `groupBy(id)` min: in q43 at sf0.01 (local[4], five warm runs) its
+    * one-task scan-and-hash stage ran 84–87 ms of executor time against
+    * 27–41 ms for this one, and its min shuffle was a Spark job of its
+    * own (q43: 10 → 9 jobs). A doc with no shingle has null minima,
+    * and the explode's null input drops it without a filter (a filter on
+    * the signature would be pushed below the projection and hash every
+    * doc twice). */
   def bandBuckets(
       docs: DataFrame,
       idCol: String,
@@ -67,27 +66,18 @@ object Dedup {
       shingleWidth: Int = 3): DataFrame = {
     require(numHashes % bands == 0, s"bands=$bands must divide numHashes=$numHashes")
     val r = numHashes / bands
-    // Formulated as explode → k codegen'd md5 projections → map-side-partial
-    // min aggregation, NOT as nested higher-order functions: Spark evaluates
-    // HOF lambdas interpreted (outside whole-stage codegen), which benched
-    // ~20ms/doc at sf0.1. This shape keeps every hash inside codegen; the
-    // shuffle carries k partial minima per (doc × partition).
-    val hashed = docs
-      .select(col(idCol), explode(shingles(col(textCol), shingleWidth)).as("sh"))
-      .select(col(idCol) +:
-        (1 to numHashes).map(j => portableHash(col("sh"), j).as(s"h$j")): _*)
-    val sig = hashed
-      .groupBy(col(idCol))
-      .agg(min(col("h1")).as("mh1"),
-        (2 to numHashes).map(j => min(col(s"h$j")).as(s"mh$j")): _*)
-    // one row per band via stack (codegen'd generator), bucket = md5 of the
-    // band's r signature rows joined with '|'
-    val stackArgs = (1 to bands).flatMap { b =>
-      val bandCols = ((b - 1) * r + 1 to b * r).map(j => s"cast(mh$j as string)")
-      Seq(b.toString, s"md5(concat_ws('|', ${bandCols.mkString(", ")}))")
-    }
-    sig.selectExpr(idCol,
-      s"stack($bands, ${stackArgs.mkString(", ")}) AS (band_id, bucket)")
+    val sig = col("sig")
+    // one (band_id, bucket) struct per band, bucket = md5 of the band's r
+    // signature rows joined with '|'
+    val rows = array((1 to bands).map { b =>
+      struct(lit(b).as("band_id"), md5(concat_ws("|",
+        ((b - 1) * r until b * r).map(j => sig(j).cast("string")): _*)).as("bucket"))
+    }: _*)
+    docs
+      .select(col(idCol),
+        minhashSignatureMd5(shingles(col(textCol), shingleWidth), numHashes).as("sig"))
+      .select(col(idCol), explode(when(sig(0).isNotNull, rows)).as("b"))
+      .select(col(idCol), col("b.band_id"), col("b.bucket"))
   }
 
   /** Candidate near-dup pairs: docs sharing ≥1 band bucket, each pair once
@@ -664,21 +654,19 @@ object Dedup {
     * (deterministic survivor rule: keep `doc_id == cluster_id`, drop the
     * rest).
     *
-    * Iterative min-label propagation through [[graft.ops.Fixpoint]]:
-    * each round, every vertex takes the min of its own label and its
-    * neighbors' labels (one equi-join + one map-side-partial min agg per
-    * round). Labels only ever decrease under the id ordering, so "no
-    * label dropped this round" is an exact fixpoint witness — the same
-    * min aggregate keeps each vertex's previous label, so the witness is
-    * a count over the round itself, never a collect, and valid for ANY
-    * orderable id type (numeric, string, ...). Rounds ≈ component
-    * diameter; near-dup clusters are shallow (pairs share LSH buckets),
-    * so this converges in a handful of rounds; for deep graphs use
-    * [[dupClustersAlternating]] (Kiveris et al.), which contracts in
-    * O(log) rounds behind the same signature. Throws if `maxIters`
-    * rounds do not reach the fixpoint — a silent partial clustering
-    * would split components and yield multiple "survivors" per
-    * duplicate group. */
+    * Iterative min-label propagation over the symmetrized pairs,
+    * [[graft.ops.Graph.minLabels]]: each round, every vertex takes the min
+    * of its own label and its neighbors' labels (one equi-join + one min
+    * aggregate per round), and the loop stops at the first round in
+    * which no label dropped — a count over the round itself, never a
+    * collect, and valid for ANY orderable id type (numeric, string, ...).
+    * Rounds ≈ component diameter; near-dup clusters are shallow (pairs
+    * share LSH buckets), so this converges in a handful of rounds; for
+    * deep graphs use [[dupClustersAlternating]] (Kiveris et al.), which
+    * contracts in O(log) rounds behind the same signature. Throws if
+    * `maxIters` rounds after the first do not reach the fixpoint — a
+    * silent partial clustering would split components and yield multiple
+    * "survivors" per duplicate group. */
   def dupClusters(
       pairs: DataFrame,
       aCol: String = "a_doc",
@@ -688,24 +676,9 @@ object Dedup {
       .select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .localCheckpoint(true)
-    // seed with min(self, neighbors) — the first propagation round folded
-    // into initialization at the cost of zero extra jobs (the groupBy also
-    // serves as the vertex-distinct)
-    val init = edges.groupBy(col("src"))
-      .agg(least(col("src"), min(col("dst"))).as("cluster_id"))
-      .select(col("src").as("doc_id"), col("cluster_id"))
-      .localCheckpoint(true)
-    graft.ops.Fixpoint.frames("Dedup.dupClusters", maxIters,
-        Some(sum(when(col("cluster_id") < col("prev"), 1L))),
-        throwAtCap = true)(init) { (labels, _) =>
-      val msgs = edges.join(labels, edges("src") === labels("doc_id"))
-        .select(col("dst").as("doc_id"), col("cluster_id"), lit(false).as("own"))
-      labels.select(col("doc_id"), col("cluster_id"), lit(true).as("own"))
-        .unionByName(msgs)
-        .groupBy(col("doc_id"))
-        .agg(min(col("cluster_id")).as("cluster_id"),
-          min(when(col("own"), col("cluster_id"))).as("prev"))
-    }.state.select(col("doc_id"), col("cluster_id"))
+    graft.ops.Graph.minLabels("Dedup.dupClusters", edges, maxIters,
+        witness = true, throwAtCap = true)
+      .select(col("node").as("doc_id"), col("label").as("cluster_id"))
   }
 
   /** Connected components via the ALTERNATING star algorithm (Kiveris,

@@ -62,7 +62,7 @@ object Fixpoint {
       stopAt: Long = 0L,
       throwAtCap: Boolean = false)(init: S)(
       round: (S, Int) => (DataFrame, DataFrame => S)): Result[S] = {
-    require(maxRounds >= 1, s"$loop: maxRounds must be >= 1, got $maxRounds")
+    require(maxRounds >= 0, s"$loop: maxRounds must be >= 0, got $maxRounds")
     val witnessCol = witness.map(w => coalesce(w.cast("long"), lit(0L)).as("witness"))
     val witnesses = scala.collection.mutable.ArrayBuffer[Long]()
     var state = init

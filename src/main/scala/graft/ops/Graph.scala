@@ -262,31 +262,69 @@ object Graph {
     * certify connectivity within distance k (run to fixpoint it is
     * connected components; the FIXED round count keeps the operator
     * oracle-replayable round-for-round). Edges must be symmetric
-    * (caller unions both directions).
+    * (caller unions both directions); on a directed list a node takes
+    * its out-neighbors' (dst) labels.
     *
-    * Scale shape per round: one shuffle join edges⋈labels on the dst
-    * node + one min-aggregate by src — data-proportional. */
+    * Scale shape: round 1 is the vertex distinct itself (one min
+    * aggregate), and each later round is one shuffle join edges⋈labels on
+    * the dst node plus one min aggregate by node over labels ∪ messages —
+    * data-proportional, see [[minLabels]]. */
   def minLabelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // materialize the edge list once: it feeds every round's join, and
     // left as a plan each round would re-run its whole upstream
     // (joins/distinct/union)
-    val e = edges.localCheckpoint(true)
+    val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
     withLoopWidth(e) {
-    val init = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint(true)
-    Fixpoint.frames("Graph.minLabelPropagation", rounds)(init) { (labels, _) =>
-      val nbr = e.join(labels, col("dst") === col("node"))
-        .groupBy(col("src")).agg(min(col("label")).as("nl"))
-      labels
-        .join(nbr, col("node") === col("src"), "left_outer")
-        .select(col("node"),
-          least(col("label"), coalesce(col("nl"), col("label"))).as("label"))
-    }.state
+      minLabels("Graph.minLabelPropagation", e, rounds - 1)
     }
+  }
+
+  /** The min-label kernel behind [[minLabelPropagation]] and
+    * [[graft.llm.Dedup.dupClusters]], over a materialized directed edge
+    * list (src, dst); returns (node, label).
+    *
+    *   - Round 1 is folded into the vertex distinct:
+    *     `(src, least(src, dst)) ∪ (dst, dst)` grouped by node with a min
+    *     is exactly the first round for any edge direction, so the
+    *     [[Fixpoint]] loop runs at most `maxRounds` further rounds.
+    *   - A round is `labels ∪ (e ⋈ labels on dst = node → (src, label))`
+    *     and one `groupBy(node).min`: one two-sided join shuffle (the
+    *     edges by dst, the labels by node) and one aggregate shuffle,
+    *     then the loop's checkpoint.
+    *   - With `witness`, the aggregate also keeps each node's previous
+    *     label (`prev`); labels only ever decrease, so the count of nodes
+    *     whose label dropped is an exact fixpoint witness for any
+    *     orderable id type, and the loop stops at the first round that
+    *     drops none (at the cap it throws with `throwAtCap`). */
+  private[graft] def minLabels(
+      loop: String,
+      e: DataFrame,
+      maxRounds: Int,
+      witness: Boolean = false,
+      throwAtCap: Boolean = false): DataFrame = {
+    // both endpoint rows of an edge come from one scan (a union would
+    // scan the edges twice, in twice the tasks)
+    val init = e
+      .select(explode(array(
+        struct(col("src").as("node"), least(col("src"), col("dst")).as("label")),
+        struct(col("dst").as("node"), col("dst").as("label")))).as("v"))
+      .groupBy(col("v.node").as("node")).agg(min(col("v.label")).as("label"))
+      .localCheckpoint(true)
+    // a witnessed round carries each node's own label through as `prev`
+    val (own, prev) =
+      if (witness) (Seq(col("label").as("prev")), Seq(min(col("prev")).as("prev")))
+      else (Nil, Nil)
+    Fixpoint.frames(loop, maxRounds,
+        Option.when(witness)(sum(when(col("label") < col("prev"), 1L))),
+        throwAtCap = throwAtCap)(init) { (labels, _) =>
+      val msgs = e.join(labels, col("dst") === col("node"))
+        .select(col("src").as("node"), col("label"))
+      labels.select(col("node") +: col("label") +: own: _*)
+        .unionByName(msgs, allowMissingColumns = true)
+        .groupBy(col("node"))
+        .agg(min(col("label")).as("label"), prev: _*)
+    }.state.select(col("node"), col("label"))
   }
 
   /** Degree histogram of a symmetric edge list: per-node degree (one

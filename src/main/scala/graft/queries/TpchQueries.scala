@@ -34,7 +34,7 @@ object TpchQueries {
 
   /** 60-bit portable hash: both engines read the same 15 hex digits of
     * md5 as a positive BIGINT (the q16 recipe —
-    * [[graft.llm.Dedup.portableHash]] rationale). */
+    * [[graft.expr.PortableMinHash]] rationale). */
   private def hash15(x: Column): Column =
     conv(substring(md5(x), 1, 15), 16, 10).cast("long")
   private def sqlHash15(x: String): String =
@@ -42,7 +42,7 @@ object TpchQueries {
 
   /** Synthetic commit/receipt dates for Q12/Q21, derived per line from
     * ONE md5 of (orderkey, linenumber): commit reads hex digits 1–15,
-    * receipt reads 16–30 (the [[graft.llm.Dedup.portableHash]] dual-slice
+    * receipt reads 16–30 (the [[graft.expr.PortableMinHash]] dual-slice
     * trick — one digest feeds both families, and codegen's subexpression
     * elimination evaluates the md5 once per row). Commit lands within
     * ±30 days of ship, receipt 1–30 days after ship — a pure function of

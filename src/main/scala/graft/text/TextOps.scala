@@ -394,7 +394,7 @@ object TextOps {
     * of length ≥ k+w−1 share at least one fingerprint; density is ~2/(w+1)
     * of positions. This is the rolling-hash fingerprinting scheme of the
     * north-star text-analysis set, in its engine-portable form (60-bit md5
-    * slices — the hash family of [[graft.llm.Dedup.portableHash]]); for
+    * slices — the hash family of [[graft.expr.PortableMinHash]]); for
     * the O(n) native rolling-hash path see [[graft.expr.WinnowFingerprints]].
     *
     * The normalized text and the k-gram hash array are let-bound (see

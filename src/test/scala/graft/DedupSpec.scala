@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.Dedup
@@ -28,6 +31,80 @@ class DedupSpec extends AnyFunSuite {
     // near-dup shares most minima
     val shared = sigs(1L).zip(sigs(2L)).count { case (a, b) => a == b }
     assert(shared >= 3, s"near-identical docs should share most minhashes, shared=$shared")
+  }
+
+  /** The Column form the md5 MinHash had before the native kernel:
+    * hash family j is a 15-hex-digit slice of `md5(⌈j/2⌉ ‖ ':' ‖ s)`,
+    * digits 1–15 for odd j and 16–30 for even j — the slicing the DuckDB
+    * oracle reads as `CAST('0x' || substr(md5(...), off, 15) AS BIGINT)`. */
+  private def portableHash(shingle: org.apache.spark.sql.Column, j: Int) = {
+    val digest = md5(concat(lit(s"${(j + 1) / 2}:"), shingle))
+    conv(substring(digest, if (j % 2 == 1) 1 else 16, 15), 16, 10).cast("long")
+  }
+
+  /** The explode → per-shingle md5 columns → `groupBy(id)` min form of
+    * [[Dedup.bandBuckets]] the projection replaced. */
+  private def bandBucketsByShuffle(docs: org.apache.spark.sql.DataFrame,
+      numHashes: Int, bands: Int) = {
+    val r = numHashes / bands
+    val sig = docs
+      .select($"doc_id", explode(Dedup.shingles($"text", 3)).as("sh"))
+      .groupBy($"doc_id")
+      .agg(min(portableHash($"sh", 1)).as("mh1"),
+        (2 to numHashes).map(j => min(portableHash($"sh", j)).as(s"mh$j")): _*)
+    val stackArgs = (1 to bands).flatMap { b =>
+      val bandCols = ((b - 1) * r + 1 to b * r).map(j => s"cast(mh$j as string)")
+      Seq(b.toString, s"md5(concat_ws('|', ${bandCols.mkString(", ")}))")
+    }
+    sig.selectExpr("doc_id", s"stack($bands, ${stackArgs.mkString(", ")}) AS (band_id, bucket)")
+  }
+
+  test("PARITY portable MinHash kernel == the Column form of the md5 " +
+      "slices, k = 5, 6, 8: nulls, empty and null arrays, non-ASCII text") {
+    val rnd = new scala.util.Random(43)
+    val words = Seq("the", "fox", "naïve", "café", "日本語", "Ω≈ç", "😀 x", "", "a b")
+    val arrays: Seq[Option[Seq[String]]] =
+      Seq(Some(Nil), None, Some(Seq(null)), Some(Seq(null, "solo"))) ++
+        (1 to 60).map(_ => Some(Seq.fill(rnd.nextInt(12))(
+          if (rnd.nextInt(8) == 0) null
+          else Seq.fill(1 + rnd.nextInt(3))(words(rnd.nextInt(words.size))).mkString(" "))))
+    // checkpointed, so the projections below run in whole-stage codegen
+    // instead of being folded into a local relation
+    val df = arrays.zipWithIndex.map { case (a, i) => (i, a) }.toDF("i", "sh")
+      .localCheckpoint(true)
+    for (k <- Seq(5, 6, 8)) {
+      val ref = array((1 to k).map(j =>
+        array_min(transform($"sh", s => portableHash(s, j)))): _*)
+      def sigs(c: org.apache.spark.sql.Column) =
+        df.select($"i", c).as[(Int, Seq[Option[Long]])].collect().sortBy(_._1).map(_._2).toSeq
+      val want = sigs(ref)
+      assert(sigs(Dedup.minhashSignatureMd5($"sh", k)) === want, s"k=$k codegen")
+      val interpreted = arrays.map { a =>
+        val out = graft.expr.PortableMinHash(
+          Literal.create(a.orNull, ArrayType(StringType)), k).eval(null).asInstanceOf[ArrayData]
+        (0 until out.numElements()).map(i => Option.when(!out.isNullAt(i))(out.getLong(i)))
+      }
+      assert(interpreted === want, s"k=$k interpreted")
+    }
+  }
+
+  test("PARITY bandBuckets == the explode/groupBy-min form on the corpus " +
+      "and on documents at sf0.01") {
+    for ((docs, (k, b)) <- Seq(corpus -> (6, 3), corpus -> (8, 4),
+        Tables.documents(spark, TestSpark.sf01) -> (6, 3))) {
+      val got = Dedup.bandBuckets(docs, "doc_id", "text", k, b)
+      val want = bandBucketsByShuffle(docs, k, b)
+      assert(got.schema.map(f => (f.name, f.dataType)) ===
+        want.schema.map(f => (f.name, f.dataType)))
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"k=$k bands=$b diverged")
+      assert(want.count() > 0)
+    }
+    // a doc with too few tokens (or no text) has no bucket at all
+    val short = Seq((1L, "two words"), (2L, null: String), (3L, "three words here"))
+      .toDF("doc_id", "text")
+    assert(Dedup.bandBuckets(short, "doc_id", "text").select($"doc_id").distinct()
+      .as[Long].collect().toSeq === Seq(3L))
   }
 
   test("candidatePairs finds the planted dups and never the unrelated doc (both paths)") {

@@ -210,6 +210,18 @@ class FixpointSpec extends AnyFunSuite {
     assert(plain > 0 && witnessed <= plain)
   }
 
+  test("guard: at sf0.01 a q43 run submits <= 9 Spark jobs and a q222 run " +
+      "<= 16 (a projected MinHash and a one-exchange min-label round)") {
+    def run(q: String): Unit =
+      SparkEntry.queries(q)(spark, TestSpark.sf01).write.format("noop").mode("overwrite").save()
+    for ((q, cap) <- Seq("q43_dup_clusters" -> 9, "q222_label_prop" -> 16)) {
+      run(q) // warm-up: schema inference and first-use planning
+      val n = jobsSubmitted(run(q))
+      info(s"$q: $n jobs a run")
+      assert(n <= cap, s"$q submitted $n Spark jobs, more than $cap")
+    }
+  }
+
   test("guard: only Fixpoint runs a checkpointed round loop in src/main") {
     // q361's loop collects its pick each round: that row is the query's
     // output, not a convergence witness, so the loop is not a fixpoint

@@ -124,12 +124,48 @@ class GraphSpec extends AnyFunSuite {
       val want = nodes.map(n =>
         n -> nodes.filter(m => comp(m) == comp(n)).min).toMap
       assert(got === want, s"round $round diverged")
+      val clusters = graft.llm.Dedup.dupClusters(pairs.toDF("a_doc", "b_doc"))
+        .as[(Long, Long)].collect().toMap
+      assert(clusters === want, s"round $round: dupClusters diverged")
     }
     // single-round law on a path graph: labels move exactly one hop
     val path = undirected(1L -> 2L, 2L -> 3L, 3L -> 4L)
     val one = Graph.minLabelPropagation(path, rounds = 1)
       .as[(Long, Long)].collect().toMap
     assert(one === Map(1L -> 1L, 2L -> 1L, 3L -> 2L, 4L -> 3L))
+  }
+
+  /** The round minLabelPropagation ran before the one-exchange round: a
+    * join and a group-by for the out-neighbors' minimum, then a left-outer
+    * join back onto the labels, from the vertex distinct as round 0. */
+  private def minLabelsByJoins(edges: org.apache.spark.sql.DataFrame, rounds: Int) = {
+    var labels = edges.select($"src".as("node")).union(edges.select($"dst".as("node")))
+      .distinct().withColumn("label", $"node")
+    for (_ <- 1 to rounds) {
+      val nbr = edges.join(labels, $"dst" === $"node")
+        .groupBy($"src").agg(min($"label").as("nl"))
+      labels = labels.join(nbr, $"node" === $"src", "left_outer")
+        .select($"node", least($"label", coalesce($"nl", $"label")).as("label"))
+        .localCheckpoint(true)
+    }
+    labels
+  }
+
+  test("PARITY minLabelPropagation == the join/left-join round, rounds 1-4, " +
+      "on random asymmetric graphs") {
+    val rnd = new scala.util.Random(222)
+    for (g <- 1 to 3) {
+      // directed: most nodes lack the reverse edge, some are only a src
+      // or only a dst
+      val edges = (1 to 30)
+        .map(_ => (rnd.nextInt(20) + 1L, rnd.nextInt(20) + 1L))
+        .filter(p => p._1 != p._2).distinct.toDF("src", "dst")
+      for (rounds <- 1 to 4) {
+        val got = Graph.minLabelPropagation(edges, rounds).as[(Long, Long)].collect().toMap
+        val want = minLabelsByJoins(edges, rounds).as[(Long, Long)].collect().toMap
+        assert(got === want, s"graph $g, $rounds rounds")
+      }
+    }
   }
 
   test("degreeHistogram counts symmetric-edge degrees exactly") {

@@ -16,6 +16,8 @@ object TestSpark {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+  /** The next scale factor up, beside [[sf]]. */
+  val sf01: String = new java.io.File(sf).getParent + "/sf0.01"
 }
 
 class RelationalSpec extends AnyFunSuite {
