@@ -32,10 +32,11 @@ object SparkEntry {
     Relational.labelJoin(Tables.orders(spark, dir), Tables.lineitem(spark, dir))
   }
 
-  // a def, not a val: Analytics4Queries.sql is DYNAMIC (its q386 oracle
-  // embeds the stop round the engine realized at run time), so the area
-  // list must be re-evaluated whenever oracleSql is re-read — Verify
-  // dumps oracle_sql.json only after running every query
+  // a def, not a val: Analytics4Queries.sql and Analytics5Queries.sql are
+  // DYNAMIC (their q386, q390 and q409 oracles embed the stop round the
+  // engine realized at run time), so the area list must be re-evaluated
+  // whenever oracleSql is re-read — Verify dumps oracle_sql.json only
+  // after running every query
   private def areas: Seq[(Map[String, (SparkSession, String) => DataFrame],
                           Map[String, String])] = Seq(
     (RelationalQueries.queries, RelationalQueries.sql),

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // Tag the persisted-split parquet paths (SparkEntry.predsPath) with
+    // Tag the persisted-split parquet paths (QueryShared.predsPath) with
     // the SF being verified: back-to-back runs at different SFs would
     // otherwise overwrite each other's persisted predictions/candidates
     // BEFORE the oracle for the earlier run executes, and the oracle SQL

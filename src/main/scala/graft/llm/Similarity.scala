@@ -702,36 +702,6 @@ object Similarity {
     PqIndex(codes, codebook, m, kc, subDim)
   }
 
-  /** Persist a fitted [[PqIndex]]: the compressed codes as parquet (the
-    * artifact whose whole point is being 16–32× smaller than the raw
-    * vectors on disk too) and the driver-side model (codebook + shape) as
-    * a one-row side table. Unlike [[writeIvfIndex]] there is no partition
-    * key — a PQ scan is a full pass over the codes by design; the byte
-    * REDUCTION is the scale lever. Compose with [[writeIvfIndex]] for the
-    * pruned-AND-compressed IVFPQ layout. */
-  def writePqIndex(index: PqIndex, dir: String): Unit = {
-    index.codes.write.mode("overwrite").parquet(s"$dir/codes")
-    val spark = index.codes.sparkSession
-    import spark.implicits._
-    Seq((index.m, index.kc, index.subDim, index.codebook.toSeq))
-      .toDF("m", "kc", "sub_dim", "codebook")
-      .write.mode("overwrite").parquet(s"$dir/codebook")
-  }
-
-  /** Load a persisted PQ index: codes come back as a lazy scan (uncached —
-    * the serving read IS the compressed scan); the codebook row rebuilds
-    * the driver-side model. Probes over the loaded index are
-    * plan-identical to probes over the fitted one. */
-  def loadPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String): PqIndex = {
-    val meta = spark.read.parquet(s"$dir/codebook").head()
-    PqIndex(
-      codes = spark.read.parquet(s"$dir/codes"),
-      codebook = meta.getSeq[Float](meta.fieldIndex("codebook")).toArray,
-      m = meta.getInt(meta.fieldIndex("m")),
-      kc = meta.getInt(meta.fieldIndex("kc")),
-      subDim = meta.getInt(meta.fieldIndex("sub_dim")))
-  }
-
   /** Probe a fitted [[PqIndex]]: ADC scan + exact re-rank.
     *
     * Per query, ONE [[graft.expr.PqAdcTable]] evaluation amortizes all

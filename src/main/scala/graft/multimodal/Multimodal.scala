@@ -198,43 +198,6 @@ object Multimodal {
         lit(h).as("declared_h")))
   }
 
-  /** REAL image resize: decode the BMP payload to actual pixels
-    * ([[graft.expr.BmpDecode]]) and nearest-neighbor resample to a fixed
-    * `w×h` RGB24 tensor ([[graft.expr.RgbResize]], integer center
-    * sampling) — same schema and plan shape as [[resizeStub]], but
-    * `resized` now holds the image's own pixels. Non-decodable payloads
-    * yield NULL (corrupt input stays visible, never silently faked).
-    * Pure projection, both expressions codegen-resident. */
-  def resizeImages(assets: DataFrame, w: Int, h: Int): DataFrame = {
-    require(w > 0 && h > 0, s"target dims must be positive, got ${w}x$h")
-    assets
-      .withColumn("img", graft.exprapi.bmpDecode(col("content")))
-      .withColumn("resized",
-        graft.exprapi.rgbResize(col("img.rgb"), col("img.w"), col("img.h"), w, h))
-      .withColumn("meta", struct(
-        col("meta.source").as("source"),
-        lit(w).as("declared_w"),
-        lit(h).as("declared_h")))
-      .drop("img")
-  }
-
-  /** Byte-range frame sampling: every `stride`-th window of `frameSize`
-    * bytes, exploded to one row per frame — the batch shape for per-frame
-    * feature extraction (video keyframes, audio windows). Binary substring
-    * is a codegen'd expression; the explode fans out WITHIN partitions, so
-    * parallelism follows the input partitioning. */
-  def sampleFrames(assets: DataFrame, frameSize: Int, stride: Int): DataFrame = {
-    require(frameSize > 0 && stride > 0)
-    val nFrames = greatest(
-      floor((length(col("content")) - frameSize) / stride) + 1, lit(0L))
-    assets
-      .select(col("asset_id"), col("modality"), col("content"),
-        explode(sequence(lit(0L), nFrames - 1)).as("frame_no"))
-      .select(col("asset_id"), col("modality"), col("frame_no"),
-        expr(s"substring(content, cast(frame_no * $stride + 1 as int), $frameSize)")
-          .as("frame_bytes"))
-  }
-
   /** Per-frame video features: decode → one row per frame → byte stats
     * over that frame's luma plane. The per-frame slice is a codegen'd
     * binary substring over the concatenated planes (frames are fixed-size,
@@ -389,22 +352,4 @@ object Multimodal {
           col("vid.n_frames"), frameStride).as("sig"))
       .filter(col("sig").isNotNull)
 
-  /** Per-modality feature batches: decode + features, grouped stats as the
-    * sanity surface (count, real-decoded count, avg feature norm) — every
-    * norm is over features of ACTUALLY DECODED payload values (pixels,
-    * samples, luma planes); `n_decoded` counts payloads the modality's
-    * real parser accepted. */
-  def featureStats(assets: DataFrame, dims: Int = 16): DataFrame =
-    decodeFeatures(assets, dims)
-      .select(col("modality"),
-        (col("modality") === "image" && col("img").isNotNull ||
-          col("modality") === "audio" && col("aud").isNotNull ||
-          col("modality") === "video" && col("vid").isNotNull).cast("long")
-          .as("decoded"),
-        aggregate(col("features"), lit(0.0), (acc, x) => acc + x * x).as("sq"))
-      .groupBy(col("modality"))
-      .agg(
-        count(lit(1)).as("n_assets"),
-        sum(col("decoded")).as("n_decoded"),
-        avg(sqrt(col("sq"))).as("avg_feature_norm"))
 }

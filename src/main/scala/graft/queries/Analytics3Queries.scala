@@ -3530,22 +3530,7 @@ object Analytics3Queries {
         |FROM bx b JOIN vn v ON v.pos = b.pos17
         |GROUP BY 1""".stripMargin,
 
-    "q365_skyline_2d" ->
-      """WITH p AS (
-        |  SELECT p_partkey AS pk,
-        |    CAST(CAST(p_retailprice AS DECIMAL(30,2)) * 100 AS BIGINT)
-        |      AS price,
-        |    CAST(p_size AS BIGINT) AS sz
-        |  FROM part),
-        |w AS (
-        |  SELECT pk, price, sz,
-        |    min(sz) OVER (ORDER BY price RANGE BETWEEN UNBOUNDED PRECEDING
-        |      AND 1 PRECEDING) AS min_cheaper,
-        |    min(sz) OVER (PARTITION BY price) AS min_eq
-        |  FROM p)
-        |SELECT pk, price, sz FROM w
-        |WHERE (min_cheaper IS NULL OR sz < min_cheaper) AND sz = min_eq"""
-        .stripMargin,
+    "q365_skyline_2d" -> QueryShared.skyline2dSql,
 
     "q366_apportionment" ->
       """WITH v AS (

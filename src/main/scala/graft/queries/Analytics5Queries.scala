@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import QueryShared.predsPath
+import QueryShared._
 
 /** Round-11 surfaces (q399+): corpus data-recipe planners — the
   * budget/shape decisions a training-data pipeline makes once the
@@ -2637,6 +2637,59 @@ object Analytics5Queries {
       Seq(2, 4, 8).map(fin).mkString("\nUNION ALL\n")
   }
 
+  /** `b0 → f → g → h → agg`: quality-weighted water-filling of a 60%
+    * token budget over `sw(source, c, w)`: sources in c/w order are capped
+    * at their whole count while the remaining budget, split by weight,
+    * covers them; `agg` holds the capped total and the uncapped weight. */
+  private val waterfillCtes: String =
+    """b0 AS (
+      |  SELECT *, (SELECT sum(c) FROM sw) * 6 // 10 AS b,
+      |    (SELECT sum(w) FROM sw) AS wtot,
+      |    c * 1000000 // w AS ratio_q
+      |  FROM sw
+      |), f AS (
+      |  SELECT *,
+      |    coalesce(sum(c) OVER (ORDER BY ratio_q, source
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+      |      AS cc_prev,
+      |    wtot - coalesce(sum(w) OVER (ORDER BY ratio_q, source
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+      |      AS w_rem
+      |  FROM b0
+      |), g AS (
+      |  SELECT *, CASE WHEN (b - cc_prev) * w >= c * w_rem
+      |                 THEN 1 ELSE 0 END AS flag
+      |  FROM f
+      |), h AS (
+      |  SELECT *, min(flag) OVER (ORDER BY ratio_q, source
+      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) = 1
+      |      AS capped
+      |  FROM g
+      |), agg AS (
+      |  SELECT coalesce(sum(CASE WHEN capped THEN c END), 0) AS cc_star,
+      |         coalesce(sum(CASE WHEN NOT capped THEN w END), 0) AS wu_star
+      |  FROM h
+      |)""".stripMargin
+
+  /** `sw → [[waterfillCtes]] → fin` and the per-source readout over
+    * `src(source, n_docs, c, qsum)` (q399 over raw sources, q421 over
+    * dedup survivors; q442 allocates over its train split instead). */
+  private val waterfillTail: String =
+    s"""sw AS (
+       |  SELECT *, greatest(1, qsum // n_docs) AS w FROM src
+       |), $waterfillCtes, fin AS (
+       |  SELECT source, n_docs, c, w, capped, b,
+       |    CASE WHEN capped THEN c
+       |         ELSE least(c, greatest(0, b - agg.cc_star) * w
+       |                       // agg.wu_star) END AS alloc
+       |  FROM h CROSS JOIN agg
+       |)
+       |SELECT source, n_docs, c, w, capped,
+       |  CAST(alloc AS BIGINT) AS alloc,
+       |  CAST(CASE WHEN b > 0 THEN alloc * 1000000 // b ELSE 0 END
+       |    AS BIGINT) AS share_ppm
+       |FROM fin""".stripMargin
+
   /** A def, not a val: the q409 entry embeds the post-run stop round
     * (the [[Analytics4Queries]] dynamic-oracle contract). */
   def sql: Map[String, String] = Map(
@@ -2696,114 +2749,52 @@ object Analytics5Queries {
         |  (SELECT max(t_ppm) FROM emd) AS max_t_ppm
         |FROM emd""".stripMargin,
 
-    // identical split-form z², Chebyshev ppm bound, cross-multiplied
-    // step-up and prefix rejection
-    "q424_bh_fdr" ->
-      """WITH h AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_odd
-        |  FROM events GROUP BY 1
-        |), z AS (
-        |  SELECT event_type, n, n_odd,
-        |    CAST(((2 * n_odd - n) * (2 * n_odd - n) // n) * 1000000
-        |      + ((2 * n_odd - n) * (2 * n_odd - n) % n) * 1000000 // n
-        |      AS BIGINT) AS z2_micro
-        |  FROM h
-        |), p AS (
-        |  SELECT *, CAST(least(1000000,
-        |      1000000000000 // greatest(z2_micro, 1)) AS BIGINT) AS p_ppm
-        |  FROM z
-        |), r AS (
-        |  SELECT *,
-        |    CAST(row_number() OVER (ORDER BY p_ppm, event_type)
-        |      AS BIGINT) AS rk,
-        |    (SELECT CAST(count(*) AS BIGINT) FROM p) AS m
-        |  FROM p
-        |), f AS (
-        |  SELECT *, p_ppm * m * 20 <= 1000000 * rk AS pass_bh FROM r
-        |), k AS (
-        |  SELECT coalesce(max(CASE WHEN pass_bh THEN rk END), 0) AS k_star
-        |  FROM f
-        |)
-        |SELECT event_type, n, n_odd, z2_micro, p_ppm, rk, pass_bh,
-        |  rk <= k.k_star AS rejected
-        |FROM f CROSS JOIN k""".stripMargin,
+    "q424_bh_fdr" -> bhFdrSql,
 
     // q424's chain with the harmonic c(m) = Σ(10⁶ // i) factor
     // multiplied through
     "q482_by_fdr" ->
-      """WITH h AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_odd
-        |  FROM events GROUP BY 1
-        |), z AS (
-        |  SELECT event_type, n, n_odd,
-        |    CAST(((2 * n_odd - n) * (2 * n_odd - n) // n) * 1000000
-        |      + ((2 * n_odd - n) * (2 * n_odd - n) % n) * 1000000 // n
-        |      AS BIGINT) AS z2_micro
-        |  FROM h
-        |), p AS (
-        |  SELECT *, CAST(least(1000000,
-        |      1000000000000 // greatest(z2_micro, 1)) AS BIGINT) AS p_ppm
-        |  FROM z
-        |), r AS (
-        |  SELECT *,
-        |    CAST(row_number() OVER (ORDER BY p_ppm, event_type)
-        |      AS BIGINT) AS rk
-        |  FROM p
-        |), d AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS m,
-        |    CAST(sum(1000000 // rk) AS BIGINT) AS c_ppm
-        |  FROM r
-        |), f AS (
-        |  SELECT r.*, d.m, d.c_ppm,
-        |    p_ppm * d.m * d.c_ppm * 20 <= CAST(1000000 AS BIGINT) * rk * 1000000
-        |      AS pass_by
-        |  FROM r CROSS JOIN d
-        |), k AS (
-        |  SELECT coalesce(max(CASE WHEN pass_by THEN rk END), 0) AS k_star
-        |  FROM f
-        |)
-        |SELECT event_type, n, n_odd, z2_micro, p_ppm, rk, m, c_ppm,
-        |  pass_by, rk <= k.k_star AS rejected
-        |FROM f CROSS JOIN k""".stripMargin,
+      s"""WITH $eventTypePValuesChain, r AS (
+         |  SELECT *,
+         |    CAST(row_number() OVER (ORDER BY p_ppm, event_type)
+         |      AS BIGINT) AS rk
+         |  FROM p
+         |), d AS (
+         |  SELECT CAST(count(*) AS BIGINT) AS m,
+         |    CAST(sum(1000000 // rk) AS BIGINT) AS c_ppm
+         |  FROM r
+         |), f AS (
+         |  SELECT r.*, d.m, d.c_ppm,
+         |    p_ppm * d.m * d.c_ppm * 20 <= CAST(1000000 AS BIGINT) * rk * 1000000
+         |      AS pass_by
+         |  FROM r CROSS JOIN d
+         |), k AS (
+         |  SELECT coalesce(max(CASE WHEN pass_by THEN rk END), 0) AS k_star
+         |  FROM f
+         |)
+         |SELECT event_type, n, n_odd, z2_micro, p_ppm, rk, m, c_ppm,
+         |  pass_by, rk <= k.k_star AS rejected
+         |FROM f CROSS JOIN k""".stripMargin,
 
 
     // identical Chebyshev family, step-down threshold and prefix-AND
     "q465_holm_stepdown" ->
-      """WITH h AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_odd
-        |  FROM events GROUP BY 1
-        |), z AS (
-        |  SELECT event_type, n, n_odd,
-        |    CAST(((2 * n_odd - n) * (2 * n_odd - n) // n) * 1000000
-        |      + ((2 * n_odd - n) * (2 * n_odd - n) % n) * 1000000 // n
-        |      AS BIGINT) AS z2_micro
-        |  FROM h
-        |), p AS (
-        |  SELECT *, CAST(least(1000000,
-        |      1000000000000 // greatest(z2_micro, 1)) AS BIGINT) AS p_ppm
-        |  FROM z
-        |), r AS (
-        |  SELECT *,
-        |    CAST(row_number() OVER (ORDER BY p_ppm, event_type)
-        |      AS BIGINT) AS rk,
-        |    (SELECT CAST(count(*) AS BIGINT) FROM p) AS m
-        |  FROM p
-        |), f AS (
-        |  SELECT *, CASE WHEN p_ppm * (m - rk + 1) * 20 <= 1000000
-        |                 THEN 1 ELSE 0 END AS flag
-        |  FROM r
-        |)
-        |SELECT event_type, n, n_odd, z2_micro, p_ppm, rk,
-        |  min(flag) OVER (ORDER BY p_ppm, event_type
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) = 1
-        |    AS rejected
-        |FROM f""".stripMargin,
+      s"""WITH $eventTypePValuesChain, r AS (
+         |  SELECT *,
+         |    CAST(row_number() OVER (ORDER BY p_ppm, event_type)
+         |      AS BIGINT) AS rk,
+         |    (SELECT CAST(count(*) AS BIGINT) FROM p) AS m
+         |  FROM p
+         |), f AS (
+         |  SELECT *, CASE WHEN p_ppm * (m - rk + 1) * 20 <= 1000000
+         |                 THEN 1 ELSE 0 END AS flag
+         |  FROM r
+         |)
+         |SELECT event_type, n, n_odd, z2_micro, p_ppm, rk,
+         |  min(flag) OVER (ORDER BY p_ppm, event_type
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) = 1
+         |    AS rejected
+         |FROM f""".stripMargin,
 
     // q319's lifetime derivation verbatim; KM factors as integer-argument
     // µnat log differences, zero-survival regime mirrored
@@ -2855,117 +2846,67 @@ object Analytics5Queries {
     // q115's interpolated-bigram scorer verbatim, then the exact lower
     // median, the cross-multiplied 1.25× gate and the source rollup
     "q431_lm_quality_gate" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
-        |  FROM documents
-        |), pb AS (
-        |  SELECT doc_id, bg.w1 AS w1, bg.w2 AS w2 FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(generate_series(1, len(ts)-1),
-        |             i -> struct_pack(w1 := ts[i], w2 := ts[i+1]))) AS bg
-        |    FROM t WHERE len(ts) >= 2)
-        |), tfb AS (
-        |  SELECT doc_id, w1, w2, CAST(count(*) AS BIGINT) AS tfb
-        |  FROM pb GROUP BY 1, 2, 3
-        |), cb AS (
-        |  SELECT w1, w2, CAST(count(*) AS BIGINT) AS cb FROM pb GROUP BY 1, 2
-        |), cw1 AS (
-        |  SELECT w1, CAST(sum(cb) AS BIGINT) AS cw1 FROM cb GROUP BY 1
-        |), uni AS (
-        |  SELECT unnest(ts) AS w2 FROM t
-        |), cu AS (
-        |  SELECT w2, CAST(count(*) AS BIGINT) AS cu FROM uni GROUP BY 1
-        |), model AS (
-        |  SELECT cb.w1, cb.w2,
-        |         CAST(floor(-1e6 * ln(
-        |           CAST(0.75 AS DOUBLE) * (CAST(cb AS DOUBLE) / CAST(cw1 AS DOUBLE)) +
-        |           CAST(0.25 AS DOUBLE) * (CAST(cu AS DOUBLE) /
-        |             CAST((SELECT count(*) FROM uni) AS DOUBLE)))) AS BIGINT) AS q
-        |  FROM cb JOIN cw1 USING (w1) JOIN cu USING (w2)
-        |), scored AS (
-        |  SELECT doc_id,
-        |         CAST(sum(tfb * q) // sum(tfb) AS BIGINT) AS nll_q
-        |  FROM tfb JOIN model USING (w1, w2)
-        |  GROUP BY 1
-        |), r AS (
-        |  SELECT *, row_number() OVER (ORDER BY nll_q, doc_id) AS rn,
-        |    count(*) OVER () AS n
-        |  FROM scored
-        |), med AS (
-        |  SELECT nll_q AS med_nll_q FROM r WHERE rn = (n + 1) // 2
-        |), gated AS (
-        |  SELECT s.doc_id, s.nll_q, m.med_nll_q,
-        |    CASE WHEN s.nll_q * 100 > m.med_nll_q * 125 THEN 1 ELSE 0 END
-        |      AS flagged
-        |  FROM scored s CROSS JOIN med m
-        |)
-        |SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(g.flagged) AS BIGINT) AS n_flagged,
-        |  CAST(max(g.med_nll_q) AS BIGINT) AS med_nll_q,
-        |  CAST(sum(g.flagged) * 1000000 // count(*) AS BIGINT) AS flag_ppm
-        |FROM gated g JOIN documents d USING (doc_id)
-        |GROUP BY 1""".stripMargin,
+      s"""WITH $bigramModelChain, scored AS (
+         |  SELECT doc_id,
+         |         CAST(sum(tfb * q) // sum(tfb) AS BIGINT) AS nll_q
+         |  FROM tfb JOIN model USING (w1, w2)
+         |  GROUP BY 1
+         |), r AS (
+         |  SELECT *, row_number() OVER (ORDER BY nll_q, doc_id) AS rn,
+         |    count(*) OVER () AS n
+         |  FROM scored
+         |), med AS (
+         |  SELECT nll_q AS med_nll_q FROM r WHERE rn = (n + 1) // 2
+         |), gated AS (
+         |  SELECT s.doc_id, s.nll_q, m.med_nll_q,
+         |    CASE WHEN s.nll_q * 100 > m.med_nll_q * 125 THEN 1 ELSE 0 END
+         |      AS flagged
+         |  FROM scored s CROSS JOIN med m
+         |)
+         |SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
+         |  CAST(sum(g.flagged) AS BIGINT) AS n_flagged,
+         |  CAST(max(g.med_nll_q) AS BIGINT) AS med_nll_q,
+         |  CAST(sum(g.flagged) * 1000000 // count(*) AS BIGINT) AS flag_ppm
+         |FROM gated g JOIN documents d USING (doc_id)
+         |GROUP BY 1""".stripMargin,
 
     // q16's banded-MinHash pair CTE verbatim, then clipped n-gram
     // overlap, ppm P/R and the guarded F1 for n ∈ {1, 2}
     "q432_rouge_ngram_eval" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, len(ts)-2),
-        |                        i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS shingles
-        |  FROM t WHERE len(ts) >= 3
-        |), sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, 6),
-        |                        j -> list_aggregate(list_transform(shingles,
-        |                               s -> CAST('0x' || substr(md5(CAST((j+1)//2 AS VARCHAR) || ':' || s),
-        |                                                 CASE WHEN j%2=1 THEN 1 ELSE 16 END, 15) AS BIGINT)),
-        |                             'min')) AS mh
-        |  FROM sh
-        |), bands AS (
-        |  SELECT doc_id, b AS band_id,
-        |         md5(CAST(mh[2*b-1] AS VARCHAR) || '|' || CAST(mh[2*b] AS VARCHAR)) AS bucket
-        |  FROM sig, unnest(generate_series(1, 3)) AS u(b)
-        |), pairs AS (
-        |  SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc
-        |  FROM bands a JOIN bands b
-        |    ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        |), grams AS (
-        |  SELECT doc_id, n, g FROM (
-        |    SELECT doc_id, 1 AS n, unnest(ts) AS g FROM t
-        |    UNION ALL
-        |    SELECT doc_id, 2 AS n,
-        |      unnest(CASE WHEN len(ts) >= 2 THEN
-        |        list_transform(generate_series(1, len(ts)-1),
-        |          i -> ts[i] || ' ' || ts[i+1]) ELSE [] END) AS g
-        |    FROM t)
-        |), tf AS (
-        |  SELECT doc_id, n, g, CAST(count(*) AS BIGINT) AS tf
-        |  FROM grams GROUP BY 1, 2, 3
-        |), tot AS (
-        |  SELECT doc_id, n, CAST(sum(tf) AS BIGINT) AS tot
-        |  FROM tf GROUP BY 1, 2
-        |), clip AS (
-        |  SELECT p.a_doc, p.b_doc, a.n,
-        |    CAST(sum(least(a.tf, b.tf)) AS BIGINT) AS clip
-        |  FROM pairs p
-        |  JOIN tf a ON a.doc_id = p.a_doc
-        |  JOIN tf b ON b.doc_id = p.b_doc AND b.n = a.n AND b.g = a.g
-        |  GROUP BY 1, 2, 3
-        |), pr AS (
-        |  SELECT c.a_doc, c.b_doc, CAST(c.n AS BIGINT) AS n, c.clip,
-        |    CAST(c.clip * 1000000 // ta.tot AS BIGINT) AS p_ppm,
-        |    CAST(c.clip * 1000000 // tb.tot AS BIGINT) AS r_ppm
-        |  FROM clip c
-        |  JOIN tot ta ON ta.doc_id = c.a_doc AND ta.n = c.n
-        |  JOIN tot tb ON tb.doc_id = c.b_doc AND tb.n = c.n
-        |)
-        |SELECT a_doc, b_doc, n, clip, p_ppm, r_ppm,
-        |  CAST(2 * p_ppm * r_ppm // greatest(p_ppm + r_ppm, 1) AS BIGINT)
-        |    AS f1_ppm
-        |FROM pr""".stripMargin,
+      s"""WITH $lshPairsChain, grams AS (
+         |  SELECT doc_id, n, g FROM (
+         |    SELECT doc_id, 1 AS n, unnest(ts) AS g FROM t
+         |    UNION ALL
+         |    SELECT doc_id, 2 AS n,
+         |      unnest(CASE WHEN len(ts) >= 2 THEN
+         |        list_transform(generate_series(1, len(ts)-1),
+         |          i -> ts[i] || ' ' || ts[i+1]) ELSE [] END) AS g
+         |    FROM t)
+         |), tf AS (
+         |  SELECT doc_id, n, g, CAST(count(*) AS BIGINT) AS tf
+         |  FROM grams GROUP BY 1, 2, 3
+         |), tot AS (
+         |  SELECT doc_id, n, CAST(sum(tf) AS BIGINT) AS tot
+         |  FROM tf GROUP BY 1, 2
+         |), clip AS (
+         |  SELECT p.a_doc, p.b_doc, a.n,
+         |    CAST(sum(least(a.tf, b.tf)) AS BIGINT) AS clip
+         |  FROM pairs p
+         |  JOIN tf a ON a.doc_id = p.a_doc
+         |  JOIN tf b ON b.doc_id = p.b_doc AND b.n = a.n AND b.g = a.g
+         |  GROUP BY 1, 2, 3
+         |), pr AS (
+         |  SELECT c.a_doc, c.b_doc, CAST(c.n AS BIGINT) AS n, c.clip,
+         |    CAST(c.clip * 1000000 // ta.tot AS BIGINT) AS p_ppm,
+         |    CAST(c.clip * 1000000 // tb.tot AS BIGINT) AS r_ppm
+         |  FROM clip c
+         |  JOIN tot ta ON ta.doc_id = c.a_doc AND ta.n = c.n
+         |  JOIN tot tb ON tb.doc_id = c.b_doc AND tb.n = c.n
+         |)
+         |SELECT a_doc, b_doc, n, clip, p_ppm, r_ppm,
+         |  CAST(2 * p_ppm * r_ppm // greatest(p_ppm + r_ppm, 1) AS BIGINT)
+         |    AS f1_ppm
+         |FROM pr""".stripMargin,
 
     // q310's bin chain verbatim, then the PAVA minimax over interval
     // averages as an i≤k≤j triple join on the ≤10-row bin grain
@@ -3021,10 +2962,7 @@ object Analytics5Queries {
          |  FROM read_parquet('${predsPath("q441_units")}/*.parquet')
          |), dots AS (
          |  SELECT p.q_id, p.n_id,
-         |    CAST(list_sum(list_transform(generate_series(1, len(a.unit)),
-         |      i -> CAST(floor(CAST(a.unit[i] AS DOUBLE)
-         |        * CAST(b.unit[i] AS DOUBLE) * 1000000000000) AS BIGINT)))
-         |      AS BIGINT) AS dot_q
+         |    ${unitDotSql()} AS dot_q
          |  FROM p
          |  JOIN u a ON p.q_id = a.vec_id
          |  JOIN u b ON p.n_id = b.vec_id
@@ -3052,100 +2990,73 @@ object Analytics5Queries {
     // q403's eval quota over the survivors, q421's waterfill over
     // surviving TRAIN tokens, md5-order greedy selection, packing rollup
     "q442_corpus_compile" ->
-      """WITH m AS (
-        |  SELECT doc_id, source, lang,
-        |    md5(array_to_string(
-        |      regexp_extract_all(lower(text), '[a-z0-9]+'), ' ')) AS fp,
-        |    CAST(CAST(regexp_extract(source, '([0-9]+)', 1) AS INT) % 4
-        |      AS BIGINT) AS src_tier,
-        |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+'))
-        |      AS BIGINT) AS n_tok,
-        |    CAST(len(list_distinct(
-        |        regexp_extract_all(lower(text), '[a-z0-9]+'))) * 1000000
-        |      // greatest(len(regexp_extract_all(lower(text), '[a-z0-9]+')),
-        |                  1) AS BIGINT) AS quality_ppm
-        |  FROM documents
-        |), rr AS (
-        |  SELECT *, row_number() OVER (PARTITION BY fp
-        |    ORDER BY src_tier ASC, quality_ppm DESC, n_tok DESC,
-        |             doc_id ASC) AS rk
-        |  FROM m
-        |), surv AS (
-        |  SELECT * FROM rr WHERE rk = 1
-        |), spl AS (
-        |  SELECT *, row_number() OVER (PARTITION BY lang
-        |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS erk
-        |  FROM surv
-        |), train AS (
-        |  SELECT * FROM spl WHERE erk > 20
-        |), src AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n_train,
-        |    CAST(sum(n_tok) AS BIGINT) AS c,
-        |    CAST(sum(quality_ppm) AS BIGINT) AS qsum
-        |  FROM train GROUP BY 1
-        |), sw AS (
-        |  SELECT *, greatest(1, qsum // n_train) AS w FROM src
-        |), b0 AS (
-        |  SELECT *, (SELECT sum(c) FROM sw) * 6 // 10 AS b,
-        |    (SELECT sum(w) FROM sw) AS wtot,
-        |    c * 1000000 // w AS ratio_q
-        |  FROM sw
-        |), f AS (
-        |  SELECT *,
-        |    coalesce(sum(c) OVER (ORDER BY ratio_q, source
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS cc_prev,
-        |    wtot - coalesce(sum(w) OVER (ORDER BY ratio_q, source
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS w_rem
-        |  FROM b0
-        |), g AS (
-        |  SELECT *, CASE WHEN (b - cc_prev) * w >= c * w_rem
-        |                 THEN 1 ELSE 0 END AS flag
-        |  FROM f
-        |), h AS (
-        |  SELECT *, min(flag) OVER (ORDER BY ratio_q, source
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) = 1
-        |      AS capped
-        |  FROM g
-        |), agg AS (
-        |  SELECT coalesce(sum(CASE WHEN capped THEN c END), 0) AS cc_star,
-        |         coalesce(sum(CASE WHEN NOT capped THEN w END), 0) AS wu_star
-        |  FROM h
-        |), fin AS (
-        |  SELECT source, n_train, c AS train_tokens,
-        |    CAST(CASE WHEN capped THEN c
-        |         ELSE least(c, greatest(0, b - agg.cc_star) * w
-        |                       // agg.wu_star) END AS BIGINT) AS alloc
-        |  FROM h CROSS JOIN agg
-        |), sel AS (
-        |  SELECT t.source, t.n_tok,
-        |    sum(t.n_tok) OVER (PARTITION BY t.source
-        |      ORDER BY md5(CAST(t.doc_id AS VARCHAR)), t.doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    fin.alloc
-        |  FROM train t JOIN fin ON t.source = fin.source
-        |), kept AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n_selected,
-        |    CAST(sum(n_tok) AS BIGINT) AS sel_tokens,
-        |    CAST(sum((n_tok + 511) // 512) AS BIGINT) AS n_chunks
-        |  FROM sel WHERE cum <= alloc GROUP BY 1
-        |), raw AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n_raw
-        |  FROM documents GROUP BY 1
-        |), sv AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n_survivors
-        |  FROM surv GROUP BY 1
-        |)
-        |SELECT raw.source, raw.n_raw, sv.n_survivors, fin.n_train,
-        |  fin.train_tokens, fin.alloc,
-        |  coalesce(kept.n_selected, 0) AS n_selected,
-        |  coalesce(kept.sel_tokens, 0) AS sel_tokens,
-        |  coalesce(kept.n_chunks, 0) AS n_chunks
-        |FROM raw
-        |JOIN sv ON raw.source = sv.source
-        |JOIN fin ON raw.source = fin.source
-        |LEFT JOIN kept ON raw.source = kept.source""".stripMargin,
+      s"""WITH m AS (
+         |  SELECT doc_id, source, lang,
+         |    md5(array_to_string(
+         |      regexp_extract_all(lower(text), '[a-z0-9]+'), ' ')) AS fp,
+         |    CAST(CAST(regexp_extract(source, '([0-9]+)', 1) AS INT) % 4
+         |      AS BIGINT) AS src_tier,
+         |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+'))
+         |      AS BIGINT) AS n_tok,
+         |    CAST(len(list_distinct(
+         |        regexp_extract_all(lower(text), '[a-z0-9]+'))) * 1000000
+         |      // greatest(len(regexp_extract_all(lower(text), '[a-z0-9]+')),
+         |                  1) AS BIGINT) AS quality_ppm
+         |  FROM documents
+         |), rr AS (
+         |  SELECT *, row_number() OVER (PARTITION BY fp
+         |    ORDER BY src_tier ASC, quality_ppm DESC, n_tok DESC,
+         |             doc_id ASC) AS rk
+         |  FROM m
+         |), surv AS (
+         |  SELECT * FROM rr WHERE rk = 1
+         |), spl AS (
+         |  SELECT *, row_number() OVER (PARTITION BY lang
+         |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS erk
+         |  FROM surv
+         |), train AS (
+         |  SELECT * FROM spl WHERE erk > 20
+         |), src AS (
+         |  SELECT source, CAST(count(*) AS BIGINT) AS n_train,
+         |    CAST(sum(n_tok) AS BIGINT) AS c,
+         |    CAST(sum(quality_ppm) AS BIGINT) AS qsum
+         |  FROM train GROUP BY 1
+         |), sw AS (
+         |  SELECT *, greatest(1, qsum // n_train) AS w FROM src
+         |), $waterfillCtes, fin AS (
+         |  SELECT source, n_train, c AS train_tokens,
+         |    CAST(CASE WHEN capped THEN c
+         |         ELSE least(c, greatest(0, b - agg.cc_star) * w
+         |                       // agg.wu_star) END AS BIGINT) AS alloc
+         |  FROM h CROSS JOIN agg
+         |), sel AS (
+         |  SELECT t.source, t.n_tok,
+         |    sum(t.n_tok) OVER (PARTITION BY t.source
+         |      ORDER BY md5(CAST(t.doc_id AS VARCHAR)), t.doc_id
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+         |    fin.alloc
+         |  FROM train t JOIN fin ON t.source = fin.source
+         |), kept AS (
+         |  SELECT source, CAST(count(*) AS BIGINT) AS n_selected,
+         |    CAST(sum(n_tok) AS BIGINT) AS sel_tokens,
+         |    CAST(sum((n_tok + 511) // 512) AS BIGINT) AS n_chunks
+         |  FROM sel WHERE cum <= alloc GROUP BY 1
+         |), raw AS (
+         |  SELECT source, CAST(count(*) AS BIGINT) AS n_raw
+         |  FROM documents GROUP BY 1
+         |), sv AS (
+         |  SELECT source, CAST(count(*) AS BIGINT) AS n_survivors
+         |  FROM surv GROUP BY 1
+         |)
+         |SELECT raw.source, raw.n_raw, sv.n_survivors, fin.n_train,
+         |  fin.train_tokens, fin.alloc,
+         |  coalesce(kept.n_selected, 0) AS n_selected,
+         |  coalesce(kept.sel_tokens, 0) AS sel_tokens,
+         |  coalesce(kept.n_chunks, 0) AS n_chunks
+         |FROM raw
+         |JOIN sv ON raw.source = sv.source
+         |JOIN fin ON raw.source = fin.source
+         |LEFT JOIN kept ON raw.source = kept.source""".stripMargin,
 
     // same two grouped passes per release slice, the count-desc/lang
     // majority window, and the integer ppm quality mean
@@ -3198,44 +3109,16 @@ object Analytics5Queries {
     // q457's interim machinery with the OBF product test z²·k > C²·K
     // and the reported decreasing boundary
     "q473_obf_interims" ->
-      """WITH daily AS (
-        |  SELECT CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS d,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS k
-        |  FROM events GROUP BY 1
-        |), r AS (
-        |  SELECT *, CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS rn,
-        |    (SELECT CAST(count(*) AS BIGINT) FROM daily) AS nd
-        |  FROM daily
-        |), buck AS (
-        |  SELECT least((rn - 1) * 5 // nd, 4) AS interim,
-        |    CAST(sum(n) AS BIGINT) AS n_i, CAST(sum(k) AS BIGINT) AS k_i
-        |  FROM r GROUP BY 1
-        |), cum AS (
-        |  SELECT interim,
-        |    CAST(sum(n_i) OVER (ORDER BY interim ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS BIGINT) AS n_cum,
-        |    CAST(sum(k_i) OVER (ORDER BY interim ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS BIGINT) AS k_cum
-        |  FROM buck
-        |), z AS (
-        |  SELECT CAST(interim AS BIGINT) AS interim, n_cum, k_cum,
-        |    CAST(((2 * k_cum - n_cum) * (2 * k_cum - n_cum) // n_cum)
-        |        * 1000000
-        |      + ((2 * k_cum - n_cum) * (2 * k_cum - n_cum) % n_cum)
-        |        * 1000000 // n_cum AS BIGINT) AS z2_micro
-        |  FROM cum
-        |), f AS (
-        |  SELECT *, CAST(20808000 // (interim + 1) AS BIGINT)
-        |      AS bound_micro,
-        |    z2_micro * (interim + 1) > 20808000 AS crossed
-        |  FROM z
-        |)
-        |SELECT interim, n_cum, k_cum, z2_micro, bound_micro, crossed,
-        |  (SELECT CAST(min(CASE WHEN crossed THEN interim END) AS BIGINT)
-        |   FROM f) AS first_cross
-        |FROM f""".stripMargin,
+      s"""WITH $interimZ2Chain, f AS (
+         |  SELECT *, CAST(20808000 // (interim + 1) AS BIGINT)
+         |      AS bound_micro,
+         |    z2_micro * (interim + 1) > 20808000 AS crossed
+         |  FROM z
+         |)
+         |SELECT interim, n_cum, k_cum, z2_micro, bound_micro, crossed,
+         |  (SELECT CAST(min(CASE WHEN crossed THEN interim END) AS BIGINT)
+         |   FROM f) AS first_cross
+         |FROM f""".stripMargin,
 
 
     // same day-integer fold algebra off the orders date span; DuckDB
@@ -3344,44 +3227,7 @@ object Analytics5Queries {
         |    AS kappa_ppm
         |FROM e""".stripMargin,
 
-    // identical interim bucketing, cumulative split-div z² and the
-    // declared Pocock constant
-    "q457_pocock_interims" ->
-      """WITH daily AS (
-        |  SELECT CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS d,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS k
-        |  FROM events GROUP BY 1
-        |), r AS (
-        |  SELECT *, CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS rn,
-        |    (SELECT CAST(count(*) AS BIGINT) FROM daily) AS nd
-        |  FROM daily
-        |), buck AS (
-        |  SELECT least((rn - 1) * 5 // nd, 4) AS interim,
-        |    CAST(sum(n) AS BIGINT) AS n_i, CAST(sum(k) AS BIGINT) AS k_i
-        |  FROM r GROUP BY 1
-        |), cum AS (
-        |  SELECT interim,
-        |    CAST(sum(n_i) OVER (ORDER BY interim ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS BIGINT) AS n_cum,
-        |    CAST(sum(k_i) OVER (ORDER BY interim ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS BIGINT) AS k_cum
-        |  FROM buck
-        |), z AS (
-        |  SELECT CAST(interim AS BIGINT) AS interim, n_cum, k_cum,
-        |    CAST(((2 * k_cum - n_cum) * (2 * k_cum - n_cum) // n_cum)
-        |        * 1000000
-        |      + ((2 * k_cum - n_cum) * (2 * k_cum - n_cum) % n_cum)
-        |        * 1000000 // n_cum AS BIGINT) AS z2_micro
-        |  FROM cum
-        |), f AS (
-        |  SELECT *, z2_micro > 5822569 AS crossed FROM z
-        |)
-        |SELECT interim, n_cum, k_cum, z2_micro, crossed,
-        |  (SELECT CAST(min(CASE WHEN crossed THEN interim END) AS BIGINT)
-        |   FROM f) AS first_cross
-        |FROM f""".stripMargin,
+    "q457_pocock_interims" -> pocockInterimsSql,
 
     // identical division-free stratum signs vs the pooled sign
     "q455_simpson_flags" ->
@@ -3443,35 +3289,7 @@ object Analytics5Queries {
         |    AS p50_cents
         |FROM w""".stripMargin,
 
-    // identical day grain, running-mean terms and prefix-min detector
-    "q449_page_hinkley" ->
-      """WITH daily AS (
-        |  SELECT CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS d,
-        |    CAST(sum(CAST(CAST(value AS DECIMAL(30,2)) * 100 AS BIGINT))
-        |      AS BIGINT) AS cents,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1
-        |), x AS (
-        |  SELECT d, n, cents // n AS x FROM daily
-        |), pre AS (
-        |  SELECT *, CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t,
-        |    sum(x) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING
-        |      AND CURRENT ROW) AS cum_x
-        |  FROM x
-        |), term AS (
-        |  SELECT *, x - cum_x // t - 50 AS term FROM pre
-        |), mseq AS (
-        |  SELECT *, sum(term) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED
-        |    PRECEDING AND CURRENT ROW) AS m
-        |  FROM term
-        |)
-        |SELECT d, n, CAST(x AS BIGINT) AS x,
-        |  CAST(cum_x // t AS BIGINT) AS mean_t, CAST(m AS BIGINT) AS m,
-        |  CAST(m - min(m) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED
-        |    PRECEDING AND CURRENT ROW) AS BIGINT) AS ph,
-        |  m - min(m) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING
-        |    AND CURRENT ROW) > 10000 AS alert
-        |FROM mseq""".stripMargin,
+    "q449_page_hinkley" -> pageHinkleySql,
 
     // the identical IEEE expression tree on exact integer inputs,
     // floor-quantized at the end (the q25 discipline)
@@ -3541,79 +3359,58 @@ object Analytics5Queries {
     // q16's pair CTE feeding the dup share; the rest is plain rollups
     // over the same token grain
     "q448_dataset_card" ->
-      """WITH t AS (
-        |  SELECT doc_id, source, lang,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
-        |  FROM documents
-        |), base AS (
-        |  SELECT doc_id, source, lang,
-        |    CAST(len(ts) AS BIGINT) AS n_tok,
-        |    CAST(len(list_distinct(ts)) * 1000000
-        |      // greatest(len(ts), 1) AS BIGINT) AS quality_ppm
-        |  FROM t
-        |), sh AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, len(ts)-2),
-        |                        i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS shingles
-        |  FROM t WHERE len(ts) >= 3
-        |), sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, 6),
-        |                        j -> list_aggregate(list_transform(shingles,
-        |                               s -> CAST('0x' || substr(md5(CAST((j+1)//2 AS VARCHAR) || ':' || s),
-        |                                                 CASE WHEN j%2=1 THEN 1 ELSE 16 END, 15) AS BIGINT)),
-        |                             'min')) AS mh
-        |  FROM sh
-        |), bands AS (
-        |  SELECT doc_id, b AS band_id,
-        |         md5(CAST(mh[2*b-1] AS VARCHAR) || '|' || CAST(mh[2*b] AS VARCHAR)) AS bucket
-        |  FROM sig, unnest(generate_series(1, 3)) AS u(b)
-        |), pairs AS (
-        |  SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc
-        |  FROM bands a JOIN bands b
-        |    ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        |), dupd AS (
-        |  SELECT DISTINCT doc_id FROM (
-        |    SELECT a_doc AS doc_id FROM pairs
-        |    UNION ALL SELECT b_doc FROM pairs)
-        |), vol AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-        |    CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-        |    CAST(sum(quality_ppm) // count(*) AS BIGINT)
-        |      AS mean_quality_ppm
-        |  FROM base GROUP BY 1
-        |), tl AS (
-        |  SELECT source, lang AS top_lang,
-        |    CAST(nl AS BIGINT) AS top_lang_docs
-        |  FROM (
-        |    SELECT source, lang, count(*) AS nl, row_number() OVER (
-        |      PARTITION BY source ORDER BY count(*) DESC, lang) AS rk
-        |    FROM base GROUP BY source, lang)
-        |  WHERE rk = 1
-        |), ml AS (
-        |  SELECT source, n_tok AS p50_tokens FROM (
-        |    SELECT source, n_tok, doc_id, row_number() OVER (
-        |      PARTITION BY source ORDER BY n_tok, doc_id) AS rn,
-        |      count(*) OVER (PARTITION BY source) AS nsrc
-        |    FROM base)
-        |  WHERE rn = (nsrc + 1) // 2
-        |), dup AS (
-        |  SELECT b.source, CAST(count(*) AS BIGINT) AS n_dup_docs
-        |  FROM base b JOIN dupd ON b.doc_id = dupd.doc_id
-        |  GROUP BY 1
-        |)
-        |SELECT vol.source, vol.n_docs, vol.n_tokens, vol.n_langs,
-        |  tl.top_lang,
-        |  CAST(tl.top_lang_docs * 1000000 // vol.n_docs AS BIGINT)
-        |    AS top_lang_ppm,
-        |  vol.mean_quality_ppm, ml.p50_tokens,
-        |  CAST(coalesce(dup.n_dup_docs, 0) * 1000000 // vol.n_docs
-        |    AS BIGINT) AS dup_doc_ppm
-        |FROM vol
-        |JOIN tl ON vol.source = tl.source
-        |JOIN ml ON vol.source = ml.source
-        |LEFT JOIN dup ON vol.source = dup.source""".stripMargin,
+      s"""WITH t AS (
+         |  SELECT doc_id, source, lang,
+         |    regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
+         |  FROM documents
+         |), base AS (
+         |  SELECT doc_id, source, lang,
+         |    CAST(len(ts) AS BIGINT) AS n_tok,
+         |    CAST(len(list_distinct(ts)) * 1000000
+         |      // greatest(len(ts), 1) AS BIGINT) AS quality_ppm
+         |  FROM t
+         |), $shinglesCte, $minhashBandsCte, $lshPairsCte, dupd AS (
+         |  SELECT DISTINCT doc_id FROM (
+         |    SELECT a_doc AS doc_id FROM pairs
+         |    UNION ALL SELECT b_doc FROM pairs)
+         |), vol AS (
+         |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+         |    CAST(sum(n_tok) AS BIGINT) AS n_tokens,
+         |    CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
+         |    CAST(sum(quality_ppm) // count(*) AS BIGINT)
+         |      AS mean_quality_ppm
+         |  FROM base GROUP BY 1
+         |), tl AS (
+         |  SELECT source, lang AS top_lang,
+         |    CAST(nl AS BIGINT) AS top_lang_docs
+         |  FROM (
+         |    SELECT source, lang, count(*) AS nl, row_number() OVER (
+         |      PARTITION BY source ORDER BY count(*) DESC, lang) AS rk
+         |    FROM base GROUP BY source, lang)
+         |  WHERE rk = 1
+         |), ml AS (
+         |  SELECT source, n_tok AS p50_tokens FROM (
+         |    SELECT source, n_tok, doc_id, row_number() OVER (
+         |      PARTITION BY source ORDER BY n_tok, doc_id) AS rn,
+         |      count(*) OVER (PARTITION BY source) AS nsrc
+         |    FROM base)
+         |  WHERE rn = (nsrc + 1) // 2
+         |), dup AS (
+         |  SELECT b.source, CAST(count(*) AS BIGINT) AS n_dup_docs
+         |  FROM base b JOIN dupd ON b.doc_id = dupd.doc_id
+         |  GROUP BY 1
+         |)
+         |SELECT vol.source, vol.n_docs, vol.n_tokens, vol.n_langs,
+         |  tl.top_lang,
+         |  CAST(tl.top_lang_docs * 1000000 // vol.n_docs AS BIGINT)
+         |    AS top_lang_ppm,
+         |  vol.mean_quality_ppm, ml.p50_tokens,
+         |  CAST(coalesce(dup.n_dup_docs, 0) * 1000000 // vol.n_docs
+         |    AS BIGINT) AS dup_doc_ppm
+         |FROM vol
+         |JOIN tl ON vol.source = tl.source
+         |JOIN ml ON vol.source = ml.source
+         |LEFT JOIN dup ON vol.source = dup.source""".stripMargin,
 
     // identical discordant-cell statistic and declared quantile constant
     "q438_mcnemar" ->
@@ -3900,130 +3697,50 @@ object Analytics5Queries {
     // the q419 survivor policy chained into the q399 waterfill algebra,
     // both stated verbatim over the surviving-token source rollup
     "q421_dedup_waterfill" ->
-      """WITH m AS (
-        |  SELECT doc_id, source,
-        |    md5(array_to_string(
-        |      regexp_extract_all(lower(text), '[a-z0-9]+'), ' ')) AS fp,
-        |    CAST(CAST(regexp_extract(source, '([0-9]+)', 1) AS INT) % 4
-        |      AS BIGINT) AS src_tier,
-        |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+'))
-        |      AS BIGINT) AS n_tok,
-        |    CAST(len(list_distinct(
-        |        regexp_extract_all(lower(text), '[a-z0-9]+'))) * 1000000
-        |      // greatest(len(regexp_extract_all(lower(text), '[a-z0-9]+')),
-        |                  1) AS BIGINT) AS quality_ppm
-        |  FROM documents
-        |), rr AS (
-        |  SELECT *, row_number() OVER (PARTITION BY fp
-        |    ORDER BY src_tier ASC, quality_ppm DESC, n_tok DESC,
-        |             doc_id ASC) AS rk
-        |  FROM m
-        |), surv AS (
-        |  SELECT * FROM rr WHERE rk = 1
-        |), src AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(n_tok) AS BIGINT) AS c,
-        |    CAST(sum(quality_ppm) AS BIGINT) AS qsum
-        |  FROM surv GROUP BY 1
-        |), sw AS (
-        |  SELECT *, greatest(1, qsum // n_docs) AS w FROM src
-        |), b0 AS (
-        |  SELECT *, (SELECT sum(c) FROM sw) * 6 // 10 AS b,
-        |    (SELECT sum(w) FROM sw) AS wtot,
-        |    c * 1000000 // w AS ratio_q
-        |  FROM sw
-        |), f AS (
-        |  SELECT *,
-        |    coalesce(sum(c) OVER (ORDER BY ratio_q, source
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS cc_prev,
-        |    wtot - coalesce(sum(w) OVER (ORDER BY ratio_q, source
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS w_rem
-        |  FROM b0
-        |), g AS (
-        |  SELECT *, CASE WHEN (b - cc_prev) * w >= c * w_rem
-        |                 THEN 1 ELSE 0 END AS flag
-        |  FROM f
-        |), h AS (
-        |  SELECT *, min(flag) OVER (ORDER BY ratio_q, source
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) = 1
-        |      AS capped
-        |  FROM g
-        |), agg AS (
-        |  SELECT coalesce(sum(CASE WHEN capped THEN c END), 0) AS cc_star,
-        |         coalesce(sum(CASE WHEN NOT capped THEN w END), 0) AS wu_star
-        |  FROM h
-        |), fin AS (
-        |  SELECT source, n_docs, c, w, capped, b,
-        |    CASE WHEN capped THEN c
-        |         ELSE least(c, greatest(0, b - agg.cc_star) * w
-        |                       // agg.wu_star) END AS alloc
-        |  FROM h CROSS JOIN agg
-        |)
-        |SELECT source, n_docs, c, w, capped,
-        |  CAST(alloc AS BIGINT) AS alloc,
-        |  CAST(CASE WHEN b > 0 THEN alloc * 1000000 // b ELSE 0 END
-        |    AS BIGINT) AS share_ppm
-        |FROM fin""".stripMargin,
+      s"""WITH m AS (
+         |  SELECT doc_id, source,
+         |    md5(array_to_string(
+         |      regexp_extract_all(lower(text), '[a-z0-9]+'), ' ')) AS fp,
+         |    CAST(CAST(regexp_extract(source, '([0-9]+)', 1) AS INT) % 4
+         |      AS BIGINT) AS src_tier,
+         |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+'))
+         |      AS BIGINT) AS n_tok,
+         |    CAST(len(list_distinct(
+         |        regexp_extract_all(lower(text), '[a-z0-9]+'))) * 1000000
+         |      // greatest(len(regexp_extract_all(lower(text), '[a-z0-9]+')),
+         |                  1) AS BIGINT) AS quality_ppm
+         |  FROM documents
+         |), rr AS (
+         |  SELECT *, row_number() OVER (PARTITION BY fp
+         |    ORDER BY src_tier ASC, quality_ppm DESC, n_tok DESC,
+         |             doc_id ASC) AS rk
+         |  FROM m
+         |), surv AS (
+         |  SELECT * FROM rr WHERE rk = 1
+         |), src AS (
+         |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+         |    CAST(sum(n_tok) AS BIGINT) AS c,
+         |    CAST(sum(quality_ppm) AS BIGINT) AS qsum
+         |  FROM surv GROUP BY 1
+         |), $waterfillTail""".stripMargin,
 
     // the identical division-free waterfilling algebra over the same
     // source-grain rollup; windows and prefix-AND stated verbatim
     "q399_token_waterfill" ->
-      """WITH pp AS (
-        |  SELECT source,
-        |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+'))
-        |      AS BIGINT) AS n_tok,
-        |    CAST(len(list_distinct(regexp_extract_all(lower(text),
-        |      '[a-z0-9]+'))) AS BIGINT) AS n_dist
-        |  FROM documents
-        |), src AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(n_tok) AS BIGINT) AS c,
-        |    CAST(sum(n_dist * 1000000 // greatest(n_tok, 1)) AS BIGINT)
-        |      AS qsum
-        |  FROM pp GROUP BY 1
-        |), sw AS (
-        |  SELECT *, greatest(1, qsum // n_docs) AS w FROM src
-        |), b0 AS (
-        |  SELECT *, (SELECT sum(c) FROM sw) * 6 // 10 AS b,
-        |    (SELECT sum(w) FROM sw) AS wtot,
-        |    c * 1000000 // w AS ratio_q
-        |  FROM sw
-        |), f AS (
-        |  SELECT *,
-        |    coalesce(sum(c) OVER (ORDER BY ratio_q, source
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS cc_prev,
-        |    wtot - coalesce(sum(w) OVER (ORDER BY ratio_q, source
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS w_rem
-        |  FROM b0
-        |), g AS (
-        |  SELECT *, CASE WHEN (b - cc_prev) * w >= c * w_rem
-        |                 THEN 1 ELSE 0 END AS flag
-        |  FROM f
-        |), h AS (
-        |  SELECT *, min(flag) OVER (ORDER BY ratio_q, source
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) = 1
-        |      AS capped
-        |  FROM g
-        |), agg AS (
-        |  SELECT coalesce(sum(CASE WHEN capped THEN c END), 0) AS cc_star,
-        |         coalesce(sum(CASE WHEN NOT capped THEN w END), 0) AS wu_star
-        |  FROM h
-        |), fin AS (
-        |  SELECT source, n_docs, c, w, capped, b,
-        |    CASE WHEN capped THEN c
-        |         ELSE least(c, greatest(0, b - agg.cc_star) * w
-        |                       // agg.wu_star) END AS alloc
-        |  FROM h CROSS JOIN agg
-        |)
-        |SELECT source, n_docs, c, w, capped,
-        |  CAST(alloc AS BIGINT) AS alloc,
-        |  CAST(CASE WHEN b > 0 THEN alloc * 1000000 // b ELSE 0 END
-        |    AS BIGINT) AS share_ppm
-        |FROM fin""".stripMargin,
+      s"""WITH pp AS (
+         |  SELECT source,
+         |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+'))
+         |      AS BIGINT) AS n_tok,
+         |    CAST(len(list_distinct(regexp_extract_all(lower(text),
+         |      '[a-z0-9]+'))) AS BIGINT) AS n_dist
+         |  FROM documents
+         |), src AS (
+         |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+         |    CAST(sum(n_tok) AS BIGINT) AS c,
+         |    CAST(sum(n_dist * 1000000 // greatest(n_tok, 1)) AS BIGINT)
+         |      AS qsum
+         |  FROM pp GROUP BY 1
+         |), $waterfillTail""".stripMargin,
 
     // the naive global row_number formulation of the quartile buckets —
     // the engine's two-phase rank must land on the identical assignment

@@ -1707,28 +1707,7 @@ object AnalyticsQueries {
         |FROM scored s JOIN customer cu ON s.o_custkey = cu.c_custkey
         |GROUP BY 1""".stripMargin,
 
-    "q276_kmv_distinct" ->
-      """WITH h AS (
-        |  SELECT DISTINCT event_type,
-        |    CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)
-        |         AS BIGINT) AS h
-        |  FROM events
-        |), exact AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_exact
-        |  FROM h GROUP BY 1
-        |), sk AS (
-        |  SELECT event_type, CAST(max(h) AS BIGINT) AS kth_min,
-        |         CAST(count(*) AS BIGINT) AS k_eff
-        |  FROM (SELECT event_type, h,
-        |               row_number() OVER (PARTITION BY event_type
-        |                                  ORDER BY h) AS rn
-        |        FROM h)
-        |  WHERE rn <= 32 GROUP BY 1
-        |)
-        |SELECT s.event_type, e.n_exact, s.k_eff, s.kth_min,
-        |       CAST(floor((CAST(s.k_eff AS DOUBLE) - 1.0) * pow(2.0, 60.0) /
-        |                   CAST(s.kth_min AS DOUBLE)) AS BIGINT) AS est
-        |FROM sk s JOIN exact e ON s.event_type = e.event_type""".stripMargin,
+    "q276_kmv_distinct" -> QueryShared.kmvDistinctSql,
 
     // identical md5 hash space, LIMIT-k sketches, floor-double
     // estimates and the integer rho division

@@ -401,17 +401,18 @@ object DedupQueries {
           col("id").as("asset_id"), lit("image").as("modality"),
           col("content"))),
         predsPath("q468_sigs"))
-      // hamMax 3 with 4 bands of 16 bits, not the generic (7, 8): the
-      // planted perturbation moves ≤2 gradient bits, so the pigeonhole
-      // guarantee only needs bands > 3 — and WIDER band keys matter at
-      // this corpus size (3·|docs| sigs over 8-bit keys collide into
-      // ~n/256-member buckets whose in-bucket expansion is Σ bucket²;
-      // 16-bit keys keep buckets near-singleton). The tighter verify
-      // threshold also keeps chance near-collisions between unrelated
-      // md5 images out of the joint graph.
+      // hamMax 3 with 4 bands of 16 bits (`textHamming`), not the
+      // perceptual (7, 8): the planted perturbation moves ≤2 gradient
+      // bits, so the pigeonhole guarantee only needs bands > 3 — and
+      // WIDER band keys matter at this corpus size (3·|docs| sigs over
+      // 8-bit keys collide into ~n/256-member buckets whose in-bucket
+      // expansion is Σ bucket²; 16-bit keys keep buckets
+      // near-singleton). The tighter verify threshold also keeps chance
+      // near-collisions between unrelated md5 images out of the joint
+      // graph.
       val imgPairs = llm.Dedup.hamming64Dups(
           s.read.parquet(predsPath("q468_sigs")), "asset_id", "sig",
-          hamMax = 3, bands = 4)
+          hamMax = textHamming._1, bands = textHamming._2)
         .select(col("id_a").as("a_doc"), col("id_b").as("b_doc"))
       val fps = corpus.select(col("id"), md5(col("text")).as("fp"))
       val textPairs = fps.as("x")
@@ -1091,89 +1092,47 @@ object DedupQueries {
         col("cluster_id"))
   }
 
-  /** DuckDB-runnable oracle equivalents; keys lacking an entry here are
-    * rows-only checked by the driver (non-portable hash/codec/fit paths,
-    * each pinned by a dedicated spec instead). */
   /** Shared CTE prefix of the q398/q406 oracles — everything up to the
     * per-anchor extension frame `x` (a_doc, b_doc, a_pos, b_pos, rmiss,
     * lmiss): md5 anchor selection, both-side caps, guarded indexing. */
   private val substringExtensionsCte: String =
-    """WITH t AS (
-      |  SELECT doc_id AS id,
-      |         regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
-      |  FROM documents
-      |), tt AS (
-      |  SELECT id, ts FROM t WHERE len(ts) >= 8
-      |), g AS (
-      |  SELECT id, i AS pos, array_to_string(ts[i:i+7], ' ') AS gram
-      |  FROM tt, unnest(generate_series(1, len(ts) - 7)) AS u(i)
-      |), a AS (
-      |  SELECT id, pos, gram FROM g
-      |  WHERE CAST('0x' || substr(md5(gram), 1, 15) AS BIGINT) % 8 = 0
-      |), c AS (
-      |  SELECT id, pos, gram,
-      |         row_number() OVER (PARTITION BY gram
-      |           ORDER BY md5(CAST(id AS VARCHAR) || '#'
-      |                        || CAST(pos AS VARCHAR))) AS rk
-      |  FROM a
-      |), cap AS (
-      |  SELECT id, pos, gram FROM c WHERE rk <= 64
-      |), cand AS (
-      |  SELECT x.id AS a_doc, x.pos AS a_pos, y.id AS b_doc, y.pos AS b_pos
-      |  FROM cap x JOIN cap y USING (gram) WHERE x.id < y.id
-      |), w AS (
-      |  SELECT cand.*, ta.ts AS a_ts, tb.ts AS b_ts
-      |  FROM cand JOIN tt ta ON cand.a_doc = ta.id
-      |            JOIN tt tb ON cand.b_doc = tb.id
-      |), e AS (
-      |  SELECT a_doc, b_doc, a_pos, b_pos, i,
-      |    coalesce(
-      |      (CASE WHEN a_pos + i BETWEEN 1 AND len(a_ts)
-      |            THEN a_ts[CAST(a_pos + i AS BIGINT)] END) =
-      |      (CASE WHEN b_pos + i BETWEEN 1 AND len(b_ts)
-      |            THEN b_ts[CAST(b_pos + i AS BIGINT)] END),
-      |      false) AS eq
-      |  FROM w, unnest(generate_series(-48, 8 + 48 - 1)) AS u(i)
-      |), x AS (
-      |  SELECT a_doc, b_doc, a_pos, b_pos,
-      |    coalesce(min(CASE WHEN i >= 8 AND NOT eq THEN i END), 8 + 48)
-      |      AS rmiss,
-      |    coalesce(max(CASE WHEN i < 0 AND NOT eq THEN i END), -48 - 1)
-      |      AS lmiss
-      |  FROM e GROUP BY 1, 2, 3, 4
-      |)""".stripMargin
+    "WITH " + Seq(windowDocsCte, anchorGramsCte(), cappedAnchorsCte(),
+      """cand AS (
+        |  SELECT x.id AS a_doc, x.pos AS a_pos, y.id AS b_doc, y.pos AS b_pos
+        |  FROM cap x JOIN cap y USING (gram) WHERE x.id < y.id
+        |)""".stripMargin, anchorExtensionCte()).mkString(", ")
 
+  /** q70's exact 4-gram decontamination; q73's bloom path must return
+    * the same answer bit for bit. */
+  private val gramDecontaminationSql: String =
+    """WITH toks AS (
+      |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
+      |), grams AS (
+      |  SELECT doc_id,
+      |    unnest(list_distinct(list_transform(
+      |      generate_series(1, greatest(len(t) - 3, 0)),
+      |      i -> array_to_string(t[i:i+3], ' ')))) AS gram
+      |  FROM toks
+      |), bg AS (
+      |  SELECT DISTINCT gram FROM grams WHERE doc_id % 100 = 0
+      |)
+      |SELECT g.doc_id, CAST(count(*) AS BIGINT) AS n_hit_grams
+      |FROM grams g JOIN bg USING (gram)
+      |WHERE g.doc_id % 100 <> 0
+      |GROUP BY 1""".stripMargin
+
+  /** DuckDB-runnable oracle equivalents; keys lacking an entry here are
+    * checked on rows only (non-portable hash/codec/fit paths, each pinned
+    * by a dedicated spec instead). */
   val sql: Map[String, String] = Map(
 
-    // hash_j(s) = a 15-hex (60-bit) slice of md5(ceil(j/2):s) as BIGINT —
-    // odd j takes hex 1-15, even j hex 16-30, so one digest feeds two hash
-    // families (halves the md5 work on the Spark side; numeric minima keep
-    // the signature aggregation in a primitive hash-agg buffer). md5 hex
-    // and the 60-bit slices parse identically in both engines.
+    // the portable LSH bands (QueryShared.minhashBandsCte) self-joined on
+    // a shared bucket
     "q16_near_dedup" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, len(ts)-2),
-        |                        i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS shingles
-        |  FROM t WHERE len(ts) >= 3
-        |), sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, 6),
-        |                        j -> list_aggregate(list_transform(shingles,
-        |                               s -> CAST('0x' || substr(md5(CAST((j+1)//2 AS VARCHAR) || ':' || s),
-        |                                                 CASE WHEN j%2=1 THEN 1 ELSE 16 END, 15) AS BIGINT)),
-        |                             'min')) AS mh
-        |  FROM sh
-        |), bands AS (
-        |  SELECT doc_id, b AS band_id,
-        |         md5(CAST(mh[2*b-1] AS VARCHAR) || '|' || CAST(mh[2*b] AS VARCHAR)) AS bucket
-        |  FROM sig, unnest(generate_series(1, 3)) AS u(b)
-        |)
-        |SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc
-        |FROM bands a JOIN bands b
-        |  ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id""".stripMargin,
+      s"""WITH $lshBandsChain
+         |SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc
+         |FROM bands a JOIN bands b
+         |  ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id""".stripMargin,
 
 
     // asymmetric containment over distinct 4-gram shingles, bench side =
@@ -1241,621 +1200,308 @@ object DedupQueries {
     // the q43 pair CTEs + exact shingle-set counts and the identical
     // cross-multiplied percent sweep
     "q412_dedup_threshold_curve" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, len(ts)-2),
-        |                        i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS shingles
-        |  FROM t WHERE len(ts) >= 3
-        |), sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, 6),
-        |                        j -> list_aggregate(list_transform(shingles,
-        |                               s -> CAST('0x' || substr(md5(CAST((j+1)//2 AS VARCHAR) || ':' || s),
-        |                                                 CASE WHEN j%2=1 THEN 1 ELSE 16 END, 15) AS BIGINT)),
-        |                             'min')) AS mh
-        |  FROM sh
-        |), bands AS (
-        |  SELECT doc_id, b AS band_id,
-        |         md5(CAST(mh[2*b-1] AS VARCHAR) || '|' || CAST(mh[2*b] AS VARCHAR)) AS bucket
-        |  FROM sig, unnest(generate_series(1, 3)) AS u(b)
-        |), pairs AS (
-        |  SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc
-        |  FROM bands a JOIN bands b
-        |    ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        |), ss AS (
-        |  SELECT doc_id, list_distinct(shingles) AS sset FROM sh
-        |), jc AS (
-        |  SELECT p.a_doc, p.b_doc,
-        |    CAST(len(list_intersect(a.sset, b.sset)) AS BIGINT) AS inter,
-        |    CAST(len(list_distinct(list_concat(a.sset, b.sset))) AS BIGINT)
-        |      AS uni
-        |  FROM pairs p JOIN ss a ON p.a_doc = a.doc_id
-        |               JOIN ss b ON p.b_doc = b.doc_id
-        |), k AS (
-        |  SELECT t_pct, a_doc, b_doc FROM jc,
-        |    unnest([CAST(50 AS BIGINT), CAST(60 AS BIGINT),
-        |            CAST(70 AS BIGINT), CAST(80 AS BIGINT),
-        |            CAST(90 AS BIGINT)]) AS u(t_pct)
-        |  WHERE inter * 100 >= uni * t_pct
-        |), dd AS (
-        |  SELECT t_pct, a_doc AS d FROM k
-        |  UNION ALL SELECT t_pct, b_doc FROM k
-        |), p2 AS (
-        |  SELECT t_pct, CAST(count(*) AS BIGINT) AS n_pairs
-        |  FROM k GROUP BY 1
-        |), d2 AS (
-        |  SELECT t_pct, CAST(count(DISTINCT d) AS BIGINT) AS n_docs
-        |  FROM dd GROUP BY 1
-        |)
-        |SELECT p2.t_pct, p2.n_pairs, d2.n_docs
-        |FROM p2 JOIN d2 ON p2.t_pct = d2.t_pct""".stripMargin,
+      s"""WITH $lshPairsChain, ss AS (
+         |  SELECT doc_id, list_distinct(shingles) AS sset FROM sh
+         |), jc AS (
+         |  SELECT p.a_doc, p.b_doc,
+         |    CAST(len(list_intersect(a.sset, b.sset)) AS BIGINT) AS inter,
+         |    CAST(len(list_distinct(list_concat(a.sset, b.sset))) AS BIGINT)
+         |      AS uni
+         |  FROM pairs p JOIN ss a ON p.a_doc = a.doc_id
+         |               JOIN ss b ON p.b_doc = b.doc_id
+         |), k AS (
+         |  SELECT t_pct, a_doc, b_doc FROM jc,
+         |    unnest([CAST(50 AS BIGINT), CAST(60 AS BIGINT),
+         |            CAST(70 AS BIGINT), CAST(80 AS BIGINT),
+         |            CAST(90 AS BIGINT)]) AS u(t_pct)
+         |  WHERE inter * 100 >= uni * t_pct
+         |), dd AS (
+         |  SELECT t_pct, a_doc AS d FROM k
+         |  UNION ALL SELECT t_pct, b_doc FROM k
+         |), p2 AS (
+         |  SELECT t_pct, CAST(count(*) AS BIGINT) AS n_pairs
+         |  FROM k GROUP BY 1
+         |), d2 AS (
+         |  SELECT t_pct, CAST(count(DISTINCT d) AS BIGINT) AS n_docs
+         |  FROM dd GROUP BY 1
+         |)
+         |SELECT p2.t_pct, p2.n_pairs, d2.n_docs
+         |FROM p2 JOIN d2 ON p2.t_pct = d2.t_pct""".stripMargin,
 
     // the q43 banded-minhash pair CTEs + the source dim join and the
     // same canonical source ordering (docs swap with their sources)
     "q407_source_dup_matrix" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, len(ts)-2),
-        |                        i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS shingles
-        |  FROM t WHERE len(ts) >= 3
-        |), sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, 6),
-        |                        j -> list_aggregate(list_transform(shingles,
-        |                               s -> CAST('0x' || substr(md5(CAST((j+1)//2 AS VARCHAR) || ':' || s),
-        |                                                 CASE WHEN j%2=1 THEN 1 ELSE 16 END, 15) AS BIGINT)),
-        |                             'min')) AS mh
-        |  FROM sh
-        |), bands AS (
-        |  SELECT doc_id, b AS band_id,
-        |         md5(CAST(mh[2*b-1] AS VARCHAR) || '|' || CAST(mh[2*b] AS VARCHAR)) AS bucket
-        |  FROM sig, unnest(generate_series(1, 3)) AS u(b)
-        |), pairs AS (
-        |  SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc
-        |  FROM bands a JOIN bands b
-        |    ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        |), sp AS (
-        |  SELECT least(da.source, db.source) AS source_a,
-        |         greatest(da.source, db.source) AS source_b,
-        |         CASE WHEN da.source <= db.source THEN p.a_doc
-        |              ELSE p.b_doc END AS da,
-        |         CASE WHEN da.source <= db.source THEN p.b_doc
-        |              ELSE p.a_doc END AS db
-        |  FROM pairs p
-        |  JOIN documents da ON p.a_doc = da.doc_id
-        |  JOIN documents db ON p.b_doc = db.doc_id
-        |)
-        |SELECT source_a, source_b, CAST(count(*) AS BIGINT) AS n_pairs,
-        |  CAST(count(DISTINCT da) AS BIGINT) AS n_docs_a,
-        |  CAST(count(DISTINCT db) AS BIGINT) AS n_docs_b
-        |FROM sp GROUP BY 1, 2""".stripMargin,
+      s"""WITH $lshPairsChain, sp AS (
+         |  SELECT least(da.source, db.source) AS source_a,
+         |         greatest(da.source, db.source) AS source_b,
+         |         CASE WHEN da.source <= db.source THEN p.a_doc
+         |              ELSE p.b_doc END AS da,
+         |         CASE WHEN da.source <= db.source THEN p.b_doc
+         |              ELSE p.a_doc END AS db
+         |  FROM pairs p
+         |  JOIN documents da ON p.a_doc = da.doc_id
+         |  JOIN documents db ON p.b_doc = db.doc_id
+         |)
+         |SELECT source_a, source_b, CAST(count(*) AS BIGINT) AS n_pairs,
+         |  CAST(count(DISTINCT da) AS BIGINT) AS n_docs_a,
+         |  CAST(count(DISTINCT db) AS BIGINT) AS n_docs_b
+         |FROM sp GROUP BY 1, 2""".stripMargin,
 
     // q43's recursive closure + per-cluster argmax by (n_tok desc, id)
     // q404's closure + q45's exact-Jaccard chain + the per-cluster
     // min/max rollup and the 0.5-threshold chaining flag
     "q462_cluster_chaining_audit" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, len(ts)-2),
-        |                        i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS shingles
-        |  FROM t WHERE len(ts) >= 3
-        |), sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, 6),
-        |                        j -> list_aggregate(list_transform(shingles,
-        |                               s -> CAST('0x' || substr(md5(CAST((j+1)//2 AS VARCHAR) || ':' || s),
-        |                                                 CASE WHEN j%2=1 THEN 1 ELSE 16 END, 15) AS BIGINT)),
-        |                             'min')) AS mh
-        |  FROM sh
-        |), bands AS (
-        |  SELECT doc_id, b AS band_id,
-        |         md5(CAST(mh[2*b-1] AS VARCHAR) || '|' || CAST(mh[2*b] AS VARCHAR)) AS bucket
-        |  FROM sig, unnest(generate_series(1, 3)) AS u(b)
-        |), pairs AS (
-        |  SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc
-        |  FROM bands a JOIN bands b
-        |    ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        |), edges AS (
-        |  SELECT a_doc AS src, b_doc AS dst FROM pairs
-        |  UNION ALL SELECT b_doc, a_doc FROM pairs
-        |), reach(id, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-        |), cl AS (
-        |  SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-        |  FROM reach GROUP BY id
-        |), sets AS (
-        |  SELECT doc_id, list_distinct(shingles) AS sset FROM sh
-        |), jc AS (
-        |  SELECT p.a_doc, p.b_doc,
-        |    CAST(len(list_filter(sa.sset, x -> list_contains(sb.sset, x)))
-        |      * 1000000
-        |      // (len(sa.sset) + len(sb.sset)
-        |         - len(list_filter(sa.sset, x -> list_contains(sb.sset, x))))
-        |      AS BIGINT) AS j_ppm
-        |  FROM pairs p
-        |  JOIN sets sa ON p.a_doc = sa.doc_id
-        |  JOIN sets sb ON p.b_doc = sb.doc_id
-        |), stats AS (
-        |  SELECT cl.cluster_id, CAST(count(*) AS BIGINT) AS n_cand_pairs,
-        |    CAST(min(jc.j_ppm) AS BIGINT) AS min_j_ppm,
-        |    CAST(max(jc.j_ppm) AS BIGINT) AS max_j_ppm
-        |  FROM jc JOIN cl ON jc.a_doc = cl.doc_id
-        |  GROUP BY 1
-        |), mem AS (
-        |  SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_members
-        |  FROM cl GROUP BY 1
-        |), out AS (
-        |  SELECT mem.cluster_id, mem.n_members, stats.n_cand_pairs,
-        |    stats.min_j_ppm, stats.max_j_ppm,
-        |    stats.min_j_ppm < 500000 AS chained
-        |  FROM mem JOIN stats ON mem.cluster_id = stats.cluster_id
-        |)
-        |SELECT out.*,
-        |  (SELECT CAST(sum(CASE WHEN chained THEN 1 ELSE 0 END) AS BIGINT)
-        |   FROM out) AS n_chained
-        |FROM out""".stripMargin,
+      s"""WITH RECURSIVE ${lshClusterChain("cl")}, sets AS (
+         |  SELECT doc_id, list_distinct(shingles) AS sset FROM sh
+         |), jc AS (
+         |  SELECT p.a_doc, p.b_doc,
+         |    CAST(len(list_filter(sa.sset, x -> list_contains(sb.sset, x)))
+         |      * 1000000
+         |      // (len(sa.sset) + len(sb.sset)
+         |         - len(list_filter(sa.sset, x -> list_contains(sb.sset, x))))
+         |      AS BIGINT) AS j_ppm
+         |  FROM pairs p
+         |  JOIN sets sa ON p.a_doc = sa.doc_id
+         |  JOIN sets sb ON p.b_doc = sb.doc_id
+         |), stats AS (
+         |  SELECT cl.cluster_id, CAST(count(*) AS BIGINT) AS n_cand_pairs,
+         |    CAST(min(jc.j_ppm) AS BIGINT) AS min_j_ppm,
+         |    CAST(max(jc.j_ppm) AS BIGINT) AS max_j_ppm
+         |  FROM jc JOIN cl ON jc.a_doc = cl.doc_id
+         |  GROUP BY 1
+         |), mem AS (
+         |  SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_members
+         |  FROM cl GROUP BY 1
+         |), out AS (
+         |  SELECT mem.cluster_id, mem.n_members, stats.n_cand_pairs,
+         |    stats.min_j_ppm, stats.max_j_ppm,
+         |    stats.min_j_ppm < 500000 AS chained
+         |  FROM mem JOIN stats ON mem.cluster_id = stats.cluster_id
+         |)
+         |SELECT out.*,
+         |  (SELECT CAST(sum(CASE WHEN chained THEN 1 ELSE 0 END) AS BIGINT)
+         |   FROM out) AS n_chained
+         |FROM out""".stripMargin,
 
     // the identical plant derivation + the q420 verdict chain with the
     // train side unfiltered and the eval side the re-keyed copies
     "q461_decontamination_catch" ->
-      """WITH t AS (
-        |  SELECT doc_id AS id,
-        |         regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
-        |  FROM documents
-        |), tt AS (
-        |  SELECT id, ts FROM t WHERE len(ts) >= 8
-        |), pl AS (
-        |  SELECT id + 1000000 AS id, ts FROM tt
-        |  WHERE id % 50 = 0 AND len(ts) >= 24
-        |), g AS (
-        |  SELECT id, i AS pos, array_to_string(ts[i:i+7], ' ') AS gram
-        |  FROM tt, unnest(generate_series(1, len(ts) - 7)) AS u(i)
-        |), a AS (
-        |  SELECT id, pos, gram FROM g
-        |  WHERE CAST('0x' || substr(md5(gram), 1, 15) AS BIGINT) % 8 = 0
-        |), c AS (
-        |  SELECT id, pos, gram,
-        |         row_number() OVER (PARTITION BY gram
-        |           ORDER BY md5(CAST(id AS VARCHAR) || '#'
-        |                        || CAST(pos AS VARCHAR))) AS rk
-        |  FROM a
-        |), cap AS (
-        |  SELECT id, pos, gram FROM c WHERE rk <= 64
-        |), ge AS (
-        |  SELECT id, i AS pos, array_to_string(ts[i:i+7], ' ') AS gram
-        |  FROM pl, unnest(generate_series(1, len(ts) - 7)) AS u(i)
-        |), ae AS (
-        |  SELECT id, pos, gram FROM ge
-        |  WHERE CAST('0x' || substr(md5(gram), 1, 15) AS BIGINT) % 8 = 0
-        |), cand AS (
-        |  SELECT x.id AS a_doc, x.pos AS a_pos, y.id AS b_doc, y.pos AS b_pos
-        |  FROM ae x JOIN cap y USING (gram)
-        |), w AS (
-        |  SELECT cand.*, ta.ts AS a_ts, tb.ts AS b_ts
-        |  FROM cand JOIN pl ta ON cand.a_doc = ta.id
-        |            JOIN tt tb ON cand.b_doc = tb.id
-        |), e AS (
-        |  SELECT a_doc, b_doc, a_pos, b_pos, i,
-        |    coalesce(
-        |      (CASE WHEN a_pos + i BETWEEN 1 AND len(a_ts)
-        |            THEN a_ts[CAST(a_pos + i AS BIGINT)] END) =
-        |      (CASE WHEN b_pos + i BETWEEN 1 AND len(b_ts)
-        |            THEN b_ts[CAST(b_pos + i AS BIGINT)] END),
-        |      false) AS eq
-        |  FROM w, unnest(generate_series(-48, 8 + 48 - 1)) AS u(i)
-        |), x AS (
-        |  SELECT a_doc, b_doc, a_pos, b_pos,
-        |    coalesce(min(CASE WHEN i >= 8 AND NOT eq THEN i END), 8 + 48)
-        |      AS rmiss,
-        |    coalesce(max(CASE WHEN i < 0 AND NOT eq THEN i END), -48 - 1)
-        |      AS lmiss
-        |  FROM e GROUP BY 1, 2, 3, 4
-        |), marks AS (
-        |  SELECT a_doc, b_doc, max(rmiss - lmiss - 1) AS max_len
-        |  FROM x GROUP BY 1, 2 HAVING max(rmiss - lmiss - 1) >= 12
-        |), per AS (
-        |  SELECT pl.id - 1000000 AS orig_id,
-        |    CAST(len(pl.ts) AS BIGINT) AS n_tok,
-        |    CAST(coalesce(m.mx, 0) AS BIGINT) AS max_shared,
-        |    CAST(CASE WHEN coalesce(m.mx, 0) >= 16 THEN 1 ELSE 0 END
-        |      AS BIGINT) AS caught
-        |  FROM pl LEFT JOIN (
-        |    SELECT a_doc, CAST(max(max_len) AS BIGINT) AS mx
-        |    FROM marks GROUP BY 1) m ON pl.id = m.a_doc
-        |), tot AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_planted,
-        |    CAST(sum(caught) * 1000000 // count(*) AS BIGINT) AS catch_ppm
-        |  FROM per
-        |)
-        |SELECT per.orig_id, per.n_tok, per.max_shared, per.caught,
-        |  tot.n_planted, tot.catch_ppm
-        |FROM per CROSS JOIN tot""".stripMargin,
+      ("WITH " + Seq(windowDocsCte,
+        """pl AS (
+          |  SELECT id + 1000000 AS id, ts FROM tt
+          |  WHERE id % 50 = 0 AND len(ts) >= 24
+          |)""".stripMargin,
+        anchorGramsCte(), cappedAnchorsCte(), anchorGramsCte("pl", "ge", "ae"),
+        """cand AS (
+          |  SELECT x.id AS a_doc, x.pos AS a_pos, y.id AS b_doc, y.pos AS b_pos
+          |  FROM ae x JOIN cap y USING (gram)
+          |)""".stripMargin, anchorExtensionCte("pl")).mkString(", ") +
+        """, marks AS (
+          |  SELECT a_doc, b_doc, max(rmiss - lmiss - 1) AS max_len
+          |  FROM x GROUP BY 1, 2 HAVING max(rmiss - lmiss - 1) >= 12
+          |), per AS (
+          |  SELECT pl.id - 1000000 AS orig_id,
+          |    CAST(len(pl.ts) AS BIGINT) AS n_tok,
+          |    CAST(coalesce(m.mx, 0) AS BIGINT) AS max_shared,
+          |    CAST(CASE WHEN coalesce(m.mx, 0) >= 16 THEN 1 ELSE 0 END
+          |      AS BIGINT) AS caught
+          |  FROM pl LEFT JOIN (
+          |    SELECT a_doc, CAST(max(max_len) AS BIGINT) AS mx
+          |    FROM marks GROUP BY 1) m ON pl.id = m.a_doc
+          |), tot AS (
+          |  SELECT CAST(count(*) AS BIGINT) AS n_planted,
+          |    CAST(sum(caught) * 1000000 // count(*) AS BIGINT) AS catch_ppm
+          |  FROM per
+          |)
+          |SELECT per.orig_id, per.n_tok, per.max_shared, per.caught,
+          |  tot.n_planted, tot.catch_ppm
+          |FROM per CROSS JOIN tot""".stripMargin),
 
     // q16's pair CTE + the q403 split rule + the per-lang leak rollup
     "q453_leakage_probe" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, len(ts)-2),
-        |                        i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS shingles
-        |  FROM t WHERE len(ts) >= 3
-        |), sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, 6),
-        |                        j -> list_aggregate(list_transform(shingles,
-        |                               s -> CAST('0x' || substr(md5(CAST((j+1)//2 AS VARCHAR) || ':' || s),
-        |                                                 CASE WHEN j%2=1 THEN 1 ELSE 16 END, 15) AS BIGINT)),
-        |                             'min')) AS mh
-        |  FROM sh
-        |), bands AS (
-        |  SELECT doc_id, b AS band_id,
-        |         md5(CAST(mh[2*b-1] AS VARCHAR) || '|' || CAST(mh[2*b] AS VARCHAR)) AS bucket
-        |  FROM sig, unnest(generate_series(1, 3)) AS u(b)
-        |), pairs AS (
-        |  SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc
-        |  FROM bands a JOIN bands b
-        |    ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        |), spl AS (
-        |  SELECT doc_id, lang,
-        |    row_number() OVER (PARTITION BY lang
-        |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) <= 20
-        |      AS is_eval
-        |  FROM documents
-        |), sym AS (
-        |  SELECT a_doc AS e, b_doc AS o FROM pairs
-        |  UNION ALL SELECT b_doc, a_doc FROM pairs
-        |), ev AS (
-        |  SELECT doc_id AS e, lang FROM spl WHERE is_eval
-        |), tr AS (
-        |  SELECT doc_id AS o FROM spl WHERE NOT is_eval
-        |), leaky AS (
-        |  SELECT DISTINCT ev.e, ev.lang
-        |  FROM sym JOIN ev ON sym.e = ev.e
-        |  WHERE sym.o IN (SELECT o FROM tr)
-        |), ne AS (
-        |  SELECT lang, CAST(count(*) AS BIGINT) AS n_eval
-        |  FROM ev GROUP BY 1
-        |), nl AS (
-        |  SELECT lang, CAST(count(*) AS BIGINT) AS n_leaky
-        |  FROM leaky GROUP BY 1
-        |)
-        |SELECT ne.lang, ne.n_eval,
-        |  CAST(coalesce(nl.n_leaky, 0) AS BIGINT) AS n_leaky,
-        |  CAST(coalesce(nl.n_leaky, 0) * 1000000 // ne.n_eval AS BIGINT)
-        |    AS leak_ppm
-        |FROM ne LEFT JOIN nl ON ne.lang = nl.lang""".stripMargin,
+      s"""WITH $lshPairsChain, spl AS (
+         |  SELECT doc_id, lang,
+         |    row_number() OVER (PARTITION BY lang
+         |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) <= 20
+         |      AS is_eval
+         |  FROM documents
+         |), sym AS (
+         |  SELECT a_doc AS e, b_doc AS o FROM pairs
+         |  UNION ALL SELECT b_doc, a_doc FROM pairs
+         |), ev AS (
+         |  SELECT doc_id AS e, lang FROM spl WHERE is_eval
+         |), tr AS (
+         |  SELECT doc_id AS o FROM spl WHERE NOT is_eval
+         |), leaky AS (
+         |  SELECT DISTINCT ev.e, ev.lang
+         |  FROM sym JOIN ev ON sym.e = ev.e
+         |  WHERE sym.o IN (SELECT o FROM tr)
+         |), ne AS (
+         |  SELECT lang, CAST(count(*) AS BIGINT) AS n_eval
+         |  FROM ev GROUP BY 1
+         |), nl AS (
+         |  SELECT lang, CAST(count(*) AS BIGINT) AS n_leaky
+         |  FROM leaky GROUP BY 1
+         |)
+         |SELECT ne.lang, ne.n_eval,
+         |  CAST(coalesce(nl.n_leaky, 0) AS BIGINT) AS n_leaky,
+         |  CAST(coalesce(nl.n_leaky, 0) * 1000000 // ne.n_eval AS BIGINT)
+         |    AS leak_ppm
+         |FROM ne LEFT JOIN nl ON ne.lang = nl.lang""".stripMargin,
 
     // q16's signature CTE reused twice: component agreement vs the exact
     // candidate-pair Jaccard, binned at the matches grain
     "q451_minhash_calibration" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, len(ts)-2),
-        |                        i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS shingles
-        |  FROM t WHERE len(ts) >= 3
-        |), sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, 6),
-        |                        j -> list_aggregate(list_transform(shingles,
-        |                               s -> CAST('0x' || substr(md5(CAST((j+1)//2 AS VARCHAR) || ':' || s),
-        |                                                 CASE WHEN j%2=1 THEN 1 ELSE 16 END, 15) AS BIGINT)),
-        |                             'min')) AS mh
-        |  FROM sh
-        |), bands AS (
-        |  SELECT doc_id, b AS band_id,
-        |         md5(CAST(mh[2*b-1] AS VARCHAR) || '|' || CAST(mh[2*b] AS VARCHAR)) AS bucket
-        |  FROM sig, unnest(generate_series(1, 3)) AS u(b)
-        |), pairs AS (
-        |  SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc
-        |  FROM bands a JOIN bands b
-        |    ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        |), est AS (
-        |  SELECT p.a_doc, p.b_doc,
-        |    CAST(len(list_filter(generate_series(1, 6),
-        |      j -> sa.mh[j] = sb.mh[j])) AS BIGINT) AS matches
-        |  FROM pairs p
-        |  JOIN sig sa ON p.a_doc = sa.doc_id
-        |  JOIN sig sb ON p.b_doc = sb.doc_id
-        |), sets AS (
-        |  SELECT doc_id, list_distinct(shingles) AS sset FROM sh
-        |), ex AS (
-        |  SELECT p.a_doc, p.b_doc,
-        |    CAST(len(list_filter(sa.sset, x -> list_contains(sb.sset, x)))
-        |      * 1000000
-        |      // (len(sa.sset) + len(sb.sset)
-        |         - len(list_filter(sa.sset, x -> list_contains(sb.sset, x))))
-        |      AS BIGINT) AS exact_ppm
-        |  FROM pairs p
-        |  JOIN sets sa ON p.a_doc = sa.doc_id
-        |  JOIN sets sb ON p.b_doc = sb.doc_id
-        |), binned AS (
-        |  SELECT e.matches, CAST(count(*) AS BIGINT) AS n_pairs,
-        |    CAST(sum(x.exact_ppm) AS BIGINT) AS sum_exact
-        |  FROM est e JOIN ex x
-        |    ON e.a_doc = x.a_doc AND e.b_doc = x.b_doc
-        |  GROUP BY 1
-        |)
-        |SELECT matches, n_pairs,
-        |  CAST(matches * 1000000 // 6 AS BIGINT) AS est_ppm,
-        |  CAST(sum_exact // n_pairs AS BIGINT) AS mean_exact_ppm,
-        |  CAST(matches * 1000000 // 6 - sum_exact // n_pairs AS BIGINT)
-        |    AS bias_ppm
-        |FROM binned""".stripMargin,
+      s"""WITH $lshPairsChain, est AS (
+         |  SELECT p.a_doc, p.b_doc,
+         |    CAST(len(list_filter(generate_series(1, 6),
+         |      j -> sa.mh[j] = sb.mh[j])) AS BIGINT) AS matches
+         |  FROM pairs p
+         |  JOIN sig sa ON p.a_doc = sa.doc_id
+         |  JOIN sig sb ON p.b_doc = sb.doc_id
+         |), sets AS (
+         |  SELECT doc_id, list_distinct(shingles) AS sset FROM sh
+         |), ex AS (
+         |  SELECT p.a_doc, p.b_doc,
+         |    CAST(len(list_filter(sa.sset, x -> list_contains(sb.sset, x)))
+         |      * 1000000
+         |      // (len(sa.sset) + len(sb.sset)
+         |         - len(list_filter(sa.sset, x -> list_contains(sb.sset, x))))
+         |      AS BIGINT) AS exact_ppm
+         |  FROM pairs p
+         |  JOIN sets sa ON p.a_doc = sa.doc_id
+         |  JOIN sets sb ON p.b_doc = sb.doc_id
+         |), binned AS (
+         |  SELECT e.matches, CAST(count(*) AS BIGINT) AS n_pairs,
+         |    CAST(sum(x.exact_ppm) AS BIGINT) AS sum_exact
+         |  FROM est e JOIN ex x
+         |    ON e.a_doc = x.a_doc AND e.b_doc = x.b_doc
+         |  GROUP BY 1
+         |)
+         |SELECT matches, n_pairs,
+         |  CAST(matches * 1000000 // 6 AS BIGINT) AS est_ppm,
+         |  CAST(sum_exact // n_pairs AS BIGINT) AS mean_exact_ppm,
+         |  CAST(matches * 1000000 // 6 - sum_exact // n_pairs AS BIGINT)
+         |    AS bias_ppm
+         |FROM binned""".stripMargin,
 
     // q404's recursive closure + the two inverted policy chains; the
     // HAVING mirrors the engine's chosen<>rejected singleton guard
     "q435_preference_pairs" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, len(ts)-2),
-        |                        i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS shingles
-        |  FROM t WHERE len(ts) >= 3
-        |), sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, 6),
-        |                        j -> list_aggregate(list_transform(shingles,
-        |                               s -> CAST('0x' || substr(md5(CAST((j+1)//2 AS VARCHAR) || ':' || s),
-        |                                                 CASE WHEN j%2=1 THEN 1 ELSE 16 END, 15) AS BIGINT)),
-        |                             'min')) AS mh
-        |  FROM sh
-        |), bands AS (
-        |  SELECT doc_id, b AS band_id,
-        |         md5(CAST(mh[2*b-1] AS VARCHAR) || '|' || CAST(mh[2*b] AS VARCHAR)) AS bucket
-        |  FROM sig, unnest(generate_series(1, 3)) AS u(b)
-        |), pairs AS (
-        |  SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc
-        |  FROM bands a JOIN bands b
-        |    ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        |), edges AS (
-        |  SELECT a_doc AS src, b_doc AS dst FROM pairs
-        |  UNION ALL SELECT b_doc, a_doc FROM pairs
-        |), reach(id, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-        |), cl AS (
-        |  SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-        |  FROM reach GROUP BY id
-        |), m AS (
-        |  SELECT cl.cluster_id, cl.doc_id,
-        |         CAST(len(t.ts) AS BIGINT) AS n_tok,
-        |         CAST(len(list_distinct(t.ts)) * 1000000
-        |           // greatest(len(t.ts), 1) AS BIGINT) AS quality_ppm
-        |  FROM cl JOIN t ON cl.doc_id = t.doc_id
-        |), r AS (
-        |  SELECT *,
-        |    row_number() OVER (PARTITION BY cluster_id
-        |      ORDER BY quality_ppm DESC, n_tok DESC, doc_id ASC) AS rc,
-        |    row_number() OVER (PARTITION BY cluster_id
-        |      ORDER BY quality_ppm ASC, n_tok ASC, doc_id DESC) AS rr
-        |  FROM m
-        |)
-        |SELECT cluster_id,
-        |  CAST(max(CASE WHEN rc = 1 THEN doc_id END) AS BIGINT) AS chosen,
-        |  CAST(max(CASE WHEN rc = 1 THEN quality_ppm END) AS BIGINT)
-        |    AS chosen_q,
-        |  CAST(max(CASE WHEN rr = 1 THEN doc_id END) AS BIGINT) AS rejected,
-        |  CAST(max(CASE WHEN rr = 1 THEN quality_ppm END) AS BIGINT)
-        |    AS rejected_q,
-        |  CAST(max(CASE WHEN rc = 1 THEN quality_ppm END)
-        |    - max(CASE WHEN rr = 1 THEN quality_ppm END) AS BIGINT)
-        |    AS gap_ppm
-        |FROM r GROUP BY 1
-        |HAVING max(CASE WHEN rc = 1 THEN doc_id END)
-        |    <> max(CASE WHEN rr = 1 THEN doc_id END)""".stripMargin,
+      s"""WITH RECURSIVE ${lshClusterChain("cl")}, m AS (
+         |  SELECT cl.cluster_id, cl.doc_id,
+         |         CAST(len(t.ts) AS BIGINT) AS n_tok,
+         |         CAST(len(list_distinct(t.ts)) * 1000000
+         |           // greatest(len(t.ts), 1) AS BIGINT) AS quality_ppm
+         |  FROM cl JOIN t ON cl.doc_id = t.doc_id
+         |), r AS (
+         |  SELECT *,
+         |    row_number() OVER (PARTITION BY cluster_id
+         |      ORDER BY quality_ppm DESC, n_tok DESC, doc_id ASC) AS rc,
+         |    row_number() OVER (PARTITION BY cluster_id
+         |      ORDER BY quality_ppm ASC, n_tok ASC, doc_id DESC) AS rr
+         |  FROM m
+         |)
+         |SELECT cluster_id,
+         |  CAST(max(CASE WHEN rc = 1 THEN doc_id END) AS BIGINT) AS chosen,
+         |  CAST(max(CASE WHEN rc = 1 THEN quality_ppm END) AS BIGINT)
+         |    AS chosen_q,
+         |  CAST(max(CASE WHEN rr = 1 THEN doc_id END) AS BIGINT) AS rejected,
+         |  CAST(max(CASE WHEN rr = 1 THEN quality_ppm END) AS BIGINT)
+         |    AS rejected_q,
+         |  CAST(max(CASE WHEN rc = 1 THEN quality_ppm END)
+         |    - max(CASE WHEN rr = 1 THEN quality_ppm END) AS BIGINT)
+         |    AS gap_ppm
+         |FROM r GROUP BY 1
+         |HAVING max(CASE WHEN rc = 1 THEN doc_id END)
+         |    <> max(CASE WHEN rr = 1 THEN doc_id END)""".stripMargin,
 
     "q404_quality_survivor" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, len(ts)-2),
-        |                        i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS shingles
-        |  FROM t WHERE len(ts) >= 3
-        |), sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, 6),
-        |                        j -> list_aggregate(list_transform(shingles,
-        |                               s -> CAST('0x' || substr(md5(CAST((j+1)//2 AS VARCHAR) || ':' || s),
-        |                                                 CASE WHEN j%2=1 THEN 1 ELSE 16 END, 15) AS BIGINT)),
-        |                             'min')) AS mh
-        |  FROM sh
-        |), bands AS (
-        |  SELECT doc_id, b AS band_id,
-        |         md5(CAST(mh[2*b-1] AS VARCHAR) || '|' || CAST(mh[2*b] AS VARCHAR)) AS bucket
-        |  FROM sig, unnest(generate_series(1, 3)) AS u(b)
-        |), pairs AS (
-        |  SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc
-        |  FROM bands a JOIN bands b
-        |    ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        |), edges AS (
-        |  SELECT a_doc AS src, b_doc AS dst FROM pairs
-        |  UNION ALL SELECT b_doc, a_doc FROM pairs
-        |), reach(id, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-        |), cl AS (
-        |  SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-        |  FROM reach GROUP BY id
-        |), q AS (
-        |  SELECT cl.cluster_id, cl.doc_id,
-        |         CAST(len(t.ts) AS BIGINT) AS n_tok,
-        |         row_number() OVER (PARTITION BY cl.cluster_id
-        |                            ORDER BY len(t.ts) DESC, cl.doc_id ASC)
-        |           AS rk
-        |  FROM cl JOIN t ON cl.doc_id = t.doc_id
-        |)
-        |SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_members,
-        |  CAST(max(CASE WHEN rk = 1 THEN doc_id END) AS BIGINT) AS survivor,
-        |  CAST(max(CASE WHEN rk = 1 THEN n_tok END) AS BIGINT)
-        |    AS survivor_n_tok,
-        |  CAST(sum(n_tok) AS BIGINT) AS cluster_n_tok
-        |FROM q GROUP BY 1""".stripMargin,
+      s"""WITH RECURSIVE ${lshClusterChain("cl")}, q AS (
+         |  SELECT cl.cluster_id, cl.doc_id,
+         |         CAST(len(t.ts) AS BIGINT) AS n_tok,
+         |         row_number() OVER (PARTITION BY cl.cluster_id
+         |                            ORDER BY len(t.ts) DESC, cl.doc_id ASC)
+         |           AS rk
+         |  FROM cl JOIN t ON cl.doc_id = t.doc_id
+         |)
+         |SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_members,
+         |  CAST(max(CASE WHEN rk = 1 THEN doc_id END) AS BIGINT) AS survivor,
+         |  CAST(max(CASE WHEN rk = 1 THEN n_tok END) AS BIGINT)
+         |    AS survivor_n_tok,
+         |  CAST(sum(n_tok) AS BIGINT) AS cluster_n_tok
+         |FROM q GROUP BY 1""".stripMargin,
 
     // the identical cross-corpus computation (train-side-only cap, eval
     // anchors uncapped, guarded indexing) + the per-eval verdict rollup
     // with the explicit clean-eval left join
     "q420_eval_decontamination" ->
-      """WITH t AS (
-        |  SELECT doc_id AS id,
-        |         regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
-        |  FROM documents
-        |), tt AS (
-        |  SELECT id, ts FROM t WHERE len(ts) >= 8
-        |), g AS (
-        |  SELECT id, i AS pos, array_to_string(ts[i:i+7], ' ') AS gram
-        |  FROM tt, unnest(generate_series(1, len(ts) - 7)) AS u(i)
-        |), a AS (
-        |  SELECT id, pos, gram FROM g
-        |  WHERE CAST('0x' || substr(md5(gram), 1, 15) AS BIGINT) % 8 = 0
-        |), c AS (
-        |  SELECT id, pos, gram,
-        |         row_number() OVER (PARTITION BY gram
-        |           ORDER BY md5(CAST(id AS VARCHAR) || '#'
-        |                        || CAST(pos AS VARCHAR))) AS rk
-        |  FROM a WHERE id % 10 <> 0
-        |), cap AS (
-        |  SELECT id, pos, gram FROM c WHERE rk <= 64
-        |), cand AS (
-        |  SELECT x.id AS a_doc, x.pos AS a_pos, y.id AS b_doc, y.pos AS b_pos
-        |  FROM (SELECT id, pos, gram FROM a WHERE id % 10 = 0) x
-        |  JOIN cap y USING (gram)
-        |), w AS (
-        |  SELECT cand.*, ta.ts AS a_ts, tb.ts AS b_ts
-        |  FROM cand JOIN tt ta ON cand.a_doc = ta.id
-        |            JOIN tt tb ON cand.b_doc = tb.id
-        |), e AS (
-        |  SELECT a_doc, b_doc, a_pos, b_pos, i,
-        |    coalesce(
-        |      (CASE WHEN a_pos + i BETWEEN 1 AND len(a_ts)
-        |            THEN a_ts[CAST(a_pos + i AS BIGINT)] END) =
-        |      (CASE WHEN b_pos + i BETWEEN 1 AND len(b_ts)
-        |            THEN b_ts[CAST(b_pos + i AS BIGINT)] END),
-        |      false) AS eq
-        |  FROM w, unnest(generate_series(-48, 8 + 48 - 1)) AS u(i)
-        |), x AS (
-        |  SELECT a_doc, b_doc, a_pos, b_pos,
-        |    coalesce(min(CASE WHEN i >= 8 AND NOT eq THEN i END), 8 + 48)
-        |      AS rmiss,
-        |    coalesce(max(CASE WHEN i < 0 AND NOT eq THEN i END), -48 - 1)
-        |      AS lmiss
-        |  FROM e GROUP BY 1, 2, 3, 4
-        |), marks AS (
-        |  SELECT a_doc, b_doc, max(rmiss - lmiss - 1) AS max_len
-        |  FROM x GROUP BY 1, 2 HAVING max(rmiss - lmiss - 1) >= 12
-        |), per_eval AS (
-        |  SELECT a_doc AS doc_id, CAST(max(max_len) AS BIGINT) AS mx,
-        |         CAST(count(DISTINCT b_doc) AS BIGINT) AS nt
-        |  FROM marks GROUP BY 1
-        |)
-        |SELECT d.doc_id,
-        |       CAST(coalesce(p.mx, 0) AS BIGINT) AS max_shared,
-        |       CAST(coalesce(p.nt, 0) AS BIGINT) AS n_train_docs,
-        |       coalesce(p.mx, 0) >= 16 AS contaminated
-        |FROM (SELECT doc_id FROM documents WHERE doc_id % 10 = 0) d
-        |LEFT JOIN per_eval p ON d.doc_id = p.doc_id""".stripMargin,
+      ("WITH " + Seq(windowDocsCte, anchorGramsCte(),
+        cappedAnchorsCte(" WHERE id % 10 <> 0"),
+        """cand AS (
+          |  SELECT x.id AS a_doc, x.pos AS a_pos, y.id AS b_doc, y.pos AS b_pos
+          |  FROM (SELECT id, pos, gram FROM a WHERE id % 10 = 0) x
+          |  JOIN cap y USING (gram)
+          |)""".stripMargin, anchorExtensionCte()).mkString(", ") +
+        """, marks AS (
+          |  SELECT a_doc, b_doc, max(rmiss - lmiss - 1) AS max_len
+          |  FROM x GROUP BY 1, 2 HAVING max(rmiss - lmiss - 1) >= 12
+          |), per_eval AS (
+          |  SELECT a_doc AS doc_id, CAST(max(max_len) AS BIGINT) AS mx,
+          |         CAST(count(DISTINCT b_doc) AS BIGINT) AS nt
+          |  FROM marks GROUP BY 1
+          |)
+          |SELECT d.doc_id,
+          |       CAST(coalesce(p.mx, 0) AS BIGINT) AS max_shared,
+          |       CAST(coalesce(p.nt, 0) AS BIGINT) AS n_train_docs,
+          |       coalesce(p.mx, 0) >= 16 AS contaminated
+          |FROM (SELECT doc_id FROM documents WHERE doc_id % 10 = 0) d
+          |LEFT JOIN per_eval p ON d.doc_id = p.doc_id""".stripMargin),
 
     // both sides of the saturation consistency check stated
     // independently from the same anchor derivation
     "q418_anchor_saturation" ->
-      """WITH t AS (
-        |  SELECT doc_id AS id,
-        |         regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
-        |  FROM documents
-        |), tt AS (
-        |  SELECT id, ts FROM t WHERE len(ts) >= 8
-        |), g AS (
-        |  SELECT id, i AS pos, array_to_string(ts[i:i+7], ' ') AS gram
-        |  FROM tt, unnest(generate_series(1, len(ts) - 7)) AS u(i)
-        |), a AS (
-        |  SELECT id, pos, gram FROM g
-        |  WHERE CAST('0x' || substr(md5(gram), 1, 15) AS BIGINT) % 8 = 0
-        |), p AS (
-        |  SELECT gram, CAST(count(*) AS BIGINT) AS postings FROM a GROUP BY 1
-        |), h AS (
-        |  SELECT postings, CAST(count(*) AS BIGINT) AS n_grams
-        |  FROM p GROUP BY 1
-        |), d AS (
-        |  SELECT postings, CAST(count(*) AS BIGINT) AS n_saturated,
-        |         CAST(sum(postings - 2) AS BIGINT) AS dropped
-        |  FROM p WHERE postings > 2 GROUP BY 1
-        |)
-        |SELECT h.postings, h.n_grams,
-        |       CAST(coalesce(d.n_saturated, 0) AS BIGINT) AS n_saturated,
-        |       CAST(coalesce(d.dropped, 0) AS BIGINT) AS dropped
-        |FROM h LEFT JOIN d ON h.postings = d.postings""".stripMargin,
+      s"""WITH ${windowDocsCte}, ${anchorGramsCte()}, p AS (
+         |  SELECT gram, CAST(count(*) AS BIGINT) AS postings FROM a GROUP BY 1
+         |), h AS (
+         |  SELECT postings, CAST(count(*) AS BIGINT) AS n_grams
+         |  FROM p GROUP BY 1
+         |), d AS (
+         |  SELECT postings, CAST(count(*) AS BIGINT) AS n_saturated,
+         |         CAST(sum(postings - 2) AS BIGINT) AS dropped
+         |  FROM p WHERE postings > 2 GROUP BY 1
+         |)
+         |SELECT h.postings, h.n_grams,
+         |       CAST(coalesce(d.n_saturated, 0) AS BIGINT) AS n_saturated,
+         |       CAST(coalesce(d.dropped, 0) AS BIGINT) AS dropped
+         |FROM h LEFT JOIN d ON h.postings = d.postings""".stripMargin,
 
     // q43's recursive closure + the identical lexicographic policy chain
     // (src_tier asc, quality_ppm desc, n_tok desc, doc_id asc)
     "q416_survivor_policy" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id, source,
-        |         regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, len(ts)-2),
-        |                        i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS shingles
-        |  FROM t WHERE len(ts) >= 3
-        |), sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, 6),
-        |                        j -> list_aggregate(list_transform(shingles,
-        |                               s -> CAST('0x' || substr(md5(CAST((j+1)//2 AS VARCHAR) || ':' || s),
-        |                                                 CASE WHEN j%2=1 THEN 1 ELSE 16 END, 15) AS BIGINT)),
-        |                             'min')) AS mh
-        |  FROM sh
-        |), bands AS (
-        |  SELECT doc_id, b AS band_id,
-        |         md5(CAST(mh[2*b-1] AS VARCHAR) || '|' || CAST(mh[2*b] AS VARCHAR)) AS bucket
-        |  FROM sig, unnest(generate_series(1, 3)) AS u(b)
-        |), pairs AS (
-        |  SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc
-        |  FROM bands a JOIN bands b
-        |    ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        |), edges AS (
-        |  SELECT a_doc AS src, b_doc AS dst FROM pairs
-        |  UNION ALL SELECT b_doc, a_doc FROM pairs
-        |), reach(id, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-        |), cl AS (
-        |  SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-        |  FROM reach GROUP BY id
-        |), m AS (
-        |  SELECT cl.cluster_id, cl.doc_id,
-        |         CAST(CAST(regexp_extract(t.source, '([0-9]+)', 1) AS INT) % 4
-        |           AS BIGINT) AS src_tier,
-        |         CAST(len(list_distinct(t.ts)) * 1000000
-        |           // greatest(len(t.ts), 1) AS BIGINT) AS quality_ppm,
-        |         CAST(len(t.ts) AS BIGINT) AS n_tok,
-        |         CAST(count(*) OVER (PARTITION BY cl.cluster_id) AS BIGINT)
-        |           AS n_members
-        |  FROM cl JOIN t ON cl.doc_id = t.doc_id
-        |), r AS (
-        |  SELECT *, row_number() OVER (PARTITION BY cluster_id
-        |    ORDER BY src_tier ASC, quality_ppm DESC, n_tok DESC, doc_id ASC)
-        |    AS rk
-        |  FROM m
-        |)
-        |SELECT cluster_id, doc_id AS survivor, src_tier, quality_ppm,
-        |       n_tok, n_members
-        |FROM r WHERE rk = 1""".stripMargin,
+      s"""WITH RECURSIVE t AS (
+         |  SELECT doc_id, source,
+         |         regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
+         |  FROM documents
+         |), $shinglesCte, $minhashBandsCte, $lshPairsCte, ${minLabelClosure("cl")}, m AS (
+         |  SELECT cl.cluster_id, cl.doc_id,
+         |         CAST(CAST(regexp_extract(t.source, '([0-9]+)', 1) AS INT) % 4
+         |           AS BIGINT) AS src_tier,
+         |         CAST(len(list_distinct(t.ts)) * 1000000
+         |           // greatest(len(t.ts), 1) AS BIGINT) AS quality_ppm,
+         |         CAST(len(t.ts) AS BIGINT) AS n_tok,
+         |         CAST(count(*) OVER (PARTITION BY cl.cluster_id) AS BIGINT)
+         |           AS n_members
+         |  FROM cl JOIN t ON cl.doc_id = t.doc_id
+         |), r AS (
+         |  SELECT *, row_number() OVER (PARTITION BY cluster_id
+         |    ORDER BY src_tier ASC, quality_ppm DESC, n_tok DESC, doc_id ASC)
+         |    AS rk
+         |  FROM m
+         |)
+         |SELECT cluster_id, doc_id AS survivor, src_tier, quality_ppm,
+         |       n_tok, n_members
+         |FROM r WHERE rk = 1""".stripMargin,
 
     // the identical anchor-cap-extend computation, stated relationally:
     // 60-bit md5 anchor mod, md5-order both-side caps, guarded 1-based
@@ -1965,82 +1611,14 @@ object DedupQueries {
     // from their plain file, then the standard cross banding replay —
     // the kb pruning is a read optimization with identical results
     "q476_hamming_index_serve" ->
-      s"""WITH o AS (
-         |  SELECT DISTINCT id, sig FROM
-         |    read_parquet('${predsPath("q476_index")}/*/*/*.parquet')
-         |), ob AS (
-         |  SELECT id, sig,
-         |    CAST(sig AS HUGEINT)
-         |      + CASE WHEN sig < 0 THEN CAST('18446744073709551616' AS HUGEINT)
-         |             ELSE CAST(0 AS HUGEINT) END AS usig
-         |  FROM o
-         |), q AS (
-         |  SELECT q_id, sig,
-         |    CAST(sig AS HUGEINT)
-         |      + CASE WHEN sig < 0 THEN CAST('18446744073709551616' AS HUGEINT)
-         |             ELSE CAST(0 AS HUGEINT) END AS usig
-         |  FROM read_parquet('${predsPath("q476_probe_sigs")}/*.parquet')
-         |), bands(band, d) AS (VALUES
-         |    (0, CAST('1' AS HUGEINT)),
-         |    (1, CAST('256' AS HUGEINT)),
-         |    (2, CAST('65536' AS HUGEINT)),
-         |    (3, CAST('16777216' AS HUGEINT)),
-         |    (4, CAST('4294967296' AS HUGEINT)),
-         |    (5, CAST('1099511627776' AS HUGEINT)),
-         |    (6, CAST('281474976710656' AS HUGEINT)),
-         |    (7, CAST('72057594037927936' AS HUGEINT))
-         |), bo AS (
-         |  SELECT id, sig, b.band, (usig // b.d) % 256 AS key
-         |  FROM ob CROSS JOIN bands b
-         |), bq AS (
-         |  SELECT q_id, sig, b.band, (usig // b.d) % 256 AS key
-         |  FROM q CROSS JOIN bands b
-         |)
-         |SELECT DISTINCT bq.q_id, bo.id,
-         |  CAST(bit_count(xor(bq.sig, bo.sig)) AS INT) AS hamming
-         |FROM bq JOIN bo ON bq.band = bo.band AND bq.key = bo.key
-         |WHERE bit_count(xor(bq.sig, bo.sig)) <= 7""".stripMargin,
+      indexProbeSql(predsPath("q476_index"), predsPath("q476_probe_sigs")),
 
 
     // the q476 banding replay over the POST-ERASURE layout's stored
     // bits (the erasure laws themselves live in DedupSpec — the oracle
     // certifies probe == layout replay on what remains)
     "q505_index_erasure" ->
-      s"""WITH o AS (
-         |  SELECT DISTINCT id, sig FROM
-         |    read_parquet('${predsPath("q505_index")}/*/*/*.parquet')
-         |), ob AS (
-         |  SELECT id, sig,
-         |    CAST(sig AS HUGEINT)
-         |      + CASE WHEN sig < 0 THEN CAST('18446744073709551616' AS HUGEINT)
-         |             ELSE CAST(0 AS HUGEINT) END AS usig
-         |  FROM o
-         |), q AS (
-         |  SELECT q_id, sig,
-         |    CAST(sig AS HUGEINT)
-         |      + CASE WHEN sig < 0 THEN CAST('18446744073709551616' AS HUGEINT)
-         |             ELSE CAST(0 AS HUGEINT) END AS usig
-         |  FROM read_parquet('${predsPath("q505_probe_sigs")}/*.parquet')
-         |), bands(band, d) AS (VALUES
-         |    (0, CAST('1' AS HUGEINT)),
-         |    (1, CAST('256' AS HUGEINT)),
-         |    (2, CAST('65536' AS HUGEINT)),
-         |    (3, CAST('16777216' AS HUGEINT)),
-         |    (4, CAST('4294967296' AS HUGEINT)),
-         |    (5, CAST('1099511627776' AS HUGEINT)),
-         |    (6, CAST('281474976710656' AS HUGEINT)),
-         |    (7, CAST('72057594037927936' AS HUGEINT))
-         |), bo AS (
-         |  SELECT id, sig, b.band, (usig // b.d) % 256 AS key
-         |  FROM ob CROSS JOIN bands b
-         |), bq AS (
-         |  SELECT q_id, sig, b.band, (usig // b.d) % 256 AS key
-         |  FROM q CROSS JOIN bands b
-         |)
-         |SELECT DISTINCT bq.q_id, bo.id,
-         |  CAST(bit_count(xor(bq.sig, bo.sig)) AS INT) AS hamming
-         |FROM bq JOIN bo ON bq.band = bo.band AND bq.key = bo.key
-         |WHERE bit_count(xor(bq.sig, bo.sig)) <= 7""".stripMargin,
+      indexProbeSql(predsPath("q505_index"), predsPath("q505_probe_sigs")),
 
 
     // verbatim leg restated from `documents` (the q485 gram grain over
@@ -2064,16 +1642,12 @@ object DedupQueries {
          |  WHERE g.doc_id % 50 <> 0
          |), sl AS (
          |  SELECT q_id, n_id FROM read_parquet('${predsPath("q503_cands")}/*.parquet')
-         |), u AS (
-         |  SELECT vec_id, unit FROM read_parquet('${predsPath("q503_units")}/*.parquet')
-         |), sem AS (
+         |), ${unitsCte(predsPath("q503_units"))}, sem AS (
          |  SELECT DISTINCT s.n_id AS doc_id
          |  FROM sl s
          |  JOIN u a ON s.q_id = a.vec_id
          |  JOIN u b ON s.n_id = b.vec_id
-         |  WHERE CAST(list_sum(list_transform(generate_series(1, len(a.unit)), i ->
-         |      CAST(floor(CAST(a.unit[i] AS DOUBLE) * CAST(b.unit[i] AS DOUBLE) * 1000000000000) AS BIGINT)))
-         |      AS BIGINT) >= 950000000000
+         |  WHERE ${unitDotSql()} >= 950000000000
          |)
          |SELECT d.source, CAST(count(*) AS BIGINT) AS n_train,
          |  CAST(sum(CASE WHEN v.doc_id IS NOT NULL THEN 1 ELSE 0 END)
@@ -2095,41 +1669,7 @@ object DedupQueries {
 
     // the q476 banding replay, read from the MERGED layout's stored bits
     "q502_index_merge" ->
-      s"""WITH o AS (
-         |  SELECT DISTINCT id, sig FROM
-         |    read_parquet('${predsPath("q502_index")}/*/*/*.parquet')
-         |), ob AS (
-         |  SELECT id, sig,
-         |    CAST(sig AS HUGEINT)
-         |      + CASE WHEN sig < 0 THEN CAST('18446744073709551616' AS HUGEINT)
-         |             ELSE CAST(0 AS HUGEINT) END AS usig
-         |  FROM o
-         |), q AS (
-         |  SELECT q_id, sig,
-         |    CAST(sig AS HUGEINT)
-         |      + CASE WHEN sig < 0 THEN CAST('18446744073709551616' AS HUGEINT)
-         |             ELSE CAST(0 AS HUGEINT) END AS usig
-         |  FROM read_parquet('${predsPath("q502_probe_sigs")}/*.parquet')
-         |), bands(band, d) AS (VALUES
-         |    (0, CAST('1' AS HUGEINT)),
-         |    (1, CAST('256' AS HUGEINT)),
-         |    (2, CAST('65536' AS HUGEINT)),
-         |    (3, CAST('16777216' AS HUGEINT)),
-         |    (4, CAST('4294967296' AS HUGEINT)),
-         |    (5, CAST('1099511627776' AS HUGEINT)),
-         |    (6, CAST('281474976710656' AS HUGEINT)),
-         |    (7, CAST('72057594037927936' AS HUGEINT))
-         |), bo AS (
-         |  SELECT id, sig, b.band, (usig // b.d) % 256 AS key
-         |  FROM ob CROSS JOIN bands b
-         |), bq AS (
-         |  SELECT q_id, sig, b.band, (usig // b.d) % 256 AS key
-         |  FROM q CROSS JOIN bands b
-         |)
-         |SELECT DISTINCT bq.q_id, bo.id,
-         |  CAST(bit_count(xor(bq.sig, bo.sig)) AS INT) AS hamming
-         |FROM bq JOIN bo ON bq.band = bo.band AND bq.key = bo.key
-         |WHERE bit_count(xor(bq.sig, bo.sig)) <= 7""".stripMargin,
+      indexProbeSql(predsPath("q502_index"), predsPath("q502_probe_sigs")),
 
 
     // cross-set banding replay over the two persisted signature files:
@@ -2138,54 +1678,23 @@ object DedupQueries {
     // the key equi-join, exact hamming ≤7 verify, then the per-train
     // decision join
     "q472_perceptual_decontamination" ->
-      s"""WITH t AS (
-         |  SELECT asset_id AS train_id, sig,
-         |    CAST(sig AS HUGEINT)
-         |      + CASE WHEN sig < 0 THEN CAST('18446744073709551616' AS HUGEINT)
-         |             ELSE CAST(0 AS HUGEINT) END AS usig
-         |  FROM read_parquet('${predsPath("q472_train_sigs")}/*.parquet')
-         |), e AS (
-         |  SELECT asset_id AS eval_id, sig,
-         |    CAST(sig AS HUGEINT)
-         |      + CASE WHEN sig < 0 THEN CAST('18446744073709551616' AS HUGEINT)
-         |             ELSE CAST(0 AS HUGEINT) END AS usig
-         |  FROM read_parquet('${predsPath("q472_eval_sigs")}/*.parquet')
-         |), bands(band, d) AS (VALUES
-         |    (0, CAST('1' AS HUGEINT)),
-         |    (1, CAST('256' AS HUGEINT)),
-         |    (2, CAST('65536' AS HUGEINT)),
-         |    (3, CAST('16777216' AS HUGEINT)),
-         |    (4, CAST('4294967296' AS HUGEINT)),
-         |    (5, CAST('1099511627776' AS HUGEINT)),
-         |    (6, CAST('281474976710656' AS HUGEINT)),
-         |    (7, CAST('72057594037927936' AS HUGEINT))
-         |), bt AS (
-         |  SELECT train_id, sig, b.band, (usig // b.d) % 256 AS key
-         |  FROM t CROSS JOIN bands b
-         |), be AS (
-         |  SELECT eval_id, sig, band, key FROM (
-         |    SELECT eval_id, sig, b.band, (usig // b.d) % 256 AS key,
-         |      row_number() OVER (PARTITION BY b.band, (usig // b.d) % 256
-         |        ORDER BY md5(CAST(eval_id AS VARCHAR) || '|'
-         |                     || CAST(sig AS VARCHAR))) AS rk
-         |    FROM e CROSS JOIN bands b)
-         |  WHERE rk <= 10000
-         |), p AS (
-         |  SELECT DISTINCT bt.train_id, be.eval_id,
-         |    CAST(bit_count(xor(bt.sig, be.sig)) AS INT) AS hamming
-         |  FROM bt JOIN be ON bt.band = be.band AND bt.key = be.key
-         |  WHERE bit_count(xor(bt.sig, be.sig)) <= 7
-         |), h AS (
-         |  SELECT train_id, CAST(count(*) AS BIGINT) AS nm,
-         |    min(hamming) AS mh
-         |  FROM p GROUP BY 1
-         |)
-         |SELECT ti.train_id,
-         |  coalesce(h.nm, 0) AS n_eval_matches,
-         |  CAST(coalesce(h.mh, -1) AS INT) AS min_hamming,
-         |  (coalesce(h.nm, 0) > 0) AS contaminated
-         |FROM (SELECT DISTINCT train_id FROM t) ti
-         |LEFT JOIN h USING (train_id)""".stripMargin,
+      ("WITH " + crossProbeCtes(
+          ("t", "bt", "train_id", predsPath("q472_train_sigs")),
+          ("e", "be", "eval_id", predsPath("q472_eval_sigs"))) +
+        ", p AS (\n  " +
+        bandedProbeSelect("bt", "train_id", "be", "eval_id").replace("\n", "\n  ") +
+        """
+        |), h AS (
+        |  SELECT train_id, CAST(count(*) AS BIGINT) AS nm,
+        |    min(hamming) AS mh
+        |  FROM p GROUP BY 1
+        |)
+        |SELECT ti.train_id,
+        |  coalesce(h.nm, 0) AS n_eval_matches,
+        |  CAST(coalesce(h.mh, -1) AS INT) AS min_hamming,
+        |  (coalesce(h.nm, 0) > 0) AS contaminated
+        |FROM (SELECT DISTINCT train_id FROM t) ti
+        |LEFT JOIN h USING (train_id)""".stripMargin),
 
 
     // the q43 closure + q225 hamming-replay recipes COMPOSED: text
@@ -2202,19 +1711,10 @@ object DedupQueries {
          |  SELECT x.id AS a_doc, y.id AS b_doc
          |  FROM corpus x JOIN corpus y
          |    ON md5(x.text) = md5(y.text) AND x.id < y.id
-         |), sigs AS (
-         |  SELECT asset_id AS id, sig,
-         |    CAST(sig AS HUGEINT)
-         |      + CASE WHEN sig < 0 THEN CAST('18446744073709551616' AS HUGEINT)
-         |             ELSE CAST(0 AS HUGEINT) END AS usig
-         |  FROM read_parquet('${predsPath("q468_sigs")}/*.parquet')
-         |), banded AS (
-         |  SELECT s.id, s.sig, b.band, (s.usig // b.d) % 65536 AS key
+         |), ${sigFileCte("sigs", "asset_id AS id", predsPath("q468_sigs"))}, banded AS (
+         |  SELECT s.id, s.sig, b.band, (s.usig // b.d) % ${bandModulus(textHamming._2)} AS key
          |  FROM sigs s CROSS JOIN (VALUES
-         |    (0, CAST('1' AS HUGEINT)),
-         |    (1, CAST('65536' AS HUGEINT)),
-         |    (2, CAST('4294967296' AS HUGEINT)),
-         |    (3, CAST('281474976710656' AS HUGEINT))) b(band, d)
+         |    ${bandDivisorRows(textHamming._2).mkString(",\n    ")}) b(band, d)
          |), ok AS (
          |  SELECT band, key FROM banded GROUP BY band, key
          |  HAVING COUNT(*) >= 2 AND COUNT(*) <= 10000
@@ -2223,20 +1723,13 @@ object DedupQueries {
          |  FROM banded a
          |  JOIN ok o ON o.band = a.band AND o.key = a.key
          |  JOIN banded b ON b.band = a.band AND b.key = a.key AND a.id < b.id
-         |  WHERE bit_count(xor(a.sig, b.sig)) <= 3
+         |  WHERE bit_count(xor(a.sig, b.sig)) <= ${textHamming._1}
          |), edges AS (
          |  SELECT a_doc AS src, b_doc AS dst FROM tp
          |  UNION SELECT b_doc, a_doc FROM tp
          |  UNION SELECT a_doc, b_doc FROM ip
          |  UNION SELECT b_doc, a_doc FROM ip
-         |), reach(id, r) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-         |), clusters AS (
-         |  SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-         |  FROM reach GROUP BY id
-         |), members AS (
+         |), $reachCte, ${minLabelCte("clusters")}, members AS (
          |  SELECT c.cluster_id, c.doc_id, co.text
          |  FROM clusters c JOIN corpus co ON co.id = c.doc_id
          |), surv AS (
@@ -2258,210 +1751,75 @@ object DedupQueries {
     // min-label fixpoint (components are small, so closure is cheap here;
     // the Spark side converges by iteration, not enumeration)
     "q43_dup_clusters" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, len(ts)-2),
-        |                        i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS shingles
-        |  FROM t WHERE len(ts) >= 3
-        |), sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, 6),
-        |                        j -> list_aggregate(list_transform(shingles,
-        |                               s -> CAST('0x' || substr(md5(CAST((j+1)//2 AS VARCHAR) || ':' || s),
-        |                                                 CASE WHEN j%2=1 THEN 1 ELSE 16 END, 15) AS BIGINT)),
-        |                             'min')) AS mh
-        |  FROM sh
-        |), bands AS (
-        |  SELECT doc_id, b AS band_id,
-        |         md5(CAST(mh[2*b-1] AS VARCHAR) || '|' || CAST(mh[2*b] AS VARCHAR)) AS bucket
-        |  FROM sig, unnest(generate_series(1, 3)) AS u(b)
-        |), pairs AS (
-        |  SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc
-        |  FROM bands a JOIN bands b
-        |    ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        |), edges AS (
-        |  SELECT a_doc AS src, b_doc AS dst FROM pairs
-        |  UNION ALL SELECT b_doc, a_doc FROM pairs
-        |), reach(id, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-        |)
-        |SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-        |FROM reach GROUP BY id""".stripMargin,
+      s"""WITH RECURSIVE $lshPairsChain, ${symmetricEdgesCte()}, $reachCte
+         |SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
+         |FROM reach GROUP BY id""".stripMargin,
 
 
     // q43's recursive closure + the size rollup
     "q244_cluster_size_histogram" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, len(ts)-2),
-        |                        i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS shingles
-        |  FROM t WHERE len(ts) >= 3
-        |), sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, 6),
-        |                        j -> list_aggregate(list_transform(shingles,
-        |                               s -> CAST('0x' || substr(md5(CAST((j+1)//2 AS VARCHAR) || ':' || s),
-        |                                                 CASE WHEN j%2=1 THEN 1 ELSE 16 END, 15) AS BIGINT)),
-        |                             'min')) AS mh
-        |  FROM sh
-        |), bands AS (
-        |  SELECT doc_id, b AS band_id,
-        |         md5(CAST(mh[2*b-1] AS VARCHAR) || '|' || CAST(mh[2*b] AS VARCHAR)) AS bucket
-        |  FROM sig, unnest(generate_series(1, 3)) AS u(b)
-        |), pairs AS (
-        |  SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc
-        |  FROM bands a JOIN bands b
-        |    ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        |), edges AS (
-        |  SELECT a_doc AS src, b_doc AS dst FROM pairs
-        |  UNION ALL SELECT b_doc, a_doc FROM pairs
-        |), reach(id, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-        |), clusters AS (
-        |  SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-        |  FROM reach GROUP BY id
-        |), sizes AS (
-        |  SELECT cluster_id, CAST(count(*) AS BIGINT) AS sz
-        |  FROM clusters GROUP BY 1
-        |)
-        |SELECT sz AS cluster_size, CAST(count(*) AS BIGINT) AS n_clusters,
-        |       CAST(sum(sz) - count(*) AS BIGINT) AS n_dropped
-        |FROM sizes GROUP BY 1""".stripMargin,
+      s"""WITH RECURSIVE ${lshClusterChain("clusters")}, sizes AS (
+         |  SELECT cluster_id, CAST(count(*) AS BIGINT) AS sz
+         |  FROM clusters GROUP BY 1
+         |)
+         |SELECT sz AS cluster_size, CAST(count(*) AS BIGINT) AS n_clusters,
+         |       CAST(sum(sz) - count(*) AS BIGINT) AS n_dropped
+         |FROM sizes GROUP BY 1""".stripMargin,
 
 
-    "q70_decontaminate" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
-        |), grams AS (
-        |  SELECT doc_id,
-        |    unnest(list_distinct(list_transform(
-        |      generate_series(1, greatest(len(t) - 3, 0)),
-        |      i -> array_to_string(t[i:i+3], ' ')))) AS gram
-        |  FROM toks
-        |), bg AS (
-        |  SELECT DISTINCT gram FROM grams WHERE doc_id % 100 = 0
-        |)
-        |SELECT g.doc_id, CAST(count(*) AS BIGINT) AS n_hit_grams
-        |FROM grams g JOIN bg USING (gram)
-        |WHERE g.doc_id % 100 <> 0
-        |GROUP BY 1""".stripMargin,
+    "q70_decontaminate" -> gramDecontaminationSql,
 
 
     // q16's pair CTEs + exact Jaccard over distinct shingle sets; the
     // division is the same (int intersection)/(int union) in IEEE double
     // on both engines, so even the float column hash-matches
     "q45_jaccard_dedup" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, len(ts)-2),
-        |                        i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS shingles
-        |  FROM t WHERE len(ts) >= 3
-        |), sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, 6),
-        |                        j -> list_aggregate(list_transform(shingles,
-        |                               s -> CAST('0x' || substr(md5(CAST((j+1)//2 AS VARCHAR) || ':' || s),
-        |                                                 CASE WHEN j%2=1 THEN 1 ELSE 16 END, 15) AS BIGINT)),
-        |                             'min')) AS mh
-        |  FROM sh
-        |), bands AS (
-        |  SELECT doc_id, b AS band_id,
-        |         md5(CAST(mh[2*b-1] AS VARCHAR) || '|' || CAST(mh[2*b] AS VARCHAR)) AS bucket
-        |  FROM sig, unnest(generate_series(1, 3)) AS u(b)
-        |), pairs AS (
-        |  SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc
-        |  FROM bands a JOIN bands b
-        |    ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        |), sets AS (
-        |  SELECT doc_id, list_distinct(shingles) AS sset FROM sh
-        |), scored AS (
-        |  SELECT p.a_doc, p.b_doc,
-        |         CAST(len(list_filter(sa.sset, x -> list_contains(sb.sset, x))) AS DOUBLE) /
-        |           (len(sa.sset) + len(sb.sset) - len(list_filter(sa.sset, x -> list_contains(sb.sset, x))))
-        |           AS jaccard
-        |  FROM pairs p
-        |  JOIN sets sa ON p.a_doc = sa.doc_id
-        |  JOIN sets sb ON p.b_doc = sb.doc_id
-        |)
-        |SELECT a_doc, b_doc, jaccard FROM scored WHERE jaccard >= 0.5""".stripMargin,
+      s"""WITH $lshPairsChain, sets AS (
+         |  SELECT doc_id, list_distinct(shingles) AS sset FROM sh
+         |), scored AS (
+         |  SELECT p.a_doc, p.b_doc,
+         |         CAST(len(list_filter(sa.sset, x -> list_contains(sb.sset, x))) AS DOUBLE) /
+         |           (len(sa.sset) + len(sb.sset) - len(list_filter(sa.sset, x -> list_contains(sb.sset, x))))
+         |           AS jaccard
+         |  FROM pairs p
+         |  JOIN sets sa ON p.a_doc = sa.doc_id
+         |  JOIN sets sb ON p.b_doc = sb.doc_id
+         |)
+         |SELECT a_doc, b_doc, jaccard FROM scored WHERE jaccard >= 0.5""".stripMargin,
 
     // LSH recall replay: exact ground truth via the posting self-join
     // (sampled lower endpoint), candidates via q45's md5 banding CTEs,
     // then the same per-doc hit counts and integer recall
     "q138_lsh_recall" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, len(ts)-2),
-        |                        i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS shingles
-        |  FROM t WHERE len(ts) >= 3
-        |), sets AS (
-        |  SELECT doc_id, list_distinct(shingles) AS sset FROM sh
-        |), post AS (
-        |  SELECT doc_id, len(sset) AS n, unnest(sset) AS g FROM sets
-        |), exc AS (
-        |  SELECT a.doc_id AS a_doc, b.doc_id AS b_doc, count(*) AS inter,
-        |         any_value(a.n) AS na, any_value(b.n) AS nb
-        |  FROM post a JOIN post b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  WHERE a.doc_id % 5 = 0
-        |  GROUP BY 1, 2
-        |), ex AS (
-        |  SELECT a_doc, b_doc FROM exc
-        |  WHERE CAST(inter AS DOUBLE) / (na + nb - inter) >= 0.35
-        |), sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, 6),
-        |                        j -> list_aggregate(list_transform(shingles,
-        |                               s -> CAST('0x' || substr(md5(CAST((j+1)//2 AS VARCHAR) || ':' || s),
-        |                                                 CASE WHEN j%2=1 THEN 1 ELSE 16 END, 15) AS BIGINT)),
-        |                             'min')) AS mh
-        |  FROM sh
-        |), bands AS (
-        |  SELECT doc_id, b AS band_id,
-        |         md5(CAST(mh[2*b-1] AS VARCHAR) || '|' || CAST(mh[2*b] AS VARCHAR)) AS bucket
-        |  FROM sig, unnest(generate_series(1, 3)) AS u(b)
-        |), cand AS (
-        |  SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc, 1 AS hit
-        |  FROM bands a JOIN bands b
-        |    ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        |  WHERE a.doc_id % 5 = 0
-        |)
-        |SELECT ex.a_doc, CAST(count(*) AS BIGINT) AS n_exact,
-        |       CAST(sum(COALESCE(c.hit, 0)) AS BIGINT) AS n_hit,
-        |       CAST((sum(COALESCE(c.hit, 0)) * 1000000) // count(*) AS BIGINT) AS recall_ppm
-        |FROM ex LEFT JOIN cand c ON ex.a_doc = c.a_doc AND ex.b_doc = c.b_doc
-        |GROUP BY 1""".stripMargin,
+      s"""WITH $docTokensCte, $shinglesCte, sets AS (
+         |  SELECT doc_id, list_distinct(shingles) AS sset FROM sh
+         |), post AS (
+         |  SELECT doc_id, len(sset) AS n, unnest(sset) AS g FROM sets
+         |), exc AS (
+         |  SELECT a.doc_id AS a_doc, b.doc_id AS b_doc, count(*) AS inter,
+         |         any_value(a.n) AS na, any_value(b.n) AS nb
+         |  FROM post a JOIN post b ON a.g = b.g AND a.doc_id < b.doc_id
+         |  WHERE a.doc_id % 5 = 0
+         |  GROUP BY 1, 2
+         |), ex AS (
+         |  SELECT a_doc, b_doc FROM exc
+         |  WHERE CAST(inter AS DOUBLE) / (na + nb - inter) >= 0.35
+         |), $minhashBandsCte, cand AS (
+         |  SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc, 1 AS hit
+         |  FROM bands a JOIN bands b
+         |    ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id
+         |  WHERE a.doc_id % 5 = 0
+         |)
+         |SELECT ex.a_doc, CAST(count(*) AS BIGINT) AS n_exact,
+         |       CAST(sum(COALESCE(c.hit, 0)) AS BIGINT) AS n_hit,
+         |       CAST((sum(COALESCE(c.hit, 0)) * 1000000) // count(*) AS BIGINT) AS recall_ppm
+         |FROM ex LEFT JOIN cand c ON ex.a_doc = c.a_doc AND ex.b_doc = c.b_doc
+         |GROUP BY 1""".stripMargin,
 
 
     // identical to q70's oracle by design: the bloom path must return the
     // exact-join answer bit for bit
-    "q73_bloom_decontaminate" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
-        |), grams AS (
-        |  SELECT doc_id,
-        |    unnest(list_distinct(list_transform(
-        |      generate_series(1, greatest(len(t) - 3, 0)),
-        |      i -> array_to_string(t[i:i+3], ' ')))) AS gram
-        |  FROM toks
-        |), bg AS (
-        |  SELECT DISTINCT gram FROM grams WHERE doc_id % 100 = 0
-        |)
-        |SELECT g.doc_id, CAST(count(*) AS BIGINT) AS n_hit_grams
-        |FROM grams g JOIN bg USING (gram)
-        |WHERE g.doc_id % 100 <> 0
-        |GROUP BY 1""".stripMargin,
+    "q73_bloom_decontaminate" -> gramDecontaminationSql,
 
 
     // candidate/verify split: the oracle replays q45's exact-Jaccard
@@ -2507,152 +1865,86 @@ object DedupQueries {
     // q16/q45's md5-LSH pipeline with the pair space restricted to
     // cross-side (new × existing) collisions
     "q78_incremental_dedup" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, len(ts)-2),
-        |                        i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS shingles
-        |  FROM t WHERE len(ts) >= 3
-        |), sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, 6),
-        |                        j -> list_aggregate(list_transform(shingles,
-        |                               s -> CAST('0x' || substr(md5(CAST((j+1)//2 AS VARCHAR) || ':' || s),
-        |                                                 CASE WHEN j%2=1 THEN 1 ELSE 16 END, 15) AS BIGINT)),
-        |                             'min')) AS mh
-        |  FROM sh
-        |), bands AS (
-        |  SELECT doc_id, b AS band_id,
-        |         md5(CAST(mh[2*b-1] AS VARCHAR) || '|' || CAST(mh[2*b] AS VARCHAR)) AS bucket
-        |  FROM sig, unnest(generate_series(1, 3)) AS u(b)
-        |), bandsz AS (
-        |  SELECT doc_id, band_id, bucket,
-        |         count(*) OVER (PARTITION BY band_id, bucket, doc_id % 3 = 0) AS bsz
-        |  FROM bands
-        |), pairs AS (
-        |  SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc
-        |  FROM bandsz a JOIN bandsz b
-        |    ON a.band_id = b.band_id AND a.bucket = b.bucket
-        |  WHERE a.doc_id % 3 = 0 AND b.doc_id % 3 <> 0
-        |    AND a.bsz <= 1000 AND b.bsz <= 1000
-        |), sets AS (
-        |  SELECT doc_id, list_distinct(shingles) AS sset FROM sh
-        |), scored AS (
-        |  SELECT p.a_doc, p.b_doc,
-        |         CAST(len(list_filter(sa.sset, x -> list_contains(sb.sset, x))) AS DOUBLE) /
-        |           (len(sa.sset) + len(sb.sset) - len(list_filter(sa.sset, x -> list_contains(sb.sset, x))))
-        |           AS jaccard
-        |  FROM pairs p
-        |  JOIN sets sa ON p.a_doc = sa.doc_id
-        |  JOIN sets sb ON p.b_doc = sb.doc_id
-        |)
-        |SELECT a_doc, b_doc, jaccard FROM scored WHERE jaccard >= 0.5""".stripMargin,
+      s"""WITH $lshBandsChain, bandsz AS (
+         |  SELECT doc_id, band_id, bucket,
+         |         count(*) OVER (PARTITION BY band_id, bucket, doc_id % 3 = 0) AS bsz
+         |  FROM bands
+         |), pairs AS (
+         |  SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc
+         |  FROM bandsz a JOIN bandsz b
+         |    ON a.band_id = b.band_id AND a.bucket = b.bucket
+         |  WHERE a.doc_id % 3 = 0 AND b.doc_id % 3 <> 0
+         |    AND a.bsz <= 1000 AND b.bsz <= 1000
+         |), sets AS (
+         |  SELECT doc_id, list_distinct(shingles) AS sset FROM sh
+         |), scored AS (
+         |  SELECT p.a_doc, p.b_doc,
+         |         CAST(len(list_filter(sa.sset, x -> list_contains(sb.sset, x))) AS DOUBLE) /
+         |           (len(sa.sset) + len(sb.sset) - len(list_filter(sa.sset, x -> list_contains(sb.sset, x))))
+         |           AS jaccard
+         |  FROM pairs p
+         |  JOIN sets sa ON p.a_doc = sa.doc_id
+         |  JOIN sets sb ON p.b_doc = sb.doc_id
+         |)
+         |SELECT a_doc, b_doc, jaccard FROM scored WHERE jaccard >= 0.5""".stripMargin,
 
 
     "q84_survivors" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, len(ts)-2),
-        |                        i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS shingles
-        |  FROM t WHERE len(ts) >= 3
-        |), sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, 6),
-        |                        j -> list_aggregate(list_transform(shingles,
-        |                               s -> CAST('0x' || substr(md5(CAST((j+1)//2 AS VARCHAR) || ':' || s),
-        |                                                 CASE WHEN j%2=1 THEN 1 ELSE 16 END, 15) AS BIGINT)),
-        |                             'min')) AS mh
-        |  FROM sh
-        |), bands AS (
-        |  SELECT doc_id, b AS band_id,
-        |         md5(CAST(mh[2*b-1] AS VARCHAR) || '|' || CAST(mh[2*b] AS VARCHAR)) AS bucket
-        |  FROM sig, unnest(generate_series(1, 3)) AS u(b)
-        |), pairs AS (
-        |  SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc
-        |  FROM bands a JOIN bands b
-        |    ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        |), edges AS (
-        |  SELECT a_doc AS src, b_doc AS dst FROM pairs
-        |  UNION ALL SELECT b_doc, a_doc FROM pairs
-        |), reach(id, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-        |), clusters AS (
-        |  SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-        |  FROM reach GROUP BY id
-        |), ranked AS (
-        |  SELECT c.cluster_id, c.doc_id,
-        |         CAST(len(t.ts) AS BIGINT) AS n_tok,
-        |         row_number() OVER (PARTITION BY c.cluster_id
-        |           ORDER BY len(t.ts) DESC, c.doc_id) AS rn
-        |  FROM clusters c JOIN t ON c.doc_id = t.doc_id
-        |)
-        |SELECT cluster_id, doc_id AS survivor_id, n_tok
-        |FROM ranked WHERE rn = 1""".stripMargin,
+      s"""WITH RECURSIVE ${lshClusterChain("clusters")}, ranked AS (
+         |  SELECT c.cluster_id, c.doc_id,
+         |         CAST(len(t.ts) AS BIGINT) AS n_tok,
+         |         row_number() OVER (PARTITION BY c.cluster_id
+         |           ORDER BY len(t.ts) DESC, c.doc_id) AS rn
+         |  FROM clusters c JOIN t ON c.doc_id = t.doc_id
+         |)
+         |SELECT cluster_id, doc_id AS survivor_id, n_tok
+         |FROM ranked WHERE rn = 1""".stripMargin,
 
 
     // q65's match SQL + the q43 recursive-CTE component pattern over the
     // parity-encoded node space
     "q173_entity_resolution" ->
-      """WITH RECURSIVE pairs AS (
-        |  SELECT c_custkey * 2 AS a_node, s_suppkey * 2 + 1 AS b_node
-        |  FROM customer c JOIN supplier s
-        |    ON regexp_extract(c_name, '([0-9]{2})$', 1) =
-        |       regexp_extract(s_name, '([0-9]{2})$', 1)
-        |  WHERE levenshtein(c_name, s_name) <= 7
-        |), edges AS (
-        |  SELECT a_node AS src, b_node AS dst FROM pairs
-        |  UNION ALL SELECT b_node, a_node FROM pairs
-        |), reach(id, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-        |)
-        |SELECT id AS node,
-        |       CASE WHEN id % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind,
-        |       CAST(id // 2 AS BIGINT) AS entity_id,
-        |       CAST(min(r) AS BIGINT) AS cluster_id
-        |FROM reach GROUP BY 1, 2, 3""".stripMargin,
+      s"""WITH RECURSIVE pairs AS (
+         |  SELECT c_custkey * 2 AS a_node, s_suppkey * 2 + 1 AS b_node
+         |  FROM customer c JOIN supplier s
+         |    ON regexp_extract(c_name, '([0-9]{2})$$', 1) =
+         |       regexp_extract(s_name, '([0-9]{2})$$', 1)
+         |  WHERE levenshtein(c_name, s_name) <= 7
+         |), ${symmetricEdgesCte("pairs", "a_node", "b_node")}, $reachCte
+         |SELECT id AS node,
+         |       CASE WHEN id % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind,
+         |       CAST(id // 2 AS BIGINT) AS entity_id,
+         |       CAST(min(r) AS BIGINT) AS cluster_id
+         |FROM reach GROUP BY 1, 2, 3""".stripMargin,
 
 
     // q173's CTEs + the attributes union + the survivorship aggregates
     "q198_golden_record" ->
-      """WITH RECURSIVE pairs AS (
-        |  SELECT c_custkey * 2 AS a_node, s_suppkey * 2 + 1 AS b_node
-        |  FROM customer c JOIN supplier s
-        |    ON regexp_extract(c_name, '([0-9]{2})$', 1) =
-        |       regexp_extract(s_name, '([0-9]{2})$', 1)
-        |  WHERE levenshtein(c_name, s_name) <= 7
-        |), edges AS (
-        |  SELECT a_node AS src, b_node AS dst FROM pairs
-        |  UNION ALL SELECT b_node, a_node FROM pairs
-        |), reach(id, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-        |), cl AS (
-        |  SELECT id,
-        |         CASE WHEN id % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind,
-        |         CAST(id // 2 AS BIGINT) AS entity_id,
-        |         CAST(min(r) AS BIGINT) AS cluster_id
-        |  FROM reach GROUP BY 1, 2, 3
-        |), attrs AS (
-        |  SELECT 'customer' AS kind, c_custkey AS entity_id,
-        |         c_name AS name, c_acctbal AS acctbal FROM customer
-        |  UNION ALL
-        |  SELECT 'supplier', s_suppkey, s_name, s_acctbal FROM supplier
-        |)
-        |SELECT cl.cluster_id, CAST(count(*) AS BIGINT) AS n_members,
-        |       CAST(sum(CASE WHEN cl.kind = 'customer' THEN 1 ELSE 0 END)
-        |            AS BIGINT) AS n_customers,
-        |       min(a.name) AS canonical_name,
-        |       max(a.acctbal) AS best_acctbal
-        |FROM cl JOIN attrs a
-        |  ON cl.kind = a.kind AND cl.entity_id = a.entity_id
-        |GROUP BY 1""".stripMargin,
+      s"""WITH RECURSIVE pairs AS (
+         |  SELECT c_custkey * 2 AS a_node, s_suppkey * 2 + 1 AS b_node
+         |  FROM customer c JOIN supplier s
+         |    ON regexp_extract(c_name, '([0-9]{2})$$', 1) =
+         |       regexp_extract(s_name, '([0-9]{2})$$', 1)
+         |  WHERE levenshtein(c_name, s_name) <= 7
+         |), ${symmetricEdgesCte("pairs", "a_node", "b_node")}, $reachCte, cl AS (
+         |  SELECT id,
+         |         CASE WHEN id % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind,
+         |         CAST(id // 2 AS BIGINT) AS entity_id,
+         |         CAST(min(r) AS BIGINT) AS cluster_id
+         |  FROM reach GROUP BY 1, 2, 3
+         |), attrs AS (
+         |  SELECT 'customer' AS kind, c_custkey AS entity_id,
+         |         c_name AS name, c_acctbal AS acctbal FROM customer
+         |  UNION ALL
+         |  SELECT 'supplier', s_suppkey, s_name, s_acctbal FROM supplier
+         |)
+         |SELECT cl.cluster_id, CAST(count(*) AS BIGINT) AS n_members,
+         |       CAST(sum(CASE WHEN cl.kind = 'customer' THEN 1 ELSE 0 END)
+         |            AS BIGINT) AS n_customers,
+         |       min(a.name) AS canonical_name,
+         |       max(a.acctbal) AS best_acctbal
+         |FROM cl JOIN attrs a
+         |  ON cl.kind = a.kind AND cl.entity_id = a.entity_id
+         |GROUP BY 1""".stripMargin,
   )
 }

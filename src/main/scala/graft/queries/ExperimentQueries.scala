@@ -859,25 +859,7 @@ object ExperimentQueries {
          |    / 100.0 AS mean_adj
          |FROM v, g""".stripMargin,
 
-    "q208_srm_check" ->
-      """WITH a AS (
-        |  SELECT event_type,
-        |    CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
-        |    CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1
-        |  FROM events GROUP BY 1
-        |), e AS (
-        |  SELECT *, CAST(n0 + n1 AS DOUBLE) / 2.0 AS expected FROM a
-        |)
-        |SELECT event_type, n0, n1,
-        |  (CAST(n0 AS DOUBLE) - expected) * (CAST(n0 AS DOUBLE) - expected)
-        |    / expected
-        |  + (CAST(n1 AS DOUBLE) - expected) * (CAST(n1 AS DOUBLE) - expected)
-        |    / expected AS chi2,
-        |  (CAST(n0 AS DOUBLE) - expected) * (CAST(n0 AS DOUBLE) - expected)
-        |    / expected
-        |  + (CAST(n1 AS DOUBLE) - expected) * (CAST(n1 AS DOUBLE) - expected)
-        |    / expected > 3.841 AS srm
-        |FROM e""".stripMargin,
+    "q208_srm_check" -> srmCheckSql,
 
     "q209_linear_attribution" ->
       """WITH p AS (
@@ -1214,21 +1196,7 @@ object ExperimentQueries {
         |FROM orders GROUP BY 1""".stripMargin,
 
 
-    "q243_pareto_revenue" ->
-      """WITH rev AS (
-        |  SELECT p.p_brand,
-        |         CAST(sum(CAST(CAST(l.l_extendedprice AS DECIMAL(30,2)) * 100
-        |                       AS BIGINT)) AS BIGINT) AS rev_cents
-        |  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        |  GROUP BY 1
-        |), g AS (SELECT CAST(sum(rev_cents) AS BIGINT) AS grand FROM rev)
-        |SELECT CAST(row_number() OVER (ORDER BY rev_cents DESC, p_brand)
-        |            AS INT) AS rank,
-        |       p_brand, rev_cents,
-        |       CAST(CAST(sum(rev_cents) OVER (ORDER BY rev_cents DESC, p_brand
-        |         ROWS UNBOUNDED PRECEDING) AS BIGINT) * 1000000 // grand
-        |         AS BIGINT) AS cum_share_ppm
-        |FROM rev, g""".stripMargin,
+    "q243_pareto_revenue" -> paretoRevenueSql,
 
 
     // the union-window replay, walked in DESC ts order — right rows

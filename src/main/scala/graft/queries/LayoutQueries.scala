@@ -1424,15 +1424,7 @@ object LayoutQueries {
         |FROM o""".stripMargin,
 
 
-    "q74_heavy_hitters" ->
-      """WITH tok AS (
-        |  SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token
-        |  FROM documents
-        |), tot AS (SELECT count(*) AS n FROM tok)
-        |SELECT token, CAST(count(*) AS BIGINT) AS cnt
-        |FROM tok, tot
-        |GROUP BY token, n
-        |HAVING count(*) * 100 > n""".stripMargin,
+    "q74_heavy_hitters" -> heavyHittersSql,
 
 
     "q75_orc_roundtrip" ->

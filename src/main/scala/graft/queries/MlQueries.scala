@@ -502,6 +502,13 @@ object MlQueries {
     }),
   )
 
+  /** The confusion counts of a persisted `(label, prediction)` parquet
+    * (q23 and q415: the fit is upstream of the compared relational work). */
+  private def lrConfusionSql(preds: String): String =
+    s"""SELECT label, prediction, count(*) AS n
+       |FROM read_parquet('$preds/*.parquet')
+       |GROUP BY 1, 2""".stripMargin
+
   /** DuckDB-runnable oracle equivalents; keys lacking an entry here are
     * rows-only checked by the driver (non-portable hash/codec/fit paths,
     * each pinned by a dedicated spec instead). */
@@ -543,47 +550,14 @@ object MlQueries {
     // the same bucket rule, so the no-straddle property is checked by
     // hash equality over every (doc, cluster_key, split) row
     "q131_leakage_safe_split" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, len(ts)-2),
-        |                        i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]) AS shingles
-        |  FROM t WHERE len(ts) >= 3
-        |), sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(1, 6),
-        |                        j -> list_aggregate(list_transform(shingles,
-        |                               s -> CAST('0x' || substr(md5(CAST((j+1)//2 AS VARCHAR) || ':' || s),
-        |                                                 CASE WHEN j%2=1 THEN 1 ELSE 16 END, 15) AS BIGINT)),
-        |                             'min')) AS mh
-        |  FROM sh
-        |), bands AS (
-        |  SELECT doc_id, b AS band_id,
-        |         md5(CAST(mh[2*b-1] AS VARCHAR) || '|' || CAST(mh[2*b] AS VARCHAR)) AS bucket
-        |  FROM sig, unnest(generate_series(1, 3)) AS u(b)
-        |), pairs AS (
-        |  SELECT DISTINCT a.doc_id AS a_doc, b.doc_id AS b_doc
-        |  FROM bands a JOIN bands b
-        |    ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        |), edges AS (
-        |  SELECT a_doc AS src, b_doc AS dst FROM pairs
-        |  UNION ALL SELECT b_doc, a_doc FROM pairs
-        |), reach(id, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-        |), clusters AS (
-        |  SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-        |  FROM reach GROUP BY id
-        |), keyed AS (
-        |  SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS cluster_key
-        |  FROM documents d LEFT JOIN clusters c USING (doc_id)
-        |)
-        |SELECT doc_id, cluster_key,
-        |       CASE WHEN CAST('0x' || substr(md5(CAST(cluster_key AS VARCHAR)), 1, 2) AS INT) < 205
-        |            THEN 'train' ELSE 'holdout' END AS split
-        |FROM keyed""".stripMargin,
+      s"""WITH RECURSIVE ${lshClusterChain("clusters")}, keyed AS (
+         |  SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS cluster_key
+         |  FROM documents d LEFT JOIN clusters c USING (doc_id)
+         |)
+         |SELECT doc_id, cluster_key,
+         |       CASE WHEN CAST('0x' || substr(md5(CAST(cluster_key AS VARCHAR)), 1, 2) AS INT) < 205
+         |            THEN 'train' ELSE 'holdout' END AS split
+         |FROM keyed""".stripMargin,
 
 
     // fit/serve split: the oracle replays the confusion aggregation over
@@ -591,18 +565,14 @@ object MlQueries {
     // is upstream of the compared relational work, so identical stored
     // bits make the count grouping hash-exact
     "q23_lr_confusion" ->
-      s"""SELECT label, prediction, count(*) AS n
-         |FROM read_parquet('${predsPath("q23_preds")}/*.parquet')
-         |GROUP BY 1, 2""".stripMargin,
+      lrConfusionSql(predsPath("q23_preds")),
 
 
     // the identical serve replay over the hashed-features model's
     // persisted predictions (the fit — hashing trick + weighted LR — is
     // upstream of the compared relational work)
     "q415_hashed_lr_confusion" ->
-      s"""SELECT label, prediction, count(*) AS n
-         |FROM read_parquet('${predsPath("q415_preds")}/*.parquet')
-         |GROUP BY 1, 2""".stripMargin,
+      lrConfusionSql(predsPath("q415_preds")),
 
 
     // fit/serve split: positives filter, SIC//10 bucketing, top-50-per-

@@ -1389,6 +1389,26 @@ object RelationalQueries {
     }),
   )
 
+  /** `edges → l0 → … → l<rounds>`: synchronous min-label rounds over the
+    * undirected `pairs(src, dst)` CTE, each a chained CTE of the same
+    * min-of-self-and-neighbours step. */
+  private def labelRoundsChain(rounds: Int): String =
+    ("""edges AS (
+      |  SELECT src, dst FROM pairs UNION SELECT dst, src FROM pairs
+      |), l0 AS (
+      |  SELECT node, node AS label FROM
+      |    (SELECT src AS node FROM edges
+      |     UNION SELECT dst FROM edges) n
+      |)""".stripMargin +: (1 to rounds).map(r =>
+      s"""l$r AS (
+         |  SELECT l.node,
+         |         least(l.label, coalesce(m.nl, l.label)) AS label
+         |  FROM l${r - 1} l LEFT JOIN (
+         |    SELECT e.src AS node, min(x.label) AS nl
+         |    FROM edges e JOIN l${r - 1} x ON x.node = e.dst GROUP BY 1) m
+         |    USING (node)
+         |)""".stripMargin)).mkString(", ")
+
   /** DuckDB-runnable oracle equivalents; keys lacking an entry here are
     * rows-only checked by the driver (non-portable hash/codec/fit paths,
     * each pinned by a dedicated spec instead). */
@@ -1495,55 +1515,13 @@ object RelationalQueries {
         |SELECT 'except' AS op, o_custkey FROM (SELECT * FROM f EXCEPT SELECT * FROM oo)""".stripMargin,
 
 
-    "q21_window_agg" ->
-      s"""SELECT date_trunc('hour', ts) AS hour, event_type,
-         |  COUNT(*) AS n, ${dSum("value", 2, "sum_value")}
-         |FROM events GROUP BY 1, 2""".stripMargin,
+    "q21_window_agg" -> hourlyWindowSql,
 
 
-    // Independent relational formulation of session_window merge semantics:
-    // gaps-and-islands — new session iff the gap to the previous event is
-    // NOT < 30 min (session_window merges strictly-before-window-end).
-    "q22_session_windows" ->
-      """WITH m AS (
-        |  SELECT user_id, ts,
-        |         CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-        |                   < INTERVAL 30 MINUTE
-        |              THEN 0 ELSE 1 END AS new_s
-        |  FROM events
-        |), g AS (
-        |  SELECT user_id, ts,
-        |         sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-        |                          ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM m
-        |)
-        |SELECT min(ts) AS session_start, max(ts) + INTERVAL 30 MINUTE AS session_end,
-        |       user_id, CAST(count(*) AS BIGINT) AS n_events
-        |FROM g GROUP BY user_id, sid""".stripMargin,
+    "q22_session_windows" -> sessionWindowsSql,
 
 
-    "q108_merge_upsert" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
-        |), u AS (
-        |  SELECT o_orderkey, 'X' AS o_orderstatus, o_totalprice, 2 AS ver
-        |  FROM o WHERE o_orderkey % 7 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, 'D', o_totalprice, 1 FROM o WHERE o_orderkey % 21 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey + 100000000, 'N', o_totalprice, 1
-        |  FROM o WHERE o_orderkey % 13 = 0
-        |), win AS (
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice
-        |  FROM (SELECT *, row_number() OVER (PARTITION BY o_orderkey
-        |                    ORDER BY ver DESC, o_orderstatus DESC) AS rn
-        |        FROM u)
-        |  WHERE rn = 1
-        |)
-        |SELECT o.o_orderkey, o.o_orderstatus, o.o_totalprice FROM o
-        |WHERE o.o_orderkey NOT IN (SELECT o_orderkey FROM win)
-        |UNION ALL
-        |SELECT o_orderkey, o_orderstatus, o_totalprice FROM win""".stripMargin,
+    "q108_merge_upsert" -> mergeUpsertSql,
 
 
     // independent SCD2 formulation: lag-collapse no-ops, then lead over
@@ -1955,36 +1933,10 @@ object RelationalQueries {
         |FROM events GROUP BY 1""".stripMargin,
 
 
-    // same strict sequential mins: each stage's min is guarded by
-    // `> previous stage time`, and a NULL previous time nulls the guard
-    "q139_funnel" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t_view
-        |            FROM events WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT s1.user_id, s1.t_view, min(e.ts) AS t_click
-        |       FROM s1 LEFT JOIN events e
-        |         ON e.user_id = s1.user_id AND e.event_type = 'click'
-        |        AND e.ts > s1.t_view
-        |       GROUP BY 1, 2),
-        |s3 AS (SELECT s2.user_id, s2.t_view, s2.t_click, min(e.ts) AS t_purchase
-        |       FROM s2 LEFT JOIN events e
-        |         ON e.user_id = s2.user_id AND e.event_type = 'purchase'
-        |        AND e.ts > s2.t_click
-        |       GROUP BY 1, 2, 3)
-        |SELECT user_id, t_view, t_click, t_purchase,
-        |       CAST(1 + CASE WHEN t_click IS NULL THEN 0 ELSE 1 END
-        |              + CASE WHEN t_purchase IS NULL THEN 0 ELSE 1 END
-        |            AS INT) AS stage
-        |FROM s3""".stripMargin,
+    "q139_funnel" -> funnelSql,
 
 
-    "q140_retention" ->
-      """WITH d AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-        |f AS (SELECT user_id, min(day) AS cohort_day FROM d GROUP BY 1)
-        |SELECT f.cohort_day,
-        |       CAST(d.day - f.cohort_day AS BIGINT) AS day_offset,
-        |       CAST(count(DISTINCT d.user_id) AS BIGINT) AS n_users
-        |FROM d JOIN f USING (user_id)
-        |GROUP BY 1, 2""".stripMargin,
+    "q140_retention" -> retentionSql,
 
 
     // v1 expressed directly — the engine must reproduce it via
@@ -2644,38 +2596,11 @@ object RelationalQueries {
     // three synchronous rounds, each a chained CTE of the same
     // min-of-self-and-neighbors step
     "q222_label_prop" ->
-      """WITH pairs AS (
-        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |), edges AS (
-        |  SELECT src, dst FROM pairs UNION SELECT dst, src FROM pairs
-        |), l0 AS (
-        |  SELECT node, node AS label FROM
-        |    (SELECT src AS node FROM edges
-        |     UNION SELECT dst FROM edges) n
-        |), l1 AS (
-        |  SELECT l.node,
-        |         least(l.label, coalesce(m.nl, l.label)) AS label
-        |  FROM l0 l LEFT JOIN (
-        |    SELECT e.src AS node, min(x.label) AS nl
-        |    FROM edges e JOIN l0 x ON x.node = e.dst GROUP BY 1) m
-        |    USING (node)
-        |), l2 AS (
-        |  SELECT l.node,
-        |         least(l.label, coalesce(m.nl, l.label)) AS label
-        |  FROM l1 l LEFT JOIN (
-        |    SELECT e.src AS node, min(x.label) AS nl
-        |    FROM edges e JOIN l1 x ON x.node = e.dst GROUP BY 1) m
-        |    USING (node)
-        |), l3 AS (
-        |  SELECT l.node,
-        |         least(l.label, coalesce(m.nl, l.label)) AS label
-        |  FROM l2 l LEFT JOIN (
-        |    SELECT e.src AS node, min(x.label) AS nl
-        |    FROM edges e JOIN l2 x ON x.node = e.dst GROUP BY 1) m
-        |    USING (node)
-        |)
-        |SELECT node, label FROM l3""".stripMargin,
+      s"""WITH pairs AS (
+         |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
+         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+         |), ${labelRoundsChain(3)}
+         |SELECT node, label FROM l3""".stripMargin,
 
 
     "q223_degree_histogram" ->
@@ -2708,37 +2633,7 @@ object RelationalQueries {
     // the q232 digest stated three ways (source, erased slice, STORED
     // survivors) + the decimal reconciliation and residual scan
     "q443_erasure_proof" ->
-      s"""WITH dig AS (
-         |  SELECT o_custkey,
-         |    CAST(CAST('0x' || substr(md5(
-         |      coalesce(md5(CAST(o_orderkey AS VARCHAR)), 'N') || '|' ||
-         |      coalesce(md5(CAST(o_custkey AS VARCHAR)), 'N') || '|' ||
-         |      coalesce(md5(o_orderstatus), 'N') || '|' ||
-         |      coalesce(md5(o_orderpriority), 'N')), 1, 14)
-         |      AS BIGINT) AS DECIMAL(20,0)) AS h
-         |  FROM orders
-         |), adig AS (
-         |  SELECT o_custkey,
-         |    CAST(CAST('0x' || substr(md5(
-         |      coalesce(md5(CAST(o_orderkey AS VARCHAR)), 'N') || '|' ||
-         |      coalesce(md5(CAST(o_custkey AS VARCHAR)), 'N') || '|' ||
-         |      coalesce(md5(o_orderstatus), 'N') || '|' ||
-         |      coalesce(md5(o_orderpriority), 'N')), 1, 14)
-         |      AS BIGINT) AS DECIMAL(20,0)) AS h
-         |  FROM read_parquet('${predsPath("q443_after")}/*.parquet')
-         |), cb AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n_before,
-         |    CAST(CAST(sum(h) AS DECIMAL(30,0)) AS VARCHAR) AS ck_before
-         |  FROM dig
-         |), cd AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n_deleted,
-         |    CAST(CAST(sum(h) AS DECIMAL(30,0)) AS VARCHAR) AS ck_deleted
-         |  FROM dig WHERE o_custkey % 97 = 0
-         |), ca AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n_after,
-         |    CAST(CAST(sum(h) AS DECIMAL(30,0)) AS VARCHAR) AS ck_after
-         |  FROM adig
-         |), res AS (
+      s"""WITH ${erasureChecksumsChain(predsPath("q443_after"))}, res AS (
          |  SELECT CAST(coalesce(sum(CASE WHEN o_custkey % 97 = 0
          |    THEN 1 ELSE 0 END), 0) AS BIGINT) AS residual_rows
          |  FROM adig
@@ -2755,69 +2650,42 @@ object RelationalQueries {
     // the fixed-3-round min-label unroll over q92's thresholded graph
     // + the exact modularity algebra
     "q444_modularity" ->
-      """WITH li AS (
-        |  SELECT l_orderkey, l_suppkey FROM lineitem WHERE l_quantity > 48
-        |), pairs AS (
-        |  SELECT DISTINCT x.l_suppkey AS src, y.l_suppkey AS dst
-        |  FROM li x JOIN li y
-        |    ON x.l_orderkey = y.l_orderkey AND x.l_suppkey < y.l_suppkey
-        |), edges AS (
-        |  SELECT src, dst FROM pairs UNION SELECT dst, src FROM pairs
-        |), l0 AS (
-        |  SELECT node, node AS label FROM
-        |    (SELECT src AS node FROM edges
-        |     UNION SELECT dst FROM edges) n
-        |), l1 AS (
-        |  SELECT l.node,
-        |         least(l.label, coalesce(m.nl, l.label)) AS label
-        |  FROM l0 l LEFT JOIN (
-        |    SELECT e.src AS node, min(x.label) AS nl
-        |    FROM edges e JOIN l0 x ON x.node = e.dst GROUP BY 1) m
-        |    USING (node)
-        |), l2 AS (
-        |  SELECT l.node,
-        |         least(l.label, coalesce(m.nl, l.label)) AS label
-        |  FROM l1 l LEFT JOIN (
-        |    SELECT e.src AS node, min(x.label) AS nl
-        |    FROM edges e JOIN l1 x ON x.node = e.dst GROUP BY 1) m
-        |    USING (node)
-        |), l3 AS (
-        |  SELECT l.node,
-        |         least(l.label, coalesce(m.nl, l.label)) AS label
-        |  FROM l2 l LEFT JOIN (
-        |    SELECT e.src AS node, min(x.label) AS nl
-        |    FROM edges e JOIN l2 x ON x.node = e.dst GROUP BY 1) m
-        |    USING (node)
-        |), mm AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS m FROM pairs
-        |), deg AS (
-        |  SELECT src AS node, CAST(count(*) AS BIGINT) AS d
-        |  FROM edges GROUP BY 1
-        |), dc AS (
-        |  SELECT l3.label, CAST(count(*) AS BIGINT) AS n_nodes,
-        |    CAST(sum(deg.d) AS BIGINT) AS d_c
-        |  FROM l3 JOIN deg ON l3.node = deg.node GROUP BY 1
-        |), ec AS (
-        |  SELECT ls.label, CAST(count(*) AS BIGINT) AS e_intra
-        |  FROM pairs p
-        |  JOIN l3 ls ON p.src = ls.node
-        |  JOIN l3 ld ON p.dst = ld.node
-        |  WHERE ls.label = ld.label
-        |  GROUP BY 1
-        |), perc AS (
-        |  SELECT dc.label, dc.n_nodes, coalesce(ec.e_intra, 0) AS e_intra,
-        |    dc.d_c,
-        |    CAST(coalesce(ec.e_intra, 0) * 1000000 // mm.m
-        |      - ((dc.d_c * dc.d_c // (4 * mm.m * mm.m)) * 1000000
-        |         + (dc.d_c * dc.d_c % (4 * mm.m * mm.m)) * 1000000
-        |           // (4 * mm.m * mm.m)) AS BIGINT) AS q_c_ppm
-        |  FROM dc LEFT JOIN ec ON dc.label = ec.label CROSS JOIN mm
-        |)
-        |SELECT label, n_nodes, CAST(e_intra AS BIGINT) AS e_intra, d_c,
-        |  q_c_ppm,
-        |  (SELECT CAST(sum(q_c_ppm) AS BIGINT) FROM perc)
-        |    AS modularity_ppm
-        |FROM perc""".stripMargin,
+      s"""WITH li AS (
+         |  SELECT l_orderkey, l_suppkey FROM lineitem WHERE l_quantity > 48
+         |), pairs AS (
+         |  SELECT DISTINCT x.l_suppkey AS src, y.l_suppkey AS dst
+         |  FROM li x JOIN li y
+         |    ON x.l_orderkey = y.l_orderkey AND x.l_suppkey < y.l_suppkey
+         |), ${labelRoundsChain(3)}, mm AS (
+         |  SELECT CAST(count(*) AS BIGINT) AS m FROM pairs
+         |), deg AS (
+         |  SELECT src AS node, CAST(count(*) AS BIGINT) AS d
+         |  FROM edges GROUP BY 1
+         |), dc AS (
+         |  SELECT l3.label, CAST(count(*) AS BIGINT) AS n_nodes,
+         |    CAST(sum(deg.d) AS BIGINT) AS d_c
+         |  FROM l3 JOIN deg ON l3.node = deg.node GROUP BY 1
+         |), ec AS (
+         |  SELECT ls.label, CAST(count(*) AS BIGINT) AS e_intra
+         |  FROM pairs p
+         |  JOIN l3 ls ON p.src = ls.node
+         |  JOIN l3 ld ON p.dst = ld.node
+         |  WHERE ls.label = ld.label
+         |  GROUP BY 1
+         |), perc AS (
+         |  SELECT dc.label, dc.n_nodes, coalesce(ec.e_intra, 0) AS e_intra,
+         |    dc.d_c,
+         |    CAST(coalesce(ec.e_intra, 0) * 1000000 // mm.m
+         |      - ((dc.d_c * dc.d_c // (4 * mm.m * mm.m)) * 1000000
+         |         + (dc.d_c * dc.d_c % (4 * mm.m * mm.m)) * 1000000
+         |           // (4 * mm.m * mm.m)) AS BIGINT) AS q_c_ppm
+         |  FROM dc LEFT JOIN ec ON dc.label = ec.label CROSS JOIN mm
+         |)
+         |SELECT label, n_nodes, CAST(e_intra AS BIGINT) AS e_intra, d_c,
+         |  q_c_ppm,
+         |  (SELECT CAST(sum(q_c_ppm) AS BIGINT) FROM perc)
+         |    AS modularity_ppm
+         |FROM perc""".stripMargin,
 
     "q232_table_checksum" ->
       """SELECT CAST(count(*) AS BIGINT) AS n_rows,

@@ -682,6 +682,54 @@ object SimilarityQueries {
     }),
   )
 
+  /** q490's hybrid retrieval oracle (q501 replays it over the streamed
+    * candidate log): the vector leg is the q28 re-rank chain over the
+    * persisted shortlist and units (k=10), the lexical leg is restated from
+    * `documents` (rare-token postings, shared-count rank), and fusion is
+    * 1e9 // (60+rank) per leg. */
+  private def rrfHybridSql(cands: String, units: String): String =
+    s"""WITH ${shortlistDotsChain(cands, units)}, vec AS (
+       |  SELECT q_id, n_id, rank_v FROM (
+       |    SELECT q_id, n_id,
+       |      CAST(ROW_NUMBER() OVER (PARTITION BY q_id
+       |        ORDER BY dot_q DESC, n_id) AS BIGINT) AS rank_v
+       |    FROM dots) WHERE rank_v <= 10
+       |), toks AS (
+       |  SELECT doc_id, unnest(list_distinct(
+       |    regexp_extract_all(lower(text), '[a-z0-9]+'))) AS tok
+       |  FROM documents
+       |), rare AS (
+       |  SELECT tok FROM toks GROUP BY tok
+       |  HAVING count(*) BETWEEN 2 AND 20
+       |), post AS (
+       |  SELECT t.doc_id, t.tok FROM toks t JOIN rare r ON t.tok = r.tok
+       |), ov AS (
+       |  SELECT q.doc_id AS q_id, n.doc_id AS n_id,
+       |    CAST(count(*) AS BIGINT) AS shared
+       |  FROM post q JOIN post n ON q.tok = n.tok
+       |  WHERE q.doc_id % 50 = 0 AND q.doc_id <> n.doc_id
+       |  GROUP BY 1, 2
+       |), lex AS (
+       |  SELECT q_id, n_id, rank_l FROM (
+       |    SELECT q_id, n_id,
+       |      CAST(ROW_NUMBER() OVER (PARTITION BY q_id
+       |        ORDER BY shared DESC, n_id) AS BIGINT) AS rank_l
+       |    FROM ov) WHERE rank_l <= 10
+       |), fused AS (
+       |  SELECT COALESCE(v.q_id, l.q_id) AS q_id,
+       |    COALESCE(v.n_id, l.n_id) AS n_id,
+       |    CAST(COALESCE(1000000000 // (60 + v.rank_v), 0)
+       |       + COALESCE(1000000000 // (60 + l.rank_l), 0) AS BIGINT)
+       |      AS score_rrf
+       |  FROM vec v FULL OUTER JOIN lex l
+       |    ON v.q_id = l.q_id AND v.n_id = l.n_id
+       |)
+       |SELECT q_id, n_id, score_rrf, rank_rrf FROM (
+       |  SELECT q_id, n_id, score_rrf,
+       |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id
+       |      ORDER BY score_rrf DESC, n_id) AS BIGINT) AS rank_rrf
+       |  FROM fused) WHERE rank_rrf <= 5""".stripMargin
+
   /** DuckDB-runnable oracle equivalents; keys lacking an entry here are
     * rows-only checked by the driver (non-portable hash/codec/fit paths,
     * each pinned by a dedicated spec instead). */
@@ -707,23 +755,7 @@ object SimilarityQueries {
     // path): exact quantized-dot re-rank + deterministic top-k replayed
     // over the persisted candidate pairs and unit vectors
     "q28_sim_ivf" ->
-      s"""WITH sl AS (
-         |  SELECT q_id, n_id FROM read_parquet('${predsPath("q28_cands")}/*.parquet')
-         |), u AS (
-         |  SELECT vec_id, unit FROM read_parquet('${predsPath("q28_units")}/*.parquet')
-         |), dots AS (
-         |  SELECT s.q_id, s.n_id,
-         |    CAST(list_sum(list_transform(generate_series(1, len(a.unit)), i ->
-         |      CAST(floor(CAST(a.unit[i] AS DOUBLE) * CAST(b.unit[i] AS DOUBLE) * 1000000000000) AS BIGINT)))
-         |      AS BIGINT) AS dot_q
-         |  FROM sl s
-         |  JOIN u a ON s.q_id = a.vec_id
-         |  JOIN u b ON s.n_id = b.vec_id
-         |)
-         |SELECT * FROM (
-         |  SELECT q_id, n_id, dot_q,
-         |         CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dot_q DESC, n_id) AS BIGINT) AS rank
-         |  FROM dots) WHERE rank <= 5""".stripMargin,
+      shortlistTopKSql(predsPath("q28_cands"), predsPath("q28_units")),
 
 
     // the q28 rerank chain plus the same-label pre-filter, all stated
@@ -738,13 +770,9 @@ object SimilarityQueries {
          |  FROM sl s
          |  JOIN l la ON s.q_id = la.vec_id
          |  JOIN l lb ON s.n_id = lb.vec_id AND la.label = lb.label
-         |), u AS (
-         |  SELECT vec_id, unit FROM read_parquet('${predsPath("q489_units")}/*.parquet')
-         |), dots AS (
+         |), ${unitsCte(predsPath("q489_units"))}, dots AS (
          |  SELECT f.q_id, f.n_id, f.label,
-         |    CAST(list_sum(list_transform(generate_series(1, len(a.unit)), i ->
-         |      CAST(floor(CAST(a.unit[i] AS DOUBLE) * CAST(b.unit[i] AS DOUBLE) * 1000000000000) AS BIGINT)))
-         |      AS BIGINT) AS dot_q
+         |    ${unitDotSql()} AS dot_q
          |  FROM f
          |  JOIN u a ON f.q_id = a.vec_id
          |  JOIN u b ON f.n_id = b.vec_id
@@ -758,44 +786,12 @@ object SimilarityQueries {
     // quantized-dot re-rank + deterministic top-k over the persisted ADC
     // shortlist and unit vectors
     "q57_sim_pq" ->
-      s"""WITH sl AS (
-         |  SELECT q_id, n_id FROM read_parquet('${predsPath("q57_shortlist")}/*.parquet')
-         |), u AS (
-         |  SELECT vec_id, unit FROM read_parquet('${predsPath("q57_units")}/*.parquet')
-         |), dots AS (
-         |  SELECT s.q_id, s.n_id,
-         |    CAST(list_sum(list_transform(generate_series(1, len(a.unit)), i ->
-         |      CAST(floor(CAST(a.unit[i] AS DOUBLE) * CAST(b.unit[i] AS DOUBLE) * 1000000000000) AS BIGINT)))
-         |      AS BIGINT) AS dot_q
-         |  FROM sl s
-         |  JOIN u a ON s.q_id = a.vec_id
-         |  JOIN u b ON s.n_id = b.vec_id
-         |)
-         |SELECT * FROM (
-         |  SELECT q_id, n_id, dot_q,
-         |         CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dot_q DESC, n_id) AS BIGINT) AS rank
-         |  FROM dots) WHERE rank <= 5""".stripMargin,
+      shortlistTopKSql(predsPath("q57_shortlist"), predsPath("q57_units")),
 
 
     // shortlist/re-rank split (q94's oracle, in-memory IVFPQ path)
     "q58_sim_ivfpq" ->
-      s"""WITH sl AS (
-         |  SELECT q_id, n_id FROM read_parquet('${predsPath("q58_shortlist")}/*.parquet')
-         |), u AS (
-         |  SELECT vec_id, unit FROM read_parquet('${predsPath("q58_units")}/*.parquet')
-         |), dots AS (
-         |  SELECT s.q_id, s.n_id,
-         |    CAST(list_sum(list_transform(generate_series(1, len(a.unit)), i ->
-         |      CAST(floor(CAST(a.unit[i] AS DOUBLE) * CAST(b.unit[i] AS DOUBLE) * 1000000000000) AS BIGINT)))
-         |      AS BIGINT) AS dot_q
-         |  FROM sl s
-         |  JOIN u a ON s.q_id = a.vec_id
-         |  JOIN u b ON s.n_id = b.vec_id
-         |)
-         |SELECT * FROM (
-         |  SELECT q_id, n_id, dot_q,
-         |         CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dot_q DESC, n_id) AS BIGINT) AS rank
-         |  FROM dots) WHERE rank <= 5""".stripMargin,
+      shortlistTopKSql(predsPath("q58_shortlist"), predsPath("q58_units")),
 
 
     // Global scale g = max|x|/127 (float max cast to double in both
@@ -854,23 +850,7 @@ object SimilarityQueries {
     // bits + top-k with n_id tie-break) over the persisted shortlist —
     // q17's ranking formulation applied to the serving path's files
     "q94_ivfpq_serving" ->
-      s"""WITH sl AS (
-         |  SELECT q_id, n_id FROM read_parquet('${predsPath("q94_shortlist")}/*.parquet')
-         |), u AS (
-         |  SELECT vec_id, unit FROM read_parquet('${predsPath("q94_units")}/*.parquet')
-         |), dots AS (
-         |  SELECT s.q_id, s.n_id,
-         |    CAST(list_sum(list_transform(generate_series(1, len(a.unit)), i ->
-         |      CAST(floor(CAST(a.unit[i] AS DOUBLE) * CAST(b.unit[i] AS DOUBLE) * 1000000000000) AS BIGINT)))
-         |      AS BIGINT) AS dot_q
-         |  FROM sl s
-         |  JOIN u a ON s.q_id = a.vec_id
-         |  JOIN u b ON s.n_id = b.vec_id
-         |)
-         |SELECT * FROM (
-         |  SELECT q_id, n_id, dot_q,
-         |         CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dot_q DESC, n_id) AS BIGINT) AS rank
-         |  FROM dots) WHERE rank <= 5""".stripMargin,
+      shortlistTopKSql(predsPath("q94_shortlist"), predsPath("q94_units")),
 
 
     // candidate/verify split: the oracle replays the exact-cosine verify
@@ -962,50 +942,22 @@ object SimilarityQueries {
     // q94's rerank replay over the APPENDED index's shortlist: identical
     // stored bits, identical integer dot, identical top-5
     "q130_ivfpq_append" ->
-      s"""WITH sl AS (
-         |  SELECT q_id, n_id FROM read_parquet('${predsPath("q130_shortlist")}/*.parquet')
-         |), u AS (
-         |  SELECT vec_id, unit FROM read_parquet('${predsPath("q130_units")}/*.parquet')
-         |), dots AS (
-         |  SELECT s.q_id, s.n_id,
-         |    CAST(list_sum(list_transform(generate_series(1, len(a.unit)), i ->
-         |      CAST(floor(CAST(a.unit[i] AS DOUBLE) * CAST(b.unit[i] AS DOUBLE) * 1000000000000) AS BIGINT)))
-         |      AS BIGINT) AS dot_q
-         |  FROM sl s
-         |  JOIN u a ON s.q_id = a.vec_id
-         |  JOIN u b ON s.n_id = b.vec_id
-         |)
-         |SELECT * FROM (
-         |  SELECT q_id, n_id, dot_q,
-         |         CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dot_q DESC, n_id) AS BIGINT) AS rank
-         |  FROM dots) WHERE rank <= 5""".stripMargin,
+      shortlistTopKSql(predsPath("q130_shortlist"), predsPath("q130_units")),
 
     // both rankings and the recall arithmetic replayed over the same
     // stored unit bits: exact = q17's brute-force form over units,
     // approx = q94's rerank form over the persisted shortlist
     "q137_ann_recall" ->
-      s"""WITH u AS (
-         |  SELECT vec_id, unit FROM read_parquet('${predsPath("q137_units")}/*.parquet')
-         |), qd AS (
+      s"""WITH ${unitsCte(predsPath("q137_units"))}, qd AS (
          |  SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-         |    CAST(list_sum(list_transform(generate_series(1, len(q.unit)), i ->
-         |      CAST(floor(CAST(q.unit[i] AS DOUBLE) * CAST(c.unit[i] AS DOUBLE) * 1000000000000) AS BIGINT)))
-         |      AS BIGINT) AS dot_q
+         |    ${unitDotSql("q", "c")} AS dot_q
          |  FROM u q JOIN u c ON q.vec_id % 50 = 0 AND q.vec_id <> c.vec_id
          |), ex AS (
          |  SELECT q_id, n_id FROM (
          |    SELECT q_id, n_id,
          |           ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dot_q DESC, n_id) AS rnk
          |    FROM qd) WHERE rnk <= 5
-         |), sd AS (
-         |  SELECT s.q_id, s.n_id,
-         |    CAST(list_sum(list_transform(generate_series(1, len(a.unit)), i ->
-         |      CAST(floor(CAST(a.unit[i] AS DOUBLE) * CAST(b.unit[i] AS DOUBLE) * 1000000000000) AS BIGINT)))
-         |      AS BIGINT) AS dot_q
-         |  FROM read_parquet('${predsPath("q137_shortlist")}/*.parquet') s
-         |  JOIN u a ON s.q_id = a.vec_id
-         |  JOIN u b ON s.n_id = b.vec_id
-         |), ap AS (
+         |), ${pairDotsCte("sd", parquetScan(predsPath("q137_shortlist")))}, ap AS (
          |  SELECT q_id, n_id, 1 AS hit FROM (
          |    SELECT q_id, n_id,
          |           ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dot_q DESC, n_id) AS rnk
@@ -1085,78 +1037,14 @@ object SimilarityQueries {
     // lexical leg is restated in full from `documents` (rare-token
     // postings, shared-count rank), fusion is 1e9 // (60+rank) per leg
     "q490_rrf_hybrid" ->
-      s"""WITH sl AS (
-         |  SELECT q_id, n_id FROM read_parquet('${predsPath("q490_cands")}/*.parquet')
-         |), u AS (
-         |  SELECT vec_id, unit FROM read_parquet('${predsPath("q490_units")}/*.parquet')
-         |), dots AS (
-         |  SELECT s.q_id, s.n_id,
-         |    CAST(list_sum(list_transform(generate_series(1, len(a.unit)), i ->
-         |      CAST(floor(CAST(a.unit[i] AS DOUBLE) * CAST(b.unit[i] AS DOUBLE) * 1000000000000) AS BIGINT)))
-         |      AS BIGINT) AS dot_q
-         |  FROM sl s
-         |  JOIN u a ON s.q_id = a.vec_id
-         |  JOIN u b ON s.n_id = b.vec_id
-         |), vec AS (
-         |  SELECT q_id, n_id, rank_v FROM (
-         |    SELECT q_id, n_id,
-         |      CAST(ROW_NUMBER() OVER (PARTITION BY q_id
-         |        ORDER BY dot_q DESC, n_id) AS BIGINT) AS rank_v
-         |    FROM dots) WHERE rank_v <= 10
-         |), toks AS (
-         |  SELECT doc_id, unnest(list_distinct(
-         |    regexp_extract_all(lower(text), '[a-z0-9]+'))) AS tok
-         |  FROM documents
-         |), rare AS (
-         |  SELECT tok FROM toks GROUP BY tok
-         |  HAVING count(*) BETWEEN 2 AND 20
-         |), post AS (
-         |  SELECT t.doc_id, t.tok FROM toks t JOIN rare r ON t.tok = r.tok
-         |), ov AS (
-         |  SELECT q.doc_id AS q_id, n.doc_id AS n_id,
-         |    CAST(count(*) AS BIGINT) AS shared
-         |  FROM post q JOIN post n ON q.tok = n.tok
-         |  WHERE q.doc_id % 50 = 0 AND q.doc_id <> n.doc_id
-         |  GROUP BY 1, 2
-         |), lex AS (
-         |  SELECT q_id, n_id, rank_l FROM (
-         |    SELECT q_id, n_id,
-         |      CAST(ROW_NUMBER() OVER (PARTITION BY q_id
-         |        ORDER BY shared DESC, n_id) AS BIGINT) AS rank_l
-         |    FROM ov) WHERE rank_l <= 10
-         |), fused AS (
-         |  SELECT COALESCE(v.q_id, l.q_id) AS q_id,
-         |    COALESCE(v.n_id, l.n_id) AS n_id,
-         |    CAST(COALESCE(1000000000 // (60 + v.rank_v), 0)
-         |       + COALESCE(1000000000 // (60 + l.rank_l), 0) AS BIGINT)
-         |      AS score_rrf
-         |  FROM vec v FULL OUTER JOIN lex l
-         |    ON v.q_id = l.q_id AND v.n_id = l.n_id
-         |)
-         |SELECT q_id, n_id, score_rrf, rank_rrf FROM (
-         |  SELECT q_id, n_id, score_rrf,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id
-         |      ORDER BY score_rrf DESC, n_id) AS BIGINT) AS rank_rrf
-         |  FROM fused) WHERE rank_rrf <= 5""".stripMargin,
+      rrfHybridSql(predsPath("q490_cands"), predsPath("q490_units")),
 
 
     // the three unrolled greedy steps restated over the same persisted
     // shortlist + units: rel = quantized dot (k=10 rank), every
     // pairwise sim the same dot formula, mmr = 7*rel - 3*maxsim
     "q491_mmr_rerank" ->
-      s"""WITH sl AS (
-         |  SELECT q_id, n_id FROM read_parquet('${predsPath("q491_cands")}/*.parquet')
-         |), u AS (
-         |  SELECT vec_id, unit FROM read_parquet('${predsPath("q491_units")}/*.parquet')
-         |), dots AS (
-         |  SELECT s.q_id, s.n_id,
-         |    CAST(list_sum(list_transform(generate_series(1, len(a.unit)), i ->
-         |      CAST(floor(CAST(a.unit[i] AS DOUBLE) * CAST(b.unit[i] AS DOUBLE) * 1000000000000) AS BIGINT)))
-         |      AS BIGINT) AS dot_q
-         |  FROM sl s
-         |  JOIN u a ON s.q_id = a.vec_id
-         |  JOIN u b ON s.n_id = b.vec_id
-         |), rel AS (
+      s"""WITH ${shortlistDotsChain(predsPath("q491_cands"), predsPath("q491_units"))}, rel AS (
          |  SELECT q_id, n_id, rel FROM (
          |    SELECT q_id, n_id, dot_q AS rel,
          |      CAST(ROW_NUMBER() OVER (PARTITION BY q_id
@@ -1164,9 +1052,7 @@ object SimilarityQueries {
          |    FROM dots) WHERE rank <= 10
          |), sim AS (
          |  SELECT a.q_id, a.n_id AS i, b.n_id AS j,
-         |    CAST(list_sum(list_transform(generate_series(1, len(x.unit)), t ->
-         |      CAST(floor(CAST(x.unit[t] AS DOUBLE) * CAST(y.unit[t] AS DOUBLE) * 1000000000000) AS BIGINT)))
-         |      AS BIGINT) AS s
+         |    ${unitDotSql("x", "y", "t")} AS s
          |  FROM rel a JOIN rel b ON a.q_id = b.q_id AND a.n_id <> b.n_id
          |  JOIN u x ON a.n_id = x.vec_id
          |  JOIN u y ON b.n_id = y.vec_id
@@ -1214,19 +1100,7 @@ object SimilarityQueries {
     // the q28 rerank chain at k=1 plus the threshold flag, over the
     // decontamination probe's persisted shortlist and units
     "q497_semantic_decon" ->
-      s"""WITH sl AS (
-         |  SELECT q_id, n_id FROM read_parquet('${predsPath("q497_cands")}/*.parquet')
-         |), u AS (
-         |  SELECT vec_id, unit FROM read_parquet('${predsPath("q497_units")}/*.parquet')
-         |), dots AS (
-         |  SELECT s.q_id, s.n_id,
-         |    CAST(list_sum(list_transform(generate_series(1, len(a.unit)), i ->
-         |      CAST(floor(CAST(a.unit[i] AS DOUBLE) * CAST(b.unit[i] AS DOUBLE) * 1000000000000) AS BIGINT)))
-         |      AS BIGINT) AS dot_q
-         |  FROM sl s
-         |  JOIN u a ON s.q_id = a.vec_id
-         |  JOIN u b ON s.n_id = b.vec_id
-         |)
+      s"""WITH ${shortlistDotsChain(predsPath("q497_cands"), predsPath("q497_units"))}
          |SELECT q_id, n_id, dot_q,
          |  CAST(CASE WHEN dot_q >= 950000000000 THEN 1 ELSE 0 END
          |    AS BIGINT) AS flagged
@@ -1241,89 +1115,19 @@ object SimilarityQueries {
     // a green row certifies the drained per-batch probes feed the same
     // fusion the batch path serves
     "q501_hybrid_stream" ->
-      s"""WITH sl AS (
-         |  SELECT q_id, n_id FROM read_parquet('${predsPath("q501_cands")}/*.parquet')
-         |), u AS (
-         |  SELECT vec_id, unit FROM read_parquet('${predsPath("q501_units")}/*.parquet')
-         |), dots AS (
-         |  SELECT s.q_id, s.n_id,
-         |    CAST(list_sum(list_transform(generate_series(1, len(a.unit)), i ->
-         |      CAST(floor(CAST(a.unit[i] AS DOUBLE) * CAST(b.unit[i] AS DOUBLE) * 1000000000000) AS BIGINT)))
-         |      AS BIGINT) AS dot_q
-         |  FROM sl s
-         |  JOIN u a ON s.q_id = a.vec_id
-         |  JOIN u b ON s.n_id = b.vec_id
-         |), vec AS (
-         |  SELECT q_id, n_id, rank_v FROM (
-         |    SELECT q_id, n_id,
-         |      CAST(ROW_NUMBER() OVER (PARTITION BY q_id
-         |        ORDER BY dot_q DESC, n_id) AS BIGINT) AS rank_v
-         |    FROM dots) WHERE rank_v <= 10
-         |), toks AS (
-         |  SELECT doc_id, unnest(list_distinct(
-         |    regexp_extract_all(lower(text), '[a-z0-9]+'))) AS tok
-         |  FROM documents
-         |), rare AS (
-         |  SELECT tok FROM toks GROUP BY tok
-         |  HAVING count(*) BETWEEN 2 AND 20
-         |), post AS (
-         |  SELECT t.doc_id, t.tok FROM toks t JOIN rare r ON t.tok = r.tok
-         |), ov AS (
-         |  SELECT q.doc_id AS q_id, n.doc_id AS n_id,
-         |    CAST(count(*) AS BIGINT) AS shared
-         |  FROM post q JOIN post n ON q.tok = n.tok
-         |  WHERE q.doc_id % 50 = 0 AND q.doc_id <> n.doc_id
-         |  GROUP BY 1, 2
-         |), lex AS (
-         |  SELECT q_id, n_id, rank_l FROM (
-         |    SELECT q_id, n_id,
-         |      CAST(ROW_NUMBER() OVER (PARTITION BY q_id
-         |        ORDER BY shared DESC, n_id) AS BIGINT) AS rank_l
-         |    FROM ov) WHERE rank_l <= 10
-         |), fused AS (
-         |  SELECT COALESCE(v.q_id, l.q_id) AS q_id,
-         |    COALESCE(v.n_id, l.n_id) AS n_id,
-         |    CAST(COALESCE(1000000000 // (60 + v.rank_v), 0)
-         |       + COALESCE(1000000000 // (60 + l.rank_l), 0) AS BIGINT)
-         |      AS score_rrf
-         |  FROM vec v FULL OUTER JOIN lex l
-         |    ON v.q_id = l.q_id AND v.n_id = l.n_id
-         |)
-         |SELECT q_id, n_id, score_rrf, rank_rrf FROM (
-         |  SELECT q_id, n_id, score_rrf,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id
-         |      ORDER BY score_rrf DESC, n_id) AS BIGINT) AS rank_rrf
-         |  FROM fused) WHERE rank_rrf <= 5""".stripMargin,
+      rrfHybridSql(predsPath("q501_cands"), predsPath("q501_units")),
 
 
     // both reranks replayed from the stored shortlists + units, then
     // the same exact-integer agreement rollup
     "q506_index_shadow" ->
-      s"""WITH u AS (
-         |  SELECT vec_id, unit FROM read_parquet('${predsPath("q506_units")}/*.parquet')
-         |), da AS (
-         |  SELECT s.q_id, s.n_id,
-         |    CAST(list_sum(list_transform(generate_series(1, len(a.unit)), i ->
-         |      CAST(floor(CAST(a.unit[i] AS DOUBLE) * CAST(b.unit[i] AS DOUBLE) * 1000000000000) AS BIGINT)))
-         |      AS BIGINT) AS dot_q
-         |  FROM read_parquet('${predsPath("q506_cands_a")}/*.parquet') s
-         |  JOIN u a ON s.q_id = a.vec_id
-         |  JOIN u b ON s.n_id = b.vec_id
-         |), ta AS (
+      s"""WITH ${unitsCte(predsPath("q506_units"))}, ${pairDotsCte("da", parquetScan(predsPath("q506_cands_a")))}, ta AS (
          |  SELECT q_id, n_id FROM (
          |    SELECT q_id, n_id,
          |      ROW_NUMBER() OVER (PARTITION BY q_id
          |        ORDER BY dot_q DESC, n_id) AS rnk
          |    FROM da) WHERE rnk <= 5
-         |), db AS (
-         |  SELECT s.q_id, s.n_id,
-         |    CAST(list_sum(list_transform(generate_series(1, len(a.unit)), i ->
-         |      CAST(floor(CAST(a.unit[i] AS DOUBLE) * CAST(b.unit[i] AS DOUBLE) * 1000000000000) AS BIGINT)))
-         |      AS BIGINT) AS dot_q
-         |  FROM read_parquet('${predsPath("q506_sl_b")}/*.parquet') s
-         |  JOIN u a ON s.q_id = a.vec_id
-         |  JOIN u b ON s.n_id = b.vec_id
-         |), tb AS (
+         |), ${pairDotsCte("db", parquetScan(predsPath("q506_sl_b")))}, tb AS (
          |  SELECT q_id, n_id FROM (
          |    SELECT q_id, n_id,
          |      ROW_NUMBER() OVER (PARTITION BY q_id

@@ -916,125 +916,24 @@ object StreamingQueries {
 
     // the q477 replay over the audio index's recovered base signatures
     "q481_audio_ingest_stream" ->
-      s"""WITH n AS (
-         |  SELECT asset_id AS new_id, sig,
-         |    CAST(sig AS HUGEINT)
-         |      + CASE WHEN sig < 0 THEN CAST('18446744073709551616' AS HUGEINT)
-         |             ELSE CAST(0 AS HUGEINT) END AS usig
-         |  FROM read_parquet('${predsPath("q481_new_sigs")}/*.parquet')
-         |), o AS (
-         |  SELECT DISTINCT id AS old_id, sig FROM
-         |    read_parquet('${predsPath("q481_index")}/*/*/*.parquet')
-         |), ob AS (
-         |  SELECT old_id, sig,
-         |    CAST(sig AS HUGEINT)
-         |      + CASE WHEN sig < 0 THEN CAST('18446744073709551616' AS HUGEINT)
-         |             ELSE CAST(0 AS HUGEINT) END AS usig
-         |  FROM o
-         |), bands(band, d) AS (VALUES
-         |    (0, CAST('1' AS HUGEINT)),
-         |    (1, CAST('256' AS HUGEINT)),
-         |    (2, CAST('65536' AS HUGEINT)),
-         |    (3, CAST('16777216' AS HUGEINT)),
-         |    (4, CAST('4294967296' AS HUGEINT)),
-         |    (5, CAST('1099511627776' AS HUGEINT)),
-         |    (6, CAST('281474976710656' AS HUGEINT)),
-         |    (7, CAST('72057594037927936' AS HUGEINT))
-         |), bn AS (
-         |  SELECT new_id, sig, b.band, (usig // b.d) % 256 AS key
-         |  FROM n CROSS JOIN bands b
-         |), bo AS (
-         |  SELECT old_id, sig, b.band, (usig // b.d) % 256 AS key
-         |  FROM ob CROSS JOIN bands b
-         |)
-         |SELECT DISTINCT bn.new_id, bo.old_id,
-         |  CAST(bit_count(xor(bn.sig, bo.sig)) AS INT) AS hamming
-         |FROM bn JOIN bo ON bn.band = bo.band AND bn.key = bo.key
-         |WHERE bit_count(xor(bn.sig, bo.sig)) <= 7""".stripMargin,
+      indexIngestSql(predsPath("q481_new_sigs"), predsPath("q481_index")),
 
 
     // cross-set banding replay over the re-staged new signatures × the
     // base signatures recovered from the exploded index layout — the kb
     // pruning is a read optimization with identical pairs
     "q477_image_ingest_stream" ->
-      s"""WITH n AS (
-         |  SELECT asset_id AS new_id, sig,
-         |    CAST(sig AS HUGEINT)
-         |      + CASE WHEN sig < 0 THEN CAST('18446744073709551616' AS HUGEINT)
-         |             ELSE CAST(0 AS HUGEINT) END AS usig
-         |  FROM read_parquet('${predsPath("q477_new_sigs")}/*.parquet')
-         |), o AS (
-         |  SELECT DISTINCT id AS old_id, sig FROM
-         |    read_parquet('${predsPath("q476_index")}/*/*/*.parquet')
-         |), ob AS (
-         |  SELECT old_id, sig,
-         |    CAST(sig AS HUGEINT)
-         |      + CASE WHEN sig < 0 THEN CAST('18446744073709551616' AS HUGEINT)
-         |             ELSE CAST(0 AS HUGEINT) END AS usig
-         |  FROM o
-         |), bands(band, d) AS (VALUES
-         |    (0, CAST('1' AS HUGEINT)),
-         |    (1, CAST('256' AS HUGEINT)),
-         |    (2, CAST('65536' AS HUGEINT)),
-         |    (3, CAST('16777216' AS HUGEINT)),
-         |    (4, CAST('4294967296' AS HUGEINT)),
-         |    (5, CAST('1099511627776' AS HUGEINT)),
-         |    (6, CAST('281474976710656' AS HUGEINT)),
-         |    (7, CAST('72057594037927936' AS HUGEINT))
-         |), bn AS (
-         |  SELECT new_id, sig, b.band, (usig // b.d) % 256 AS key
-         |  FROM n CROSS JOIN bands b
-         |), bo AS (
-         |  SELECT old_id, sig, b.band, (usig // b.d) % 256 AS key
-         |  FROM ob CROSS JOIN bands b
-         |)
-         |SELECT DISTINCT bn.new_id, bo.old_id,
-         |  CAST(bit_count(xor(bn.sig, bo.sig)) AS INT) AS hamming
-         |FROM bn JOIN bo ON bn.band = bo.band AND bn.key = bo.key
-         |WHERE bit_count(xor(bn.sig, bo.sig)) <= 7""".stripMargin,
+      indexIngestSql(predsPath("q477_new_sigs"), predsPath("q476_index")),
 
 
     // cross-set banding replay over the re-staged new signatures × the
     // persisted index: 8×8-bit keys, index side capped per (band, key)
     // in the engine's md5 order, exact hamming ≤7 verify
     "q471_video_ingest_stream" ->
-      s"""WITH n AS (
-         |  SELECT asset_id AS new_id, sig,
-         |    CAST(sig AS HUGEINT)
-         |      + CASE WHEN sig < 0 THEN CAST('18446744073709551616' AS HUGEINT)
-         |             ELSE CAST(0 AS HUGEINT) END AS usig
-         |  FROM read_parquet('${predsPath("q471_new_sigs")}/*.parquet')
-         |), o AS (
-         |  SELECT asset_id AS old_id, sig,
-         |    CAST(sig AS HUGEINT)
-         |      + CASE WHEN sig < 0 THEN CAST('18446744073709551616' AS HUGEINT)
-         |             ELSE CAST(0 AS HUGEINT) END AS usig
-         |  FROM read_parquet('${predsPath("q471_index_sigs")}/*.parquet')
-         |), bands(band, d) AS (VALUES
-         |    (0, CAST('1' AS HUGEINT)),
-         |    (1, CAST('256' AS HUGEINT)),
-         |    (2, CAST('65536' AS HUGEINT)),
-         |    (3, CAST('16777216' AS HUGEINT)),
-         |    (4, CAST('4294967296' AS HUGEINT)),
-         |    (5, CAST('1099511627776' AS HUGEINT)),
-         |    (6, CAST('281474976710656' AS HUGEINT)),
-         |    (7, CAST('72057594037927936' AS HUGEINT))
-         |), bn AS (
-         |  SELECT new_id, sig, b.band, (usig // b.d) % 256 AS key
-         |  FROM n CROSS JOIN bands b
-         |), bo AS (
-         |  SELECT old_id, sig, band, key FROM (
-         |    SELECT old_id, sig, b.band, (usig // b.d) % 256 AS key,
-         |      row_number() OVER (PARTITION BY b.band, (usig // b.d) % 256
-         |        ORDER BY md5(CAST(old_id AS VARCHAR) || '|'
-         |                     || CAST(sig AS VARCHAR))) AS rk
-         |    FROM o CROSS JOIN bands b)
-         |  WHERE rk <= 10000
-         |)
-         |SELECT DISTINCT bn.new_id, bo.old_id,
-         |  CAST(bit_count(xor(bn.sig, bo.sig)) AS INT) AS hamming
-         |FROM bn JOIN bo ON bn.band = bo.band AND bn.key = bo.key
-         |WHERE bit_count(xor(bn.sig, bo.sig)) <= 7""".stripMargin,
+      ("WITH " + crossProbeCtes(
+        ("n", "bn", "new_id", predsPath("q471_new_sigs")),
+        ("o", "bo", "old_id", predsPath("q471_index_sigs"))) + "\n" +
+        bandedProbeSelect("bn", "new_id", "bo", "old_id")),
 
 
     // the q443 certificate replayed over the STORED post-drain
@@ -1042,37 +941,7 @@ object StreamingQueries {
     // from the re-staged stored table (after + residual), decimal
     // reconciliation; n_batches is the drain's 4 single-file batches
     "q467_erasure_stream" ->
-      s"""WITH dig AS (
-         |  SELECT o_custkey,
-         |    CAST(CAST('0x' || substr(md5(
-         |      coalesce(md5(CAST(o_orderkey AS VARCHAR)), 'N') || '|' ||
-         |      coalesce(md5(CAST(o_custkey AS VARCHAR)), 'N') || '|' ||
-         |      coalesce(md5(o_orderstatus), 'N') || '|' ||
-         |      coalesce(md5(o_orderpriority), 'N')), 1, 14)
-         |      AS BIGINT) AS DECIMAL(20,0)) AS h
-         |  FROM orders
-         |), adig AS (
-         |  SELECT o_custkey,
-         |    CAST(CAST('0x' || substr(md5(
-         |      coalesce(md5(CAST(o_orderkey AS VARCHAR)), 'N') || '|' ||
-         |      coalesce(md5(CAST(o_custkey AS VARCHAR)), 'N') || '|' ||
-         |      coalesce(md5(o_orderstatus), 'N') || '|' ||
-         |      coalesce(md5(o_orderpriority), 'N')), 1, 14)
-         |      AS BIGINT) AS DECIMAL(20,0)) AS h
-         |  FROM read_parquet('${predsPath("q467_after")}/*.parquet')
-         |), cb AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n_before,
-         |    CAST(CAST(sum(h) AS DECIMAL(30,0)) AS VARCHAR) AS ck_before
-         |  FROM dig
-         |), cd AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n_deleted,
-         |    CAST(CAST(sum(h) AS DECIMAL(30,0)) AS VARCHAR) AS ck_deleted
-         |  FROM dig WHERE o_custkey % 97 = 0
-         |), ca AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n_after,
-         |    CAST(CAST(sum(h) AS DECIMAL(30,0)) AS VARCHAR) AS ck_after
-         |  FROM adig
-         |), res AS (
+      s"""WITH ${erasureChecksumsChain(predsPath("q467_after"))}, res AS (
          |  SELECT CAST(count(*) AS BIGINT) AS residual_rows
          |  FROM adig WHERE o_custkey % 97 = 0
          |), nb AS (
@@ -1093,30 +962,12 @@ object StreamingQueries {
     // identical gaps-and-islands semantics as q22 — here the Spark side
     // EXECUTED session_window as an actual AvailableNow stream, so the
     // hash match pins streaming execution, not just the operator
-    "q93_sessionize_stream" ->
-      """WITH m AS (
-        |  SELECT user_id, ts,
-        |         CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-        |                   < INTERVAL 30 MINUTE
-        |              THEN 0 ELSE 1 END AS new_s
-        |  FROM events
-        |), g AS (
-        |  SELECT user_id, ts,
-        |         sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-        |                          ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM m
-        |)
-        |SELECT min(ts) AS session_start, max(ts) + INTERVAL 30 MINUTE AS session_end,
-        |       user_id, CAST(count(*) AS BIGINT) AS n_events
-        |FROM g GROUP BY user_id, sid""".stripMargin,
+    "q93_sessionize_stream" -> sessionWindowsSql,
 
 
     // identical semantics as q21 — here the Spark side EXECUTED the
     // windowed aggregation as an AvailableNow stream
-    "q98_tumbling_stream" ->
-      s"""SELECT date_trunc('hour', ts) AS hour, event_type,
-         |  COUNT(*) AS n, ${dSum("value", 2, "sum_value")}
-         |FROM events GROUP BY 1, 2""".stripMargin,
+    "q98_tumbling_stream" -> hourlyWindowSql,
 
 
     // the final keyed state per user after a full drain == the plain
@@ -1154,76 +1005,18 @@ object StreamingQueries {
 
     // the drained streaming CDC fold == the one-shot batch merge (q108's
     // oracle verbatim — same change set, same last-writer-wins rule)
-    "q122_cdc_stream" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
-        |), u AS (
-        |  SELECT o_orderkey, 'X' AS o_orderstatus, o_totalprice, 2 AS ver
-        |  FROM o WHERE o_orderkey % 7 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, 'D', o_totalprice, 1 FROM o WHERE o_orderkey % 21 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey + 100000000, 'N', o_totalprice, 1
-        |  FROM o WHERE o_orderkey % 13 = 0
-        |), win AS (
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice
-        |  FROM (SELECT *, row_number() OVER (PARTITION BY o_orderkey
-        |                    ORDER BY ver DESC, o_orderstatus DESC) AS rn
-        |        FROM u)
-        |  WHERE rn = 1
-        |)
-        |SELECT o.o_orderkey, o.o_orderstatus, o.o_totalprice FROM o
-        |WHERE o.o_orderkey NOT IN (SELECT o_orderkey FROM win)
-        |UNION ALL
-        |SELECT o_orderkey, o_orderstatus, o_totalprice FROM win""".stripMargin,
+    "q122_cdc_stream" -> mergeUpsertSql,
 
     // q94's exact-rerank replay, over the shortlist the STREAM produced:
     // identical stored unit-vector bits, identical integer-quantized dot,
     // identical (dot_q DESC, n_id) top-5 — a green row certifies the
     // micro-batched serve path end-to-end
     "q127_ann_stream" ->
-      s"""WITH sl AS (
-         |  SELECT q_id, n_id FROM read_parquet('${predsPath("q127_shortlist")}/*.parquet')
-         |), u AS (
-         |  SELECT vec_id, unit FROM read_parquet('${predsPath("q127_units")}/*.parquet')
-         |), dots AS (
-         |  SELECT s.q_id, s.n_id,
-         |    CAST(list_sum(list_transform(generate_series(1, len(a.unit)), i ->
-         |      CAST(floor(CAST(a.unit[i] AS DOUBLE) * CAST(b.unit[i] AS DOUBLE) * 1000000000000) AS BIGINT)))
-         |      AS BIGINT) AS dot_q
-         |  FROM sl s
-         |  JOIN u a ON s.q_id = a.vec_id
-         |  JOIN u b ON s.n_id = b.vec_id
-         |)
-         |SELECT * FROM (
-         |  SELECT q_id, n_id, dot_q,
-         |         CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dot_q DESC, n_id) AS BIGINT) AS rank
-         |  FROM dots) WHERE rank <= 5""".stripMargin,
+      shortlistTopKSql(predsPath("q127_shortlist"), predsPath("q127_units")),
 
     // maintenance is layout-only: the CDC-folded-then-compacted table
     // still equals the one-shot merge (q122's oracle verbatim)
-    "q135_cdc_maintain" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
-        |), u AS (
-        |  SELECT o_orderkey, 'X' AS o_orderstatus, o_totalprice, 2 AS ver
-        |  FROM o WHERE o_orderkey % 7 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, 'D', o_totalprice, 1 FROM o WHERE o_orderkey % 21 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey + 100000000, 'N', o_totalprice, 1
-        |  FROM o WHERE o_orderkey % 13 = 0
-        |), win AS (
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice
-        |  FROM (SELECT *, row_number() OVER (PARTITION BY o_orderkey
-        |                    ORDER BY ver DESC, o_orderstatus DESC) AS rn
-        |        FROM u)
-        |  WHERE rn = 1
-        |)
-        |SELECT o.o_orderkey, o.o_orderstatus, o.o_totalprice FROM o
-        |WHERE o.o_orderkey NOT IN (SELECT o_orderkey FROM win)
-        |UNION ALL
-        |SELECT o_orderkey, o_orderstatus, o_totalprice FROM win""".stripMargin,
+    "q135_cdc_maintain" -> mergeUpsertSql,
 
     // the micro-batch-maintained aggregate table == the one-shot GROUP BY
     // (decimal partials are associative; a double running sum would be
@@ -1254,24 +1047,7 @@ object StreamingQueries {
 
     // q139's batch-funnel SQL verbatim — the streamed drain must equal it
     // whatever the micro-batch split
-    "q147_funnel_stream" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t_view
-        |            FROM events WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT s1.user_id, s1.t_view, min(e.ts) AS t_click
-        |       FROM s1 LEFT JOIN events e
-        |         ON e.user_id = s1.user_id AND e.event_type = 'click'
-        |        AND e.ts > s1.t_view
-        |       GROUP BY 1, 2),
-        |s3 AS (SELECT s2.user_id, s2.t_view, s2.t_click, min(e.ts) AS t_purchase
-        |       FROM s2 LEFT JOIN events e
-        |         ON e.user_id = s2.user_id AND e.event_type = 'purchase'
-        |        AND e.ts > s2.t_click
-        |       GROUP BY 1, 2, 3)
-        |SELECT user_id, t_view, t_click, t_purchase,
-        |       CAST(1 + CASE WHEN t_click IS NULL THEN 0 ELSE 1 END
-        |              + CASE WHEN t_purchase IS NULL THEN 0 ELSE 1 END
-        |            AS INT) AS stage
-        |FROM s3""".stripMargin,
+    "q147_funnel_stream" -> funnelSql,
 
 
     // the one-shot equi-width binning + histogram-quantile rule — the
@@ -1318,38 +1094,12 @@ object StreamingQueries {
 
     // the one-shot exact heavy-hitter SQL (q74's shape) — the streamed
     // per-batch Misra-Gries candidates + exact recount must equal this
-    "q233_topk_stream" ->
-      """WITH tok AS (
-        |  SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token
-        |  FROM documents
-        |), tot AS (SELECT count(*) AS n FROM tok)
-        |SELECT token, CAST(count(*) AS BIGINT) AS cnt
-        |FROM tok, tot
-        |GROUP BY token, n
-        |HAVING count(*) * 100 > n""".stripMargin,
+    "q233_topk_stream" -> heavyHittersSql,
 
 
     // the batch SRM SQL (q208's shape) — the streamed per-batch count
     // partials must merge to exactly this
-    "q217_srm_stream" ->
-      """WITH a AS (
-        |  SELECT event_type,
-        |    CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
-        |    CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1
-        |  FROM events GROUP BY 1
-        |), e AS (
-        |  SELECT *, CAST(n0 + n1 AS DOUBLE) / 2.0 AS expected FROM a
-        |)
-        |SELECT event_type, n0, n1,
-        |  (CAST(n0 AS DOUBLE) - expected) * (CAST(n0 AS DOUBLE) - expected)
-        |    / expected
-        |  + (CAST(n1 AS DOUBLE) - expected) * (CAST(n1 AS DOUBLE) - expected)
-        |    / expected AS chi2,
-        |  (CAST(n0 AS DOUBLE) - expected) * (CAST(n0 AS DOUBLE) - expected)
-        |    / expected
-        |  + (CAST(n1 AS DOUBLE) - expected) * (CAST(n1 AS DOUBLE) - expected)
-        |    / expected > 3.841 AS srm
-        |FROM e""".stripMargin,
+    "q217_srm_stream" -> srmCheckSql,
 
 
     // the one-shot rule SQL — the streamed per-batch partials must merge
@@ -1373,48 +1123,13 @@ object StreamingQueries {
     // identical to the batch q276 oracle — the streamed per-batch
     // k-min partials merge to EXACTLY the one-shot sketch, which is the
     // mergeability law the hash match pins
-    "q282_kmv_stream" ->
-      """WITH h AS (
-        |  SELECT DISTINCT event_type,
-        |    CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)
-        |         AS BIGINT) AS h
-        |  FROM events
-        |), exact AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_exact
-        |  FROM h GROUP BY 1
-        |), sk AS (
-        |  SELECT event_type, CAST(max(h) AS BIGINT) AS kth_min,
-        |         CAST(count(*) AS BIGINT) AS k_eff
-        |  FROM (SELECT event_type, h,
-        |               row_number() OVER (PARTITION BY event_type
-        |                                  ORDER BY h) AS rn
-        |        FROM h)
-        |  WHERE rn <= 32 GROUP BY 1
-        |)
-        |SELECT s.event_type, e.n_exact, s.k_eff, s.kth_min,
-        |       CAST(floor((CAST(s.k_eff AS DOUBLE) - 1.0) * pow(2.0, 60.0) /
-        |                   CAST(s.kth_min AS DOUBLE)) AS BIGINT) AS est
-        |FROM sk s JOIN exact e ON s.event_type = e.event_type""".stripMargin,
+    "q282_kmv_stream" -> kmvDistinctSql,
 
 
     // q243's batch Pareto SQL verbatim — the Spark side served it from
     // the stream-MAINTAINED incremental agg table after a real
     // multi-batch drain
-    "q297_pareto_stream" ->
-      """WITH rev AS (
-        |  SELECT p.p_brand,
-        |         CAST(sum(CAST(CAST(l.l_extendedprice AS DECIMAL(30,2)) * 100
-        |                       AS BIGINT)) AS BIGINT) AS rev_cents
-        |  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        |  GROUP BY 1
-        |), g AS (SELECT CAST(sum(rev_cents) AS BIGINT) AS grand FROM rev)
-        |SELECT CAST(row_number() OVER (ORDER BY rev_cents DESC, p_brand)
-        |            AS INT) AS rank,
-        |       p_brand, rev_cents,
-        |       CAST(CAST(sum(rev_cents) OVER (ORDER BY rev_cents DESC, p_brand
-        |         ROWS UNBOUNDED PRECEDING) AS BIGINT) * 1000000 // grand
-        |         AS BIGINT) AS cum_share_ppm
-        |FROM rev, g""".stripMargin,
+    "q297_pareto_stream" -> paretoRevenueSql,
 
 
     // q234's batch interval-union SQL verbatim — the Spark side EXECUTED
@@ -1449,14 +1164,7 @@ object StreamingQueries {
 
     // q140's SQL verbatim — the streamed marks + readout must reproduce
     // the one-shot cohort triangle exactly
-    "q306_retention_stream" ->
-      """WITH d AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-        |f AS (SELECT user_id, min(day) AS cohort_day FROM d GROUP BY 1)
-        |SELECT f.cohort_day,
-        |       CAST(d.day - f.cohort_day AS BIGINT) AS day_offset,
-        |       CAST(count(DISTINCT d.user_id) AS BIGINT) AS n_users
-        |FROM d JOIN f USING (user_id)
-        |GROUP BY 1, 2""".stripMargin,
+    "q306_retention_stream" -> retentionSql,
 
     // one-shot MI over the same engine-free dow derivation — the
     // streamed cell maintenance must reproduce it exactly
@@ -1524,61 +1232,11 @@ object StreamingQueries {
 
     // the one-shot batch skyline (q365's SQL) — the streamed partials
     // must merge to exactly this
-    "q373_skyline_stream" ->
-      """WITH p AS (
-        |  SELECT p_partkey AS pk,
-        |    CAST(CAST(p_retailprice AS DECIMAL(30,2)) * 100 AS BIGINT)
-        |      AS price,
-        |    CAST(p_size AS BIGINT) AS sz
-        |  FROM part),
-        |w AS (
-        |  SELECT pk, price, sz,
-        |    min(sz) OVER (ORDER BY price RANGE BETWEEN UNBOUNDED PRECEDING
-        |      AND 1 PRECEDING) AS min_cheaper,
-        |    min(sz) OVER (PARTITION BY price) AS min_eq
-        |  FROM p)
-        |SELECT pk, price, sz FROM w
-        |WHERE (min_cheaper IS NULL OR sz < min_cheaper) AND sz = min_eq"""
-        .stripMargin,
+    "q373_skyline_stream" -> skyline2dSql,
 
     // q457's one-shot interim algebra — the streamed day fold must
     // land on it exactly
-    "q463_pocock_stream" ->
-      """WITH daily AS (
-        |  SELECT CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS d,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS k
-        |  FROM events GROUP BY 1
-        |), r AS (
-        |  SELECT *, CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS rn,
-        |    (SELECT CAST(count(*) AS BIGINT) FROM daily) AS nd
-        |  FROM daily
-        |), buck AS (
-        |  SELECT least((rn - 1) * 5 // nd, 4) AS interim,
-        |    CAST(sum(n) AS BIGINT) AS n_i, CAST(sum(k) AS BIGINT) AS k_i
-        |  FROM r GROUP BY 1
-        |), cum AS (
-        |  SELECT interim,
-        |    CAST(sum(n_i) OVER (ORDER BY interim ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS BIGINT) AS n_cum,
-        |    CAST(sum(k_i) OVER (ORDER BY interim ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND CURRENT ROW) AS BIGINT) AS k_cum
-        |  FROM buck
-        |), z AS (
-        |  SELECT CAST(interim AS BIGINT) AS interim, n_cum, k_cum,
-        |    CAST(((2 * k_cum - n_cum) * (2 * k_cum - n_cum) // n_cum)
-        |        * 1000000
-        |      + ((2 * k_cum - n_cum) * (2 * k_cum - n_cum) % n_cum)
-        |        * 1000000 // n_cum AS BIGINT) AS z2_micro
-        |  FROM cum
-        |), f AS (
-        |  SELECT *, z2_micro > 5822569 AS crossed FROM z
-        |)
-        |SELECT interim, n_cum, k_cum, z2_micro, crossed,
-        |  (SELECT CAST(min(CASE WHEN crossed THEN interim END) AS BIGINT)
-        |   FROM f) AS first_cross
-        |FROM f""".stripMargin,
+    "q463_pocock_stream" -> pocockInterimsSql,
 
     // the one-shot card restricted to the mergeable columns
     "q458_card_stream" ->
@@ -1618,67 +1276,10 @@ object StreamingQueries {
 
     // q449's one-shot detector — the streamed day-partial fold must
     // land on it exactly
-    "q454_ph_stream" ->
-      """WITH daily AS (
-        |  SELECT CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS d,
-        |    CAST(sum(CAST(CAST(value AS DECIMAL(30,2)) * 100 AS BIGINT))
-        |      AS BIGINT) AS cents,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1
-        |), x AS (
-        |  SELECT d, n, cents // n AS x FROM daily
-        |), pre AS (
-        |  SELECT *, CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t,
-        |    sum(x) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING
-        |      AND CURRENT ROW) AS cum_x
-        |  FROM x
-        |), term AS (
-        |  SELECT *, x - cum_x // t - 50 AS term FROM pre
-        |), mseq AS (
-        |  SELECT *, sum(term) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED
-        |    PRECEDING AND CURRENT ROW) AS m
-        |  FROM term
-        |)
-        |SELECT d, n, CAST(x AS BIGINT) AS x,
-        |  CAST(cum_x // t AS BIGINT) AS mean_t, CAST(m AS BIGINT) AS m,
-        |  CAST(m - min(m) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED
-        |    PRECEDING AND CURRENT ROW) AS BIGINT) AS ph,
-        |  m - min(m) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING
-        |    AND CURRENT ROW) > 10000 AS alert
-        |FROM mseq""".stripMargin,
+    "q454_ph_stream" -> pageHinkleySql,
 
     // q424's one-shot BH algebra — the streamed fold must land on it
-    "q436_bh_fdr_stream" ->
-      """WITH h AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_odd
-        |  FROM events GROUP BY 1
-        |), z AS (
-        |  SELECT event_type, n, n_odd,
-        |    CAST(((2 * n_odd - n) * (2 * n_odd - n) // n) * 1000000
-        |      + ((2 * n_odd - n) * (2 * n_odd - n) % n) * 1000000 // n
-        |      AS BIGINT) AS z2_micro
-        |  FROM h
-        |), p AS (
-        |  SELECT *, CAST(least(1000000,
-        |      1000000000000 // greatest(z2_micro, 1)) AS BIGINT) AS p_ppm
-        |  FROM z
-        |), r AS (
-        |  SELECT *,
-        |    CAST(row_number() OVER (ORDER BY p_ppm, event_type)
-        |      AS BIGINT) AS rk,
-        |    (SELECT CAST(count(*) AS BIGINT) FROM p) AS m
-        |  FROM p
-        |), f AS (
-        |  SELECT *, p_ppm * m * 20 <= 1000000 * rk AS pass_bh FROM r
-        |), k AS (
-        |  SELECT coalesce(max(CASE WHEN pass_bh THEN rk END), 0) AS k_star
-        |  FROM f
-        |)
-        |SELECT event_type, n, n_odd, z2_micro, p_ppm, rk, pass_bh,
-        |  rk <= k.k_star AS rejected
-        |FROM f CROSS JOIN k""".stripMargin,
+    "q436_bh_fdr_stream" -> bhFdrSql,
 
     // the one-shot assignment against the SAME stored centroid artifact
     // the drain served — what's hash-checked is the model, not the fit
@@ -1740,54 +1341,17 @@ object StreamingQueries {
     // exactly what the drain computes per micro-batch, since a new doc
     // is atomic within one batch and the old side is static
     "q413_substring_marks_stream" ->
-      """WITH t AS (
-        |  SELECT doc_id AS id,
-        |         regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
-        |  FROM documents
-        |), tt AS (
-        |  SELECT id, ts FROM t WHERE len(ts) >= 8
-        |), g AS (
-        |  SELECT id, i AS pos, array_to_string(ts[i:i+7], ' ') AS gram
-        |  FROM tt, unnest(generate_series(1, len(ts) - 7)) AS u(i)
-        |), a AS (
-        |  SELECT id, pos, gram FROM g
-        |  WHERE CAST('0x' || substr(md5(gram), 1, 15) AS BIGINT) % 8 = 0
-        |), c AS (
-        |  SELECT id, pos, gram,
-        |         row_number() OVER (PARTITION BY gram
-        |           ORDER BY md5(CAST(id AS VARCHAR) || '#'
-        |                        || CAST(pos AS VARCHAR))) AS rk
-        |  FROM a WHERE id % 4 <> 0
-        |), cap AS (
-        |  SELECT id, pos, gram FROM c WHERE rk <= 64
-        |), cand AS (
-        |  SELECT x.id AS a_doc, x.pos AS a_pos, y.id AS b_doc, y.pos AS b_pos
-        |  FROM (SELECT id, pos, gram FROM a WHERE id % 4 = 0) x
-        |  JOIN cap y USING (gram)
-        |), w AS (
-        |  SELECT cand.*, ta.ts AS a_ts, tb.ts AS b_ts
-        |  FROM cand JOIN tt ta ON cand.a_doc = ta.id
-        |            JOIN tt tb ON cand.b_doc = tb.id
-        |), e AS (
-        |  SELECT a_doc, b_doc, a_pos, b_pos, i,
-        |    coalesce(
-        |      (CASE WHEN a_pos + i BETWEEN 1 AND len(a_ts)
-        |            THEN a_ts[CAST(a_pos + i AS BIGINT)] END) =
-        |      (CASE WHEN b_pos + i BETWEEN 1 AND len(b_ts)
-        |            THEN b_ts[CAST(b_pos + i AS BIGINT)] END),
-        |      false) AS eq
-        |  FROM w, unnest(generate_series(-48, 8 + 48 - 1)) AS u(i)
-        |), x AS (
-        |  SELECT a_doc, b_doc, a_pos, b_pos,
-        |    coalesce(min(CASE WHEN i >= 8 AND NOT eq THEN i END), 8 + 48)
-        |      AS rmiss,
-        |    coalesce(max(CASE WHEN i < 0 AND NOT eq THEN i END), -48 - 1)
-        |      AS lmiss
-        |  FROM e GROUP BY 1, 2, 3, 4
-        |)
-        |SELECT a_doc AS new_doc, b_doc AS old_doc,
-        |       CAST(count(*) AS BIGINT) AS n_anchor_pairs,
-        |       CAST(max(rmiss - lmiss - 1) AS BIGINT) AS max_len
-        |FROM x GROUP BY 1, 2 HAVING max(rmiss - lmiss - 1) >= 16""".stripMargin,
+      ("WITH " + Seq(windowDocsCte, anchorGramsCte(),
+        cappedAnchorsCte(" WHERE id % 4 <> 0"),
+        """cand AS (
+          |  SELECT x.id AS a_doc, x.pos AS a_pos, y.id AS b_doc, y.pos AS b_pos
+          |  FROM (SELECT id, pos, gram FROM a WHERE id % 4 = 0) x
+          |  JOIN cap y USING (gram)
+          |)""".stripMargin, anchorExtensionCte()).mkString(", ") +
+        """
+          |SELECT a_doc AS new_doc, b_doc AS old_doc,
+          |       CAST(count(*) AS BIGINT) AS n_anchor_pairs,
+          |       CAST(max(rmiss - lmiss - 1) AS BIGINT) AS max_len
+          |FROM x GROUP BY 1, 2 HAVING max(rmiss - lmiss - 1) >= 16""".stripMargin),
   )
 }

@@ -590,38 +590,11 @@ object TextQueries {
 
 
     "q115_bigram_nll" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
-        |  FROM documents
-        |), pb AS (
-        |  SELECT doc_id, bg.w1 AS w1, bg.w2 AS w2 FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(generate_series(1, len(ts)-1),
-        |             i -> struct_pack(w1 := ts[i], w2 := ts[i+1]))) AS bg
-        |    FROM t WHERE len(ts) >= 2)
-        |), tfb AS (
-        |  SELECT doc_id, w1, w2, CAST(count(*) AS BIGINT) AS tfb
-        |  FROM pb GROUP BY 1, 2, 3
-        |), cb AS (
-        |  SELECT w1, w2, CAST(count(*) AS BIGINT) AS cb FROM pb GROUP BY 1, 2
-        |), cw1 AS (
-        |  SELECT w1, CAST(sum(cb) AS BIGINT) AS cw1 FROM cb GROUP BY 1
-        |), uni AS (
-        |  SELECT unnest(ts) AS w2 FROM t
-        |), cu AS (
-        |  SELECT w2, CAST(count(*) AS BIGINT) AS cu FROM uni GROUP BY 1
-        |), model AS (
-        |  SELECT cb.w1, cb.w2,
-        |         CAST(floor(-1e6 * ln(
-        |           CAST(0.75 AS DOUBLE) * (CAST(cb AS DOUBLE) / CAST(cw1 AS DOUBLE)) +
-        |           CAST(0.25 AS DOUBLE) * (CAST(cu AS DOUBLE) /
-        |             CAST((SELECT count(*) FROM uni) AS DOUBLE)))) AS BIGINT) AS q
-        |  FROM cb JOIN cw1 USING (w1) JOIN cu USING (w2)
-        |)
-        |SELECT doc_id, CAST(sum(tfb) AS BIGINT) AS n_bigrams,
-        |       CAST(sum(tfb * q) // sum(tfb) AS BIGINT) AS nll_q
-        |FROM tfb JOIN model USING (w1, w2)
-        |GROUP BY 1""".stripMargin,
+      s"""WITH $bigramModelChain
+         |SELECT doc_id, CAST(sum(tfb) AS BIGINT) AS n_bigrams,
+         |       CAST(sum(tfb * q) // sum(tfb) AS BIGINT) AS nll_q
+         |FROM tfb JOIN model USING (w1, w2)
+         |GROUP BY 1""".stripMargin,
 
 
     "q32_bpe_tokens" ->

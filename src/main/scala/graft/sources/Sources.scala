@@ -110,27 +110,6 @@ object Sources {
       .schema(schema)
       .json(path)
 
-  /** JSONL scan that CAPTURES malformed lines — the [[csvWithCorruptCapture]]
-    * contract for JSON: parsed lines keep `corrupt` NULL, unparseable lines
-    * carry their raw text with data fields NULL, so ingest quarantines bad
-    * lines with one filter instead of silently nulling them. (Same Spark
-    * caveat: keep a data column in any query over the corrupt column.) */
-  def jsonlWithCorruptCapture(
-      spark: SparkSession,
-      path: String,
-      schema: StructType,
-      corruptCol: String = "corrupt"): DataFrame =
-    spark.read
-      .schema(schema.add(StructField(corruptCol, StringType, nullable = true)))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", corruptCol)
-      .json(path)
-
-  /** JSONL sink — one document object per line, the hand-off format for
-    * downstream tokenizer/training jobs. */
-  def writeJsonl(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
-
   /** S6: CSV sink (`join_acquirers.scala:37`). */
   def writeCsv(df: DataFrame, path: String, header: Boolean = true): Unit =
     df.write.mode("overwrite").option("header", header.toString).csv(path)
@@ -361,21 +340,6 @@ object Sources {
     }
     (pass, report)
   }
-
-  /** Provenance tagging: attach the source file (and optionally its
-    * basename shard key) to every row at scan time — the audit column a
-    * curation pipeline carries so any surviving document can be traced
-    * back to its ingest shard ("which crawl dump did this come from").
-    * `input_file_name()` is scan-local metadata: zero shuffle, zero cost
-    * beyond the string column; it survives projections but is only
-    * populated directly above a file scan, so tag FIRST, transform after. */
-  def withProvenance(
-      df: DataFrame,
-      fileCol: String = "source_file",
-      shardCol: String = "source_shard"): DataFrame =
-    df.withColumn(fileCol, input_file_name())
-      .withColumn(shardCol,
-        regexp_extract(col(fileCol), "([^/]+)$", 1))
 
   /** Range-sorted parquet sink: rows range-partitioned then sorted within
     * each file on `sortCols`. The 100-TB read story is ROW-GROUP SKIPPING:

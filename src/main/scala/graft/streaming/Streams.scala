@@ -588,8 +588,7 @@ object Streams {
       clicks: DataFrame,    // (event_id, user_id, ts, ...)
       purchases: DataFrame, // (event_id, user_id, ts, value, ...)
       horizon: String = "1 hour",
-      watermarkDelay: String = "2 hours",
-      joinType: String = "inner"): DataFrame = {
+      watermarkDelay: String = "2 hours"): DataFrame = {
     val c = clicks
       .select(col("event_id").as("click_id"), col("user_id"),
         col("ts").as("click_ts"))
@@ -602,27 +601,10 @@ object Streams {
         p,
         col("user_id") === col("p_user_id") &&
           col("purchase_ts") <= col("click_ts") &&
-          col("purchase_ts") >= col("click_ts") - expr(s"INTERVAL $horizon"),
-        joinType)
+          col("purchase_ts") >= col("click_ts") - expr(s"INTERVAL $horizon"))
       .select(col("click_id"), col("user_id"), col("click_ts"),
         col("purchase_id"), col("purchase_ts"), col("purchase_value"))
   }
-
-  /** [[clickPurchaseJoin]] as LEFT OUTER: every click emits, null-extended
-    * when no purchase landed in its horizon — the "unconverted clicks"
-    * report as one streaming join instead of a join + anti-join pair.
-    * Outer semantics change WHEN rows emit, not just which: a click's
-    * null-extended row can only be produced once the purchase-side
-    * watermark has passed `click_ts` (until then a matching purchase may
-    * still arrive), so outer results trail the watermark by design —
-    * that's the state-eviction contract, not latency to fix. Same
-    * bounded-state reasoning as the inner form. */
-  def clickPurchaseJoinOuter(
-      clicks: DataFrame,
-      purchases: DataFrame,
-      horizon: String = "1 hour",
-      watermarkDelay: String = "2 hours"): DataFrame =
-    clickPurchaseJoin(clicks, purchases, horizon, watermarkDelay, "left_outer")
 
   /** Streaming NEAR-duplicate detection — SimHash dedup at ingestion time,
     * the streaming counterpart of [[graft.llm.Dedup.simhashDups]] (exact

@@ -1,19 +1,10 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Column
 
 /** BPE merge-table support (north-star token counting, completing
-  * [[TextOps.bpeTokens]]): a pinned default merge table, a corpus trainer,
-  * and the Column surface over the native [[graft.expr.BpeEncode]] loop.
-  *
-  * Training follows the published algorithm (Sennrich et al. 2016): BPE
-  * merges are learned from the WORD-FREQUENCY dictionary, not the raw
-  * corpus — so the distributed part is one grouped count (map-side
-  * partial, vocabulary-bounded collect, exactly CountVectorizer's
-  * contract) and the merge loop runs driver-side on the tiny dictionary.
-  * At 100 TB the dictionary count is the only corpus-scale pass; cap it
-  * with `maxVocab` (frequency-ranked, deterministic tie-break).
+  * [[TextOps.bpeTokens]]): a pinned default merge table and the Column
+  * surface over the native [[graft.expr.BpeEncode]] loop.
   */
 object Bpe {
 
@@ -42,86 +33,4 @@ object Bpe {
   /** Full chain: text → GPT-2-style pre-tokens → merged subword units. */
   def subwords(text: Column, merges: Seq[(String, String)] = DefaultMerges): Column =
     encode(TextOps.bpeTokens(text), merges)
-
-  /** Learn a merge table from a corpus (the public BPE training loop).
-    *
-    * Distributed: one grouped pre-token count, truncated to the `maxVocab`
-    * most frequent words (deterministic: count desc, word asc). Driver:
-    * `numMerges` iterations over the dictionary — each picks the
-    * highest-frequency adjacent unit pair (ties broken lexicographically)
-    * and fuses it everywhere. Returned ranks are training-consistent by
-    * construction. */
-  def fitMerges(
-      docs: DataFrame,
-      textCol: String,
-      numMerges: Int,
-      maxVocab: Int = 65536): Seq[(String, String)] = {
-    require(numMerges >= 1 && maxVocab >= 1)
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val dict: Array[(Array[String], Long)] = docs
-      .select(explode(TextOps.bpeTokens(col(textCol))).as("t"))
-      .filter(length(col("t")) >= 2)
-      .groupBy(col("t")).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("t").asc)
-      .limit(maxVocab)
-      .as[(String, Long)]
-      .collect()
-      .map { case (w, n) => (splitCodePoints(w), n) }
-
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var vocab = dict
-    var it = 0
-    while (it < numMerges) {
-      val pairCounts = scala.collection.mutable.HashMap.empty[(String, String), Long]
-      vocab.foreach { case (units, n) =>
-        var i = 0
-        while (i < units.length - 1) {
-          val p = (units(i), units(i + 1))
-          pairCounts.update(p, pairCounts.getOrElse(p, 0L) + n)
-          i += 1
-        }
-      }
-      if (pairCounts.isEmpty) it = numMerges
-      else {
-        val best = pairCounts.toSeq
-          .minBy { case ((a, b), n) => (-n, a, b) }._1
-        merges += best
-        vocab = vocab.map { case (units, n) => (fuse(units, best), n) }
-        it += 1
-      }
-    }
-    merges.toSeq
-  }
-
-  /** Split by CODE POINT — must match [[graft.expr.BpeEncode]]'s initial
-    * units exactly, or merges learned here (e.g. on a surrogate half)
-    * could never fire at encode time on non-BMP text. */
-  private def splitCodePoints(w: String): Array[String] = {
-    val out = new Array[String](w.codePointCount(0, w.length))
-    var i = 0
-    var ci = 0
-    while (ci < w.length) {
-      val cc = Character.charCount(w.codePointAt(ci))
-      out(i) = w.substring(ci, ci + cc)
-      ci += cc
-      i += 1
-    }
-    out
-  }
-
-  private def fuse(units: Array[String], p: (String, String)): Array[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var i = 0
-    while (i < units.length) {
-      if (i < units.length - 1 && units(i) == p._1 && units(i + 1) == p._2) {
-        out += units(i) + units(i + 1)
-        i += 2
-      } else {
-        out += units(i)
-        i += 1
-      }
-    }
-    out.toArray
-  }
 }

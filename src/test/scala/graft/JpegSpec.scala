@@ -210,7 +210,7 @@ class JpegSpec extends AnyFunSuite {
   test("featureStats over mixed BMP+JPEG images: every image payload real-decodes") {
     val mixed = Multimodal.syntheticAssets(spark, 90)
       .unionByName(Multimodal.syntheticJpegAssets(spark, 30))
-    val stats = Multimodal.featureStats(mixed)
+    val stats = MultimodalSpec.featureStats(mixed)
       .select($"modality", $"n_assets", $"n_decoded")
       .as[(String, Long, Long)].collect()
       .map { case (m, a, d) => m -> (a, d) }.toMap

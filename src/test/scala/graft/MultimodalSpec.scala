@@ -1,9 +1,45 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.multimodal.Multimodal
+
+/** Test-side projections over the multimodal decoders. */
+object MultimodalSpec {
+
+  /** Decode each BMP payload ([[graft.expr.BmpDecode]]) and resample it to
+    * a `w×h` RGB24 tensor ([[graft.expr.RgbResize]]), with the
+    * [[Multimodal.resizeStub]] schema; a payload that does not decode
+    * resizes to NULL. */
+  def resizeImages(assets: DataFrame, w: Int, h: Int): DataFrame =
+    assets
+      .withColumn("img", graft.exprapi.bmpDecode(col("content")))
+      .withColumn("resized",
+        graft.exprapi.rgbResize(col("img.rgb"), col("img.w"), col("img.h"), w, h))
+      .withColumn("meta", struct(
+        col("meta.source").as("source"),
+        lit(w).as("declared_w"),
+        lit(h).as("declared_h")))
+      .drop("img")
+
+  /** Per modality: assets, payloads its real parser decoded, and the mean
+    * norm of the [[Multimodal.decodeFeatures]] vectors. */
+  def featureStats(assets: DataFrame, dims: Int = 16): DataFrame =
+    Multimodal.decodeFeatures(assets, dims)
+      .select(col("modality"),
+        (col("modality") === "image" && col("img").isNotNull ||
+          col("modality") === "audio" && col("aud").isNotNull ||
+          col("modality") === "video" && col("vid").isNotNull).cast("long")
+          .as("decoded"),
+        aggregate(col("features"), lit(0.0), (acc, x) => acc + x * x).as("sq"))
+      .groupBy(col("modality"))
+      .agg(
+        count(lit(1)).as("n_assets"),
+        sum(col("decoded")).as("n_decoded"),
+        avg(sqrt(col("sq"))).as("avg_feature_norm"))
+}
 
 class MultimodalSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -124,7 +160,7 @@ class MultimodalSpec extends AnyFunSuite {
 
     // DataFrame path over real synthetic BMPs + one corrupt payload
     val assets = Multimodal.syntheticAssets(spark, 6)
-    val out = Multimodal.resizeImages(assets.filter($"modality" === "image"), 4, 3)
+    val out = MultimodalSpec.resizeImages(assets.filter($"modality" === "image"), 4, 3)
     val rows = out.select($"resized", $"meta.declared_w", $"meta.declared_h")
       .as[(Array[Byte], Int, Int)].collect()
     assert(rows.nonEmpty)
@@ -134,7 +170,7 @@ class MultimodalSpec extends AnyFunSuite {
     val corrupt = Seq((99L, "image", Array[Byte](9, 9, 9))).toDF("asset_id", "modality", "content")
       .withColumn("meta", struct(lit("t").as("source"),
         lit(1).as("declared_w"), lit(1).as("declared_h")))
-    val bad = Multimodal.resizeImages(corrupt, 4, 3).select($"resized").head()
+    val bad = MultimodalSpec.resizeImages(corrupt, 4, 3).select($"resized").head()
     assert(bad.isNullAt(0), "corrupt payload must resize to NULL, not stub bytes")
   }
 
@@ -300,27 +336,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(feats === again)
   }
 
-  test("sampleFrames: correct frame count, size, and byte content") {
-    // raw 128-byte blobs — frame sampling is format-agnostic byte plumbing
-    val assets = (1L to 3L).map { id =>
-      (id, "blob", Array.tabulate[Byte](128)(i => (id * 31 + i).toByte))
-    }.toDF("asset_id", "modality", "content")
-    val frames = Multimodal.sampleFrames(assets, frameSize = 32, stride = 32)
-    val perAsset = frames.groupBy($"asset_id").count().as[(Long, Long)].collect().toMap
-    assert(perAsset.values.forall(_ === 4L), "128/32 = 4 non-overlapping frames")
-    assert(frames.select(length($"frame_bytes")).distinct().as[Int].collect().toSeq === Seq(32))
-    // overlapping stride
-    val overlapped = Multimodal.sampleFrames(assets, frameSize = 32, stride = 16)
-    assert(overlapped.groupBy($"asset_id").count().as[(Long, Long)].collect()
-      .forall(_._2 === 7L), "(128-32)/16+1 = 7")
-    // frame 0 equals the payload's first 32 bytes
-    val f0 = frames.filter($"asset_id" === 1 && $"frame_no" === 0)
-      .select(md5($"frame_bytes")).as[String].head()
-    val direct = assets.filter($"asset_id" === 1)
-      .select(md5(expr("substring(content, 1, 32)"))).as[String].head()
-    assert(f0 === direct)
-  }
-
   test("resizeStub: exact w*h*3 output bytes, meta updated, deterministic (STUB contract)") {
     val out = Multimodal.resizeStub(Multimodal.syntheticAssets(spark, 5), w = 4, h = 3)
     val lens = out.select(length($"resized")).distinct().as[Int].collect().toSeq
@@ -337,7 +352,7 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("featureStats: one row per modality, every image decoded, positive norms") {
-    val stats = Multimodal.featureStats(Multimodal.syntheticAssets(spark, 30))
+    val stats = MultimodalSpec.featureStats(Multimodal.syntheticAssets(spark, 30))
       .as[(String, Long, Long, Double)].collect()
     assert(stats.length === 3)
     assert(stats.map(_._2).sum === 30)

@@ -474,29 +474,6 @@ class SimilaritySpec extends AnyFunSuite {
     idx.unpersist()
   }
 
-  test("writePqIndex/loadPqIndex: disk round-trip rebuilds the codebook exactly and probes identically") {
-    val e = Tables.embeddings(spark, TestSpark.sf)
-    val cands = e.select($"vec_id".as("n_id"), $"embedding".as("n_emb"))
-    val idx = Similarity.fitPqIndex(cands, m = 8, kc = 16)
-    val dir = "target/tmp/pq_index_rt"
-    Similarity.writePqIndex(idx, dir)
-    val loaded = Similarity.loadPqIndex(spark, dir)
-    assert(loaded.m === idx.m && loaded.kc === idx.kc && loaded.subDim === idx.subDim)
-    assert(loaded.codebook.toSeq === idx.codebook.toSeq,
-      "codebook floats must round-trip bit-exactly")
-    assert(loaded.codes.storageLevel === org.apache.spark.storage.StorageLevel.NONE,
-      "loaded codes must stay a lazy compressed scan")
-
-    val queries = e.filter($"vec_id" % 100 === 0)
-      .select($"vec_id".as("q_id"), $"embedding".as("q_emb"))
-    val mem = Similarity.pqProbe(idx, queries, cands, k = 5)
-      .select($"q_id", $"n_id", $"rank").as[(Long, Long, Long)].collect().toSet
-    val disk = Similarity.pqProbe(loaded, queries, cands, k = 5)
-      .select($"q_id", $"n_id", $"rank").as[(Long, Long, Long)].collect().toSet
-    assert(mem === disk, "disk-served PQ probe must equal in-memory probe, rank for rank")
-    idx.unpersist()
-  }
-
   test("PQ kernels: null discipline on mismatched dims/codes; ADC approximates the true dot") {
     val cb = Array.tabulate(2 * 2 * 2)(_.toFloat) // m=2, kc=2, subDim=2
     val enc = graft.expr.PqOps.encode(

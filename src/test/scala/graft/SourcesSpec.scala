@@ -80,21 +80,6 @@ class SourcesSpec extends AnyFunSuite {
       s"scan must prune to the 2 referenced columns:\n$plan")
   }
 
-  test("withProvenance: every row carries its source file; shard key is the basename") {
-    val docs = Sources.withProvenance(Tables.documents(spark, TestSpark.sf))
-      .select($"doc_id", $"source_file", $"source_shard")
-    val rows = docs.as[(Long, String, String)].collect()
-    assert(rows.nonEmpty)
-    rows.foreach { case (_, f, s) =>
-      assert(f.endsWith(".parquet") && f.contains("documents"), s"file: $f")
-      assert(s.nonEmpty && !s.contains("/") && f.endsWith(s), s"shard: $s from $f")
-    }
-    // survives downstream transforms (tag first, transform after)
-    val after = docs.filter($"doc_id" % 2 === 0)
-      .groupBy($"source_shard").count().collect()
-    assert(after.nonEmpty && after.forall(_.getLong(1) > 0))
-  }
-
   test("writeSorted: range layout gives per-file disjoint min/max bands (row-group skip precondition)") {
     val df = Tables.orders(spark, TestSpark.sf)
       .select($"o_orderkey", $"o_orderdate", $"o_totalprice")
@@ -311,7 +296,11 @@ class SourcesSpec extends AnyFunSuite {
       "absent nested field must be NULL, extra field ignored")
 
     // corrupt capture: the unterminated line is quarantined with its raw text
-    val cap = Sources.jsonlWithCorruptCapture(spark, dir, schema).cache()
+    val cap = spark.read
+      .schema(schema.add(StructField("corrupt", StringType, nullable = true)))
+      .option("mode", "PERMISSIVE")
+      .option("columnNameOfCorruptRecord", "corrupt")
+      .json(dir).cache()
     val good = cap.filter($"corrupt".isNull).select($"doc_id").as[Long].collect().toSet
     assert(good === Set(1L, 2L))
     val bad = cap.filter($"corrupt".isNotNull).select($"corrupt").as[String].collect()
@@ -321,7 +310,7 @@ class SourcesSpec extends AnyFunSuite {
 
     // sink → source round trip preserves rows and nested structure
     val out = s"$tmp/jsonl_rt"
-    Sources.writeJsonl(plain.filter($"doc_id".isNotNull), out)
+    plain.filter($"doc_id".isNotNull).write.mode("overwrite").json(out)
     val back = Sources.jsonl(spark, out, schema)
     assert(back.filter($"doc_id" === 1L).select($"meta.lang").as[String].head() === "en")
     assert(back.count() === plain.filter($"doc_id".isNotNull).count())

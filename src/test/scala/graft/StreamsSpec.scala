@@ -219,50 +219,6 @@ class StreamsSpec extends AnyFunSuite {
     assert(batch === Set((2L, 10L, 5.0), (4L, 12L, 9.0)))
   }
 
-  test("clickPurchaseJoinOuter: unmatched clicks emit null-extended once the watermark passes") {
-    implicit val sqlCtx = spark.sqlContext
-    val purchases = Seq(
-      Ev(10, t(2), 100, "purchase", 5.0),  // within 1h of click 2 (10:05)
-      Ev(12, t(8), 200, "purchase", 9.0))  // within 1h of click 4 (10:10)
-    val clicks = sample.filter(_.event_type == "click") // 1,2,4; click 1 unmatched
-    // sentinels far past everything: advance BOTH watermarks beyond every
-    // real click's eviction point so outer rows flush; user 999 joins
-    // nothing real
-    val cSent = Ev(98, t(600), 999, "click", 0.0)
-    val pSent = Ev(99, t(600), 999, "purchase", 0.0)
-
-    val memC = MemoryStream[Ev]
-    val memP = MemoryStream[Ev]
-    val q = Streams.clickPurchaseJoinOuter(memC.toDF(), memP.toDF()).writeStream
-      .format("memory").queryName("ssjoin_outer_out").outputMode("append")
-      .option("checkpointLocation", ckpt("ssjoin_outer"))
-      .start()
-    try {
-      memC.addData(clicks: _*); memP.addData(purchases: _*)
-      q.processAllAvailable()
-      memC.addData(cSent); memP.addData(pSent)
-      q.processAllAvailable()
-      // one more empty-ish advance so the watermark computed from batch 2
-      // evicts and flushes the remaining outer state
-      memC.addData(Ev(96, t(1200), 998, "click", 0.0))
-      memP.addData(Ev(97, t(1200), 998, "purchase", 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-
-    val streamed = spark.table("ssjoin_outer_out")
-      .filter($"user_id" < 900)
-      .select($"click_id", $"purchase_id")
-      .as[(Long, Option[Long])].collect().toSet
-    val batch = Streams.clickPurchaseJoinOuter(
-        clicks.toDF(), purchases.toDF())
-      .select($"click_id", $"purchase_id")
-      .as[(Long, Option[Long])].collect().toSet
-    assert(batch === Set((1L, None), (2L, Some(10L)), (4L, Some(12L))),
-      s"batch outer join wrong: $batch")
-    assert(streamed === batch,
-      s"streaming outer must equal batch once watermarks pass: $streamed vs $batch")
-  }
-
   test("sessionize streaming: session_window merges across micro-batches and equals batch") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]

@@ -236,30 +236,6 @@ class TextOpsSpec extends AnyFunSuite {
       graft.exprapi.bpeEncode($"toks", Seq(emoji -> emoji)).as("u"))
       .as[Seq[String]].head()
     assert(merged === Seq(emoji + emoji, "a"))
-    // trainer/encoder consistency: a table fitMerges learns on astral text
-    // must actually fire at encode time (both sides split by code point)
-    val corpus = Seq((1L, s"$emoji$emoji $emoji$emoji $emoji$emoji"))
-      .toDF("doc_id", "text")
-    val learned = graft.text.Bpe.fitMerges(corpus, "text", numMerges = 1)
-    assert(learned === Seq(emoji -> emoji))
-    val enc = corpus.select(graft.text.Bpe.subwords($"text", learned).as("u"))
-      .as[Seq[String]].head()
-    assert(enc === Seq(emoji + emoji, emoji + emoji, emoji + emoji))
-  }
-
-  test("fitMerges learns expected merges on a toy corpus; learned ranks are training-consistent") {
-    val docs = Seq((1L, "aaab aaab aab")).toDF("doc_id", "text")
-    val m = graft.text.Bpe.fitMerges(docs, "text", numMerges = 2)
-    assert(m === Seq("a" -> "a", "a" -> "b"))
-    assertRankConsistent(m)
-    val enc = docs.select(graft.text.Bpe.subwords($"text", m).as("u"))
-      .as[Seq[String]].head()
-    assert(enc === Seq("aa", "ab", "aa", "ab", "aa", "b"))
-    // a corpus-learned table on the fixture docs stays consistent too
-    val fitted = graft.text.Bpe.fitMerges(
-      Tables.documents(spark, TestSpark.sf), "text", numMerges = 20)
-    assert(fitted.size === 20)
-    assertRankConsistent(fitted)
   }
 
   // Golden pairs for the FULL Porter algorithm (Porter 1980). The first two
