@@ -32,12 +32,10 @@ object SparkEntry {
     Relational.labelJoin(Tables.orders(spark, dir), Tables.lineitem(spark, dir))
   }
 
-  // a def, not a val: Analytics4Queries.sql and Analytics5Queries.sql are
-  // DYNAMIC (their q386, q390 and q409 oracles embed the stop round the
-  // engine realized at run time), so the area list must be re-evaluated
-  // whenever oracleSql is re-read — Verify dumps oracle_sql.json only
-  // after running every query
-  private def areas: Seq[(Map[String, (SparkSession, String) => DataFrame],
+  // lazy: an area's oracle text embeds staging paths
+  // (QueryShared.predsPath), read when the area object initializes, so
+  // callers set graft.preds.tag before the first access
+  private lazy val areas: Seq[(Map[String, (SparkSession, String) => DataFrame],
                           Map[String, String])] = Seq(
     (RelationalQueries.queries, RelationalQueries.sql),
     (TextQueries.queries, TextQueries.sql),
@@ -65,10 +63,8 @@ object SparkEntry {
   }
 
   /** DuckDB equivalents (driver registers each fixture parquet as a view
-    * named by table basename). Aliases match the Spark column names.
-    * A def (re-merged per access) so dynamic entries — q386's
-    * realized-stop-round unroll — are read post-run; see [[areas]]. */
-  def oracleSql: Map[String, String] = {
+    * named by table basename). Aliases match the Spark column names. */
+  lazy val oracleSql: Map[String, String] = {
     val maps = areas.map(_._2)
     val merged = maps.reduce(_ ++ _)
     require(merged.size == maps.map(_.size).sum,

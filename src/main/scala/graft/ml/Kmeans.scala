@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Convergence-witnessed Lloyd k-means over exact-quantized vectors — the
-  * FOURTH dynamic-oracle kernel class (after mass-propagation PageRank/HITS,
+  * FOURTH convergence-witnessed kernel class (after mass-propagation PageRank/HITS,
   * path-relaxation Bellman–Ford, and the linear-operator Markov fixpoint):
   * an ALTERNATING-minimization fixpoint, where each round solves two exact
   * sub-problems (nearest-centroid assignment, per-cluster integer mean) and
@@ -53,11 +53,9 @@ object Kmeans {
 
   /** FIXED-round Lloyd (no convergence witness): exactly `rounds`
     * assignment passes with `rounds − 1` interleaved centroid updates —
-    * the declared cross-engine semantics when the caller wants a STATIC
-    * oracle (the pageRankInt fixed-round rule) instead of the
-    * [[lloydConverged]] dynamic unroll; used by the elbow sweep where
-    * three k values would otherwise need three stop-round atomics.
-    * Same exact-integer algebra throughout. */
+    * the declared cross-engine semantics of the elbow sweep (q460),
+    * whose oracle runs the same rounds per k (the pageRankInt
+    * fixed-round rule). Same exact-integer algebra throughout. */
   def lloydFixed(x: DataFrame, seeds: DataFrame, rounds: Int)
       : DataFrame = {
     require(rounds >= 1, s"need at least one round, got $rounds")

@@ -132,10 +132,10 @@ object Graph {
     *
     * Returns (scores, stopRound, residuals-by-round). The realized stop
     * round is the convergence WITNESS: the caller rides it on every
-    * output row and the oracle unrolls exactly that many rounds of the
-    * same recurrence (the fixed-round q69 anchor), recomputing the final
-    * residual from its own last two rounds — so the loop's termination
-    * behavior, not just its final scores, is oracle-checked. Under a
+    * output row and the oracle runs the same recurrence (q69's) under
+    * the same stop rule, finding the stop round and the final residual
+    * itself — so the loop's termination behavior, not just its final
+    * scores, is oracle-checked. Under a
     * row-stochastic damped update the residual contracts by ≤
     * dampingPct/100 per round (dangling leak only shrinks it), so the
     * residual sequence is non-increasing — pinned as a GraphSpec law —
@@ -354,9 +354,8 @@ object Graph {
     *
     * Returns (dist, stopRound, improvedByRound). Fixed-round equality —
     * running the fixed-round recurrence `stopRound` (or more) rounds
-    * yields bit-identical distances — is the GraphSpec law that lets the
-    * dynamically-unrolled oracle (the q386 mechanism) state the naive
-    * unrolled form. */
+    * yields bit-identical distances — is the GraphSpec law that lets
+    * q330 cap the same loop at a fixed round count. */
   def bellmanFordConverged(
       edges: DataFrame, // (src, dst, w) — non-negative integer weights
       seeds: DataFrame, // (node)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.text.TextOps
+import QueryShared.repeatBuyerChain
 
 /** Round-9 continuation surfaces (q298–q316, less the streamed q306 which
   * lives with its family in [[StreamingQueries]]): group-to-group set
@@ -1250,7 +1251,7 @@ object Analytics2Queries {
         |            / (sqrt(dd) + CAST(s_g AS DOUBLE)) END AS b_coeff
         |FROM f""".stripMargin,
 
-    // q69's unrolled-round oracle shape with a seed-restricted teleport:
+    // q69's PageRank recurrence, unrolled, with a seed-restricted teleport:
     // per-node base mass (seeds only), 5 identical integer rounds
     "q323_personalized_pagerank" -> {
       def round(k: Int): String =
@@ -1670,14 +1671,7 @@ object Analytics2Queries {
         |FROM ranked CROSS JOIN dropped d WHERE rank <= 5""".stripMargin,
 
     "q310_calibration_ece" ->
-      """WITH n_ord AS (
-        |  SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_ord
-        |  FROM orders GROUP BY 1),
-        |base AS (
-        |  SELECT c.c_custkey,
-        |    CAST(CAST(c.c_acctbal AS DECIMAL(30,2)) * 100 AS BIGINT) AS x,
-        |    CASE WHEN coalesce(o.n_ord, 0) >= 2 THEN 1 ELSE 0 END AS label
-        |  FROM customer c LEFT JOIN n_ord o ON c.c_custkey = o.o_custkey),
+      s"""WITH $repeatBuyerChain,
         |r AS (
         |  SELECT label,
         |    CAST(row_number() OVER (ORDER BY x, c_custkey) AS BIGINT) AS rn,

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import QueryShared.{bellmanFordChain, hitsChain, repeatBuyerChain}
+
 /** Round-9 session-4 surfaces (q325+): classical k-sample inference
   * (one-way ANOVA F, Kruskal–Wallis H), rank association (Kendall
   * tau-b), rater agreement (Cohen's kappa), graph link prediction
@@ -2272,9 +2274,10 @@ object Analytics3Queries {
   /** DuckDB-runnable oracle equivalents — HUGEINT where Spark lifts to
     * decimal(38,0), `//` where Spark runs decDiv/`div` (non-negative
     * operands throughout), the SAME fixed-order double formula texts,
-    * and the SAME unrolled fixed-round recurrences (MATERIALIZED when a
+    * and the SAME fixed-round recurrences, unrolled (MATERIALIZED when a
     * stage references its predecessor more than once — plain CTEs
-    * inline exponentially, the q321 lesson). */
+    * inline exponentially, the q321 lesson) or as one recursive loop
+    * (q330, q331: [[QueryShared.fixpointCte]]). */
   val sql: Map[String, String] = Map(
 
     "q325_anova_f" ->
@@ -2383,16 +2386,10 @@ object Analytics3Queries {
         |FROM c""".stripMargin,
 
     "q328_cohens_kappa" ->
-      """WITH nord AS (
-        |  SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_ord
-        |  FROM orders GROUP BY 1),
-        |base AS (
-        |  SELECT CAST(CAST(c_acctbal AS DECIMAL(30,2)) * 100 AS BIGINT) AS x,
-        |    CASE WHEN COALESCE(n_ord, 0) >= 2 THEN 1 ELSE 0 END AS a
-        |  FROM customer LEFT JOIN nord ON c_custkey = o_custkey),
+      s"""WITH $repeatBuyerChain,
         |med AS (SELECT quantile_cont(x, 0.5) AS med FROM base),
         |lab AS (
-        |  SELECT a,
+        |  SELECT label AS a,
         |    CASE WHEN CAST(x AS DOUBLE) > med THEN 1 ELSE 0 END AS b
         |  FROM base CROSS JOIN med),
         |cm AS (
@@ -2438,68 +2435,16 @@ object Analytics3Queries {
         |FROM kept a JOIN kept b ON a.pk = b.pk AND a.sk < b.sk
         |GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin,
 
-    // 6 unrolled relaxation rounds — union + min is the same order-free
-    // recurrence the Spark loop runs
-    "q330_bellman_ford" -> {
-      def round(k: Int): String =
-        s"""d$k AS MATERIALIZED (
-           |  SELECT node, CAST(min(d) AS BIGINT) AS d FROM (
-           |    SELECT node, d FROM d${k - 1}
-           |    UNION ALL
-           |    SELECT e.dst AS node, p.d + e.w AS d
-           |    FROM d${k - 1} p JOIN edges e ON e.src = p.node)
-           |  GROUP BY 1)""".stripMargin
-      """WITH base AS (
-        |  SELECT o.o_custkey * 2 AS a, l.l_suppkey * 2 + 1 AS b,
-        |    CAST(1000000 // count(DISTINCT o.o_orderkey) AS BIGINT) AS w
-        |  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        |  GROUP BY 1, 2),
-        |edges AS MATERIALIZED (
-        |  SELECT a AS src, b AS dst, w FROM base
-        |  UNION ALL SELECT b, a, w FROM base),
-        |d0 AS (
-        |  SELECT c_custkey * 2 AS node, CAST(0 AS BIGINT) AS d
-        |  FROM customer WHERE c_custkey % 100 = 0),
-        |""".stripMargin +
-        (1 to 6).map(round).mkString(",\n") +
-        "\nSELECT node, d FROM d6"
-    },
+    // union + min relaxation, capped at 6 rounds — the same order-free
+    // recurrence and stop rule the Spark loop runs
+    "q330_bellman_ford" ->
+      s"WITH ${bellmanFordChain(6)}\nSELECT node, d FROM bf WHERE is_last",
 
-    // 5 unrolled mutual-reinforcement rounds, each half-step
-    // max-normalized to the 1e6 grid — the same integer recurrence
-    "q331_hits" -> {
-      def round(k: Int): String =
-        s"""a${k}0 AS MATERIALIZED (
-           |  SELECT e.dst, CAST(sum(h.h) AS BIGINT) AS a0
-           |  FROM edges e JOIN h${k - 1} h ON e.src = h.node
-           |  GROUP BY 1),
-           |a$k AS MATERIALIZED (
-           |  SELECT dst AS node,
-           |    CAST(a0 * 1000000 // (SELECT max(a0) FROM a${k}0) AS BIGINT)
-           |      AS a
-           |  FROM a${k}0),
-           |h${k}0 AS MATERIALIZED (
-           |  SELECT e.src, CAST(sum(a.a) AS BIGINT) AS h0
-           |  FROM edges e JOIN a$k a ON e.dst = a.node
-           |  GROUP BY 1),
-           |h$k AS MATERIALIZED (
-           |  SELECT src AS node,
-           |    CAST(h0 * 1000000 // (SELECT max(h0) FROM h${k}0) AS BIGINT)
-           |      AS h
-           |  FROM h${k}0)""".stripMargin
-      """WITH edges AS MATERIALIZED (
-        |  SELECT DISTINCT o.o_custkey * 2 AS src, l.l_suppkey * 2 + 1 AS dst
-        |  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-        |h0 AS (
-        |  SELECT DISTINCT src AS node, CAST(1000000 AS BIGINT) AS h
-        |  FROM edges),
-        |""".stripMargin +
-        (1 to 5).map(round).mkString(",\n") +
-        """
-          |SELECT node, 'hub' AS kind, h AS score FROM h5
-          |UNION ALL
-          |SELECT node, 'auth' AS kind, a AS score FROM a5""".stripMargin
-    },
+    // 5 mutual-reinforcement rounds, each half-step max-normalized to
+    // the 1e6 grid — the same integer recurrence
+    "q331_hits" ->
+      s"""WITH ${hitsChain(5)}
+         |SELECT node, kind, score FROM hs WHERE is_last""".stripMargin,
 
     "q332_ewma_exact" ->
       """WITH daily AS (
@@ -3021,14 +2966,7 @@ object Analytics3Queries {
         |FROM i""".stripMargin,
 
     "q347_brier_score" ->
-      """WITH nord AS (
-        |  SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_ord
-        |  FROM orders GROUP BY 1),
-        |base AS (
-        |  SELECT c_custkey,
-        |    CAST(CAST(c_acctbal AS DECIMAL(30,2)) * 100 AS BIGINT) AS x,
-        |    CASE WHEN COALESCE(n_ord, 0) >= 2 THEN 1 ELSE 0 END AS label
-        |  FROM customer LEFT JOIN nord ON c_custkey = o_custkey),
+      s"""WITH $repeatBuyerChain,
         |r AS (
         |  SELECT label,
         |    (CAST(row_number() OVER (ORDER BY x, c_custkey) AS BIGINT) - 1)
@@ -3299,14 +3237,7 @@ object Analytics3Queries {
         |FROM pred GROUP BY 1, 2""".stripMargin,
 
     "q357_woe_iv" ->
-      """WITH nord AS (
-        |  SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_ord
-        |  FROM orders GROUP BY 1),
-        |base AS (
-        |  SELECT c_custkey,
-        |    CAST(CAST(c_acctbal AS DECIMAL(30,2)) * 100 AS BIGINT) AS x,
-        |    CASE WHEN COALESCE(n_ord, 0) >= 2 THEN 1 ELSE 0 END AS label
-        |  FROM customer LEFT JOIN nord ON c_custkey = o_custkey),
+      s"""WITH $repeatBuyerChain,
         |r AS (
         |  SELECT label,
         |    least((CAST(row_number() OVER (ORDER BY x, c_custkey)
@@ -3383,14 +3314,7 @@ object Analytics3Queries {
         |  + (cc.cy - se.sy) * (cc.cy - se.sy) <= 100""".stripMargin,
 
     "q360_grid_search_calibration" ->
-      """WITH nord AS (
-        |  SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_ord
-        |  FROM orders GROUP BY 1),
-        |base AS (
-        |  SELECT c_custkey,
-        |    CAST(CAST(c_acctbal AS DECIMAL(30,2)) * 100 AS BIGINT) AS x,
-        |    CASE WHEN COALESCE(n_ord, 0) >= 2 THEN 1 ELSE 0 END AS label
-        |  FROM customer LEFT JOIN nord ON c_custkey = o_custkey),
+      s"""WITH $repeatBuyerChain,
         |r AS (
         |  SELECT label,
         |    (CAST(row_number() OVER (ORDER BY x, c_custkey) AS BIGINT) - 1)

@@ -5,37 +5,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import QueryShared.predsPath
+import QueryShared.{bellmanFordChain, hitsChain, pageRankChain, predsPath}
 
-/** Round-10 surfaces (q386+): the convergence-witnessed PageRank
-  * (epsilon-stop loop whose realized stop round rides the output AND
-  * parameterizes a dynamically-unrolled oracle), the bias-baseline
-  * recommender promoted to a persisted fit/serve artifact, and the SRM
-  * gate's custom-keyed-state streaming form.
+/** Round-10 surfaces (q386+): the convergence-witnessed PageRank, HITS
+  * and Bellman–Ford (epsilon- or no-change-stop loops whose realized
+  * stop round rides the output), the bias-baseline recommender promoted
+  * to a persisted fit/serve artifact, and the SRM gate's
+  * custom-keyed-state streaming form.
   *
-  * New mechanism in this file: [[sql]] is a `def`, not a `val` — the
-  * q386 oracle text embeds the stop round the engine REALIZED, which
-  * only exists after the query has run. `graft.Verify` dumps
-  * `oracle_sql.json` after executing every query, and
-  * [[graft.SparkEntry.oracleSql]] re-merges the area maps on each
-  * access, so the dynamic entry is always read post-run. Entries for
-  * queries that have NOT run emit an invalid-SQL sentinel instead of a
-  * silent 1-round fallback (round-10 ADVICE): a stale or never-run
-  * dynamic oracle must fail loudly in DuckDB, never replay wrong. */
+  * A convergence-witnessed oracle finds its own stop round: it runs the
+  * same recurrence as a `WITH RECURSIVE` loop under the engine's stop
+  * rule ([[QueryShared.fixpointCte]]), so the realized round count and
+  * the final witness on the output are checked, not replayed. */
 object Analytics4Queries {
 
   private def cents(c: org.apache.spark.sql.Column) =
     (c.cast("decimal(30,2)") * 100).cast("long")
-
-  /** Realized q386 stop round, set by the query run and read by the
-    * dynamic oracle entry (-1 = not run this process). */
-  private[graft] val prStopRound = new java.util.concurrent.atomic.AtomicInteger(-1)
-
-  /** Realized q390 stop round — same dynamic-oracle contract. */
-  private[graft] val hitsStopRound = new java.util.concurrent.atomic.AtomicInteger(-1)
-
-  /** Realized q397 stop round — same dynamic-oracle contract. */
-  private[graft] val bfStopRound = new java.util.concurrent.atomic.AtomicInteger(-1)
 
   /** The q69 interaction graph (customer/supplier bipartite, doubled to
     * undirected) — reused so the convergence twin anchors to the same
@@ -58,16 +43,15 @@ object Analytics4Queries {
     // total mass — measured ~9 rounds on this graph; the bipartite
     // doubling slows the 0.85^r contraction) or 20 rounds.
     // The realized stop round and final residual ride EVERY output row,
-    // and the oracle — generated AFTER the run — unrolls exactly
-    // stop_round rounds of the identical integer recurrence and
-    // recomputes the final residual from its own last two rounds: the
-    // termination behavior itself is hash-checked, not just the scores.
+    // and the oracle runs the identical integer recurrence under the
+    // same stop rule, so it finds the stop round and the final residual
+    // itself: the termination behavior is hash-checked, not just the
+    // scores.
     // GraphSpec pins the residual monotonicity and stop-condition laws.
     "q386_pagerank_converged" -> ((s, dir) => {
       val (scores, stopRound, residuals) =
         ops.Graph.pageRankIntConverged(interactionEdges(s, dir),
           maxIters = 20, epsilonUnits = 250000000000L)
-      prStopRound.set(stopRound)
       scores
         .withColumn("stop_round", lit(stopRound.toLong))
         .withColumn("final_residual", lit(residuals.last))
@@ -139,9 +123,8 @@ object Analytics4Queries {
     // with the q386 epsilon-stop discipline: iterate until the hub
     // scores' exact L1 residual Σ|hᵣ − hᵣ₋₁| (ppm units over the hub
     // node set) drops to <= epsilon, or 15 rounds. Stop round + final
-    // residual ride every row; the oracle is generated post-run and
-    // unrolls exactly that many rounds, recomputing the residual from
-    // its last two hub frames — the second member of the
+    // residual ride every row; the oracle runs the same rounds under the
+    // same stop rule and finds both itself — the second member of the
     // convergence-witnessed pair.
     "q390_hits_converged" -> ((s, dir) => {
       val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
@@ -156,7 +139,6 @@ object Analytics4Queries {
       // absolute residual which a 10× hub count would never reach
       val (hub, auth, round, residuals) =
         ops.Graph.hits(e, maxIters = 15, epsilonPerHub = Some(200L))
-      hitsStopRound.set(round)
       hub.select(col("node"), lit("hub").as("kind"), col("h").as("score"))
         .unionByName(auth.select(col("node"), lit("auth").as("kind"),
           col("a").as("score")))
@@ -354,10 +336,10 @@ object Analytics4Queries {
     // relaxation with the q386 no-change-stop discipline — the last
     // fixed-round iterative kernel gets its epsilon-stop twin): iterate
     // until a round reaches or shortens NOTHING, ride the realized stop
-    // round plus the last two rounds' improvement counts on every row,
-    // and unroll the oracle exactly stop_round rounds, recomputing both
-    // counts from its own last three frames — the termination behavior
-    // itself is hash-checked. changed_last must be 0 (that is WHY the
+    // round plus the last two rounds' improvement counts on every row;
+    // the oracle runs the same relaxation under the same stop rule and
+    // finds the stop round and both counts itself — the termination
+    // behavior is hash-checked. changed_last must be 0 (that is WHY the
     // loop stopped) and changed_prev > 0 (the stop round is minimal —
     // every earlier round improved, by loop construction).
     "q397_bellman_converged" -> ((s, dir) => {
@@ -378,7 +360,6 @@ object Analytics4Queries {
         .select((col("c_custkey") * 2).as("node"))
       val (dist, stopRound, improved) =
         ops.Graph.bellmanFordConverged(edges, seeds, maxIters = 20)
-      bfStopRound.set(stopRound)
       dist
         .withColumn("stop_round", lit(stopRound.toLong))
         .withColumn("changed_last", lit(improved.last))
@@ -421,147 +402,26 @@ object Analytics4Queries {
     }),
   )
 
-  /** q69's unrolled-round oracle generator, parameterized by round count
-    * — the fixed-round anchor the convergence witness replays against. */
-  private def pagerankUnrolledSql(rounds: Int): String = {
-    def round(k: Int): String =
-      s"""pr$k AS (
-         |  SELECT n.node,
-         |    CAST((SELECT base FROM params) + (85 * COALESCE(m.s, 0)) // 100 AS BIGINT) AS score
-         |  FROM nodes n LEFT JOIN (
-         |    SELECT e.dst AS node, SUM(p.score // d.deg) AS s
-         |    FROM pr${k - 1} p JOIN deg d ON p.node = d.node
-         |    JOIN edges e ON e.src = p.node
-         |    GROUP BY e.dst) m ON n.node = m.node)""".stripMargin
-    """WITH pairs AS (
-      |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-      |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-      |edges AS (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
-      |deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY 1),
-      |nodes AS (SELECT src AS node FROM edges UNION SELECT dst AS node FROM edges),
-      |params AS (SELECT CAST(1000000000000 // count(*) AS BIGINT) AS init,
-      |                  CAST((15 * (1000000000000 // count(*))) // 100 AS BIGINT) AS base
-      |           FROM nodes),
-      |pr0 AS (SELECT node, (SELECT init FROM params) AS score FROM nodes),
-      |""".stripMargin +
-      (1 to rounds).map(round).mkString(",\n") +
-      s""",
-         |resid AS (
-         |  SELECT CAST(SUM(ABS(a.score - b.score)) AS BIGINT) AS r
-         |  FROM pr$rounds a JOIN pr${rounds - 1} b ON a.node = b.node)
-         |SELECT a.node, a.score,
-         |  CAST($rounds AS BIGINT) AS stop_round,
-         |  resid.r AS final_residual
-         |FROM pr$rounds a CROSS JOIN resid""".stripMargin
-  }
-
-  /** q331's unrolled HITS oracle generator, parameterized by rounds. */
-  private def hitsUnrolledSql(rounds: Int): String = {
-    def round(k: Int): String =
-      s"""a${k}0 AS MATERIALIZED (
-         |  SELECT e.dst, CAST(sum(h.h) AS BIGINT) AS a0
-         |  FROM edges e JOIN h${k - 1} h ON e.src = h.node
-         |  GROUP BY 1),
-         |a$k AS MATERIALIZED (
-         |  SELECT dst AS node,
-         |    CAST(a0 * 1000000 // (SELECT max(a0) FROM a${k}0) AS BIGINT)
-         |      AS a
-         |  FROM a${k}0),
-         |h${k}0 AS MATERIALIZED (
-         |  SELECT e.src, CAST(sum(a.a) AS BIGINT) AS h0
-         |  FROM edges e JOIN a$k a ON e.dst = a.node
-         |  GROUP BY 1),
-         |h$k AS MATERIALIZED (
-         |  SELECT src AS node,
-         |    CAST(h0 * 1000000 // (SELECT max(h0) FROM h${k}0) AS BIGINT)
-         |      AS h
-         |  FROM h${k}0)""".stripMargin
-    val prev = if (rounds == 1) "h0" else s"h${rounds - 1}"
-    """WITH edges AS MATERIALIZED (
-      |  SELECT DISTINCT o.o_custkey * 2 AS src, l.l_suppkey * 2 + 1 AS dst
-      |  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-      |h0 AS (
-      |  SELECT DISTINCT src AS node, CAST(1000000 AS BIGINT) AS h
-      |  FROM edges),
-      |""".stripMargin +
-      (1 to rounds).map(round).mkString(",\n") +
-      s""",
-         |resid AS (
-         |  SELECT CAST(SUM(ABS(a.h - b.h)) AS BIGINT) AS r
-         |  FROM h$rounds a JOIN $prev b ON a.node = b.node)
-         |SELECT node, 'hub' AS kind, h AS score,
-         |  CAST($rounds AS BIGINT) AS stop_round, resid.r AS final_residual
-         |FROM h$rounds CROSS JOIN resid
-         |UNION ALL
-         |SELECT node, 'auth' AS kind, a AS score,
-         |  CAST($rounds AS BIGINT) AS stop_round, resid.r AS final_residual
-         |FROM a$rounds CROSS JOIN resid""".stripMargin
-  }
-
-  /** q397's dynamically-unrolled oracle: `rounds` Bellman–Ford
-    * relaxation rounds over the q330 trade graph, with the last two
-    * rounds' improvement counts recomputed from the oracle's OWN
-    * unrolled frames — the loop's termination evidence, not just its
-    * distances, must hash-match. */
-  private def bellmanUnrolledSql(rounds: Int): String = {
-    def round(k: Int): String =
-      s"""d$k AS MATERIALIZED (
-         |  SELECT node, CAST(min(d) AS BIGINT) AS d FROM (
-         |    SELECT node, d FROM d${k - 1}
-         |    UNION ALL
-         |    SELECT e.dst AS node, p.d + e.w AS d
-         |    FROM d${k - 1} p JOIN edges e ON e.src = p.node)
-         |  GROUP BY 1)""".stripMargin
-    def improved(kNew: Int): String =
-      s"""(SELECT CAST(count(*) AS BIGINT)
-         |   FROM d$kNew n LEFT JOIN d${kNew - 1} p ON n.node = p.node
-         |   WHERE p.node IS NULL OR n.d < p.d)""".stripMargin
-    val prev =
-      if (rounds >= 2) improved(rounds - 1) else "CAST(-1 AS BIGINT)"
-    """WITH base AS (
-      |  SELECT o.o_custkey * 2 AS a, l.l_suppkey * 2 + 1 AS b,
-      |    CAST(1000000 // count(DISTINCT o.o_orderkey) AS BIGINT) AS w
-      |  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-      |  GROUP BY 1, 2),
-      |edges AS MATERIALIZED (
-      |  SELECT a AS src, b AS dst, w FROM base
-      |  UNION ALL SELECT b, a, w FROM base),
-      |d0 AS (
-      |  SELECT c_custkey * 2 AS node, CAST(0 AS BIGINT) AS d
-      |  FROM customer WHERE c_custkey % 100 = 0),
-      |""".stripMargin +
-      (1 to rounds).map(round).mkString(",\n") +
-      s"""
-         |SELECT node, d, CAST($rounds AS BIGINT) AS stop_round,
-         |  ${improved(rounds)} AS changed_last,
-         |  $prev AS changed_prev
-         |FROM d$rounds""".stripMargin
-  }
-
-  /** A dynamic oracle read before its query has run in this process is
-    * a BUG (cross-process replay, subset dump, interleaved run) — a
-    * silent 1-round fallback would be a plausible-looking but WRONG
-    * oracle (round-10 ADVICE). The sentinel is deliberately invalid
-    * SQL: a stale dump fails loudly in DuckDB instead of hash-
-    * mismatching mysteriously or — worse — matching by luck. */
-  private[queries] def realizedOrSentinel(name: String, round: Int)(
-      unroll: Int => String): String =
-    if (round < 1) s"-- ORACLE NOT REALIZED: $name must run in this " +
-      "process before its stop-round-parameterized oracle exists"
-    else unroll(round)
-
-  /** Dynamic oracle map — see the object scaladoc for why this is a
-    * `def`: the q386/q390 entries must embed the post-run stop round. */
-  def sql: Map[String, String] = Map(
+  val sql: Map[String, String] = Map(
 
     "q386_pagerank_converged" ->
-      realizedOrSentinel("q386", prStopRound.get)(pagerankUnrolledSql),
+      s"""WITH ${pageRankChain(20, Some(250000000000L))}
+         |SELECT node, score, r AS stop_round, witness AS final_residual
+         |FROM pr WHERE is_last""".stripMargin,
 
     "q390_hits_converged" ->
-      realizedOrSentinel("q390", hitsStopRound.get)(hitsUnrolledSql),
+      s"""WITH ${hitsChain(15, Some(200L))}
+         |SELECT node, kind, score, r AS stop_round, witness AS final_residual
+         |FROM hs WHERE is_last""".stripMargin,
 
+    // changed_prev is the witness of the round before the stop round
+    // (-1 when the loop stopped at round 1)
     "q397_bellman_converged" ->
-      realizedOrSentinel("q397", bfStopRound.get)(bellmanUnrolledSql),
+      s"""WITH ${bellmanFordChain(20)}
+         |SELECT node, d, r AS stop_round, witness AS changed_last,
+         |  coalesce((SELECT any_value(p.witness) FROM bf p
+         |            WHERE p.r = bf.r - 1 AND p.r >= 1), -1) AS changed_prev
+         |FROM bf WHERE is_last""".stripMargin,
 
     // the naive global row_number formulation — the engine's two-phase
     // decomposition must land on exactly these order statistics

@@ -16,18 +16,23 @@ import QueryShared._
   * the plan audit's partition-less-Window rule explicitly allows. */
 object Analytics5Queries {
 
-  /** Realized q409 stop round — the q386 dynamic-oracle contract
-    * ([[Analytics4Queries.realizedOrSentinel]]). */
-  private[graft] val mkStopRound =
-    new java.util.concurrent.atomic.AtomicInteger(-1)
+  /** The embeddings quantized to integer µ-units, one row per
+    * (vec_id, dim): the vectors of the Lloyd and PCA surfaces. */
+  private[graft] def embeddingGrid(s: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(s, dir)
+      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
+      .select(col("vec_id"), col("dim").cast("long").as("dim"),
+        floor(col("v").cast("double") * 1e6).cast("long").as("q"))
 
-  /** Realized q422 Lloyd round count — same contract. */
-  private[graft] val kmStopRound =
-    new java.util.concurrent.atomic.AtomicInteger(-1)
-
-  /** Realized q452 power-iteration round count — same contract. */
-  private[graft] val pcaStopRound =
-    new java.util.concurrent.atomic.AtomicInteger(-1)
+  /** Lloyd seeds (vec_id, cid): the `k` first vectors in
+    * (md5(vec_id), vec_id) order — content-deterministic, no RNG. */
+  private[graft] def md5Seeds(s: SparkSession, dir: String, k: Int): DataFrame =
+    Tables.embeddings(s, dir)
+      .select(col("vec_id"), md5(col("vec_id").cast("string")).as("sk"))
+      .orderBy(col("sk"), col("vec_id")).limit(k)
+      .withColumn("cid",
+        row_number().over(Window.orderBy(col("sk"), col("vec_id"))).cast("long") - 1)
+      .select(col("vec_id"), col("cid"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -39,9 +44,9 @@ object Analytics5Queries {
     // behavior chain's stationary distribution power-iterates from
     // uniform with per-round floor quantization (s div 10⁶ — exact,
     // order-free integer algebra) until the exact L1 residual ≤ 100
-    // ppm-units or 30 rounds. The realized stop round parameterizes the
-    // dynamically-unrolled oracle, which recomputes the final residual
-    // from its own last two iterates — termination is hash-checked.
+    // ppm-units or 30 rounds. The oracle runs the same iteration under
+    // the same stop rule and finds the stop round and the final residual
+    // itself — termination is hash-checked.
     // Per-round cost: one key-equi join + one grouped sum on the
     // (types × types) matrix grain — tiny by construction.
     "q409_markov_stationary" -> ((s, dir) => {
@@ -79,7 +84,6 @@ object Analytics5Queries {
             .select(col("t"),
               coalesce(expr("s div 1000000"), lit(0L)).as("pi_q"), col("prev"))
       }
-      mkStopRound.set(run.rounds)
       run.state.select(col("t"), col("pi_q"))
         .withColumn("stop_round", lit(run.rounds.toLong))
         .withColumn("final_residual", lit(run.witnesses.last))
@@ -397,33 +401,22 @@ object Analytics5Queries {
     }),
 
     // Convergence-WITNESSED Lloyd k-means over the embeddings table —
-    // the FOURTH dynamic-oracle kernel class (alternating minimization;
+    // the FOURTH convergence-witnessed kernel class (alternating minimization;
     // see ml.Kmeans for the exact-integer contract). Seeds are the k=4
     // vectors smallest by (md5(vec_id), vec_id) — content-deterministic,
     // no RNG; the stop witness is ZERO membership changes (or the
     // 12-round cap, with the realized change count riding the output).
-    // The oracle unrolls exactly the realized rounds and recomputes
-    // changed_last from its OWN last two assignment frames, so
-    // termination is hash-checked, not trusted. Per-round cost: one
+    // The oracle runs the same Lloyd rounds under the same stop rule and
+    // finds the stop round and changed_last itself, so termination is
+    // hash-checked, not trusted. Per-round cost: one
     // broadcast of the k·64 centroid grid against the exploded vector
     // frame — the 100 TB shape (centroids are always tiny; vectors
     // stream through one hash join + two partial aggregations).
     "q422_kmeans_converged" -> ((s, dir) => {
-      val x = Tables.embeddings(s, dir)
-        .select(col("vec_id"),
-          posexplode(col("embedding")).as(Seq("dim", "v")))
-        .select(col("vec_id"), col("dim").cast("long").as("dim"),
-          floor(col("v").cast("double") * 1e6).cast("long").as("q"))
-      val seeds = Tables.embeddings(s, dir)
-        .select(col("vec_id"), md5(col("vec_id").cast("string")).as("sk"))
-        .orderBy(col("sk"), col("vec_id")).limit(4)
-        .withColumn("cid",
-          row_number().over(Window.orderBy(col("sk"), col("vec_id")))
-            .cast("long") - 1)
-        .select(col("vec_id"), col("cid"))
+      val x = embeddingGrid(s, dir)
+      val seeds = md5Seeds(s, dir, 4)
       val (assign, _, round, changed) =
         ml.Kmeans.lloydConverged(x, seeds, maxRounds = 12)
-      kmStopRound.set(round)
       assign.groupBy(col("cid"))
         .agg(count(lit(1)).as("n_vecs"), sum(col("dist2")).as("inertia_q"))
         .withColumn("stop_round", lit(round.toLong))
@@ -821,18 +814,8 @@ object Analytics5Queries {
     // needed — the fit's only export is the assignment artifact (the
     // q26/q38 persisted-serve recipe applied to clustering).
     "q430_cluster_quality" -> ((s, dir) => {
-      val x = Tables.embeddings(s, dir)
-        .select(col("vec_id"),
-          posexplode(col("embedding")).as(Seq("dim", "v")))
-        .select(col("vec_id"), col("dim").cast("long").as("dim"),
-          floor(col("v").cast("double") * 1e6).cast("long").as("q"))
-      val seeds = Tables.embeddings(s, dir)
-        .select(col("vec_id"), md5(col("vec_id").cast("string")).as("sk"))
-        .orderBy(col("sk"), col("vec_id")).limit(4)
-        .withColumn("cid",
-          row_number().over(Window.orderBy(col("sk"), col("vec_id")))
-            .cast("long") - 1)
-        .select(col("vec_id"), col("cid"))
+      val x = embeddingGrid(s, dir)
+      val seeds = md5Seeds(s, dir, 4)
       // the quality read is valid for ANY fitted membership and the oracle
       // replays the stored artifact — 4 rounds (q422 owns convergence)
       val (assign, _, _, _) = ml.Kmeans.lloydConverged(x, seeds, maxRounds = 4)
@@ -1308,24 +1291,14 @@ object Analytics5Queries {
     // k-means ELBOW sweep — the "choose k" planning read over the same
     // exact-integer Lloyd algebra: FIXED 3 rounds per k ∈ {2, 4, 8}
     // (Kmeans.lloydFixed — fixed rounds are the declared cross-engine
-    // semantics, so ONE static oracle unrolls all three chains instead
-    // of three stop-round atomics), seeds the md5-order prefix (k = 8's
+    // semantics; the oracle runs one fixed-round Lloyd loop per k),
+    // seeds the md5-order prefix (k = 8's
     // seed set contains k = 4's contains k = 2's), per-k total inertia
     // and sizes union to the 3-row curve.
     "q460_kmeans_elbow" -> ((s, dir) => {
-      val x = Tables.embeddings(s, dir)
-        .select(col("vec_id"),
-          posexplode(col("embedding")).as(Seq("dim", "v")))
-        .select(col("vec_id"), col("dim").cast("long").as("dim"),
-          floor(col("v").cast("double") * 1e6).cast("long").as("q"))
+      val x = embeddingGrid(s, dir)
         .localCheckpoint(true)
-      val seedBase = Tables.embeddings(s, dir)
-        .select(col("vec_id"), md5(col("vec_id").cast("string")).as("sk"))
-        .orderBy(col("sk"), col("vec_id")).limit(8)
-        .withColumn("cid",
-          row_number().over(Window.orderBy(col("sk"), col("vec_id")))
-            .cast("long") - 1)
-        .select(col("vec_id"), col("cid"))
+      val seedBase = md5Seeds(s, dir, 8)
         .localCheckpoint(true)
       Seq(2, 4, 8).map { k =>
         ml.Kmeans.lloydFixed(x,
@@ -1453,8 +1426,8 @@ object Analytics5Queries {
     // sign-split division by K = max|w| div 10⁶ (declared — identical
     // CASE on both engines; keeps every product Long-safe), and stops
     // when the exact L1 change ≤ 1000 µ-units or 12 rounds. The oracle
-    // unrolls the realized rounds and recomputes the final residual
-    // from its OWN last two iterates. Deterministic md5-free init
+    // runs the same rounds under the same stop rule and finds the stop
+    // round and the final residual itself. Deterministic md5-free init
     // (5·10⁵ + dim·7919 mod 10⁶) avoids the orthogonal-start stall.
     // NOTE the fixture embeddings are near-isotropic (λ₂/λ₁ ≈ 1), so
     // the witness records HONEST non-convergence at the cap — the
@@ -1462,11 +1435,7 @@ object Analytics5Queries {
     // output is the spectral-flatness read a real corpus would confirm
     // or beat.
     "q452_pca_power_converged" -> ((s, dir) => {
-      val x = Tables.embeddings(s, dir)
-        .select(col("vec_id"),
-          posexplode(col("embedding")).as(Seq("dim", "v")))
-        .select(col("vec_id"), col("dim").cast("long").as("dim"),
-          floor(col("v").cast("double") * 1e6).cast("long").as("q"))
+      val x = embeddingGrid(s, dir)
         .localCheckpoint(true)
       val mu = x.groupBy(col("dim"))
         .agg(count(lit(1)).as("n"), sum(col("q")).as("sq"))
@@ -1504,7 +1473,6 @@ object Analytics5Queries {
               s"case when w >= 0 then w div ${k}L" +
                 s" else -((-w) div ${k}L) end").as("vq"), col("pv"))
       }
-      pcaStopRound.set(run.rounds)
       run.state.select(col("dim"), col("vq"))
         .withColumn("stop_round", lit(run.rounds.toLong))
         .withColumn("final_residual", lit(run.witnesses.last))
@@ -2427,19 +2395,20 @@ object Analytics5Queries {
     }),
   )
 
-  /** q409's dynamically-unrolled oracle: `rounds` power-iteration steps
-    * of the same integer-ppm recurrence, final residual recomputed from
-    * the oracle's OWN last two iterates (the q386/q397 mechanism). */
-  private def markovUnrolledSql(rounds: Int): String = {
-    def round(k: Int): String =
-      s"""pi$k AS MATERIALIZED (
-         |  SELECT ty.t,
-         |    CAST(coalesce(s.s // 1000000, 0) AS BIGINT) AS pi_q
-         |  FROM ty LEFT JOIN (
-         |    SELECT p.j AS t, sum(pi.pi_q * p.p_ppm) AS s
-         |    FROM pi${k - 1} pi JOIN p ON pi.t = p.i GROUP BY 1) s
-         |    ON ty.t = s.t)""".stripMargin
-    """WITH tr AS (
+  /** `tr → tc → tp → ty → mk`: q409's per-user transition matrix in ppm
+    * and the Markov power iteration from uniform, stopping at the first
+    * round whose L1 residual is ≤ 100 or at 30. */
+  private val markovChain: String = {
+    val init = "SELECT t, CAST(1000000 // (SELECT count(*) FROM ty) AS BIGINT) " +
+      "AS pi_q FROM ty"
+    val round =
+      """SELECT p.t, CAST(coalesce(s.s // 1000000, 0) AS BIGINT) AS pi_q,
+        |    p.pi_q AS prev_q
+        |  FROM prev p LEFT JOIN (
+        |    SELECT m.j AS t, sum(q.pi_q * m.p_ppm) AS s
+        |    FROM prev q JOIN tp m ON q.t = m.i GROUP BY 1) s
+        |    ON p.t = s.t""".stripMargin
+    """tr AS (
       |  SELECT event_type AS i,
       |    lead(event_type) OVER (PARTITION BY user_id
       |                           ORDER BY ts, event_id) AS j
@@ -2447,194 +2416,137 @@ object Analytics5Queries {
       |), tc AS (
       |  SELECT i, j, CAST(count(*) AS BIGINT) AS nij
       |  FROM tr WHERE j IS NOT NULL GROUP BY 1, 2
-      |), p AS (
+      |), tp AS (
       |  SELECT i, j,
       |    CAST(nij * 1000000 // sum(nij) OVER (PARTITION BY i) AS BIGINT)
       |      AS p_ppm
       |  FROM tc
       |), ty AS (
       |  SELECT DISTINCT event_type AS t FROM events
-      |), pi0 AS (
-      |  SELECT t, CAST(1000000 // (SELECT count(*) FROM ty) AS BIGINT)
-      |    AS pi_q
-      |  FROM ty),
-      |""".stripMargin +
-      (1 to rounds).map(round).mkString(",\n") +
-      s""",
-         |resid AS (
-         |  SELECT CAST(sum(abs(a.pi_q - b.pi_q)) AS BIGINT) AS r
-         |  FROM pi$rounds a JOIN pi${rounds - 1} b ON a.t = b.t)
-         |SELECT t, pi_q, CAST($rounds AS BIGINT) AS stop_round,
-         |  resid.r AS final_residual
-         |FROM pi$rounds CROSS JOIN resid""".stripMargin
+      |), """.stripMargin +
+      fixpointCte("mk", Seq("t", "pi_q"), init, round, 30,
+        Some(("sum(abs(pi_q - prev_q))", "100")))
   }
 
-  /** q422's dynamically-unrolled oracle: the realized Lloyd rounds as
-    * materialized CTE pairs (assign r from centroids r−1, update r), with
-    * changed_last recomputed from the oracle's OWN last two assignment
-    * frames — termination AND the final membership are hash-checked
-    * (the q386/q397/q409 mechanism, fourth kernel class). */
-  private def kmeansUnrolledSql(rounds: Int): String = {
-    def assign(r: Int): String =
-      s"""a$r AS MATERIALIZED (
-         |  SELECT vec_id, cid, dist2 FROM (
-         |    SELECT vec_id, cid, dist2, row_number() OVER (
-         |      PARTITION BY vec_id ORDER BY dist2, cid) AS rk
-         |    FROM (
-         |      SELECT x.vec_id, c.cid,
-         |        CAST(sum((x.q - c.c_q) * (x.q - c.c_q)) AS BIGINT)
-         |          AS dist2
-         |      FROM x JOIN c${r - 1} c ON x.dim = c.dim
-         |      GROUP BY 1, 2))
-         |  WHERE rk = 1)""".stripMargin
-    def update(r: Int): String =
-      s"""c$r AS MATERIALIZED (
-         |  SELECT p.cid, p.dim,
-         |    CAST(coalesce((u.sq + u.n * 2000000) // u.n - 2000000,
-         |                  p.c_q) AS BIGINT) AS c_q
-         |  FROM c${r - 1} p LEFT JOIN (
-         |    SELECT a.cid, x.dim, CAST(count(*) AS BIGINT) AS n,
-         |      CAST(sum(x.q) AS BIGINT) AS sq
-         |    FROM a$r a JOIN x ON a.vec_id = x.vec_id
-         |    GROUP BY 1, 2) u
-         |    ON p.cid = u.cid AND p.dim = u.dim)""".stripMargin
-    // the final round needs no centroid update — the output reads aR
-    val body = (1 until rounds).map(r => assign(r) + ",\n" + update(r))
-      .mkString(",\n") + (if (rounds > 1) ",\n" else "") + assign(rounds)
-    s"""WITH x AS MATERIALIZED (
-       |  SELECT vec_id, CAST(i - 1 AS BIGINT) AS dim,
-       |    CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT)
-       |      AS q
-       |  FROM embeddings, unnest(generate_series(1, len(embedding)))
-       |    AS u(i)
-       |), sd AS (
+  /** `x`: the embeddings quantized to integer µ-units, one row per
+    * (vec_id, dim). */
+  private val embeddingGridCte: String =
+    """x AS MATERIALIZED (
+      |  SELECT vec_id, CAST(i - 1 AS BIGINT) AS dim,
+      |    CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT)
+      |      AS q
+      |  FROM embeddings, unnest(generate_series(1, len(embedding)))
+      |    AS u(i)
+      |)""".stripMargin
+
+  /** `x → sd`: [[embeddingGridCte]] and every vector's seed rank `cid`
+    * in (md5(vec_id), vec_id) order. */
+  private val lloydInputChain: String =
+    s"""$embeddingGridCte, sd AS (
        |  SELECT vec_id, CAST(row_number() OVER (
        |      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1
        |    AS BIGINT) AS cid
        |  FROM embeddings
-       |), c0 AS MATERIALIZED (
-       |  SELECT s.cid, x.dim, x.q AS c_q
-       |  FROM sd s JOIN x ON s.vec_id = x.vec_id WHERE s.cid < 4
-       |),
-       |""".stripMargin + body +
-      s""",
-         |chg AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS c
-         |  FROM a$rounds n JOIN a${rounds - 1} o
-         |    ON n.vec_id = o.vec_id AND n.cid <> o.cid)
-         |SELECT cid, CAST(count(*) AS BIGINT) AS n_vecs,
-         |  CAST(sum(dist2) AS BIGINT) AS inertia_q,
-         |  CAST($rounds AS BIGINT) AS stop_round,
-         |  chg.c AS changed_last
-         |FROM a$rounds CROSS JOIN chg
-         |GROUP BY cid, chg.c""".stripMargin
+       |)""".stripMargin
+
+  /** `name`: [[graft.ml.Kmeans]]'s Lloyd rounds over `x`, seeded with
+    * the `k` first vectors of `sd`. One loop carries both halves of the
+    * state: centroid rows (`kind` 'c': cid, dim, `v` = c_q) and
+    * assignment rows ('a': vec_id, cid, `v` = dist2). Round r > 1 first
+    * moves the centroids to the means of round r − 1's assignment (an
+    * empty cluster keeps its centroid), then every vector takes its
+    * nearest centroid, ties to the smaller cid. `witnessed` stops at the
+    * first round that changes no membership (q422), else the loop runs
+    * `maxRounds` (q460). */
+  private def lloydCte(name: String, k: Int, maxRounds: Int,
+      witnessed: Boolean): String = {
+    val init =
+      s"""SELECT 'c' AS kind, CAST(NULL AS BIGINT) AS vec_id, s.cid, x.dim,
+         |    x.q AS v
+         |  FROM sd s JOIN x ON s.vec_id = x.vec_id WHERE s.cid < $k""".stripMargin
+    val round =
+      """WITH c AS (
+        |    SELECT c.cid, c.dim,
+        |      CAST(coalesce((u.sq + u.n * 2000000) // u.n - 2000000, c.v)
+        |        AS BIGINT) AS c_q
+        |    FROM prev c LEFT JOIN (
+        |      SELECT a.cid, x.dim, count(*) AS n, sum(x.q) AS sq
+        |      FROM prev a JOIN x ON a.vec_id = x.vec_id
+        |      WHERE a.kind = 'a'
+        |      GROUP BY 1, 2) u
+        |      ON c.cid = u.cid AND c.dim = u.dim
+        |    WHERE c.kind = 'c'
+        |  ), d AS (
+        |    SELECT x.vec_id, c.cid,
+        |      CAST(sum((x.q - c.c_q) * (x.q - c.c_q)) AS BIGINT) AS dist2
+        |    FROM x JOIN c ON x.dim = c.dim
+        |    GROUP BY 1, 2
+        |  ), a AS (
+        |    SELECT vec_id, cid, dist2 FROM (
+        |      SELECT *, row_number() OVER (
+        |        PARTITION BY vec_id ORDER BY dist2, cid) AS rk
+        |      FROM d)
+        |    WHERE rk = 1)
+        |  SELECT 'c' AS kind, NULL AS vec_id, cid, dim, c_q AS v,
+        |    NULL AS pcid
+        |  FROM c
+        |  UNION ALL
+        |  SELECT 'a', a.vec_id, a.cid, NULL, a.dist2, p.cid
+        |  FROM a LEFT JOIN prev p ON p.kind = 'a' AND a.vec_id = p.vec_id""".stripMargin
+    fixpointCte(name, Seq("kind", "vec_id", "cid", "dim", "v"), init, round,
+      maxRounds, Option.when(witnessed)((
+        "sum(CASE WHEN kind = 'a' AND (pcid IS NULL OR cid <> pcid) THEN 1 ELSE 0 END)",
+        "0")))
   }
 
-  /** q452's dynamically-unrolled oracle: the realized power-iteration
-    * rounds over the 64×64 scaled covariance, K renormalization and the
-    * final L1 residual recomputed from the oracle's OWN last two
-    * iterates (the q386/q409/q422 mechanism). */
-  private def pcaUnrolledSql(rounds: Int): String = {
-    def round(r: Int): String =
-      s"""w$r AS MATERIALIZED (
-         |  SELECT c.i AS dim, CAST(sum(c.cm * v.vq) AS BIGINT) AS w
-         |  FROM cov c JOIN v${r - 1} v ON c.j = v.dim GROUP BY 1
-         |), k$r AS (
-         |  SELECT greatest(max(abs(w)) // 1000000, 1) AS k FROM w$r
-         |), v$r AS MATERIALIZED (
-         |  SELECT dim, CAST(CASE WHEN w >= 0 THEN w // k$r.k
-         |                   ELSE -((-w) // k$r.k) END AS BIGINT) AS vq
-         |  FROM w$r CROSS JOIN k$r)""".stripMargin
-    """WITH x AS MATERIALIZED (
-      |  SELECT vec_id, CAST(i - 1 AS BIGINT) AS dim,
-      |    CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT)
-      |      AS q
-      |  FROM embeddings, unnest(generate_series(1, len(embedding)))
-      |    AS u(i)
-      |), mu AS (
-      |  SELECT dim,
-      |    CAST((sum(q) + count(*) * 2000000) // count(*) - 2000000
-      |      AS BIGINT) AS mu
-      |  FROM x GROUP BY 1
-      |), cen AS (
-      |  SELECT x.vec_id, x.dim, x.q - mu.mu AS c
-      |  FROM x JOIN mu ON x.dim = mu.dim
-      |), cov AS MATERIALIZED (
-      |  SELECT a.dim AS i, b.dim AS j,
-      |    CAST((sum(a.c * b.c) + 2305843009213693952) // 16777216
-      |      - 137438953472 AS BIGINT) AS cm
-      |  FROM cen a JOIN cen b ON a.vec_id = b.vec_id
-      |  GROUP BY 1, 2
-      |), v0 AS (
-      |  SELECT dim, CAST(500000 + dim * 7919 % 1000000 AS BIGINT) AS vq
-      |  FROM mu
-      |),
-      |""".stripMargin +
-      (1 to rounds).map(round).mkString(",\n") +
-      s""",
-         |resid AS (
-         |  SELECT CAST(sum(abs(a.vq - b.vq)) AS BIGINT) AS r
-         |  FROM v$rounds a JOIN v${rounds - 1} b ON a.dim = b.dim)
-         |SELECT dim, vq, CAST($rounds AS BIGINT) AS stop_round,
-         |  resid.r AS final_residual
-         |FROM v$rounds CROSS JOIN resid""".stripMargin
+  /** `x → mu → cen → cov → pc`: q452's centred 64×64 covariance, scaled
+    * to cm, and its power iteration, renormalized each round by
+    * K = max|w| div 10⁶ and stopping at the first round whose L1 change
+    * is ≤ 1000 or at 12. */
+  private val powerIterationChain: String = {
+    val init = "SELECT dim, CAST(500000 + dim * 7919 % 1000000 AS BIGINT) AS vq FROM mu"
+    val round =
+      """WITH w AS (
+        |    SELECT c.i AS dim, CAST(sum(c.cm * v.vq) AS BIGINT) AS w
+        |    FROM cov c JOIN prev v ON c.j = v.dim GROUP BY 1
+        |  ), k AS (
+        |    SELECT greatest(max(abs(w)) // 1000000, 1) AS k FROM w)
+        |  SELECT w.dim,
+        |    CAST(CASE WHEN w >= 0 THEN w // k.k ELSE -((-w) // k.k) END
+        |      AS BIGINT) AS vq,
+        |    p.vq AS pv
+        |  FROM w CROSS JOIN k LEFT JOIN prev p ON w.dim = p.dim""".stripMargin
+    s"""$embeddingGridCte, mu AS (
+       |  SELECT dim,
+       |    CAST((sum(q) + count(*) * 2000000) // count(*) - 2000000
+       |      AS BIGINT) AS mu
+       |  FROM x GROUP BY 1
+       |), cen AS (
+       |  SELECT x.vec_id, x.dim, x.q - mu.mu AS c
+       |  FROM x JOIN mu ON x.dim = mu.dim
+       |), cov AS MATERIALIZED (
+       |  SELECT a.dim AS i, b.dim AS j,
+       |    CAST((sum(a.c * b.c) + 2305843009213693952) // 16777216
+       |      - 137438953472 AS BIGINT) AS cm
+       |  FROM cen a JOIN cen b ON a.vec_id = b.vec_id
+       |  GROUP BY 1, 2
+       |), """.stripMargin +
+      fixpointCte("pc", Seq("dim", "vq"), init, round, 12,
+        Some(("sum(abs(vq - pv))", "1000")))
   }
 
-  /** q460's STATIC oracle: three fixed-3-round Lloyd chains (k = 2/4/8,
-    * md5-prefix seeds) unrolled side by side and unioned — fixed rounds
-    * are the declared semantics, so no stop-round atomic is needed. */
-  private def elbowSql: String = {
-    def assign(k: Int, r: Int): String =
-      s"""ek${k}a$r AS MATERIALIZED (
-         |  SELECT vec_id, cid, dist2 FROM (
-         |    SELECT vec_id, cid, dist2, row_number() OVER (
-         |      PARTITION BY vec_id ORDER BY dist2, cid) AS rk
-         |    FROM (
-         |      SELECT x.vec_id, c.cid,
-         |        CAST(sum((x.q - c.c_q) * (x.q - c.c_q)) AS BIGINT)
-         |          AS dist2
-         |      FROM x JOIN ek${k}c${r - 1} c ON x.dim = c.dim
-         |      GROUP BY 1, 2))
-         |  WHERE rk = 1)""".stripMargin
-    def update(k: Int, r: Int): String =
-      s"""ek${k}c$r AS MATERIALIZED (
-         |  SELECT p.cid, p.dim,
-         |    CAST(coalesce((u.sq + u.n * 2000000) // u.n - 2000000,
-         |                  p.c_q) AS BIGINT) AS c_q
-         |  FROM ek${k}c${r - 1} p LEFT JOIN (
-         |    SELECT a.cid, x.dim, CAST(count(*) AS BIGINT) AS n,
-         |      CAST(sum(x.q) AS BIGINT) AS sq
-         |    FROM ek${k}a$r a JOIN x ON a.vec_id = x.vec_id
-         |    GROUP BY 1, 2) u
-         |    ON p.cid = u.cid AND p.dim = u.dim)""".stripMargin
-    def chain(k: Int): String =
-      s"""ek${k}c0 AS MATERIALIZED (
-         |  SELECT s.cid, x.dim, x.q AS c_q
-         |  FROM sd s JOIN x ON s.vec_id = x.vec_id WHERE s.cid < $k
-         |)""".stripMargin + ",\n" +
-        assign(k, 1) + ",\n" + update(k, 1) + ",\n" +
-        assign(k, 2) + ",\n" + update(k, 2) + ",\n" +
-        assign(k, 3)
-    def fin(k: Int): String =
-      s"""SELECT CAST($k AS BIGINT) AS kk,
-         |  CAST(count(*) AS BIGINT) AS n_vecs,
-         |  CAST(sum(dist2) AS BIGINT) AS inertia_q
-         |FROM ek${k}a3""".stripMargin
-    """WITH x AS MATERIALIZED (
-      |  SELECT vec_id, CAST(i - 1 AS BIGINT) AS dim,
-      |    CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT)
-      |      AS q
-      |  FROM embeddings, unnest(generate_series(1, len(embedding)))
-      |    AS u(i)
-      |), sd AS (
-      |  SELECT vec_id, CAST(row_number() OVER (
-      |      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1
-      |    AS BIGINT) AS cid
-      |  FROM embeddings
-      |),
-      |""".stripMargin +
-      Seq(2, 4, 8).map(chain).mkString(",\n") + "\n" +
-      Seq(2, 4, 8).map(fin).mkString("\nUNION ALL\n")
+  /** q460: three fixed-3-round Lloyd loops (k = 2/4/8, md5-prefix seeds)
+    * side by side, each k's final assignment summed to one row. */
+  private val elbowSql: String = {
+    val ks = Seq(2, 4, 8)
+    s"WITH $lloydInputChain, " +
+      ks.map(k => lloydCte(s"ek$k", k, 3, witnessed = false)).mkString(", ") + "\n" +
+      ks.map(k =>
+        s"""SELECT CAST($k AS BIGINT) AS kk,
+           |  CAST(count(*) AS BIGINT) AS n_vecs,
+           |  CAST(sum(v) AS BIGINT) AS inertia_q
+           |FROM ek$k WHERE is_last AND kind = 'a'""".stripMargin)
+        .mkString("\nUNION ALL\n")
   }
 
   /** `b0 → f → g → h → agg`: quality-weighted water-filling of a 60%
@@ -2690,23 +2602,27 @@ object Analytics5Queries {
        |    AS BIGINT) AS share_ppm
        |FROM fin""".stripMargin
 
-  /** A def, not a val: the q409 entry embeds the post-run stop round
-    * (the [[Analytics4Queries]] dynamic-oracle contract). */
-  def sql: Map[String, String] = Map(
+  val sql: Map[String, String] = Map(
 
     "q460_kmeans_elbow" -> elbowSql,
 
     "q452_pca_power_converged" ->
-      Analytics4Queries.realizedOrSentinel("q452", pcaStopRound.get)(
-        pcaUnrolledSql),
+      s"""WITH $powerIterationChain
+         |SELECT dim, vq, r AS stop_round, witness AS final_residual
+         |FROM pc WHERE is_last""".stripMargin,
 
     "q409_markov_stationary" ->
-      Analytics4Queries.realizedOrSentinel("q409", mkStopRound.get)(
-        markovUnrolledSql),
+      s"""WITH $markovChain
+         |SELECT t, pi_q, r AS stop_round, witness AS final_residual
+         |FROM mk WHERE is_last""".stripMargin,
 
     "q422_kmeans_converged" ->
-      Analytics4Queries.realizedOrSentinel("q422", kmStopRound.get)(
-        kmeansUnrolledSql),
+      s"""WITH $lloydInputChain, ${lloydCte("km", 4, 12, witnessed = true)}
+         |SELECT cid, CAST(count(*) AS BIGINT) AS n_vecs,
+         |  CAST(sum(v) AS BIGINT) AS inertia_q,
+         |  any_value(r) AS stop_round, any_value(witness) AS changed_last
+         |FROM km WHERE is_last AND kind = 'a'
+         |GROUP BY cid""".stripMargin,
 
     // identical ordered-EMD algebra: densify via the global alphabet,
     // cumulative ppm diffs in sv order, Σ|·| div (m−1)
@@ -2911,14 +2827,7 @@ object Analytics5Queries {
     // q310's bin chain verbatim, then the PAVA minimax over interval
     // averages as an i≤k≤j triple join on the ≤10-row bin grain
     "q433_isotonic_calibration" ->
-      """WITH n_ord AS (
-        |  SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_ord
-        |  FROM orders GROUP BY 1),
-        |base AS (
-        |  SELECT c.c_custkey,
-        |    CAST(CAST(c.c_acctbal AS DECIMAL(30,2)) * 100 AS BIGINT) AS x,
-        |    CASE WHEN coalesce(o.n_ord, 0) >= 2 THEN 1 ELSE 0 END AS label
-        |  FROM customer c LEFT JOIN n_ord o ON c.c_custkey = o.o_custkey),
+      s"""WITH $repeatBuyerChain,
         |r AS (
         |  SELECT label,
         |    CAST(row_number() OVER (ORDER BY x, c_custkey) AS BIGINT) AS rn,
@@ -4248,7 +4157,7 @@ object Analytics5Queries {
     // two-group conditional exact sums in one row, then the identical
     // Welch / Satterthwaite / pooled-d double chain
     "q495_welch_t" ->
-      """WITH tot AS (
+      s"""WITH $custOrdersCte, tot AS (
         |  SELECT (SELECT CAST(count(*) AS BIGINT) FROM customer) AS n_cust,
         |         (SELECT CAST(count(*) AS BIGINT) FROM orders) AS n_orders
         |), base AS (
@@ -4256,9 +4165,7 @@ object Analytics5Queries {
         |         THEN 1 ELSE 0 END AS g,
         |    CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS x
         |  FROM customer
-        |  LEFT JOIN (
-        |    SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_ord
-        |    FROM orders GROUP BY 1) o ON c_custkey = o_custkey
+        |  LEFT JOIN nord ON c_custkey = o_custkey
         |  CROSS JOIN tot
         |), s AS (
         |  SELECT

@@ -67,7 +67,7 @@ object LayoutQueries {
     // graph analytics: exact-integer PageRank on the customer↔supplier
     // trade graph (parity-disjoint node ids) — 5 fixed BIGINT rounds, so
     // the iterative kernel is hash-checkable against the oracle's
-    // unrolled recurrence, not just tolerance-compared
+    // recursive loop, not just tolerance-compared
     "q69_pagerank" -> ((s, dir) => {
       val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
       val li = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
@@ -1369,33 +1369,10 @@ object LayoutQueries {
         "'\\s+', ' ', 'g')) AS norm_text FROM documents"),
 
 
-    // 5 unrolled integer rounds — DuckDB's recursive CTEs forbid the
-    // per-round aggregation PageRank needs, and the unrolled form is the
-    // same recurrence the Spark loop runs, BIGINT for BIGINT
-    "q69_pagerank" -> {
-      def round(k: Int): String =
-        s"""pr$k AS (
-           |  SELECT n.node,
-           |    CAST((SELECT base FROM params) + (85 * COALESCE(m.s, 0)) // 100 AS BIGINT) AS score
-           |  FROM nodes n LEFT JOIN (
-           |    SELECT e.dst AS node, SUM(p.score // d.deg) AS s
-           |    FROM pr${k - 1} p JOIN deg d ON p.node = d.node
-           |    JOIN edges e ON e.src = p.node
-           |    GROUP BY e.dst) m ON n.node = m.node)""".stripMargin
-      """WITH pairs AS (
-        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |edges AS (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
-        |deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY 1),
-        |nodes AS (SELECT src AS node FROM edges UNION SELECT dst AS node FROM edges),
-        |params AS (SELECT CAST(1000000000000 // count(*) AS BIGINT) AS init,
-        |                  CAST((15 * (1000000000000 // count(*))) // 100 AS BIGINT) AS base
-        |           FROM nodes),
-        |pr0 AS (SELECT node, (SELECT init FROM params) AS score FROM nodes),
-        |""".stripMargin +
-        (1 to 5).map(round).mkString(",\n") +
-        "\nSELECT node, score FROM pr5"
-    },
+    // the integer recurrence the Spark loop runs, as one recursive loop
+    // of 5 fixed rounds, BIGINT for BIGINT
+    "q69_pagerank" ->
+      s"WITH ${pageRankChain(5)}\nSELECT node, score FROM pr WHERE is_last",
 
 
     // Keys and char counts recomputed from parquet — the Spark side must

@@ -604,6 +604,151 @@ private[graft] object QueryShared {
   def lshClusterChain(name: String): String =
     s"$lshPairsChain, ${minLabelClosure(name)}"
 
+  /** The DuckDB side of [[graft.ops.Fixpoint]], as the CTE
+    * `name(r, cols…, witness, is_last)` holding every round. Round 0 is
+    * `init`, a query yielding `cols`. Round r is `round`, a query over
+    * `prev` (round r − 1's rows) yielding `cols` and whatever the witness
+    * reads. `witness` is (an aggregate over the round's rows, 0 over none;
+    * `stopAt`, a SQL scalar): a witnessed loop stops after the first round
+    * whose witness is ≤ `stopAt`, an unwitnessed one (witness NULL) after
+    * exactly `maxRounds`, and either stops at `maxRounds`. So the
+    * oracle finds its own stop round: `is_last` marks the last round's
+    * rows, and their `r` is the engine's realized round count.
+    *
+    * The recursion sits in its own `SELECT * FROM (WITH RECURSIVE …)`:
+    * beside a top-level `WITH RECURSIVE`, DuckDB 1.0.0 stops
+    * de-duplicating a plain `SELECT … UNION SELECT …` CTE. */
+  def fixpointCte(name: String, cols: Seq[String], init: String,
+      round: String, maxRounds: Int,
+      witness: Option[(String, String)] = None): String = {
+    val c = cols.mkString(", ")
+    val w = witness.fold("CAST(NULL AS BIGINT)")(
+      w => s"CAST(coalesce(${w._1} OVER (), 0) AS BIGINT)")
+    val stopAt = witness.fold("0")(_._2)
+    s"""$name AS MATERIALIZED (
+       |SELECT *, r = max(r) OVER () AS is_last FROM (
+       |WITH RECURSIVE loop(r, $c, witness) AS (
+       |  SELECT CAST(0 AS BIGINT), $c, CAST(NULL AS BIGINT) FROM (
+       |  $init)
+       |  UNION ALL (
+       |  WITH prev AS (
+       |    SELECT * FROM loop
+       |    WHERE r < $maxRounds AND (witness IS NULL OR witness > $stopAt)
+       |  ), step AS (
+       |  $round)
+       |  SELECT n.r, $c, $w
+       |  FROM step CROSS JOIN (SELECT DISTINCT r + 1 AS r FROM prev) n))
+       |SELECT * FROM loop))""".stripMargin
+  }
+
+  /** `pairs → edges → deg → nodes → params → pr`: [[graft.ops.Graph]]'s
+    * exact-integer PageRank over the doubled customer/supplier trade
+    * graph, `maxRounds` rounds, or stopping at the first whose L1 residual
+    * is ≤ `epsilonUnits` (q69 runs 5 fixed rounds, q386 the epsilon-stop
+    * loop). */
+  def pageRankChain(maxRounds: Int, epsilonUnits: Option[Long] = None): String = {
+    val init = "SELECT node, (SELECT init FROM params) AS score FROM nodes"
+    val round =
+      """SELECT p.node,
+        |    CAST((SELECT base FROM params) + (85 * coalesce(m.s, 0)) // 100
+        |      AS BIGINT) AS score,
+        |    p.score AS prev_score
+        |  FROM prev p LEFT JOIN (
+        |    SELECT e.dst AS node, sum(q.score // d.deg) AS s
+        |    FROM prev q JOIN deg d ON q.node = d.node
+        |    JOIN edges e ON e.src = q.node
+        |    GROUP BY e.dst) m ON p.node = m.node""".stripMargin
+    """pairs AS (
+      |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
+      |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+      |edges AS (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
+      |deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY 1),
+      |nodes AS (SELECT src AS node FROM edges UNION SELECT dst AS node FROM edges),
+      |params AS (SELECT CAST(1000000000000 // count(*) AS BIGINT) AS init,
+      |                  CAST((15 * (1000000000000 // count(*))) // 100 AS BIGINT) AS base
+      |           FROM nodes), """.stripMargin +
+      fixpointCte("pr", Seq("node", "score"), init, round, maxRounds,
+        epsilonUnits.map(e => ("sum(abs(score - prev_score))", e.toString)))
+  }
+
+  /** `edges → hs`: [[graft.ops.Graph.hits]] over the directed
+    * customer→supplier trade graph: each round's hub (`kind` 'hub') and
+    * authority ('auth') scores, max-normalized to the 10⁶ grid,
+    * `maxRounds` rounds, or stopping at the first whose hub L1 residual
+    * is ≤ `epsilonPerHub` × #hubs (q331 runs 5 fixed rounds, q390 the
+    * epsilon-stop loop). */
+  def hitsChain(maxRounds: Int, epsilonPerHub: Option[Long] = None): String = {
+    val init = "SELECT DISTINCT src AS node, 'hub' AS kind, " +
+      "CAST(1000000 AS BIGINT) AS score FROM edges"
+    val round =
+      """WITH a0 AS (
+        |    SELECT e.dst, sum(h.score) AS a0
+        |    FROM edges e JOIN prev h ON e.src = h.node AND h.kind = 'hub'
+        |    GROUP BY 1
+        |  ), a AS (
+        |    SELECT dst AS node, a0 * 1000000 // (SELECT max(a0) FROM a0) AS a
+        |    FROM a0
+        |  ), h0 AS (
+        |    SELECT e.src, sum(a.a) AS h0
+        |    FROM edges e JOIN a ON e.dst = a.node
+        |    GROUP BY 1)
+        |  SELECT h0.src AS node, 'hub' AS kind,
+        |    h0 * 1000000 // (SELECT max(h0) FROM h0) AS score,
+        |    p.score AS prev_score
+        |  FROM h0 JOIN prev p ON h0.src = p.node AND p.kind = 'hub'
+        |  UNION ALL
+        |  SELECT node, 'auth', a, NULL FROM a""".stripMargin
+    """edges AS MATERIALIZED (
+      |  SELECT DISTINCT o.o_custkey * 2 AS src, l.l_suppkey * 2 + 1 AS dst
+      |  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey), """.stripMargin +
+      fixpointCte("hs", Seq("node", "kind", "score"), init, round, maxRounds,
+        epsilonPerHub.map(e => ("sum(abs(score - prev_score))",
+          s"$e * (SELECT count(DISTINCT src) FROM edges)")))
+  }
+
+  /** `base → edges → bf`: [[graft.ops.Graph.bellmanFordConverged]] from
+    * every 100th customer over the weighted, undirected trade graph:
+    * union+min relaxation rounds, stopping at the first round that
+    * reaches or shortens nothing, or at `maxRounds` (q330 caps at 6,
+    * q397 at 20). */
+  def bellmanFordChain(maxRounds: Int): String = {
+    val init = "SELECT c_custkey * 2 AS node, CAST(0 AS BIGINT) AS d " +
+      "FROM customer WHERE c_custkey % 100 = 0"
+    val round =
+      """SELECT node, min(d) AS d, min(p) AS p FROM (
+        |    SELECT node, d, d AS p FROM prev
+        |    UNION ALL
+        |    SELECT e.dst, q.d + e.w, NULL FROM prev q JOIN edges e ON e.src = q.node)
+        |  GROUP BY node""".stripMargin
+    """base AS (
+      |  SELECT o.o_custkey * 2 AS a, l.l_suppkey * 2 + 1 AS b,
+      |    CAST(1000000 // count(DISTINCT o.o_orderkey) AS BIGINT) AS w
+      |  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+      |  GROUP BY 1, 2),
+      |edges AS MATERIALIZED (
+      |  SELECT a AS src, b AS dst, w FROM base
+      |  UNION ALL SELECT b, a, w FROM base), """.stripMargin +
+      fixpointCte("bf", Seq("node", "d"), init, round, maxRounds,
+        Some(("sum(CASE WHEN p IS NULL OR d < p THEN 1 ELSE 0 END)", "0")))
+  }
+
+  /** `nord(o_custkey, n_ord)`: each customer's order count. */
+  val custOrdersCte: String =
+    """nord AS (
+      |  SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_ord
+      |  FROM orders GROUP BY 1)""".stripMargin
+
+  /** `nord → base(c_custkey, x, label)`: every customer's balance in
+    * cents and the repeat-buyer label (≥ 2 orders), the labelled set of
+    * the calibration and scoring oracles. */
+  val repeatBuyerChain: String =
+    s"""$custOrdersCte,
+       |base AS (
+       |  SELECT c_custkey,
+       |    CAST(CAST(c_acctbal AS DECIMAL(30,2)) * 100 AS BIGINT) AS x,
+       |    CASE WHEN coalesce(n_ord, 0) >= 2 THEN 1 ELSE 0 END AS label
+       |  FROM customer LEFT JOIN nord ON c_custkey = o_custkey)""".stripMargin
+
   /** `SELECT` of a BIGINT `sig` column plus `usig`, the same bits read as
     * unsigned (HUGEINT, +2^64 when negative), so band keys can use exact
     * integer div/mod, bit-identical to Spark's `shiftrightunsigned & mask`. */

@@ -1734,11 +1734,11 @@ object RelationalQueries {
 
 
     "q51_full_outer" ->
-      """WITH l AS (SELECT c_custkey, c_name FROM customer WHERE c_acctbal > 5000),
-        |r AS (SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders FROM orders GROUP BY 1)
+      s"""WITH l AS (SELECT c_custkey, c_name FROM customer WHERE c_acctbal > 5000),
+        |$custOrdersCte
         |SELECT CAST(COALESCE(l.c_custkey, r.o_custkey) AS BIGINT) AS cust_id,
-        |       l.c_name AS c_name, r.n_orders AS n_orders
-        |FROM l FULL JOIN r ON l.c_custkey = r.o_custkey""".stripMargin,
+        |       l.c_name AS c_name, r.n_ord AS n_orders
+        |FROM l FULL JOIN nord r ON l.c_custkey = r.o_custkey""".stripMargin,
 
 
     "q52_cube" ->

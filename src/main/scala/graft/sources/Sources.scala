@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -77,38 +77,6 @@ object Sources {
       .option("header", header.toString)
       .option("enforceSchema", "true")
       .csv(path)
-
-  /** S3 hardened: CSV scan that CAPTURES malformed rows instead of
-    * silently nulling them (PERMISSIVE + `columnNameOfCorruptRecord`).
-    * Rows that parse keep `corrupt` NULL; rows that don't carry their raw
-    * line in `corrupt` with data columns NULL — so a 100-TB ingest can
-    * split good/bad with one filter and quarantine the bad lines, instead
-    * of discovering silent nulls downstream. (Spark caveat baked in here:
-    * the corrupt column cannot be queried alone — keep at least one data
-    * column in any aggregate over it.) */
-  def csvWithCorruptCapture(
-      spark: SparkSession,
-      path: String,
-      schema: StructType,
-      header: Boolean,
-      corruptCol: String = "corrupt"): DataFrame =
-    spark.read
-      .schema(schema.add(StructField(corruptCol, StringType, nullable = true)))
-      .option("header", header.toString)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", corruptCol)
-      .csv(path)
-
-  /** JSONL (newline-delimited JSON) scan with EXPLICIT schema — the
-    * interchange format LLM corpora actually ship in (one document object
-    * per line). Same §1.3 explicit-schema rule as [[csv]]: no inference
-    * pass over 100 TB, fields absent from a line are NULL, extra fields
-    * are ignored. Line-splittable, so a single huge .jsonl file still
-    * parallelizes across executors. */
-  def jsonl(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read
-      .schema(schema)
-      .json(path)
 
   /** S6: CSV sink (`join_acquirers.scala:37`). */
   def writeCsv(df: DataFrame, path: String, header: Boolean = true): Unit =

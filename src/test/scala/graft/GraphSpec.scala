@@ -243,8 +243,8 @@ class GraphSpec extends AnyFunSuite {
       }
     }
     assert(got === truth.toMap, "converged distances != Dijkstra truth")
-    // fixed-round equality at stopRound and past it — the contract the
-    // dynamically-unrolled oracle leans on
+    // fixed-round equality at stopRound and past it — the contract that
+    // lets q330 cap the same loop at a fixed round count
     def fixedRounds(r: Int): Map[Long, Long] = {
       var d = seeds.select($"node", lit(0L).as("d"))
       for (_ <- 1 to r) {

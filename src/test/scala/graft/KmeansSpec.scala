@@ -94,12 +94,15 @@ class KmeansSpec extends AnyFunSuite {
     assert(got.values.toSet === Set(0L), "ties must break to the smaller cid")
   }
 
-  test("q422 surface: witnessed stop round rides the output and matches the atomic") {
+  test("q422 surface: output stop round equals lloydConverged's on the same input") {
     val df = SparkEntry.queries("q422_kmeans_converged")(spark, TestSpark.sf)
     val rows = df.collect()
     assert(rows.nonEmpty)
     val stop = rows.head.getAs[Long]("stop_round")
-    assert(stop === queries.Analytics5Queries.kmStopRound.get.toLong)
+    val q = queries.Analytics5Queries
+    val (_, _, round, _) = Kmeans.lloydConverged(q.embeddingGrid(spark, TestSpark.sf),
+      q.md5Seeds(spark, TestSpark.sf, 4), maxRounds = 12)
+    assert(stop === round.toLong)
     val changed = rows.head.getAs[Long]("changed_last")
     // the witness contract: either converged (0 changes) or the 12-round
     // cap was hit and the realized change count is exposed

@@ -254,68 +254,6 @@ class SourcesSpec extends AnyFunSuite {
     assert(joined.except(plain).count() === 0 && plain.except(joined).count() === 0)
   }
 
-  test("csvWithCorruptCapture quarantines malformed rows, parses the rest") {
-    import org.apache.spark.sql.types._
-    val dir = s"$tmp/corrupt_csv"
-    new java.io.File(dir).mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/rows.csv"),
-      "id,amount\n1,10.5\nnot-a-number,oops,extra\n3,30.25\n".getBytes)
-    val schema = StructType(Seq(
-      StructField("id", LongType), StructField("amount", DoubleType)))
-    val df = Sources.csvWithCorruptCapture(spark, dir, schema, header = true)
-      .cache() // Spark requires materialization before corrupt-only queries
-    val good = df.filter($"corrupt".isNull)
-      .select($"id", $"amount").as[(Long, Double)].collect().toSet
-    assert(good === Set((1L, 10.5), (3L, 30.25)))
-    val bad = df.filter($"corrupt".isNotNull)
-      .select($"corrupt").as[String].collect().toSeq
-    assert(bad === Seq("not-a-number,oops,extra"),
-      "the raw malformed line must be preserved, not silently nulled")
-    df.unpersist()
-  }
-
-  test("jsonl: explicit-schema scan, corrupt-line quarantine, sink round-trip") {
-    import org.apache.spark.sql.types._
-    val dir = s"$tmp/jsonl_docs"
-    new java.io.File(dir).mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/docs.jsonl"),
-      ("""{"doc_id": 1, "text": "alpha beta", "meta": {"lang": "en"}}""" + "\n" +
-        """{"doc_id": 2, "text": "gamma", "extra_field": true}""" + "\n" +
-        """{"doc_id": 3, "text": "unterminated""" + "\n").getBytes)
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("meta", StructType(Seq(StructField("lang", StringType))))))
-
-    // plain scan: absent fields NULL, extra fields ignored, bad line all-NULL
-    val plain = Sources.jsonl(spark, dir, schema)
-    assert(plain.columns.toSeq === Seq("doc_id", "text", "meta"))
-    assert(plain.filter($"doc_id" === 2L && $"meta".isNull).count() === 1L,
-      "absent nested field must be NULL, extra field ignored")
-
-    // corrupt capture: the unterminated line is quarantined with its raw text
-    val cap = spark.read
-      .schema(schema.add(StructField("corrupt", StringType, nullable = true)))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "corrupt")
-      .json(dir).cache()
-    val good = cap.filter($"corrupt".isNull).select($"doc_id").as[Long].collect().toSet
-    assert(good === Set(1L, 2L))
-    val bad = cap.filter($"corrupt".isNotNull).select($"corrupt").as[String].collect()
-    assert(bad.length === 1 && bad.head.startsWith("""{"doc_id": 3"""),
-      s"raw malformed line must be preserved: ${bad.toSeq}")
-    cap.unpersist()
-
-    // sink → source round trip preserves rows and nested structure
-    val out = s"$tmp/jsonl_rt"
-    plain.filter($"doc_id".isNotNull).write.mode("overwrite").json(out)
-    val back = Sources.jsonl(spark, out, schema)
-    assert(back.filter($"doc_id" === 1L).select($"meta.lang").as[String].head() === "en")
-    assert(back.count() === plain.filter($"doc_id".isNotNull).count())
-  }
-
   test("writePartitioned: filter on partition column prunes at planning time") {
     val docs = Tables.documents(spark, TestSpark.sf).select($"doc_id", $"lang", $"text")
     Sources.writePartitioned(docs, s"$tmp/part_docs", Seq("lang"))
